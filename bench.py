@@ -161,7 +161,7 @@ def run_suite(sf_dir: str, cpus: int) -> dict:
         # floor): tracks the two-pass seed+prune path round-over-round
         "engine_hot_blockmax": lambda: len(
             eng.search_ids(
-                EQ.HOT_QUERY_TERM, k=10, use_blockmax=True
+                EQ.HOT_QUERY_TERM, k=10, plan="blockmax"
             ).collect()
         ),
         "engine_batch_3q": lambda: len(

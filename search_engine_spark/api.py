@@ -558,7 +558,7 @@ class EngineAPI:
             df = eng.facet_counts(query, by=by, mode=mode)
         except ValueError as ex:
             return {"result": False, "error": str(ex)}
-        rows = (df.limit(int(limit)) if limit else df).collect()
+        rows = (df.limit(int(limit)) if limit is not None else df).collect()
         return {
             "result": True,
             "count": len(rows),

@@ -366,13 +366,12 @@ def ensure_index(spark: SparkSession, sf_dir: str) -> str:
 def _engine_topk(
     spark: SparkSession, sf_dir: str, terms, mode: str, k: int = TOPK,
     conjunctive: bool = True, max_df: int | None = None, offset: int = 0,
-    use_blockmax: bool | None = None, use_maxscore: bool | None = None,
+    plan: str | None = None,
 ) -> DataFrame:
     eng = SearchEngine(spark, ensure_index(spark, sf_dir))
     ids = eng.search_ids(" ".join(terms), k=k, mode=mode,
                          conjunctive=conjunctive, max_df=max_df,
-                         offset=offset, use_blockmax=use_blockmax,
-                         use_maxscore=use_maxscore)
+                         offset=offset, plan=plan)
     remap = eng.documents.select("doc_id", "turn_idx")
     return (
         ids.join(remap, "doc_id")
@@ -581,7 +580,7 @@ def q_engine_hot_topk(spark, sf_dir):
     exercised by tests/test_query.py and the fallback twin below, not
     by this row alone."""
     return _engine_topk(
-        spark, sf_dir, (HOT_QUERY_TERM,), "bm25", use_blockmax=True
+        spark, sf_dir, (HOT_QUERY_TERM,), "bm25", plan="blockmax"
     )
 
 
@@ -593,7 +592,7 @@ def q_engine_hot_fallback_topk(spark, sf_dir):
     eng = SearchEngine(spark, ensure_index(spark, sf_dir))
     eng._stored_bmx_valid = False  # what an epoch mismatch sets up
     ids = eng.search_ids(HOT_QUERY_TERM, k=TOPK, mode="bm25",
-                         use_blockmax=True)
+                         plan="blockmax")
     remap = eng.documents.select("doc_id", "turn_idx")
     return (
         ids.join(remap, "doc_id")
@@ -630,7 +629,7 @@ def q_engine_hot_disjunctive(spark, sf_dir):
     keeps them all — correct, just nothing to skip at gate scale."""
     return _engine_topk(
         spark, sf_dir, HOT_DISJ_TERMS, "bm25", conjunctive=False,
-        use_maxscore=True,
+        plan="maxscore",
     )
 
 
@@ -4334,57 +4333,47 @@ FROM s
 GATE_WINDOW = 50
 
 GATE_LAST_GREEN: dict[str, int] = {
-    # 0 = new/changed this round (r5): folded variant twins (bm25/relevance
-    # native+engine under one row), CDC apply, tombstone lifecycle, indexed
-    # proximity — plus the r4-green mutation entries whose read/commit
-    # paths changed in r5 (delete-vector broadcast; compaction snapshot-log
-    # invalidation; snapshot pin-integrity refusal).
-    "engine_not_topk": 0,
-    "engine_suggest": 0,
-    "engine_suggest_fast": 0,
-    "engine_match_count": 0,
-    "engine_role_topk": 0,
-    "engine_suffix_topk": 0,
-    "engine_mlt_topk": 0,
-    "engine_facets": 0,
-    "bm25_topk": 0,
-    "relevance_ref_topk": 0,
-    "engine_cdc_stats": 0,
-    "engine_tombstone_stats": 0,
-    "engine_prox_pos_topk": 0,
-    "engine_upsert_stats": 0,
-    "engine_delete_stats": 0,
-    "engine_compacted_topk": 0,
-    "engine_snapshot_topk": 0,
-    # last green in r3 (no r4 row — outside that round's window)
-    "term_stats": 3, "corpus_stats": 3, "doc_stats": 3, "top_terms": 3,
-    "source_stats": 3, "any_match": 3, "conjunctive_match": 3,
-    "tpch_pricing_summary": 3, "tpch_order_revenue": 3,
-    "tpch_cust_nation_region": 3, "tpch_semi_join": 3, "tpch_anti_join": 3,
-    "tpch_top_orders_per_cust": 3, "tpch_brand_volume": 3,
-    "dedup_exact": 3, "jaccard_pairs": 3, "ngram_dup_pairs": 3,
-    "minhash_sigs": 3, "lsh_pairs": 3, "lsh_bucket_stats": 3, "simhash": 3,
-    "doc_fingerprint": 3, "rolling_fingerprint": 3, "cosine_topk": 3,
-    "embed_dup_pairs": 3, "embed_quantize": 3, "ann_ivf": 3,
-    "ivf_recall": 3, "phrase_match": 3, "proximity_match": 3,
+    # 0 = changed since its last green row: every entry behind
+    # _engine_topk / q_engine_hot_fallback_topk (search_ids' plan= router
+    # replaced the use_* flags), plus the readers whose decode path gained
+    # behaviour when the posting readers folded into one kernel
+    # (membership reader: NOT, match_count; positions reader: now
+    # delete-masked; suggest: length cap by the requested max_edit).
+    "engine_disjunctive": 0, "engine_rare_topk": 0, "engine_maxdf_topk": 0,
+    "engine_paged_topk": 0, "engine_not_topk": 0, "engine_suggest_fast": 0,
+    "engine_match_count": 0, "engine_prox_pos_topk": 0, "bm25_topk": 0,
+    "relevance_ref_topk": 0, "engine_hot_topk": 0,
+    "engine_hot_fallback_topk": 0, "engine_hot_disjunctive": 0,
     # last green in r4 (CORRECTNESS_r04.json)
-    "engine_hot_topk": 4, "engine_hot_fallback_topk": 4,
-    "engine_hot_disjunctive": 4, "engine_disjunctive": 4,
-    "engine_rare_topk": 4, "engine_maxdf_topk": 4, "engine_paged_topk": 4,
     "engine_incremental_stats": 4, "engine_skew_topk": 4,
-    "engine_scoped_topk": 4, "engine_batch_topk": 4,
-    "engine_prefix_topk": 4, "engine_phrase_topk": 4,
-    "engine_phrase_pos_topk": 4, "engine_phrase_incr_topk": 4,
-    "ann_bucketed": 4, "ann_recall": 4, "clean_docs": 4, "tokenize_tf": 4,
-    "search_snippets": 4, "build_manifest": 4, "dedup_components": 4,
-    "lang_id": 4, "quality_score": 4, "token_counts": 4,
-    "events_tumbling": 4, "events_sessionize": 4, "events_json": 4,
-    "media_features": 4, "media_frames": 4, "media_audio_stats": 4,
-    "streaming_tumbling": 4, "streaming_sessionize": 4,
-    "pipeline_training_shard": 4, "seq_pack": 4, "repetition_stats": 4,
-    "source_cap_sample": 4, "hash_split": 4, "doc_chunks": 4,
-    "decontaminate": 4, "pii_scrub": 4, "shuffle_order": 4,
+    "engine_scoped_topk": 4, "engine_batch_topk": 4, "engine_prefix_topk": 4,
+    "engine_phrase_topk": 4, "engine_phrase_pos_topk": 4,
+    "engine_phrase_incr_topk": 4, "ann_bucketed": 4, "ann_recall": 4,
+    "clean_docs": 4, "tokenize_tf": 4, "search_snippets": 4,
+    "build_manifest": 4, "dedup_components": 4, "lang_id": 4,
+    "quality_score": 4, "token_counts": 4, "events_tumbling": 4,
+    "events_sessionize": 4, "events_json": 4, "media_features": 4,
+    "media_frames": 4, "media_audio_stats": 4, "streaming_tumbling": 4,
+    "streaming_sessionize": 4, "pipeline_training_shard": 4, "seq_pack": 4,
+    "repetition_stats": 4, "source_cap_sample": 4, "hash_split": 4,
+    "doc_chunks": 4, "decontaminate": 4, "pii_scrub": 4, "shuffle_order": 4,
     "chunk_dedup": 4, "sample_mix": 4,
+    # last green in r5 (CORRECTNESS_r05.json)
+    "engine_suggest": 5, "engine_role_topk": 5, "engine_suffix_topk": 5,
+    "engine_mlt_topk": 5, "engine_facets": 5, "engine_cdc_stats": 5,
+    "engine_tombstone_stats": 5, "engine_upsert_stats": 5,
+    "engine_delete_stats": 5, "engine_compacted_topk": 5,
+    "engine_snapshot_topk": 5, "term_stats": 5, "corpus_stats": 5,
+    "doc_stats": 5, "top_terms": 5, "source_stats": 5, "any_match": 5,
+    "conjunctive_match": 5, "tpch_pricing_summary": 5,
+    "tpch_order_revenue": 5, "tpch_cust_nation_region": 5,
+    "tpch_semi_join": 5, "tpch_anti_join": 5, "tpch_top_orders_per_cust": 5,
+    "tpch_brand_volume": 5, "dedup_exact": 5, "jaccard_pairs": 5,
+    "ngram_dup_pairs": 5, "minhash_sigs": 5, "lsh_pairs": 5,
+    "lsh_bucket_stats": 5, "simhash": 5, "doc_fingerprint": 5,
+    "rolling_fingerprint": 5, "cosine_topk": 5, "embed_dup_pairs": 5,
+    "embed_quantize": 5, "ann_ivf": 5, "ivf_recall": 5, "phrase_match": 5,
+    "proximity_match": 5,
 }
 
 # Insertion order = tie-break within a gate round. Among the round-4 block

@@ -7,7 +7,8 @@ posting parts are immutable columnar files, so replacement is expressed
 the way Iceberg's merge-on-read does it: the old doc_id goes into a
 delete vector, the new text is indexed as a new doc in the batch's new
 part, and every read subtracts the vector — queries via a numpy mask in
-the decode kernels, stats via an anti-join in `_recompute_stats`.
+the one decode kernel (query.py:_decode_blocks), stats via an anti-join
+in `_recompute_stats`.
 `compact_index` is the merge: it rewrites staging/postings/documents
 without the deleted rows and purges the vector.
 
@@ -22,8 +23,9 @@ docs it would have replaced).
 
 Scale notes: the vector holds only docs replaced since the last
 compaction — it is collected to the driver once per SearchEngine and
-shipped to the decode kernels inside the UDF closure (at Iceberg scale
-this becomes a broadcast roaring bitmap; same plan shape). The decode
+shipped to the decode kernel as a Spark broadcast, once per executor
+rather than inside every task's UDF closure (at Iceberg scale the
+broadcast value becomes a roaring bitmap; same plan shape). The decode
 mask is one vectorized ``np.isin`` per (term, batch). Compaction bounds
 the vector's growth exactly as it bounds part-count growth.
 """

@@ -127,7 +127,7 @@ def _recompute_stats(spark: SparkSession, out_dir: str, version: str,
     rewrite; part manifest rows carrying a DIFFERENT epoch are thereby
     marked as encoded under older stats, which disables the query
     engine's stored-block_max_score pruning until a compaction
-    re-encodes them (query.py:_block_bound_col).
+    re-encodes them (query.py:_bound_col_multi).
 
     ``delete_dirs`` pins the delete-vector batch list the stats subtract
     (recovery's sweep passes the committed set so an about-to-be-rolled-

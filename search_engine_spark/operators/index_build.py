@@ -379,7 +379,7 @@ def _make_part_encoder(
             "last_doc_id": ids[ends - 1],
             "max_tf": np.maximum.reduceat(tfs, starts).astype(np.int32),
             # min_dl feeds the query-side drift-immune block bound
-            # (query.py:_block_bound_col): f(max_tf, max(min_dl,
+            # (query.py:_bound_col_multi): f(max_tf, max(min_dl,
             # max_tf)) upper-bounds every score in the block with
             # CURRENT stats, where the stored block_max_score freezes
             # encode-time stats

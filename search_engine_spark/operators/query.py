@@ -58,6 +58,82 @@ class TermInfo:
     order: int  # df-ascending rank among query terms
 
 
+def _span_arrays(spans: list[tuple[int, int]]) -> tuple[np.ndarray, np.ndarray]:
+    """Sorted, merged doc_id spans -> the (lo, hi) int64 arrays the
+    decode kernel's range mask searches."""
+    return (
+        np.array([s[0] for s in spans], dtype=np.int64),
+        np.array([s[1] for s in spans], dtype=np.int64),
+    )
+
+
+def _decode_blocks(batches, streams, ranges, deleted_bc):
+    """The one decode kernel every posting reader runs in mapInPandas.
+    It closes over nothing (arrays and the broadcast handle come in as
+    arguments), so a reader's UDF pickles without the engine.
+
+    For each term group of each scan batch: ONE grouped codec pass over
+    the doc_ids plus only the requested ``streams`` (any of "tfs",
+    "dls", "positions"; VByte buffers concatenate, see
+    codec.varbyte_decode_groups), then the doc_id range mask (``ranges``:
+    term -> (lo, hi) span arrays, so ranges may differ per term; a term
+    without an entry is unmasked) and the delete-vector mask, each
+    applied once to every stream row-aligned — positions by repeating
+    the row mask over each row's tf. Yields, per batch that keeps any
+    posting, a list of (term, cols): "doc_ids"/"tfs" int64, "dls"
+    uint64, "positions" one flat int64 array segmented by cols["tfs"]."""
+    from ..functions.codec import (
+        decode_doc_ids_grouped,
+        decode_positions_grouped,
+        varbyte_decode_groups,
+    )
+
+    deleted = deleted_bc.value if deleted_bc is not None else None
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        raw = {s: pdf[s].to_numpy() for s in ("doc_ids", *streams)}
+        groups = []
+        for term, rows in pdf.groupby("term", sort=False).indices.items():
+            ids, _ = decode_doc_ids_grouped(list(raw["doc_ids"][rows]))
+            if ids.size == 0:
+                continue
+            cols = {"doc_ids": ids}
+            for s in ("tfs", "dls"):
+                if s in streams:
+                    vals, _ = varbyte_decode_groups(list(raw[s][rows]))
+                    cols[s] = vals.astype(np.int64) if s == "tfs" else vals
+            if "positions" in streams:
+                cols["positions"] = decode_positions_grouped(
+                    list(raw["positions"][rows]), cols["tfs"]
+                )
+            keep = None
+            rng = ranges.get(term) if ranges else None
+            if rng is not None:
+                # lossless pruning (rarest-term ranges under conjunction,
+                # scope runs): pruned docs never reach the shuffle
+                lo, hi = rng
+                pos = np.searchsorted(lo, ids, side="right") - 1
+                keep = (pos >= 0) & (ids <= hi[np.clip(pos, 0, None)])
+            if deleted is not None:
+                # replaced docs never score, match or surface
+                live = ~np.isin(ids, deleted)
+                keep = live if keep is None else keep & live
+            if keep is not None and not keep.all():
+                if not keep.any():
+                    continue
+                if "positions" in cols:
+                    cols["positions"] = cols["positions"][
+                        np.repeat(keep, cols["tfs"])
+                    ]
+                cols.update(
+                    {s: v[keep] for s, v in cols.items() if s != "positions"}
+                )
+            groups.append((term, cols))
+        if groups:
+            yield groups
+
+
 class SearchEngine:
     """Loads index metadata once; each ``search`` call is one Spark job."""
 
@@ -166,7 +242,7 @@ class SearchEngine:
         else:
             self.documents = spark.read.parquet(f"{index_dir}/documents")
         # delete vector (operators/deletes.py, upsert support): collected
-        # once per engine, masked out of every decode kernel and
+        # once per engine, masked out by the decode kernel and
         # anti-joined off the documents view, so replaced docs neither
         # score nor surface. Pinned snapshots load THEIR vector (a
         # snapshot taken before an upsert correctly still sees the old
@@ -184,7 +260,7 @@ class SearchEngine:
             if self.snapshot is not None
             else committed_delete_batch_dirs(index_dir),
         )
-        # the decode kernels consume the vector via a Spark BROADCAST, not
+        # the decode kernel consumes the vector via a Spark BROADCAST, not
         # a closure capture: a closure ships the O(replaced-docs) int64
         # array inside EVERY task's serialized UDF, a broadcast ships it
         # once per executor (torrent blocks) and tasks read the cached
@@ -319,17 +395,12 @@ class SearchEngine:
     def _rare_term_ranges(self, rare: TermInfo) -> list[tuple[int, int]] | None:
         if rare.term in self._ranges_cache:
             return self._ranges_cache[rare.term]
-        from ..functions.spark_hash import spark_bucket
-
-        # bucket partition filter first (like candidate_scores /
-        # _collect_ranges_bulk) so this cold-path metadata collect lists
-        # ONE bucket dir, not all N
+        # bucket-pruned like every scan, so this cold-path metadata
+        # collect lists ONE bucket dir, not all N
         rows = (
-            self.postings.filter(
-                (F.col("bucket") == spark_bucket(rare.term, self.n_buckets))
-                & (F.col("term") == rare.term)
+            self._scan_blocks(
+                [rare.term], columns=["first_doc_id", "last_doc_id"]
             )
-            .select("first_doc_id", "last_doc_id")
             .limit(self.PRUNE_MAX_RARE_BLOCKS + 1)
             .collect()
         )
@@ -349,11 +420,8 @@ class SearchEngine:
         whole search_many workload pays O(1) collects instead of one per
         query. Hot terms (> PRUNE_MAX_RARE_BLOCKS blocks) memoize as None
         (no pruning), exactly like the single-query path."""
-        from ..functions.spark_hash import spark_bucket
-
-        buckets = sorted({spark_bucket(t, self.n_buckets) for t in terms})
-        scoped = self.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+        scoped = self._scan_blocks(
+            terms, columns=["term", "first_doc_id", "last_doc_id"]
         )
         n_by_term = {
             r["term"]: int(r["n"])
@@ -465,24 +533,19 @@ class SearchEngine:
         return result
 
 
-    def _push_ranges(self, blocks: DataFrame,
-                     ranges: list[tuple[int, int]] | None) -> DataFrame:
-        """Shared doc_id-range row-group pushdown for the posting-block
-        scans (candidate_scores + matching_doc_ids): an OR-of-ranges
-        filter when the run list is small enough for Catalyst, else a
-        LOUD warning — the decode-side numpy mask keeps results exact
-        either way, but every block of every term gets scanned."""
-        if ranges and len(ranges) <= self.PRUNE_MAX_FILTER_RANGES:
-            overlap = None
-            for lo, hi in ranges:
-                c = (F.col("first_doc_id") <= hi) & (
-                    F.col("last_doc_id") >= lo
-                )
-                overlap = c if overlap is None else (overlap | c)
-            return blocks.filter(overlap)
-        if ranges:
-            # no silent caps: the post-decode numpy mask keeps results
-            # exact, but every block of every term will now be scanned
+    def _ranges_pred(
+        self, ranges: list[tuple[int, int]] | None, lo_col: str, hi_col: str
+    ) -> F.Column | None:
+        """The one OR-of-ranges pushdown predicate: rows whose
+        [lo_col, hi_col] interval overlaps any doc_id span (posting
+        blocks: first/last_doc_id; the doc store: doc_id twice). None
+        when there is nothing to push, or — LOUDLY — when the span list
+        is too long for Catalyst: the decode-side mask (or the join
+        against already-pruned scores) keeps results exact either way,
+        but every row group gets scanned."""
+        if not ranges:
+            return None
+        if len(ranges) > self.PRUNE_MAX_FILTER_RANGES:
             warnings.warn(
                 f"{len(ranges)} doc_id ranges exceed "
                 f"PRUNE_MAX_FILTER_RANGES={self.PRUNE_MAX_FILTER_RANGES}; "
@@ -491,7 +554,43 @@ class SearchEngine:
                 "compact_index restores dense ordering.",
                 stacklevel=3,
             )
-        return blocks
+            return None
+        pred = None
+        for lo, hi in ranges:
+            c = (F.col(lo_col) <= hi) & (F.col(hi_col) >= lo)
+            pred = c if pred is None else (pred | c)
+        return pred
+
+    def _scan_blocks(
+        self,
+        terms: list[str],
+        ranges: list[tuple[int, int]] | None = None,
+        columns: list[str] | None = None,
+        keep_terms: list[str] | None = None,
+    ) -> DataFrame:
+        """The one posting-block scan every reader and planner starts
+        from. bucket = pmod(hash(term), n_buckets) is a directory
+        partition column, so computing the terms' buckets driver-side
+        (pure Python murmur3, no Spark job) turns the term filter into
+        PartitionFilters (whole bucket dirs skipped) plus the term
+        row-group filter. ``ranges`` pushes the doc_id OR-of-ranges
+        overlap into the scan (row-group min/max over first/last_doc_id);
+        ``keep_terms`` exempts terms whose blocks must be read whole
+        (search_many's terms with an unpruned subscriber). ``columns``
+        projects only the streams a reader decodes; None keeps every
+        column for planners that filter on block metadata first."""
+        from ..functions.spark_hash import spark_bucket
+
+        buckets = sorted({spark_bucket(t, self.n_buckets) for t in terms})
+        blocks = self.postings.filter(
+            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+        )
+        overlap = self._ranges_pred(ranges, "first_doc_id", "last_doc_id")
+        if overlap is not None:
+            if keep_terms:
+                overlap = F.col("term").isin(keep_terms) | overlap
+            blocks = blocks.filter(overlap)
+        return blocks if columns is None else blocks.select(*columns)
 
     def candidate_scores(
         self,
@@ -507,12 +606,14 @@ class SearchEngine:
         scope's doc_id run list. Scoring statistics stay GLOBAL under a
         scope (idf/avgdl of the whole corpus — the scope excludes
         candidates, it does not define a sub-corpus; documented deviation
-        from the reference's per-site lemma frequencies, SURVEY.md §7.5)."""
+        from the reference's per-site lemma frequencies, SURVEY.md §7.5).
+        ``blocks_df`` replaces the scan with a pre-filtered block set
+        (the block-max seed / threshold-kept sets, cut from _scan_blocks)."""
         terms = [ti.term for ti in infos]
         params = {
             ti.term: (ti.order, self._idf(ti.df)) for ti in infos
         }
-        n_docs, avgdl, max_tf_sum = self.n_docs, self.avgdl, self.max_tf_sum
+        avgdl, max_tf_sum = self.avgdl, self.max_tf_sum
 
         ranges = None
         if conjunctive and len(infos) > 1:
@@ -527,28 +628,15 @@ class SearchEngine:
                 if not ranges:
                     ranges = [(1, 0)]  # empty intersection -> no blocks
 
-        # bucket = pmod(hash(term), n_buckets) is a directory partition
-        # column — computing the query terms' buckets driver-side (pure
-        # Python murmur3, no Spark job) turns the term filter into
-        # PartitionFilters (whole bucket dirs skipped)
-        from ..functions.spark_hash import spark_bucket
-
-        if blocks_df is not None:
-            # caller supplies a pre-filtered block set (the block-max
-            # seed / threshold-kept sets of _single_term_topk)
-            blocks = blocks_df
-        else:
-            buckets = sorted(
-                {spark_bucket(t, self.n_buckets) for t in terms}
-            )
-            blocks = self.postings.filter(
-                F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-            )
-        blocks = self._push_ranges(blocks, ranges)
-        blocks = blocks.select("term", "doc_ids", "tfs", "dls")
-
-        lo_arr = np.array([r[0] for r in ranges], dtype=np.int64) if ranges else None
-        hi_arr = np.array([r[1] for r in ranges], dtype=np.int64) if ranges else None
+        bm25 = mode == "bm25"
+        streams = ("tfs", "dls") if bm25 else ("tfs",)
+        cols = ["term", "doc_ids", *streams]
+        blocks = (
+            self._scan_blocks(terms, ranges, cols)
+            if blocks_df is None
+            else blocks_df.select(*cols)
+        )
+        span = {t: _span_arrays(ranges) for t in terms} if ranges else None
         # ship-once-per-executor broadcast handle (None when no deletes);
         # the kernel dereferences .value executor-side
         deleted_bc = self._deleted_bc
@@ -562,52 +650,13 @@ class SearchEngine:
         )
 
         def decode_score(batches):
-            # grouped decode: all of a term's blocks in the batch go
-            # through ONE vectorized codec pass (VByte buffers
-            # concatenate; codec.decode_postings_grouped) instead of a
-            # per-block Python loop
-            from ..functions.codec import (
-                decode_postings_grouped,
-                varbyte_decode_groups,
-            )
-
-            deleted = deleted_bc.value if deleted_bc is not None else None
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
+            for groups in _decode_blocks(batches, streams, span, deleted_bc):
                 outs = []
-                ids_col = pdf["doc_ids"].to_numpy()
-                tfs_col = pdf["tfs"].to_numpy()
-                dls_col = pdf["dls"].to_numpy()
-                for term, rows in pdf.groupby(
-                    "term", sort=False
-                ).indices.items():
+                for term, c in groups:
                     order, idf = params[term]
-                    ids, tfs, _ = decode_postings_grouped(
-                        list(ids_col[rows]), list(tfs_col[rows])
-                    )
-                    if mode == "bm25":
-                        dls, _ = varbyte_decode_groups(list(dls_col[rows]))
-                        dls = dls.astype(np.float64)
-                    if lo_arr is not None:
-                        # mask to rarest-term ranges (lossless under
-                        # conjunction) so pruned docs never hit the shuffle
-                        pos = np.searchsorted(lo_arr, ids, side="right") - 1
-                        keep = (pos >= 0) & (ids <= hi_arr[np.clip(pos, 0, None)])
-                        if not keep.all():
-                            ids, tfs = ids[keep], tfs[keep]
-                            if mode == "bm25":
-                                dls = dls[keep]
-                    if deleted is not None and ids.size:
-                        # delete-vector mask: replaced docs never score
-                        keep = ~np.isin(ids, deleted)
-                        if not keep.all():
-                            ids, tfs = ids[keep], tfs[keep]
-                            if mode == "bm25":
-                                dls = dls[keep]
-                    if ids.size == 0:
-                        continue
-                    if mode == "bm25":
+                    tfs = c["tfs"]
+                    if bm25:
+                        dls = c["dls"].astype(np.float64)
                         denom = tfs + K1 * (1 - B + B * dls / avgdl)
                         s = idf * (tfs * (K1 + 1)) / denom
                     else:  # relevance_ref (IndexRepository.java:14-20)
@@ -615,18 +664,77 @@ class SearchEngine:
                     outs.append(
                         pd.DataFrame(
                             {
-                                "doc_id": ids,
+                                "doc_id": c["doc_ids"],
                                 "order": np.int32(order),
                                 "s": s,
                             }
                         )
                     )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+                yield pd.concat(outs, ignore_index=True)
 
         return blocks.mapInPandas(decode_score, schema=out_schema)
 
     # ------------------------------------------------------------------
+    PLANS = ("classic", "packed", "blockmax", "maxscore")
+
+    def _route(
+        self,
+        infos: list[TermInfo],
+        n_missing: int,
+        conjunctive: bool,
+        offset: int = 0,
+        scope: str | None = None,
+        max_df: int | None = None,
+        role: str | None = None,
+        plan: str | None = None,
+    ) -> tuple[str, str]:
+        """Pick the top-k plan for an already looked-up query -> (plan,
+        reason). Pure: no Spark job, it reads only the dfs in ``infos``
+        and the routing thresholds. ``plan`` forces one; a forced
+        non-classic plan refuses offset/scope/role/max_df (those ride the
+        classic plan) with ONE ValueError."""
+        if plan is not None and plan not in self.PLANS:
+            raise ValueError(f"unknown plan {plan!r}; valid: {self.PLANS}")
+        feature = next((name for name, on in (
+            ("offset", offset != 0), ("scope", scope is not None),
+            ("role", role is not None), ("max_df", max_df is not None),
+        ) if on), None)
+        if plan == "classic":
+            return plan, "forced"
+        if plan is not None:
+            if feature is not None:
+                raise ValueError(
+                    f"plan={plan!r} requires offset=0, scope=None, "
+                    f"role=None, max_df=None ({feature} rides the classic "
+                    "plan)"
+                )
+            if plan == "blockmax" and len(infos) != 1 and not (
+                conjunctive and n_missing
+            ):
+                raise ValueError(
+                    "plan='blockmax' requires a single-term query; got "
+                    f"{len(infos)} dictionary terms"
+                )
+            if plan == "maxscore" and conjunctive:
+                raise ValueError(
+                    "plan='maxscore' requires conjunctive=False — "
+                    "conjunctive queries already prune via rarest-term "
+                    "doc_id ranges"
+                )
+            return plan, "forced"
+        if feature is not None:
+            return "classic", feature
+        if not infos or (conjunctive and n_missing):
+            return "classic", "no match"
+        total = sum(ti.df for ti in infos)
+        if len(infos) == 1 and total >= self.BLOCKMAX_MIN_POSTINGS:
+            return "blockmax", "df >= BLOCKMAX_MIN_POSTINGS"
+        if not conjunctive and total >= self.BLOCKMAX_MIN_POSTINGS:
+            return "maxscore", "summed df >= BLOCKMAX_MIN_POSTINGS"
+        if total >= self.BATCH_PLAN_MIN_POSTINGS:
+            return "packed", "summed df >= BATCH_PLAN_MIN_POSTINGS"
+        return "classic", "summed df < BATCH_PLAN_MIN_POSTINGS"
+
     def search_ids(
         self,
         query: str,
@@ -637,9 +745,7 @@ class SearchEngine:
         conjunctive: bool = True,
         scope: str | None = None,
         role: str | None = None,
-        use_batch_plan: bool | None = None,
-        use_blockmax: bool | None = None,
-        use_maxscore: bool | None = None,
+        plan: str | None = None,
     ) -> DataFrame:
         """Top-k (doc_id, score) — the rank-identity contract surface.
         ``scope`` restricts results to conversations whose conv_id starts
@@ -651,118 +757,43 @@ class SearchEngine:
         projection BEFORE the top-k cut; rides the classic plan, scoring
         stats stay global like scope.
 
-        Plan selection: by default (``use_batch_plan=None``) a plain
-        query — no offset/scope/max_df — is routed by COST: the query
-        terms' summed df (the exact decoded-postings volume, already
-        memoized by the dictionary lookup) picks between the classic
-        row-partials pivot (lower fixed cost — wins small volumes) and
-        the packed varbyte exchange + dense-numpy scoring plan (flat
-        until large volumes — 4.1 s -> 1.5 s on a 7.5M-posting query
-        over a 2.8M-doc index at local[8]). Measured crossover ~1M
-        postings on both the 717k- and 2.87M-doc corpora (BENCH.md
-        "interactive plan routing"); both plans are bit-identical by
-        contract (enforced by tests/test_query.py both ways). Pass
-        ``use_batch_plan=False`` to force the classic plan (the
-        regression tests compare the two), or True to assert batch
-        eligibility. Hot SINGLE-term queries (df >=
-        BLOCKMAX_MIN_POSTINGS) route to the two-pass block-max plan
-        instead (``use_blockmax`` forces it on/off); hot MULTI-term
-        DISJUNCTIVE queries (summed df over the threshold) route to the
-        two-pass MaxScore bound-sum plan (``use_maxscore`` forces it —
-        see _maxscore_topk). All plans are bit-identical by contract."""
+        Plan selection (``plan``: None = route by cost, or one of
+        "classic" | "packed" | "blockmax" | "maxscore" to force it; see
+        _route). Any
+        offset/scope/role/max_df query runs the classic row-partials
+        pivot. A plain query routes on the query terms' summed df (the
+        exact decoded-postings volume, already memoized by the dictionary
+        lookup): a hot SINGLE term (df >= BLOCKMAX_MIN_POSTINGS) runs the
+        two-pass block-max plan (_single_term_topk); a hot multi-term
+        DISJUNCTIVE query the two-pass MaxScore bound-sum plan
+        (_maxscore_topk, which may bail back to classic when its bounds
+        are too flat to prune — a forced "maxscore" never bails); a
+        summed df >= BATCH_PLAN_MIN_POSTINGS the packed varbyte exchange
+        + dense-numpy scoring plan (flat until large volumes — 4.1 s ->
+        1.5 s on a 7.5M-posting query over a 2.8M-doc index at local[8];
+        measured crossover ~1M postings on both the 717k- and 2.87M-doc
+        corpora, BENCH.md "interactive plan routing"); anything smaller
+        the classic plan, whose fixed cost is lower. All plans are
+        bit-identical by contract (tests/test_query.py compares each
+        against "classic")."""
         self._check_mode(mode)
-
-        def empty() -> DataFrame:
-            return self.spark.createDataFrame(
-                [], schema="doc_id long, score double"
-            )
-
-        # block-max routing: only from the fully-default state (both
-        # plan flags None) or when explicitly forced — an explicit
-        # use_batch_plan True/False pins that plan for regression tests
-        if use_blockmax is None:
-            use_blockmax = False
-            if (use_batch_plan is None and offset == 0 and scope is None
-                    and max_df is None and role is None):
-                infos, n_missing = self.lookup_terms(query)
-                if len(infos) == 1 and not (conjunctive and n_missing):
-                    use_blockmax = (
-                        infos[0].df >= self.BLOCKMAX_MIN_POSTINGS
-                    )
-        if use_blockmax:
-            if (offset != 0 or scope is not None or max_df is not None
-                    or role is not None):
-                raise ValueError(
-                    "use_blockmax=True requires offset=0, scope=None, "
-                    "role=None, max_df=None (those features ride the "
-                    "classic plan)"
-                )
-            infos, n_missing = self.lookup_terms(query)
-            if conjunctive and n_missing:
-                return empty()
-            if len(infos) != 1:
-                raise ValueError(
-                    "use_blockmax=True requires a single-term query; got "
-                    f"{len(infos)} dictionary terms"
-                )
+        infos, n_missing = self.lookup_terms(query, max_df=max_df)
+        plan, reason = self._route(
+            infos, n_missing, conjunctive, offset, scope, max_df, role, plan
+        )
+        if (conjunctive and n_missing) or not infos:
+            # a query term absent from the dictionary -> no doc matches ALL
+            # (reference error contract, SearchServiceImpl.java:60-62);
+            # df-pruned terms (P3) do NOT trigger this — they are merely
+            # excluded from scoring, matching the reference's pickNonFrequent
+            return self._empty_topk()
+        if plan == "blockmax":
             return self._single_term_topk(infos[0], k, mode)
-        # MaxScore routing: the disjunctive analog of the single-term
-        # block-max plan — only from the fully-default state or when
-        # explicitly forced
-        maxscore_auto = False
-        if use_maxscore is None:
-            use_maxscore = False
-            if (not conjunctive and use_batch_plan is None and offset == 0
-                    and scope is None and max_df is None and role is None):
-                infos, _ = self.lookup_terms(query)
-                if len(infos) > 1:
-                    use_maxscore = (
-                        sum(ti.df for ti in infos)
-                        >= self.BLOCKMAX_MIN_POSTINGS
-                    )
-                    # auto-routed: the plan may still bail back to classic
-                    # after the cheap grid pass if the corpus's bound
-                    # distribution is too flat to prune (explicit
-                    # use_maxscore=True runs the full plan regardless)
-                    maxscore_auto = use_maxscore
-        if use_maxscore:
-            if (offset != 0 or scope is not None or max_df is not None
-                    or role is not None):
-                raise ValueError(
-                    "use_maxscore=True requires offset=0, scope=None, "
-                    "role=None, max_df=None (those features ride the "
-                    "classic plan)"
-                )
-            if conjunctive:
-                raise ValueError(
-                    "use_maxscore=True requires conjunctive=False — "
-                    "conjunctive queries already prune via rarest-term "
-                    "doc_id ranges"
-                )
-            infos, _ = self.lookup_terms(query)
-            if not infos:
-                return empty()
+        if plan == "maxscore":
             return self._maxscore_topk(
-                infos, k, mode, allow_bailout=maxscore_auto
+                infos, k, mode, allow_bailout=reason != "forced"
             )
-        if use_batch_plan is None:
-            use_batch_plan = False
-            if (offset == 0 and scope is None and max_df is None
-                    and role is None):
-                infos, n_missing = self.lookup_terms(query)
-                if infos and not (conjunctive and n_missing):
-                    use_batch_plan = (
-                        sum(ti.df for ti in infos)
-                        >= self.BATCH_PLAN_MIN_POSTINGS
-                    )
-        if use_batch_plan:
-            if (offset != 0 or scope is not None or max_df is not None
-                    or role is not None):
-                raise ValueError(
-                    "use_batch_plan=True requires offset=0, scope=None, "
-                    "role=None, max_df=None (those features ride the "
-                    "classic plan)"
-                )
+        if plan == "packed":
             return (
                 self.search_many(
                     {"_q": query}, k=k, mode=mode, conjunctive=conjunctive
@@ -770,26 +801,20 @@ class SearchEngine:
                 .select("doc_id", "score")
                 .orderBy(F.desc("score"), F.asc("doc_id"))
             )
-        infos, n_missing = self.lookup_terms(query, max_df=max_df)
-        if conjunctive and n_missing:
-            # a query term absent from the dictionary -> no doc matches ALL
-            # (reference error contract, SearchServiceImpl.java:60-62);
-            # df-pruned terms (P3) do NOT trigger this — they are merely
-            # excluded from scoring, matching the reference's pickNonFrequent
-            return empty()
-        if not infos:
-            return empty()
         scope_ranges = None
         if scope is not None:
             scope_ranges = self._scope_ranges(scope)
             if scope_ranges is None:  # scope matches no documents
-                return empty()
+                return self._empty_topk()
 
         return self._classic_topk(
             infos, k=k, offset=offset, mode=mode,
             conjunctive=conjunctive, scope_ranges=scope_ranges,
             role=role,
         )
+
+    def _empty_topk(self) -> DataFrame:
+        return self.spark.createDataFrame([], schema="doc_id long, score double")
 
     def _classic_topk(
         self,
@@ -894,44 +919,6 @@ class SearchEngine:
             self._stored_bmx_valid = valid
         return self._stored_bmx_valid
 
-    def _block_bound_col(self, info: TermInfo, mode: str) -> F.Column:
-        """Per-block score UPPER BOUND as a Catalyst expression over the
-        block row, from ``max_tf`` and the CURRENT corpus stats — never
-        the stored ``block_max_score``, which is frozen at encode time
-        and goes stale when incremental updates shift n_docs/avgdl
-        (idf can then rise above the stored bound and pruning with it
-        would silently drop true hits). The BM25 partial is increasing
-        in tf and decreasing in dl, so f(max_tf, dl_eff) with
-        dl_eff = max(min_dl, max_tf) upper-bounds every score in the
-        block: docs with dl >= dl_eff are dominated directly, and a doc
-        shorter than max_tf has tf <= dl < max_tf, so its score
-        f(tf, dl) <= g(dl) <= g(max_tf) <= f(max_tf, dl_eff), where
-        g(t) = f(t, t) is increasing. The arithmetic mirrors
-        decode_score's numpy literally — when the block's best doc
-        has (tf, dl) == (max_tf, dl_eff) the bound equals its score
-        bit-for-bit, so the ``bound >= tau`` keep-test is tie-safe.
-        Indexes encoded before the min_dl column exist fall back to
-        dl_eff = max_tf (sound, looser)."""
-        mt = F.col("max_tf").cast("double")
-        if mode == "bm25":
-            if self._stored_blockmax_valid():
-                # exact per-block maximum, computed at encode with the
-                # SAME expression shape as decode_score — far tighter
-                # than any metadata bound (measured 5432 -> 206 blocks
-                # on a 693k-df term, PERF.md)
-                return F.col("block_max_score")
-            dl_eff = (
-                F.greatest(F.col("min_dl"), F.col("max_tf")).cast("double")
-                if "min_dl" in self.postings.columns
-                else mt
-            )
-            idf = self._idf(info.df)
-            denom = mt + F.lit(K1) * (
-                F.lit(1 - B) + F.lit(B) * dl_eff / F.lit(self.avgdl)
-            )
-            return (F.lit(idf) * (mt * F.lit(K1 + 1))) / denom
-        return mt / F.lit(self.max_tf_sum)
-
     def _single_term_topk(self, info: TermInfo, k: int, mode: str) -> DataFrame:
         """Two-pass EXACT block-max top-k for a single-term query:
 
@@ -953,17 +940,10 @@ class SearchEngine:
         whose max_tf competes, instead of df/block_size blocks; the
         bound filter itself is a cheap JVM predicate on block metadata
         rows."""
-        from ..functions.spark_hash import spark_bucket
-
         if k <= 0:  # degenerate-but-valid; the classic plan returns empty
-            return self.spark.createDataFrame(
-                [], schema="doc_id long, score double"
-            )
-        term_blocks = self.postings.filter(
-            (F.col("bucket") == spark_bucket(info.term, self.n_buckets))
-            & (F.col("term") == info.term)
-        )
-        bound = self._block_bound_col(info, mode)
+            return self._empty_topk()
+        term_blocks = self._scan_blocks([info.term])
+        bound = self._bound_col_multi([info], mode)
         seed = (
             term_blocks.withColumn("_bms", bound)
             .orderBy(F.desc("_bms"), F.asc("first_doc_id"))
@@ -1006,12 +986,26 @@ class SearchEngine:
     MAXSCORE_BAILOUT_P50 = 0.8
 
     def _bound_col_multi(self, infos: list[TermInfo], mode: str) -> F.Column:
-        """Per-block score upper bound usable on a MULTI-term block frame
-        — `_block_bound_col` with the per-term idf supplied via a literal
-        term->idf map expression (|q| entries). Same soundness proof as
-        the single-term bound; the stored `block_max_score` (exact, idf
-        baked in at encode) is preferred whenever the stats-epoch
-        handshake validates it."""
+        """Per-block score UPPER BOUND as a Catalyst expression over a
+        block frame of ``infos``' terms (the per-term idf comes from a
+        literal term->idf map, |q| entries), from ``max_tf`` and the
+        CURRENT corpus stats. The stored ``block_max_score`` (exact, idf
+        baked in at encode — measured 5432 -> 206 kept blocks on a
+        693k-df term, PERF.md) is preferred whenever the stats-epoch
+        handshake validates it; otherwise it is frozen at encode time and
+        goes stale when incremental updates shift n_docs/avgdl (idf can
+        then rise above it and pruning would silently drop true hits).
+        The BM25 partial is increasing in tf and decreasing in dl, so
+        f(max_tf, dl_eff) with dl_eff = max(min_dl, max_tf) upper-bounds
+        every score in the block: docs with dl >= dl_eff are dominated
+        directly, and a doc shorter than max_tf has tf <= dl < max_tf, so
+        its score f(tf, dl) <= g(dl) <= g(max_tf) <= f(max_tf, dl_eff),
+        where g(t) = f(t, t) is increasing. The arithmetic mirrors
+        decode_score's numpy literally — when the block's best doc has
+        (tf, dl) == (max_tf, dl_eff) the bound equals its score
+        bit-for-bit, so the ``bound >= tau`` keep-test is tie-safe.
+        Indexes encoded before the min_dl column exist fall back to
+        dl_eff = max_tf (sound, looser)."""
         mt = F.col("max_tf").cast("double")
         if mode == "bm25":
             if self._stored_blockmax_valid():
@@ -1075,17 +1069,9 @@ class SearchEngine:
 
         Records {tau, buckets_total, buckets_kept, n_spans} in
         ``last_maxscore_stats`` for plan audits."""
-        from ..functions.spark_hash import spark_bucket
-
         if k <= 0:
-            return self.spark.createDataFrame(
-                [], schema="doc_id long, score double"
-            )
-        terms = [ti.term for ti in infos]
-        buckets = sorted({spark_bucket(t, self.n_buckets) for t in terms})
-        blocks = self.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        )
+            return self._empty_topk()
+        blocks = self._scan_blocks([ti.term for ti in infos])
         bound = self._bound_col_multi(infos, mode)
 
         # -- pass 1a: per-(term, grid-bucket) max bound ------------------
@@ -1105,9 +1091,7 @@ class SearchEngine:
             .collect()
         )
         if not grid_rows:  # no postings for any query term
-            return self.spark.createDataFrame(
-                [], schema="doc_id long, score double"
-            )
+            return self._empty_topk()
 
         # fold the grid BEFORE the seed decode: the bail-out below must
         # only cost the cheap grid agg, never pass 1b's bounded decode
@@ -1299,9 +1283,7 @@ class SearchEngine:
                 "terms; use a longer pattern or raise max_expansions"
             )
         if not rows:
-            return self.spark.createDataFrame(
-                [], schema="doc_id long, score double"
-            )
+            return self._empty_topk()
         found = {r["term"]: int(r["df"]) for r in rows}
         self._df_cache.update(found)
         infos = [
@@ -1321,53 +1303,36 @@ class SearchEngine:
         """(doc_id, term, positions) rows decoded from the positions
         stream of the given terms' posting blocks (store_positions=True
         builds) — bucket-pruned and range-pruned exactly like
-        candidate_scores. positions are the 0-based token indexes in the
-        analyzed lemma array (the phrase_count_col coordinate space)."""
-        from ..functions.codec import (
-            decode_positions_grouped,
-            decode_postings_grouped,
-        )
-        from ..functions.spark_hash import spark_bucket
-
+        candidate_scores, delete-vector masked like every reader.
+        positions are the 0-based token indexes in the analyzed lemma
+        array (the phrase_count_col coordinate space)."""
         terms = [ti.term for ti in infos]
-        buckets = sorted({spark_bucket(t, self.n_buckets) for t in terms})
-        blocks = self.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        )
-        if ranges and len(ranges) <= self.PRUNE_MAX_FILTER_RANGES:
-            overlap = None
-            for lo, hi in ranges:
-                c = (F.col("first_doc_id") <= hi) & (
-                    F.col("last_doc_id") >= lo
-                )
-                overlap = c if overlap is None else (overlap | c)
-            blocks = blocks.filter(overlap)
-        sel = blocks.select("term", "doc_ids", "tfs", "positions")
+        streams = ("tfs", "positions")
+        blocks = self._scan_blocks(terms, ranges, ["term", "doc_ids", *streams])
+        span = {t: _span_arrays(ranges) for t in terms} if ranges else None
+        deleted_bc = self._deleted_bc
 
         def gen(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids, tfs, n = decode_postings_grouped(
-                    pdf["doc_ids"].tolist(), pdf["tfs"].tolist()
-                )
-                pos_flat = decode_positions_grouped(
-                    pdf["positions"].tolist(), tfs
-                ).astype(np.int32)
-                offs = np.zeros(tfs.size + 1, dtype=np.int64)
-                np.cumsum(tfs, out=offs[1:])
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "term": np.repeat(pdf["term"].to_numpy(), n),
-                        "positions": [
-                            pos_flat[offs[i]:offs[i + 1]]
-                            for i in range(tfs.size)
-                        ],
-                    }
-                )
+            for groups in _decode_blocks(batches, streams, span, deleted_bc):
+                outs = []
+                for term, c in groups:
+                    pos = c["positions"].astype(np.int32)
+                    offs = np.concatenate(([0], np.cumsum(c["tfs"])))
+                    outs.append(
+                        pd.DataFrame(
+                            {
+                                "doc_id": c["doc_ids"],
+                                "term": term,
+                                "positions": [
+                                    pos[lo:hi]
+                                    for lo, hi in zip(offs[:-1], offs[1:])
+                                ],
+                            }
+                        )
+                    )
+                yield pd.concat(outs, ignore_index=True)
 
-        return sel.mapInPandas(
+        return blocks.mapInPandas(
             gen, schema="doc_id long, term string, positions array<int>"
         )
 
@@ -1400,13 +1365,8 @@ class SearchEngine:
         the scan side of the residual phrase/proximity fallback, so row
         groups that cannot hold a candidate are skipped."""
         docs = self.documents.select("doc_id", "text")
-        if ranges and len(ranges) <= self.PRUNE_MAX_FILTER_RANGES:
-            overlap = None
-            for lo, hi in ranges:
-                c = F.col("doc_id").between(lo, hi)
-                overlap = c if overlap is None else (overlap | c)
-            docs = docs.filter(overlap)
-        return docs
+        within = self._ranges_pred(ranges, "doc_id", "doc_id")
+        return docs if within is None else docs.filter(within)
 
     @staticmethod
     def _topk_matched(scored: DataFrame, matched: DataFrame, k: int) -> DataFrame:
@@ -1470,9 +1430,7 @@ class SearchEngine:
         distinct = sorted(set(lemmas))
         infos, n_missing = self._infos_for_terms(distinct)
         if n_missing:
-            return self.spark.createDataFrame(
-                [], schema="doc_id long, score double"
-            )
+            return self._empty_topk()
         partials = self.candidate_scores(infos, mode=mode, conjunctive=True)
         scored = self._pivot_combine(partials, len(infos), conjunctive=True)
         ranges = self._rare_term_ranges(infos[0])
@@ -1571,9 +1529,7 @@ class SearchEngine:
         distinct = sorted((la, lb))
         infos, n_missing = self._infos_for_terms(distinct)
         if n_missing:
-            return self.spark.createDataFrame(
-                [], schema="doc_id long, score double"
-            )
+            return self._empty_topk()
         partials = self.candidate_scores(infos, mode=mode, conjunctive=True)
         scored = self._pivot_combine(partials, len(infos), conjunctive=True)
         ranges = self._rare_term_ranges(infos[0])
@@ -1607,8 +1563,8 @@ class SearchEngine:
         """One row per (containing doc, term) for ``infos``' terms —
         membership only, no scores, term identity not materialized.
         Decodes ONLY the doc_ids stream (the parquet scan reads the
-        doc_ids binary column instead of all three, and the kernel
-        skips the tfs/dls VByte passes; bucket partition pruning and
+        doc_ids binary column and the term, never tfs/dls, and the
+        kernel skips their VByte passes; bucket partition pruning and
         term row-group pushdown as in candidate_scores). ``ranges``
         pushes a doc_id-range OR-filter into the scan plus a
         decode-side mask — lossless under conjunctive semantics,
@@ -1621,46 +1577,18 @@ class SearchEngine:
         count equals the number of query terms the doc contains —
         match_count's conjunctive test; anti-join callers need no
         distinct, any-match callers dedup."""
-        from ..functions.spark_hash import spark_bucket
-
         terms = [ti.term for ti in infos]
-        buckets = sorted({spark_bucket(t, self.n_buckets) for t in terms})
-        blocks = self.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        )
-        blocks = self._push_ranges(blocks, ranges)
-        blocks = blocks.select("doc_ids")
+        blocks = self._scan_blocks(terms, ranges, ["term", "doc_ids"])
+        span = {t: _span_arrays(ranges) for t in terms} if ranges else None
         deleted_bc = self._deleted_bc
-        lo_arr = (
-            np.array([r[0] for r in ranges], dtype=np.int64)
-            if ranges else None
-        )
-        hi_arr = (
-            np.array([r[1] for r in ranges], dtype=np.int64)
-            if ranges else None
-        )
         out_schema = T.StructType(
             [T.StructField("doc_id", T.LongType(), False)]
         )
 
         def decode_ids(batches):
-            from ..functions.codec import decode_doc_ids_grouped
-
-            deleted = deleted_bc.value if deleted_bc is not None else None
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ids, _ = decode_doc_ids_grouped(list(pdf["doc_ids"]))
-                if lo_arr is not None and ids.size:
-                    pos = np.searchsorted(lo_arr, ids, side="right") - 1
-                    keep = (pos >= 0) & (
-                        ids <= hi_arr[np.clip(pos, 0, None)]
-                    )
-                    ids = ids[keep]
-                if deleted is not None and ids.size:
-                    ids = ids[~np.isin(ids, deleted)]
-                if ids.size:
-                    yield pd.DataFrame({"doc_id": ids})
+            for groups in _decode_blocks(batches, (), span, deleted_bc):
+                ids = np.concatenate([c["doc_ids"] for _, c in groups])
+                yield pd.DataFrame({"doc_id": ids})
 
         return blocks.mapInPandas(decode_ids, schema=out_schema)
 
@@ -1722,18 +1650,12 @@ class SearchEngine:
         bucket partition pruning + term row-group pushdown like any
         scan, ONE binary column read, ids-stream-only decode. Exclusion lemmas absent from the dictionary
         exclude nothing; positive-term semantics are exactly search_ids'.
-        Both sides run the delete-vector-masked decode kernels, so a
+        Both sides run the delete-vector-masked decode kernel, so a
         replaced doc can neither match nor shield a match."""
         self._check_mode(mode)
-
-        def empty() -> DataFrame:
-            return self.spark.createDataFrame(
-                [], schema="doc_id long, score double"
-            )
-
         infos, n_missing = self.lookup_terms(query)
         if (conjunctive and n_missing) or not infos:
-            return empty()
+            return self._empty_topk()
         ex_terms = sorted(set(analyze_text(exclude_query)))
         ex_infos, _ = self._infos_for_terms(ex_terms)
         partials = self.candidate_scores(
@@ -1767,7 +1689,10 @@ class SearchEngine:
             return False
         if m["stats_epoch"] is None or m["stats_epoch"] != self._stats_epoch:
             return False
-        return len(word) <= m["max_term_len"] - m["max_edit"]
+        # a true match is at most max_edit longer than the word, so the
+        # REQUESTED distance decides whether the index's length cap can
+        # hide it
+        return len(word) <= m["max_term_len"] - max_edit
 
     def suggest(
         self, word: str, max_edit: int = 2, k: int = 10,
@@ -1891,7 +1816,7 @@ class SearchEngine:
         pivot, FIXED df-asc accumulation order — scores the candidates.
         tf*idf selection uses the same idf the scorer uses (_idf over
         LIVE n_docs), so selection and scoring can never disagree about
-        term weight. The doc store read and the decode kernels are both
+        term weight. The doc store read and the decode kernel are both
         delete-vector-masked: a replaced doc is not a valid source and
         never appears as a neighbor."""
         self._check_mode(mode)
@@ -1904,9 +1829,7 @@ class SearchEngine:
         )
         doc_id = int(doc_id)
         if not sel:
-            return self.spark.createDataFrame(
-                [], schema="doc_id long, score double"
-            )
+            return self._empty_topk()
         infos, _ = self._infos_for_terms(sel)
         partials = self.candidate_scores(
             infos, mode=mode, conjunctive=False
@@ -2052,7 +1975,7 @@ class SearchEngine:
         # rarest-term doc_id ranges per query (conjunctive, multi-term
         # only — same rule as search_ids), fetched for the WHOLE workload
         # in two driver jobs and memoized
-        q_ranges: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        q_ranges: dict[int, list[tuple[int, int]]] = {}
         if conjunctive:
             rare_uncached = sorted(
                 {
@@ -2069,10 +1992,7 @@ class SearchEngine:
                     continue
                 merged = self._ranges_cache.get(infos[0].term)
                 if merged:
-                    q_ranges[qid_idx[qid]] = (
-                        np.array([r[0] for r in merged], dtype=np.int64),
-                        np.array([r[1] for r in merged], dtype=np.int64),
-                    )
+                    q_ranges[qid_idx[qid]] = merged
         # term -> [qid_idx] subscriber lists (partials are query-
         # independent; subscribers matter only for the pruning union)
         subs: dict[str, list[int]] = {}
@@ -2093,68 +2013,29 @@ class SearchEngine:
         # the doc whether or not this partial exists). Any unpruned
         # subscriber (single-term query, hot rarest term, disjunctive
         # mode) disables the term's mask entirely.
-        term_ranges: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        term_ranges: dict[str, list[tuple[int, int]]] = {}
         for t, sub_qis in subs.items():
             if all(qi in q_ranges for qi in sub_qis):
-                spans = sorted(
-                    {
-                        (int(lo), int(hi))
-                        for qi in sub_qis
-                        for lo, hi in zip(*q_ranges[qi])
-                    }
-                )
-                merged = self._merge_spans(spans)
-                term_ranges[term_ti[t]] = (
-                    np.array([r[0] for r in merged], dtype=np.int64),
-                    np.array([r[1] for r in merged], dtype=np.int64),
+                term_ranges[t] = self._merge_spans(
+                    sorted({sp for qi in sub_qis for sp in q_ranges[qi]})
                 )
         avgdl, max_tf_sum = self.avgdl, self.max_tf_sum
 
-        from ..functions.spark_hash import spark_bucket
-
-        buckets = sorted({spark_bucket(t, self.n_buckets) for t in terms})
-        blocks = self.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        )
         # coarse scan filter: a block can be skipped only if EVERY query
         # that subscribes to its term prunes it — so the pushed predicate
         # is (term has an unpruned subscriber) OR (overlaps any range).
-        # Catalyst turns the range OR into parquet row-group min/max skips.
-        unpruned_terms = sorted(
-            t for t in terms if term_ti[t] not in term_ranges
+        all_ranges = sorted({sp for sps in term_ranges.values() for sp in sps})
+        # dl is only a BM25 input — relevance_ref never reads dl_b
+        # (score_topk guards on mode), so it skips the read, the decode
+        # and the re-encode, and ships empty buffers instead
+        streams = ("tfs", "dls") if mode == "bm25" else ("tfs",)
+        blocks = self._scan_blocks(
+            terms,
+            all_ranges,
+            ["term", "first_doc_id", "doc_ids", *streams],
+            keep_terms=sorted(t for t in terms if t not in term_ranges),
         )
-        all_ranges = sorted(
-            {
-                (int(lo), int(hi))
-                for lo_a, hi_a in term_ranges.values()
-                for lo, hi in zip(lo_a, hi_a)
-            }
-        )
-        if term_ranges and len(all_ranges) <= self.PRUNE_MAX_FILTER_RANGES:
-            overlap = None
-            for lo, hi in all_ranges:
-                c = (F.col("first_doc_id") <= hi) & (
-                    F.col("last_doc_id") >= lo
-                )
-                overlap = c if overlap is None else (overlap | c)
-            if unpruned_terms:
-                overlap = F.col("term").isin(unpruned_terms) | overlap
-            blocks = blocks.filter(overlap)
-        elif term_ranges:
-            # no silent caps (same contract as candidate_scores): results
-            # stay exact via the decode-side union mask, but the scan loses
-            # row-group pushdown — say so
-            warnings.warn(
-                f"{len(all_ranges)} doc_id ranges exceed "
-                f"PRUNE_MAX_FILTER_RANGES={self.PRUNE_MAX_FILTER_RANGES}; "
-                "batch-scan row-group pushdown dropped (results stay exact "
-                "via the decode-side mask). Many incremental batches? "
-                "compact_index restores dense ordering.",
-                stacklevel=2,
-            )
-        blocks = blocks.select(
-            "term", "first_doc_id", "doc_ids", "tfs", "dls"
-        )
+        span = {t: _span_arrays(sps) for t, sps in term_ranges.items()}
 
         # ---- packed exchange layout -----------------------------------
         # The candidate partials for a big batch are |union df|-sized; a
@@ -2192,63 +2073,22 @@ class SearchEngine:
         deleted_bc = self._deleted_bc
 
         def decode_pack(batches):
-            from ..functions.codec import (
-                decode_postings_grouped,
-                varbyte_decode_groups,
-                varbyte_encode_sliced,
-            )
+            from ..functions.codec import varbyte_encode_sliced
 
-            deleted = deleted_bc.value if deleted_bc is not None else None
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pdf = pdf.sort_values(
-                    ["term", "first_doc_id"], ignore_index=True
-                )
-                ids_col = pdf["doc_ids"].to_numpy()
-                tfs_col = pdf["tfs"].to_numpy()
-                dls_col = pdf["dls"].to_numpy()
+            # (term, first_doc_id) order makes each term group's decoded
+            # ids ascending — the slicing below relies on it
+            ordered = (
+                pdf.sort_values(["term", "first_doc_id"], ignore_index=True)
+                for pdf in batches
+            )
+            # the kernel's per-term mask is the union over ALL subscribing
+            # queries' rarest ranges (lossless, see docstring), so pruned
+            # docs never enter the exchange
+            for groups in _decode_blocks(ordered, streams, span, deleted_bc):
                 o_rb, o_ti, o_ids, o_tf, o_dl = [], [], [], [], []
-                for term, rows in pdf.groupby(
-                    "term", sort=False
-                ).indices.items():
-                    ids, tfs, _ = decode_postings_grouped(
-                        list(ids_col[rows]), list(tfs_col[rows])
-                    )
-                    if ids.size == 0:
-                        continue
-                    # dl is only a BM25 input — relevance_ref never reads
-                    # dl_b (score_topk guards on mode), so skip the decode
-                    # + re-encode and ship empty buffers instead of ~1/3
-                    # extra exchange bytes per posting
-                    dls = (
-                        varbyte_decode_groups(list(dls_col[rows]))[0]
-                        if mode == "bm25"
-                        else None
-                    )
+                for term, c in groups:
+                    ids, tfs, dls = c["doc_ids"], c["tfs"], c.get("dls")
                     ti = term_ti[term]
-                    rng = term_ranges.get(ti)
-                    if rng is not None:
-                        # union mask over ALL subscribing queries' rarest
-                        # ranges (lossless, see docstring) so pruned docs
-                        # never enter the exchange
-                        lo_arr, hi_arr = rng
-                        pos = np.searchsorted(lo_arr, ids, side="right") - 1
-                        keep = (pos >= 0) & (
-                            ids <= hi_arr[np.clip(pos, 0, None)]
-                        )
-                        if not keep.all():
-                            ids, tfs = ids[keep], tfs[keep]
-                            if dls is not None:
-                                dls = dls[keep]
-                    if deleted is not None and ids.size:
-                        keep = ~np.isin(ids, deleted)
-                        if not keep.all():
-                            ids, tfs = ids[keep], tfs[keep]
-                            if dls is not None:
-                                dls = dls[keep]
-                    if ids.size == 0:
-                        continue
                     cut = np.searchsorted(ids, edges[1:-1])
                     starts = np.concatenate(([0], cut))
                     lens = np.diff(np.concatenate((starts, [ids.size])))
@@ -2274,16 +2114,15 @@ class SearchEngine:
                         o_ids.append(ids_bufs[j])
                         o_tf.append(tf_bufs[j])
                         o_dl.append(dl_bufs[j] if dl_bufs is not None else b"")
-                if o_rb:
-                    yield pd.DataFrame(
-                        {
-                            "rb": np.array(o_rb, dtype=np.int32),
-                            "ti": np.array(o_ti, dtype=np.int32),
-                            "ids_b": o_ids,
-                            "tf_b": o_tf,
-                            "dl_b": o_dl,
-                        }
-                    )
+                yield pd.DataFrame(
+                    {
+                        "rb": np.array(o_rb, dtype=np.int32),
+                        "ti": np.array(o_ti, dtype=np.int32),
+                        "ids_b": o_ids,
+                        "tf_b": o_tf,
+                        "dl_b": o_dl,
+                    }
+                )
 
         partials = blocks.mapInPandas(decode_pack, schema=pack_schema)
         # co-locate each doc's term partials, then score EVERY query and

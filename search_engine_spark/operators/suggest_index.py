@@ -127,12 +127,10 @@ def build_suggest_index(
         .write.mode("overwrite")
         .parquet(out)
     )
-    n = spark.read.parquet(out).count()
     manifest = {
         "max_edit": int(max_edit),
         "max_term_len": int(max_term_len),
         "stats_epoch": int(epoch),
-        "n_rows": int(n),
     }
     _manifest_path(index_dir).write_text(json.dumps(manifest))
     return manifest

@@ -60,6 +60,8 @@ def test_api_facets_envelope(api):
     assert counts == sorted(counts, reverse=True)
     capped = api.facets("index", by="conv_id", limit=1)
     assert capped["count"] == 1
+    # limit=0 is a real cap, not "no limit"
+    assert api.facets("index", by="conv_id", limit=0)["count"] == 0
 
 
 def test_api_facets_error_envelopes(api):

@@ -274,8 +274,8 @@ def test_stats_epoch_gates_stored_blockmax(spark, tmp_path):
         hot = eng.term_stats.orderBy(F.desc("df"), F.asc("term")).limit(
             1
         ).collect()[0]["term"]
-        fast = eng.search_ids(hot, k=5, use_blockmax=True).toPandas()
-        classic = eng.search_ids(hot, k=5, use_batch_plan=False).toPandas()
+        fast = eng.search_ids(hot, k=5, plan="blockmax").toPandas()
+        classic = eng.search_ids(hot, k=5, plan="classic").toPandas()
         assert fast["doc_id"].tolist() == classic["doc_id"].tolist(), msg
         assert fast["score"].tolist() == classic["score"].tolist(), msg
         return eng

@@ -120,7 +120,7 @@ def test_search_prefix_equals_explicit_disjunction(spark, built_index):
         prefix, k=10, max_expansions=len(expanded)
     ).collect()
     want = eng.search_ids(
-        " ".join(expanded), k=10, conjunctive=False, use_batch_plan=False
+        " ".join(expanded), k=10, conjunctive=False, plan="classic"
     ).collect()
     assert [(r["doc_id"], r["score"]) for r in got] == [
         (r["doc_id"], r["score"]) for r in want

@@ -10,12 +10,14 @@ across every part (round-trip parity tests below)."""
 from __future__ import annotations
 
 import datetime
+import shutil
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from search_engine_spark.functions.analyzer import analyze_text
 from search_engine_spark.functions.codec import (
     decode_positions_grouped,
     varbyte_encode_sliced,
@@ -85,8 +87,6 @@ def test_positions_index_schema(pos_engine):
 def test_positions_decode_matches_reanalysis(pos_engine):
     """Ground truth: decoded positions for a term == the token indexes of
     that term in the re-analyzed document text."""
-    from search_engine_spark.functions.analyzer import analyze_text
-
     infos, _ = pos_engine._infos_for_terms(["query"])
     rows = (
         pos_engine._positions_rows(infos, None)
@@ -105,8 +105,6 @@ def test_positions_decode_matches_reanalysis(pos_engine):
 # indexed phrase path
 # ---------------------------------------------------------------------------
 def test_search_phrase_positions_equals_text_residual(pos_engine):
-    from search_engine_spark.functions.analyzer import analyze_text
-
     text = pos_engine.documents.filter(F.col("dl") >= 4).first()["text"]
     lemmas = analyze_text(text)[:2]
     got = pos_engine.search_phrase(" ".join(lemmas), k=10).toPandas()
@@ -152,7 +150,7 @@ def test_search_phrase_positions_exact_semantics(spark, tmp_path):
 
 def test_search_phrase_positions_single_lemma_equals_search_ids(pos_engine):
     got = pos_engine.search_phrase("query", k=10).toPandas()
-    exp = pos_engine.search_ids("query", k=10, use_batch_plan=False).toPandas()
+    exp = pos_engine.search_ids("query", k=10, plan="classic").toPandas()
     assert got["doc_id"].tolist() == exp["doc_id"].tolist()
     assert got["score"].tolist() == exp["score"].tolist()
 
@@ -178,7 +176,10 @@ def test_via_positions_requires_positions_index(spark, tmp_path):
 def pos_split(spark, tmp_path_factory):
     """full = one-shot positions build over all 40 convs;
     merged = positions build over the first 30 + incremental batch of the
-    last 10 (same concat order, so doc_ids line up too)."""
+    last 10 (same concat order, so doc_ids line up too);
+    upserted = a copy of full where 8 docs holding a phrase were re-sent
+    with changed text (upsert=True): odd ones keep the phrase, even ones
+    lose it -> (dir, phrase)."""
     pdf = make_transcripts(n_conversations=40, seed=21)
     convs = sorted(pdf["conv_id"].unique())
     cut = convs[30]
@@ -196,7 +197,22 @@ def pos_split(spark, tmp_path_factory):
     # idempotent on a positions index too: replay is a no-op
     res2 = incremental_update(spark, _sdf(spark, extra_pdf), merged_dir)
     assert res2 == {"new_docs": 0, "new_parts": 0, "replaced_docs": 0}
-    return full_dir, merged_dir, extra_pdf, res["new_docs"]
+    upsert_dir = str(d / "upserted")
+    shutil.copytree(full_dir, upsert_dir)
+    phrase = "query index"
+    hits = pdf[[
+        f" {phrase} " in f" {' '.join(analyze_text(t))} " for t in pdf["text"]
+    ]]
+    changed = hits.head(8).copy()
+    keep = np.arange(len(changed)) % 2 == 1
+    changed["text"] = np.where(
+        keep, changed["text"] + " addendum", "unrelated replacement words"
+    )
+    up = incremental_update(spark, _sdf(spark, changed), upsert_dir,
+                            upsert=True)
+    assert up["replaced_docs"] == len(changed) == 8
+    return (full_dir, merged_dir, extra_pdf, res["new_docs"],
+            (upsert_dir, phrase))
 
 
 def _phrase_scores(spark, idx, phrase, k=50, **kw):
@@ -211,8 +227,6 @@ def _phrase_scores(spark, idx, phrase, k=50, **kw):
 
 
 def _first_phrase_from(pdf):
-    from search_engine_spark.functions.analyzer import analyze_text
-
     for text in pdf["text"]:
         lem = analyze_text(text)
         if len(lem) >= 2:
@@ -221,7 +235,7 @@ def _first_phrase_from(pdf):
 
 
 def test_incremental_positions_phrase_matches_full_rebuild(spark, pos_split):
-    full_dir, merged_dir, extra_pdf, _ = pos_split
+    full_dir, merged_dir, extra_pdf, _, _ = pos_split
     merged = SearchEngine(spark, merged_dir)
     assert merged.has_positions
     # a phrase that occurs in the INCREMENTAL batch — its positions stream
@@ -239,9 +253,7 @@ def test_incremental_positions_phrase_matches_full_rebuild(spark, pos_split):
 def test_incremental_positions_decode_matches_reanalysis(spark, pos_split):
     """Decoded positions for docs of the APPENDED part == token indexes in
     the re-analyzed text (ground truth straight through the new encode)."""
-    from search_engine_spark.functions.analyzer import analyze_text
-
-    _, merged_dir, extra_pdf, n_new = pos_split
+    _, merged_dir, extra_pdf, n_new, _ = pos_split
     eng = SearchEngine(spark, merged_dir)
     term = _first_phrase_from(extra_pdf).split()[0]
     infos, _ = eng._infos_for_terms([term])
@@ -259,11 +271,40 @@ def test_incremental_positions_decode_matches_reanalysis(spark, pos_split):
         assert list(r["positions"]) == expected, r["doc_id"]
 
 
+def test_positions_reader_over_upserted_index(spark, pos_split):
+    """The positional reader subtracts the delete vector like every
+    reader: on an upserted positions index the indexed phrase and
+    proximity plans stay bit-equal to the text-residual plans, and no
+    replaced doc_id is decoded or surfaces."""
+    *_, (idx, phrase) = pos_split
+    eng = SearchEngine(spark, idx)
+    replaced = set(eng._deleted.tolist())
+    a, b = phrase.split()
+    plans = {
+        "phrase": lambda via: eng.search_phrase(
+            phrase, k=1000, via_positions=via),
+        "proximity": lambda via: eng.search_proximity(
+            a, b, window=3, k=1000, via_positions=via),
+    }
+    for name, run in plans.items():
+        got, ref = run(True).toPandas(), run(False).toPandas()
+        assert len(got) > 0, name
+        assert got["doc_id"].tolist() == ref["doc_id"].tolist(), name
+        assert got["score"].tolist() == ref["score"].tolist(), name
+        assert not replaced & set(got["doc_id"]), name
+    infos, _ = eng._infos_for_terms(sorted({a, b}))
+    decoded = {
+        r["doc_id"]
+        for r in eng._positions_rows(infos, None).select("doc_id").collect()
+    }
+    assert decoded and not replaced & decoded
+
+
 def test_compaction_preserves_positions(spark, pos_split):
     """Compacting a positions index (with an incremental part) re-encodes
     every part WITH its positions stream: phrase results stay bit-exact vs
     the one-shot full build."""
-    full_dir, merged_dir, extra_pdf, _ = pos_split
+    full_dir, merged_dir, extra_pdf, _, _ = pos_split
     phrase = _first_phrase_from(extra_pdf)
     res = compact_index(spark, merged_dir, n_parts=1)
     assert res["parts_after"] == 1
@@ -314,8 +355,6 @@ def test_positions_index_is_larger(spark, tmp_path):
 def test_search_proximity_positions_equals_text_residual(pos_engine):
     """Positional plan ≡ residual text-scan plan, bit-exact, at several
     window widths (including 1 = adjacent-only and a wide window)."""
-    from search_engine_spark.functions.analyzer import analyze_text
-
     text = pos_engine.documents.filter(F.col("dl") >= 6).first()["text"]
     a, b = analyze_text(text)[:2]
     any_hit = False

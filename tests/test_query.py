@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark.oracle import oracle_search
-from search_engine_spark.operators.query import SearchEngine
+from search_engine_spark.operators.query import SearchEngine, TermInfo
 
 QUERIES = json.loads(
     (Path(__file__).parent / "fixtures" / "queries.json").read_text()
@@ -77,9 +77,9 @@ def test_batch_plan_equals_classic_plan(spec, engine):
     search_many plan; the two physical plans must stay bit-identical on
     the whole (plain) reference query set."""
     k = spec.get("k", 10)
-    fast = engine.search_ids(spec["q"], k=k, use_batch_plan=True).toPandas()
+    fast = engine.search_ids(spec["q"], k=k, plan="packed").toPandas()
     classic = engine.search_ids(
-        spec["q"], k=k, use_batch_plan=False
+        spec["q"], k=k, plan="classic"
     ).toPandas()
     assert fast["doc_id"].tolist() == classic["doc_id"].tolist(), spec["name"]
     assert fast["score"].tolist() == classic["score"].tolist(), spec["name"]
@@ -87,7 +87,7 @@ def test_batch_plan_equals_classic_plan(spec, engine):
 
 def test_batch_plan_rejects_unsupported_args(engine):
     with pytest.raises(ValueError):
-        engine.search_ids("query index", offset=5, use_batch_plan=True)
+        engine.search_ids("query index", offset=5, plan="packed")
 
 
 def test_pagination_slices_consistently(engine, oracle_idx):
@@ -142,10 +142,10 @@ def test_search_many_matches_sequential(engine):
             got[got["query_id"] == qid]
             .sort_values(["score", "doc_id"], ascending=[False, True])
         )
-        # use_batch_plan=False: compare against the CLASSIC row-partials
+        # plan="classic": compare against the CLASSIC row-partials
         # plan — search_ids now auto-routes plain queries through
         # search_many itself, which would make this test circular
-        exp = engine.search_ids(q, k=7, use_batch_plan=False).toPandas()
+        exp = engine.search_ids(q, k=7, plan="classic").toPandas()
         assert part["doc_id"].tolist() == exp["doc_id"].tolist(), qid
         assert part["score"].tolist() == exp["score"].tolist(), qid
     assert (got["query_id"] == "missing").sum() == 0
@@ -163,7 +163,7 @@ def test_search_many_disjunctive_and_modes(engine):
         )
         exp = engine.search_ids(
             "dup spark token", k=6, mode=mode, conjunctive=False,
-            use_batch_plan=False,
+            plan="classic",
         ).toPandas()
         assert got["doc_id"].tolist() == exp["doc_id"].tolist(), mode
         assert got["score"].tolist() == exp["score"].tolist(), mode
@@ -195,10 +195,10 @@ def test_blockmax_equals_classic_plan(engine, mode):
     seed threshold actually prunes blocks) for both scoring modes."""
     for term in _hot_terms(engine):
         fast = engine.search_ids(
-            term, k=10, mode=mode, use_blockmax=True
+            term, k=10, mode=mode, plan="blockmax"
         ).toPandas()
         classic = engine.search_ids(
-            term, k=10, mode=mode, use_batch_plan=False
+            term, k=10, mode=mode, plan="classic"
         ).toPandas()
         assert fast["doc_id"].tolist() == classic["doc_id"].tolist(), term
         assert fast["score"].tolist() == classic["score"].tolist(), term
@@ -218,7 +218,6 @@ def test_blockmax_threshold_actually_prunes(spark, tmp_path):
     import pandas as pd
     import pyspark.sql.functions as F
 
-    from search_engine_spark.functions.spark_hash import spark_bucket
     from search_engine_spark.operators.index_build import build_index
 
     filler = "alpha bravo charlie delta echo foxtrot golf hotel " * 2
@@ -242,13 +241,10 @@ def test_blockmax_threshold_actually_prunes(spark, tmp_path):
     eng = SearchEngine(spark, out)
     infos, _ = eng.lookup_terms("hot")
     info = infos[0]
-    term_blocks = eng.postings.filter(
-        (F.col("bucket") == spark_bucket(info.term, eng.n_buckets))
-        & (F.col("term") == info.term)
-    )
+    term_blocks = eng._scan_blocks([info.term])
     total = term_blocks.count()
     assert total >= 4  # 605 postings / 128-block ~ 5 blocks
-    bound = eng._block_bound_col(info, "bm25")
+    bound = eng._bound_col_multi([info], "bm25")
     seed = (
         term_blocks.withColumn("_bms", bound)
         .orderBy(F.desc("_bms"), F.asc("first_doc_id"))
@@ -266,8 +262,8 @@ def test_blockmax_threshold_actually_prunes(spark, tmp_path):
     tau = float(rows[-1]["s"])
     kept = term_blocks.filter(bound >= F.lit(tau)).count()
     assert kept < total
-    fast = eng.search_ids("hot", k=3, use_blockmax=True).toPandas()
-    classic = eng.search_ids("hot", k=3, use_batch_plan=False).toPandas()
+    fast = eng.search_ids("hot", k=3, plan="blockmax").toPandas()
+    classic = eng.search_ids("hot", k=3, plan="classic").toPandas()
     assert fast["doc_id"].tolist() == classic["doc_id"].tolist()
     assert fast["score"].tolist() == classic["score"].tolist()
     # fresh index -> the epoch handshake validates the STORED bound
@@ -295,11 +291,8 @@ def test_blockmax_threshold_actually_prunes(spark, tmp_path):
     eng2 = SearchEngine(spark, out)
     assert eng2._stored_blockmax_valid() is False
     infos2, _ = eng2.lookup_terms("hot")
-    bound2 = eng2._block_bound_col(infos2[0], "bm25")
-    tb2 = eng2.postings.filter(
-        (F.col("bucket") == spark_bucket("hot", eng2.n_buckets))
-        & (F.col("term") == "hot")
-    )
+    bound2 = eng2._bound_col_multi([infos2[0]], "bm25")
+    tb2 = eng2._scan_blocks(["hot"])
     seed2 = (
         tb2.withColumn("_bms", bound2)
         .orderBy(F.desc("_bms"), F.asc("first_doc_id"))
@@ -316,17 +309,17 @@ def test_blockmax_threshold_actually_prunes(spark, tmp_path):
     )
     tau2 = float(rows2[-1]["s"])
     assert tb2.filter(bound2 >= F.lit(tau2)).count() < tb2.count()
-    fast2 = eng2.search_ids("hot", k=3, use_blockmax=True).toPandas()
-    classic2 = eng2.search_ids("hot", k=3, use_batch_plan=False).toPandas()
+    fast2 = eng2.search_ids("hot", k=3, plan="blockmax").toPandas()
+    classic2 = eng2.search_ids("hot", k=3, plan="classic").toPandas()
     assert fast2["doc_id"].tolist() == classic2["doc_id"].tolist()
     assert fast2["score"].tolist() == classic2["score"].tolist()
 
 
 def test_blockmax_rejects_unsupported_args(engine):
     with pytest.raises(ValueError):
-        engine.search_ids("query", offset=5, use_blockmax=True)
+        engine.search_ids("query", offset=5, plan="blockmax")
     with pytest.raises(ValueError):  # multi-term query
-        engine.search_ids("query index", use_blockmax=True)
+        engine.search_ids("query index", plan="blockmax")
 
 
 def test_unknown_mode_raises(engine):
@@ -357,10 +350,10 @@ def test_maxscore_equals_classic_plan(spec, mode, engine):
     scoring modes."""
     k = spec.get("k", 10)
     fast = engine.search_ids(
-        spec["q"], k=k, mode=mode, conjunctive=False, use_maxscore=True
+        spec["q"], k=k, mode=mode, conjunctive=False, plan="maxscore"
     ).toPandas()
     classic = engine.search_ids(
-        spec["q"], k=k, mode=mode, conjunctive=False, use_batch_plan=False
+        spec["q"], k=k, mode=mode, conjunctive=False, plan="classic"
     ).toPandas()
     assert fast["doc_id"].tolist() == classic["doc_id"].tolist(), spec["name"]
     assert fast["score"].tolist() == classic["score"].tolist(), spec["name"]
@@ -373,10 +366,10 @@ def test_maxscore_fallback_bound_equals_classic(engine):
     eng = SearchEngine(engine.spark, engine.index_dir)
     eng._stored_bmx_valid = False
     fast = eng.search_ids(
-        "query index", k=10, conjunctive=False, use_maxscore=True
+        "query index", k=10, conjunctive=False, plan="maxscore"
     ).toPandas()
     classic = eng.search_ids(
-        "query index", k=10, conjunctive=False, use_batch_plan=False
+        "query index", k=10, conjunctive=False, plan="classic"
     ).toPandas()
     assert fast["doc_id"].tolist() == classic["doc_id"].tolist()
     assert fast["score"].tolist() == classic["score"].tolist()
@@ -384,10 +377,10 @@ def test_maxscore_fallback_bound_equals_classic(engine):
 
 def test_maxscore_rejects_unsupported_args(engine):
     with pytest.raises(ValueError, match="conjunctive"):
-        engine.search_ids("query index", use_maxscore=True)
+        engine.search_ids("query index", plan="maxscore")
     with pytest.raises(ValueError, match="offset"):
         engine.search_ids(
-            "query index", offset=5, conjunctive=False, use_maxscore=True
+            "query index", offset=5, conjunctive=False, plan="maxscore"
         )
 
 
@@ -395,7 +388,7 @@ def test_maxscore_missing_term_is_ignored_disjunctively(engine, oracle_idx):
     """Disjunctive semantics: a dictionary-missing term contributes
     nothing but does not empty the result."""
     got = engine.search_ids(
-        "query zzzznonexistent", k=10, conjunctive=False, use_maxscore=True
+        "query zzzznonexistent", k=10, conjunctive=False, plan="maxscore"
     ).toPandas()
     exp = oracle_search(oracle_idx, "query", k=10, conjunctive=False)
     assert got["doc_id"].tolist() == exp["doc_id"].tolist()
@@ -438,10 +431,10 @@ def test_maxscore_actually_prunes_and_stays_exact(spark, tmp_path):
         if not stored:
             eng2._stored_bmx_valid = False
         fast = eng2.search_ids(
-            "hot warm", k=3, conjunctive=False, use_maxscore=True
+            "hot warm", k=3, conjunctive=False, plan="maxscore"
         ).toPandas()
         classic = eng2.search_ids(
-            "hot warm", k=3, conjunctive=False, use_batch_plan=False
+            "hot warm", k=3, conjunctive=False, plan="classic"
         ).toPandas()
         assert fast["doc_id"].tolist() == classic["doc_id"].tolist(), stored
         assert fast["score"].tolist() == classic["score"].tolist(), stored
@@ -452,24 +445,84 @@ def test_maxscore_actually_prunes_and_stays_exact(spark, tmp_path):
         )
 
 
-def test_maxscore_auto_routes_on_hot_disjunctive(engine):
-    """Plain disjunctive multi-term queries route through MaxScore when
-    the summed df clears the threshold (instance-shadowed here) and stay
-    on the classic plan below it."""
-    eng = SearchEngine(engine.spark, engine.index_dir)
-    eng.last_maxscore_stats = None
-    eng.search_ids("query index", k=5, conjunctive=False).collect()
-    assert eng.last_maxscore_stats is None  # tiny dfs: classic plan
-    eng.BLOCKMAX_MIN_POSTINGS = 1  # instance shadow: force eligibility
-    eng.search_ids("query index", k=5, conjunctive=False).collect()
-    assert eng.last_maxscore_stats is not None  # routed through MaxScore
+def _infos(*dfs):
+    return [TermInfo(f"t{i}", df, i) for i, df in enumerate(dfs)]
+
+
+FEATURES = {"offset": 5, "scope": "conv-0", "role": "user", "max_df": 9}
+
+
+@pytest.mark.parametrize(
+    "infos, n_missing, conjunctive, kwargs, thresholds, want",
+    [
+        pytest.param(
+            _infos(3, 40), 0, True, {}, {},
+            ("classic", "summed df < BATCH_PLAN_MIN_POSTINGS"),
+            id="classic-small-df",
+        ),
+        pytest.param(
+            _infos(3, 40), 0, True, {}, {"BATCH_PLAN_MIN_POSTINGS": 43},
+            ("packed", "summed df >= BATCH_PLAN_MIN_POSTINGS"),
+            id="packed",
+        ),
+        pytest.param(
+            _infos(40), 0, True, {}, {"BLOCKMAX_MIN_POSTINGS": 40},
+            ("blockmax", "df >= BLOCKMAX_MIN_POSTINGS"),
+            id="blockmax-single-term",
+        ),
+        pytest.param(
+            _infos(3, 40), 0, False, {}, {"BLOCKMAX_MIN_POSTINGS": 43},
+            ("maxscore", "summed df >= BLOCKMAX_MIN_POSTINGS"),
+            id="maxscore-hot-disjunctive",
+        ),
+        pytest.param(
+            _infos(3, 40), 1, True, {}, {"BATCH_PLAN_MIN_POSTINGS": 1},
+            ("classic", "no match"),
+            id="classic-missing-term",
+        ),
+        *[
+            pytest.param(
+                _infos(3, 40), 0, False, {name: value},
+                {"BATCH_PLAN_MIN_POSTINGS": 1, "BLOCKMAX_MIN_POSTINGS": 1},
+                ("classic", name),
+                id=f"classic-{name}",
+            )
+            for name, value in FEATURES.items()
+        ],
+    ],
+)
+def test_route(engine, monkeypatch, infos, n_missing, conjunctive, kwargs,
+               thresholds, want):
+    """The one plan router: (plan, reason) from the dfs alone, with the
+    thresholds shadowed low where a hot query is needed."""
+    for name, value in thresholds.items():
+        monkeypatch.setattr(engine, name, value)
+    assert engine._route(infos, n_missing, conjunctive, **kwargs) == want
+
+
+@pytest.mark.parametrize("feature", sorted(FEATURES))
+@pytest.mark.parametrize("plan", ["packed", "blockmax", "maxscore"])
+def test_route_forced_plan_conflicts(engine, plan, feature):
+    n = 1 if plan == "blockmax" else 2
+    with pytest.raises(ValueError, match=f"{feature} rides the classic plan"):
+        engine._route(_infos(*range(1, n + 1)), 0, plan != "maxscore",
+                      plan=plan, **{feature: FEATURES[feature]})
+    # forcing the classic plan never conflicts
+    assert engine._route(
+        _infos(1, 2), 0, True, plan="classic", **{feature: FEATURES[feature]}
+    ) == ("classic", "forced")
+
+
+def test_unknown_plan_raises(engine):
+    with pytest.raises(ValueError, match="unknown plan"):
+        engine.search_ids("query", plan="wand")
 
 
 def test_maxscore_autoroute_bails_on_flat_bounds(engine, oracle_idx):
     """An AUTO-routed MaxScore query on a corpus whose bucket ceilings
     are near-uniform (nothing for any tau to prune) must bail back to
     the classic plan after the grid pass — paying only the small agg,
-    never the seed decode — and stay exact. A FORCED use_maxscore=True
+    never the seed decode — and stay exact. A FORCED plan="maxscore"
     on the same query must still run the full plan (no bailout key)."""
     eng = SearchEngine(engine.spark, engine.index_dir)
     eng.BLOCKMAX_MIN_POSTINGS = 1
@@ -483,7 +536,7 @@ def test_maxscore_autoroute_bails_on_flat_bounds(engine, oracle_idx):
     assert got["score"].tolist() == exp["score"].tolist()
     # forced: full plan even under the same shadowed threshold
     eng.search_ids(
-        "query index", k=10, conjunctive=False, use_maxscore=True
+        "query index", k=10, conjunctive=False, plan="maxscore"
     ).collect()
     assert "bailout" not in eng.last_maxscore_stats
 
@@ -534,7 +587,7 @@ def test_search_phrase_equals_residual_oracle(engine):
 
 def test_search_phrase_single_lemma_equals_search_ids(engine):
     got = engine.search_phrase("query", k=10).toPandas()
-    exp = engine.search_ids("query", k=10, use_batch_plan=False).toPandas()
+    exp = engine.search_ids("query", k=10, plan="classic").toPandas()
     assert got["doc_id"].tolist() == exp["doc_id"].tolist()
     assert got["score"].tolist() == exp["score"].tolist()
 

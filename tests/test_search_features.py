@@ -80,7 +80,7 @@ def test_search_not_multi_lemma_exclusion(engine, oracle_idx):
 def test_search_not_unknown_exclusion_is_noop(engine, oracle_idx):
     query = "table index"
     got = _pdf(engine.search_not(query, "zzzxqjv", k=10))
-    want = _pdf(engine.search_ids(query, k=10, use_batch_plan=False))
+    want = _pdf(engine.search_ids(query, k=10, plan="classic"))
     pd.testing.assert_frame_equal(got, want, check_exact=True)
 
 
@@ -270,7 +270,7 @@ def test_role_unknown_is_empty(engine):
 
 def test_role_rejects_forced_fast_plans(engine):
     with pytest.raises(ValueError, match="role"):
-        engine.search_ids("table", role="user", use_batch_plan=True)
+        engine.search_ids("table", role="user", plan="packed")
 
 
 # ---------------------------------------------------------------------------

@@ -13,6 +13,7 @@ from hypothesis import strategies as st
 
 from search_engine_spark.operators.query import SearchEngine
 from search_engine_spark.operators.suggest_index import (
+    SUGGEST_DIR,
     build_suggest_index,
     delete_variants,
     read_suggest_manifest,
@@ -83,8 +84,12 @@ def test_auto_routing_uses_fresh_index(engine_with_index):
 def test_manifest_records_epoch(engine_with_index):
     m = read_suggest_manifest(engine_with_index.index_dir)
     assert m is not None
-    assert m["max_edit"] == 2 and m["n_rows"] > 0
+    assert m["max_edit"] == 2
     assert m["stats_epoch"] == engine_with_index._stats_epoch
+    rows = engine_with_index.spark.read.parquet(
+        f"{engine_with_index.index_dir}/{SUGGEST_DIR}"
+    )
+    assert rows.limit(1).count() == 1
 
 
 def test_stale_epoch_falls_back_and_rebuild_restores(
@@ -135,3 +140,18 @@ def test_long_word_falls_back(engine_with_index):
     assert not eng._suggest_index_usable(long_word, 2)
     # auto mode still answers (scan path), no error
     assert eng.suggest(long_word, k=5).count() == 0
+
+
+def test_length_cap_uses_requested_edit(engine_with_index):
+    """The cap hides only terms longer than max_term_len, and a true
+    match is at most the REQUESTED max_edit longer than the word: a word
+    of length max_term_len - 1 is answerable exactly at max_edit=1 on an
+    index built for 2, bit-identical to the scan path."""
+    eng = engine_with_index
+    m = read_suggest_manifest(eng.index_dir)
+    word = ("tokenization" * 4)[: m["max_term_len"] - 1]
+    assert not eng._suggest_index_usable(word, 2)
+    assert eng._suggest_index_usable(word, 1)
+    fast = eng.suggest(word, max_edit=1, k=10, use_delete_index=True).toPandas()
+    scan = eng.suggest(word, max_edit=1, k=10, use_delete_index=False).toPandas()
+    pd.testing.assert_frame_equal(fast, scan, check_exact=True)
