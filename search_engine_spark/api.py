@@ -30,6 +30,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .errors import QueryArgumentError
 from .operators.incremental import incremental_update
 from .operators.index_build import build_index, manifest_df
 from .operators.query import SearchEngine
@@ -159,7 +160,7 @@ class EngineAPI:
             res = incremental_update(
                 self.spark, new_transcripts, self.index_dir, upsert=upsert
             )
-        except ValueError as ex:
+        except QueryArgumentError as ex:
             return {"result": False, "error": str(ex)}
         self.invalidate()  # snapshot engines memoize df/ranges — refresh
         return {"result": True, **res}
@@ -182,7 +183,7 @@ class EngineAPI:
             res = delete_docs(
                 self.spark, keys, self.index_dir, tombstone=tombstone
             )
-        except ValueError as ex:
+        except QueryArgumentError as ex:
             return {"result": False, "error": str(ex)}
         self.invalidate()
         return {"result": True, **res}
@@ -200,7 +201,7 @@ class EngineAPI:
 
         try:
             n = clear_tombstones(self.spark, keys, self.index_dir)
-        except ValueError as ex:
+        except QueryArgumentError as ex:
             return {"result": False, "error": str(ex)}
         return {"result": True, "removed": n}
 
@@ -218,7 +219,7 @@ class EngineAPI:
                 self.spark, batch, self.index_dir,
                 tombstone_deletes=tombstone_deletes,
             )
-        except ValueError as ex:
+        except QueryArgumentError as ex:
             return {"result": False, "error": str(ex)}
         self.invalidate()
         return {"result": True, **res}
@@ -323,19 +324,21 @@ class EngineAPI:
             # envelope contract instead of leaking a raw read error
             return {"result": False, "error": ERR_NO_INDEX,
                     "is_indexing": self.is_indexing()}
-        except ValueError as ex:
-            # resolve_snapshot raises ValueError for an unknown/expired
-            # snapshot id or a missing/truncated snapshot store — same
-            # envelope contract as every other API error path
+        except QueryArgumentError as ex:
+            # resolve_snapshot raises it for an unknown/expired snapshot
+            # id or a missing/truncated snapshot store — same envelope
+            # contract as every other API error path
             return {"result": False, "error": str(ex)}
         try:
             rows = eng.search(
                 query, k=limit, offset=offset, mode=mode, max_df=max_df,
                 scope=site, exclude=exclude, role=role,
             ).collect()
-        except ValueError as ex:
-            # exclude= composed with offset/site/role/max_df is a caller
-            # error — envelope it like every other invalid-argument path
+        except QueryArgumentError as ex:
+            # a caller-argument error (exclude= composed with
+            # offset/site/role/max_df, a forced-plan conflict, an unknown
+            # mode) — envelope it; any other ValueError is an engine
+            # fault and propagates
             return {"result": False, "error": str(ex)}
         if not rows:
             return {"result": True, "count": 0, "data": []}
@@ -481,7 +484,7 @@ class EngineAPI:
                     "is_indexing": self.is_indexing()}
         try:
             rows = eng.suggest(word, max_edit=max_edit, k=limit).collect()
-        except ValueError as ex:
+        except QueryArgumentError as ex:
             return {"result": False, "error": str(ex)}
         return {
             "result": True,
@@ -512,30 +515,15 @@ class EngineAPI:
             ids = eng.more_like_this(
                 doc_id, n_terms=n_terms, k=limit, mode=mode, terms=sel
             )
-        except ValueError as ex:
+        except QueryArgumentError as ex:
             return {"result": False, "error": str(ex)}
-        joined = eng.documents.join(F.broadcast(ids), "doc_id")
-        rows = (
-            joined.select("doc_id", "conv_id", "turn_idx", "score", "text")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .collect()
-        )
-        from .functions.snippet import make_snippet
-
-        lemmas = set(sel)
-        data = []
-        for r in rows:
-            d = {
-                "doc_id": r["doc_id"],
-                "conv_id": r["conv_id"],
-                "turn_idx": r["turn_idx"],
-                "relevance": r["score"],
-            }
-            if with_snippets:
-                # highlight the very lemmas the MLT query used — k-row
-                # driver-side work, same formatter as search()
-                d["snippet"] = make_snippet(r["text"] or "", lemmas)
-            data.append(d)
+        # same presentation as search(); the snippets highlight the very
+        # lemmas the MLT query used
+        rows = eng.present(ids.collect(), set(sel) if with_snippets else None)
+        keys = ["doc_id", "conv_id", "turn_idx", "relevance"]
+        if with_snippets:
+            keys.append("snippet")
+        data = [dict(zip(keys, r)) for r in rows]
         return {"result": True, "count": len(data), "data": data}
 
     # -- GET /api/facets (beyond-reference: refine-by panel) ---------------
@@ -556,7 +544,7 @@ class EngineAPI:
                     "is_indexing": self.is_indexing()}
         try:
             df = eng.facet_counts(query, by=by, mode=mode)
-        except ValueError as ex:
+        except QueryArgumentError as ex:
             return {"result": False, "error": str(ex)}
         rows = (df.limit(int(limit)) if limit is not None else df).collect()
         return {

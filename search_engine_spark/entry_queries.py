@@ -4101,7 +4101,7 @@ WHERE last_ms + 1800000 < wm_ms
 def q_search_snippets(spark, sf_dir):
     """Engine search with snippet highlighting (T8/P6/T7 — SnippetCreator
     .java:19,22-37,61-102 semantics): best-sentence pick, <b> surface-form
-    highlights, 240-char word-boundary cut. The pandas-UDF output is
+    highlights, 240-char word-boundary cut. The engine's snippets are
     hash-checked against a full SQL reimplementation of the same spec."""
     eng = SearchEngine(spark, ensure_index(spark, sf_dir))
     res = eng.search(" ".join(QUERY_TERMS), k=TOPK)

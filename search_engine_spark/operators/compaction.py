@@ -29,6 +29,7 @@ from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
+from ..session import local_frame
 
 from .index_build import (
     _attach_terms,
@@ -114,7 +115,7 @@ def compact_index(
         # (require_staging above already rejects it for part-ful indexes)
         if "UNABLE_TO_INFER_SCHEMA" not in str(staging_err):
             raise
-        raw = spark.createDataFrame([], schema=schemas.staging_schema(store_pos))
+        raw = local_frame(spark, [], schemas.staging_schema(store_pos))
     # compaction IS the merge of merge-on-read: deleted docs' staging rows
     # are dropped here, so the rebuilt parts carry no replaced postings
     # and the delete vector can be purged after the swaps

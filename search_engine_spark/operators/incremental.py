@@ -55,6 +55,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..errors import QueryArgumentError
 from ..functions.analyzer import ANALYZER_VERSION, terms_col
 from .index_build import (
     _attach_terms,
@@ -110,7 +111,7 @@ def resolve_n_buckets(spark: SparkSession, out_dir: str,
     persisted = row.asDict().get("n_buckets")
     if persisted is not None:
         if requested is not None and int(requested) != int(persisted):
-            raise ValueError(
+            raise QueryArgumentError(
                 f"index at {out_dir} was built with n_buckets="
                 f"{int(persisted)}, caller requested {requested}"
             )
@@ -494,7 +495,9 @@ def delete_docs(
     re-indexes it as a NEW doc (the anti-join anchor is the LIVE view)."""
     manifest = _read_manifest(out_dir)
     if manifest.get("stage_docs", {}).get("status") != "DONE":
-        raise ValueError(f"no complete index at {out_dir}; run build_index first")
+        raise QueryArgumentError(
+            f"no complete index at {out_dir}; run build_index first"
+        )
     version = manifest["stage_docs"].get("index_version", "v1")
     n_buckets = resolve_n_buckets(spark, out_dir, None)
     require_staging(out_dir, manifest)
@@ -572,13 +575,17 @@ def apply_cdc_batch(
     ``tombstone_deletes`` stays False by default: a CDC delete is data
     flow, not a takedown — the key may legitimately return later."""
     if "op" not in batch.columns:
-        raise ValueError("CDC batch needs an 'op' column ('I'/'U'/'D')")
+        raise QueryArgumentError(
+            "CDC batch needs an 'op' column ('I'/'U'/'D')"
+        )
     ops = batch.select("op").distinct()
     bad = [
         r["op"] for r in ops.collect() if r["op"] not in ("I", "U", "D")
     ]
     if bad:
-        raise ValueError(f"CDC batch has unknown op values: {sorted(bad)}")
+        raise QueryArgumentError(
+            f"CDC batch has unknown op values: {sorted(bad)}"
+        )
     upserts = batch.filter(F.col("op") != "D").drop("op")
     res_u = incremental_update(spark, upserts, out_dir, upsert=True)
     deletes = batch.filter(F.col("op") == "D").select(
@@ -621,10 +628,12 @@ def incremental_update(
     semantics, bit-compatible with every pre-upsert index."""
     manifest = _read_manifest(out_dir)
     if manifest.get("stage_docs", {}).get("status") != "DONE":
-        raise ValueError(f"no complete index at {out_dir}; run build_index first")
+        raise QueryArgumentError(
+            f"no complete index at {out_dir}; run build_index first"
+        )
     built_with = manifest["stage_docs"].get("analyzer_version", "a1")
     if built_with != ANALYZER_VERSION:
-        raise ValueError(
+        raise QueryArgumentError(
             f"index at {out_dir} was built with analyzer {built_with}, "
             f"current analyzer is {ANALYZER_VERSION}: new turns would "
             "tokenize differently than the existing postings — rebuild "

@@ -54,6 +54,7 @@ from pyspark.errors import AnalysisException
 from ..functions.analyzer import ANALYZER_VERSION, terms_col
 from ..functions.codec import varbyte_encode_sliced
 from .. import schemas
+from ..session import local_frame
 
 K1 = 1.2
 B = 0.75
@@ -153,9 +154,10 @@ def _with_doc_ids(
             F.element_at(offset_map, F.col("_pid")) + _local_row_col()
         ).alias("doc_id")
         return ranged.select(*cols, doc_id)
-    offsets_df = spark.createDataFrame(
+    offsets_df = local_frame(
+        spark,
         [(int(p), int(o)) for p, o in offsets.items()],
-        schema="_pid int, _offset long",
+        "_pid int, _offset long",
     )
     return (
         ranged.withColumn("_local", _local_row_col())
@@ -254,7 +256,7 @@ def manifest_df(spark: SparkSession, out_dir: str) -> DataFrame:
         rows,
         columns=[f.name for f in schemas.BUILD_MANIFEST.fields],
     )
-    return spark.createDataFrame(pdf, schema=schemas.BUILD_MANIFEST)
+    return local_frame(spark, pdf, schemas.BUILD_MANIFEST)
 
 
 def _make_part_encoder(
@@ -834,8 +836,8 @@ def build_index(
                     }
                 ]
             )
-            spark.createDataFrame(
-                corpus_pdf, schema=schemas.CORPUS_STATS
+            local_frame(
+                spark, corpus_pdf, schemas.CORPUS_STATS
             ).write.mode("overwrite").parquet(corpus_path)
 
         def _write_stats(n_postings: int) -> None:
@@ -845,8 +847,8 @@ def build_index(
             # unreadable), so the empty dictionary comes from the schema.
             tw = time.time()
             if n_postings == 0:
-                term_stats_df = spark.createDataFrame(
-                    [], schema=schemas.TERM_STATS
+                term_stats_df = local_frame(
+                    spark, [], schemas.TERM_STATS
                 ).observe(stats_ob, F.count(F.lit(1)).alias("n_terms"))
             else:
                 term_stats_df = (
@@ -910,16 +912,10 @@ def build_index(
                         .asDict()
                     )
                     row["stats_epoch"] = stats_epoch
-                    spark.createDataFrame(
-                        pd.DataFrame(
-                            [
-                                {
-                                    f.name: row.get(f.name)
-                                    for f in schemas.CORPUS_STATS.fields
-                                }
-                            ]
-                        ),
-                        schema=schemas.CORPUS_STATS,
+                    local_frame(
+                        spark,
+                        [tuple(map(row.get, schemas.CORPUS_STATS.names))],
+                        schemas.CORPUS_STATS,
                     ).write.mode("overwrite").parquet(corpus_path)
             f_stats = ex.submit(_write_stats, int(fm["n_postings"] or 0))
         except BaseException:
@@ -1097,7 +1093,7 @@ def build_index(
                 + ([T.StructField("pos", T.ArrayType(T.IntegerType()), False)]
                    if store_positions else [])
             )
-            staging_df = spark.createDataFrame([], schema=empty_schema)
+            staging_df = local_frame(spark, [], empty_schema)
         actual_parts = math.ceil(n_docs / part_size) if n_docs else 0
         todo = [
             p for p in range(actual_parts)

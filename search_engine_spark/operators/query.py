@@ -23,7 +23,8 @@ Flow per query:
   6. TakeOrderedAndProject top-(offset+k) by (score DESC, doc_id ASC) —
      deterministic tie-break (fixes the reference's HashSet
      nondeterminism; SURVEY.md §7.5).
-  7. broadcast-join documents for text; snippet pandas UDF on k rows only.
+  7. collect the k ids, point-read their documents (doc_id isin) and
+     build the snippets on the driver (SearchEngine.present).
 
 Scoring modes:
   - "bm25" (default): idf = ln(1 + (N - df + .5)/(df + .5)), k1=1.2, b=.75
@@ -47,7 +48,9 @@ from pyspark.sql import types as T
 from ..functions.analyzer import analyze_text
 
 from .. import schemas
+from ..errors import QueryArgumentError
 from ..functions.snippet import make_snippet
+from ..session import local_frame
 from .index_build import K1, B
 
 
@@ -135,7 +138,9 @@ def _decode_blocks(batches, streams, ranges, deleted_bc):
 
 
 class SearchEngine:
-    """Loads index metadata once; each ``search`` call is one Spark job."""
+    """Loads index metadata once, then serves queries over that
+    snapshot. A ``search`` call runs the top-k plan's jobs (AQE splits
+    one collect into stage jobs) plus one doc-store point-read."""
 
     def __init__(
         self, spark: SparkSession, index_dir: str,
@@ -164,7 +169,7 @@ class SearchEngine:
         persisted = corpus.asDict().get("n_buckets")
         if persisted is not None:
             if n_buckets is not None and int(n_buckets) != int(persisted):
-                raise ValueError(
+                raise QueryArgumentError(
                     f"index at {index_dir} was built with n_buckets="
                     f"{int(persisted)}, caller requested {n_buckets}"
                 )
@@ -204,9 +209,7 @@ class SearchEngine:
             # emits nothing, and writing an empty partitioned frame
             # produces no files). That index is valid; queries are empty.
             if "UNABLE_TO_INFER_SCHEMA" in str(ex):
-                self.postings = spark.createDataFrame(
-                    [], schema=schemas.POSTINGS
-                )
+                self.postings = local_frame(spark, [], schemas.POSTINGS)
             else:
                 if "PATH_NOT_FOUND" not in str(ex):
                     raise
@@ -217,9 +220,7 @@ class SearchEngine:
                         "compact_index swap; restore _postings_old/"
                         "_postings_compacting or rebuild"
                     ) from ex
-                self.postings = spark.createDataFrame(
-                    [], schema=schemas.POSTINGS
-                )
+                self.postings = local_frame(spark, [], schemas.POSTINGS)
         if self.snapshot is not None:
             # as-of reads pin the commit's membership: parts by partition
             # predicate (isin over the part_id dir column — an empty live
@@ -237,7 +238,7 @@ class SearchEngine:
             self.documents = (
                 spark.read.parquet(*files)
                 if files
-                else spark.createDataFrame([], schema=schemas.DOCUMENTS)
+                else local_frame(spark, [], schemas.DOCUMENTS)
             )
         else:
             self.documents = spark.read.parquet(f"{index_dir}/documents")
@@ -274,8 +275,8 @@ class SearchEngine:
             else None
         )
         if self._deleted is not None:
-            ddf = spark.createDataFrame(
-                [(int(i),) for i in self._deleted], "doc_id long"
+            ddf = local_frame(
+                spark, pd.DataFrame({"doc_id": self._deleted}), "doc_id long"
             )
             self.documents = self.documents.join(
                 F.broadcast(ddf), "doc_id", "left_anti"
@@ -305,7 +306,7 @@ class SearchEngine:
         # an unrecognized mode must never silently fall through to the
         # relevance_ref else-branches in the scoring kernels
         if mode not in cls.VALID_MODES:
-            raise ValueError(
+            raise QueryArgumentError(
                 f"unknown scoring mode {mode!r}; valid: {cls.VALID_MODES}"
             )
 
@@ -692,9 +693,11 @@ class SearchEngine:
         reason). Pure: no Spark job, it reads only the dfs in ``infos``
         and the routing thresholds. ``plan`` forces one; a forced
         non-classic plan refuses offset/scope/role/max_df (those ride the
-        classic plan) with ONE ValueError."""
+        classic plan) with ONE QueryArgumentError."""
         if plan is not None and plan not in self.PLANS:
-            raise ValueError(f"unknown plan {plan!r}; valid: {self.PLANS}")
+            raise QueryArgumentError(
+                f"unknown plan {plan!r}; valid: {self.PLANS}"
+            )
         feature = next((name for name, on in (
             ("offset", offset != 0), ("scope", scope is not None),
             ("role", role is not None), ("max_df", max_df is not None),
@@ -703,7 +706,7 @@ class SearchEngine:
             return plan, "forced"
         if plan is not None:
             if feature is not None:
-                raise ValueError(
+                raise QueryArgumentError(
                     f"plan={plan!r} requires offset=0, scope=None, "
                     f"role=None, max_df=None ({feature} rides the classic "
                     "plan)"
@@ -711,12 +714,12 @@ class SearchEngine:
             if plan == "blockmax" and len(infos) != 1 and not (
                 conjunctive and n_missing
             ):
-                raise ValueError(
+                raise QueryArgumentError(
                     "plan='blockmax' requires a single-term query; got "
                     f"{len(infos)} dictionary terms"
                 )
             if plan == "maxscore" and conjunctive:
-                raise ValueError(
+                raise QueryArgumentError(
                     "plan='maxscore' requires conjunctive=False — "
                     "conjunctive queries already prune via rarest-term "
                     "doc_id ranges"
@@ -814,7 +817,7 @@ class SearchEngine:
         )
 
     def _empty_topk(self) -> DataFrame:
-        return self.spark.createDataFrame([], schema="doc_id long, score double")
+        return local_frame(self.spark, [], "doc_id long, score double")
 
     def _classic_topk(
         self,
@@ -1222,7 +1225,7 @@ class SearchEngine:
         Lucene throws TooManyClauses for the same reason)."""
         self._check_mode(mode)
         if not prefix:
-            raise ValueError("prefix must be non-empty")
+            raise QueryArgumentError("prefix must be non-empty")
         return self._expand_terms_topk(
             F.col("term").startswith(prefix), f"prefix '{prefix}'",
             k=k, mode=mode, max_expansions=max_expansions,
@@ -1251,7 +1254,7 @@ class SearchEngine:
         vocabulary ever warranted it."""
         self._check_mode(mode)
         if not suffix:
-            raise ValueError("suffix must be non-empty")
+            raise QueryArgumentError("suffix must be non-empty")
         return self._expand_terms_topk(
             F.col("term").endswith(suffix), f"suffix '{suffix}'",
             k=k, mode=mode, max_expansions=max_expansions,
@@ -1278,7 +1281,7 @@ class SearchEngine:
             .collect()
         )
         if len(rows) > cap:
-            raise ValueError(
+            raise QueryArgumentError(
                 f"{desc} expands to more than {cap} dictionary "
                 "terms; use a longer pattern or raise max_expansions"
             )
@@ -1420,13 +1423,13 @@ class SearchEngine:
         if via_positions is None:
             via_positions = self.has_positions
         if via_positions and not self.has_positions:
-            raise ValueError(
+            raise QueryArgumentError(
                 "via_positions=True requires a store_positions=True index "
                 "(postings have no positions column)"
             )
         lemmas = analyze_text(phrase_text)  # ordered, duplicates kept
         if not lemmas:
-            raise ValueError("phrase analyzes to zero lemmas")
+            raise QueryArgumentError("phrase analyzes to zero lemmas")
         distinct = sorted(set(lemmas))
         infos, n_missing = self._infos_for_terms(distinct)
         if n_missing:
@@ -1506,24 +1509,24 @@ class SearchEngine:
 
         self._check_mode(mode)
         if window < 0:
-            raise ValueError("window must be >= 0")
+            raise QueryArgumentError("window must be >= 0")
         if via_positions is None:
             via_positions = self.has_positions
         if via_positions and not self.has_positions:
-            raise ValueError(
+            raise QueryArgumentError(
                 "via_positions=True requires a store_positions=True index "
                 "(postings have no positions column)"
             )
         la = analyze_text(term_a)
         lb = analyze_text(term_b)
         if len(la) != 1 or len(lb) != 1:
-            raise ValueError(
+            raise QueryArgumentError(
                 f"each proximity term must analyze to exactly one lemma "
                 f"(got {la!r} / {lb!r})"
             )
         la, lb = la[0], lb[0]
         if la == lb:
-            raise ValueError(
+            raise QueryArgumentError(
                 f"proximity terms analyze to the same lemma {la!r}"
             )
         distinct = sorted((la, lb))
@@ -1608,9 +1611,7 @@ class SearchEngine:
 
         infos, n_missing = self.lookup_terms(query)
         if (conjunctive and n_missing) or not infos:
-            return self.spark.createDataFrame(
-                [(0,)], schema="n_matches long"
-            )
+            return local_frame(self.spark, [(0,)], "n_matches long")
         ranges = (
             self._rare_term_ranges(infos[0])
             if conjunctive and len(infos) > 1
@@ -1725,16 +1726,16 @@ class SearchEngine:
         engine is snapshot-pinned."""
         w = (word or "").strip().lower()
         if not w:
-            raise ValueError("suggest() needs a non-empty word")
+            raise QueryArgumentError("suggest() needs a non-empty word")
         max_edit = int(max_edit)
         if max_edit < 0:
-            raise ValueError("max_edit must be >= 0")
+            raise QueryArgumentError("max_edit must be >= 0")
         if use_delete_index is None:
             use_delete_index = max_edit >= 1 and self._suggest_index_usable(
                 w, max_edit
             )
         elif use_delete_index and not self._suggest_index_usable(w, max_edit):
-            raise ValueError(
+            raise QueryArgumentError(
                 "use_delete_index=True but the delete index cannot answer "
                 "this lookup exactly: it is missing, stale, narrower than "
                 "the requested max_edit, built with a term-length cap too "
@@ -1772,14 +1773,15 @@ class SearchEngine:
         own (_idf over LIVE n_docs), so selection and scoring can never
         disagree about term weight. Exposed so presentation layers
         (api.similar) can highlight the very terms the query used.
-        Raises ValueError for an unknown (or deleted/replaced) doc."""
+        Raises QueryArgumentError for an unknown (or deleted/replaced)
+        doc."""
         doc_id = int(doc_id)
         rows = (
             self.documents.filter(F.col("doc_id") == doc_id)
             .select("text").collect()
         )
         if not rows:
-            raise ValueError(
+            raise QueryArgumentError(
                 f"doc_id {doc_id} not found in the doc store "
                 "(or deleted/replaced)"
             )
@@ -1866,14 +1868,15 @@ class SearchEngine:
         would remove it, documented as the next step in PERF.md."""
         self._check_mode(mode)
         if by not in self.documents.columns:
-            raise ValueError(
+            raise QueryArgumentError(
                 f"facet column {by!r} not in the doc store "
                 f"(have: {self.documents.columns})"
             )
 
         def empty() -> DataFrame:
-            return self.spark.createDataFrame(
-                [], schema="facet string, n_matches long, best_score double"
+            return local_frame(
+                self.spark, [],
+                "facet string, n_matches long, best_score double",
             )
 
         infos, n_missing = self.lookup_terms(query)
@@ -1966,7 +1969,7 @@ class SearchEngine:
                 continue
             per_q[qid] = infos
         if not per_q:
-            return self.spark.createDataFrame([], schema=out_schema)
+            return local_frame(self.spark, [], out_schema)
         # query ids travel the hot path as dense int32 — a string id on
         # every partial row is pure Arrow/shuffle weight (the partials
         # frame is |queries| x df-sized); the string comes back via a
@@ -2255,9 +2258,10 @@ class SearchEngine:
         scored = partials.repartition(n_score_parts, "rb").mapInPandas(
             score_topk, schema=topk_schema
         )
-        names = self.spark.createDataFrame(
+        names = local_frame(
+            self.spark,
             [(i, qid) for qid, i in qid_idx.items()],
-            schema="qi int, query_id string",
+            "qi int, query_id string",
         )
         # final per-query top-k over the k-bounded per-partition winners:
         # row_number <= k compiles to WindowGroupLimit (partial top-k
@@ -2287,11 +2291,16 @@ class SearchEngine:
         """Full result projection (P6): doc metadata + score + snippet.
         ``exclude`` routes through search_not (boolean NOT; first page
         only — pagination/scope/role/df-cutoff ride the classic plan);
-        ``role`` restricts to matching doc-store roles (search_ids)."""
+        ``role`` restricts to matching doc-store roles (search_ids).
+
+        The top-k (doc_id, score) rows are collected once, then
+        ``present`` point-reads their documents and builds the snippets
+        on the driver; the result is a local frame ordered by
+        (score DESC, doc_id ASC)."""
         if exclude is not None:
             if (offset != 0 or scope is not None or max_df is not None
                     or role is not None):
-                raise ValueError(
+                raise QueryArgumentError(
                     "exclude= requires offset=0, scope=None, role=None, "
                     "max_df=None"
                 )
@@ -2303,20 +2312,37 @@ class SearchEngine:
                 query, k=k, offset=offset, mode=mode, max_df=max_df,
                 conjunctive=conjunctive, scope=scope, role=role,
             )
-        joined = self.documents.join(F.broadcast(ids), "doc_id")
-        if with_snippets:
-            lemmas = set(analyze_text(query))
+        lemmas = set(analyze_text(query)) if with_snippets else None
+        return local_frame(
+            self.spark, self.present(ids.collect(), lemmas),
+            schemas.SEARCH_RESULT,
+        )
 
-            @F.pandas_udf(T.StringType())
-            def snippet_udf(texts: pd.Series) -> pd.Series:
-                return texts.apply(lambda t: make_snippet(t, lemmas))
-
-            joined = joined.withColumn("snippet", snippet_udf(F.col("text")))
-        else:
-            joined = joined.withColumn("snippet", F.lit(None).cast("string"))
-        return joined.select(
-            "doc_id", "conv_id", "turn_idx", "score", "snippet"
-        ).orderBy(F.desc("score"), F.asc("doc_id"))
+    def present(
+        self, hits: list, lemmas: set[str] | None
+    ) -> list[tuple]:
+        """Top-k (doc_id, score) rows -> result rows (doc_id, conv_id,
+        turn_idx, score, snippet) sorted by (score DESC, doc_id ASC).
+        One doc_id ``isin`` point-read of the (delete-masked) doc store —
+        a JVM-only job over k ids — then ``make_snippet`` per row on the
+        driver; ``lemmas=None`` leaves the snippet null. Serves
+        ``search`` and ``EngineAPI.similar``."""
+        scores = {int(r["doc_id"]): float(r["score"]) for r in hits}
+        if not scores:
+            return []
+        docs = (
+            self.documents.filter(F.col("doc_id").isin(list(scores)))
+            .select("doc_id", "conv_id", "turn_idx", "text")
+            .collect()
+        )
+        rows = [
+            (
+                d["doc_id"], d["conv_id"], d["turn_idx"], scores[d["doc_id"]],
+                None if lemmas is None else make_snippet(d["text"], lemmas),
+            )
+            for d in docs
+        ]
+        return sorted(rows, key=lambda r: (-r[3], r[0]))
 
     # ------------------------------------------------------------------
     def statistics(self) -> DataFrame:

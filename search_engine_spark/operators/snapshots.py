@@ -55,6 +55,8 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from ..errors import QueryArgumentError
+
 SNAP_DIR = "_snapshots"
 _STATS_TABLES = ("term_stats", "corpus_stats")
 _HWM_FILE = "_id_high_water.json"
@@ -121,12 +123,12 @@ def resolve_snapshot(out_dir: str, snapshot_id: int | None = None) -> dict:
     snaps = list_snapshots(out_dir)
     if not snaps:
         if _read_high_water(out_dir) > 0:
-            raise ValueError(
+            raise QueryArgumentError(
                 f"index at {out_dir} retains no snapshots: history was "
                 "truncated (compaction REPLACE or a recovery rewrite "
                 "expired every record); the next commit mints a fresh one"
             )
-        raise ValueError(
+        raise QueryArgumentError(
             f"index at {out_dir} has no snapshot store — it predates "
             "snapshot commits; rebuild or run one incremental_update to "
             "mint a snapshot"
@@ -139,7 +141,7 @@ def resolve_snapshot(out_dir: str, snapshot_id: int | None = None) -> dict:
         )
         if snap is None:
             have = [s["snapshot_id"] for s in snaps]
-            raise ValueError(
+            raise QueryArgumentError(
                 f"snapshot {snapshot_id} not found at {out_dir}: retained "
                 f"ids are {have} (older ids were expired by compaction or "
                 "expire_snapshots; their backing files are gone)"
@@ -167,7 +169,7 @@ def resolve_snapshot(out_dir: str, snapshot_id: int | None = None) -> dict:
             what.append(f"documents files {gone_docs[:3]}")
         if gone_dels:
             what.append(f"delete batches {gone_dels[:3]}")
-        raise ValueError(
+        raise QueryArgumentError(
             f"snapshot {snap['snapshot_id']} at {out_dir} pins "
             f"{' and '.join(what)} that no longer exist (a compaction or "
             "recovery rewrote them); the snapshot is unreadable — expire "
@@ -369,7 +371,9 @@ def expire_snapshots(out_dir: str, keep_last: int = 2) -> dict:
     ``keep_last`` snapshots, drop the rest, GC unreferenced stats copies.
     Returns {"expired": [ids], "retained": [ids]}."""
     if keep_last < 1:
-        raise ValueError("keep_last must be >= 1 (HEAD is never expired)")
+        raise QueryArgumentError(
+            "keep_last must be >= 1 (HEAD is never expired)"
+        )
     snaps = list_snapshots(out_dir)
     if len(snaps) <= keep_last:
         return {"expired": [], "retained": [s["snapshot_id"] for s in snaps]}

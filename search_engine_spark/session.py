@@ -18,7 +18,10 @@ import tempfile
 import zipfile
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def resolve_master(
@@ -140,3 +143,25 @@ def ship_package(spark: SparkSession) -> None:
                 zf.write(py, f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
         tmp.replace(zip_path)
     spark.sparkContext.addPyFile(str(zip_path))
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: T.StructType | str
+) -> DataFrame:
+    """A small driver-built frame (``rows``: tuples in schema order or a
+    pandas frame) that never becomes a Python RDD. ``createDataFrame`` of
+    a Python list runs an RDD job every time the frame is evaluated, on
+    a second pool of Python workers; non-empty data goes as pandas with
+    the explicit schema, through Arrow into a LocalRelation (no job), and
+    an empty frame is typed null literals over ``range(0)`` (empty pandas
+    would fall back to the RDD path). Every engine local frame goes
+    through here."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    if len(rows) == 0:
+        return spark.range(0, 0, 1, 1).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
+        )
+    if not isinstance(rows, pd.DataFrame):
+        rows = pd.DataFrame(list(rows), columns=schema.names)
+    return spark.createDataFrame(rows, schema=schema)

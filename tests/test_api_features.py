@@ -103,3 +103,25 @@ def test_api_search_role_restriction(api):
     assert res["result"] is True and res["count"] > 0
     plain = api.search("index", limit=1000)
     assert res["count"] < plain["count"]
+
+
+def test_api_envelopes_only_argument_errors(api, monkeypatch):
+    """Only QueryArgumentError becomes the error envelope: a plain
+    ValueError from inside the engine is a fault and must propagate."""
+    from search_engine_spark.errors import QueryArgumentError
+    from search_engine_spark.operators.query import SearchEngine
+
+    bad_mode = api.search("index", mode="nope")
+    assert bad_mode["result"] is False and "unknown scoring mode" in \
+        bad_mode["error"]
+    assert issubclass(QueryArgumentError, ValueError)
+
+    def broken(self, *a, **kw):
+        raise ValueError("engine fault")
+
+    monkeypatch.setattr(SearchEngine, "search", broken)
+    with pytest.raises(ValueError, match="engine fault"):
+        api.search("index")
+    monkeypatch.setattr(SearchEngine, "facet_counts", broken)
+    with pytest.raises(ValueError, match="engine fault"):
+        api.facets("index")

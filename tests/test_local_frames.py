@@ -1,0 +1,109 @@
+"""Read paths build no Python-RDD frames, and ``SearchEngine.search`` is
+exactly ``search_ids`` + the documents + ``make_snippet``.
+
+A frame from ``createDataFrame(<python list>)`` scans a Python RDD: an
+RDD job on every evaluation, run by a second pool of Python workers.
+Every read-path local frame goes through ``session.local_frame``
+instead (Arrow LocalRelation, or typed nulls over ``range(0)``)."""
+
+from __future__ import annotations
+
+import pytest
+
+from search_engine_spark import schemas
+from search_engine_spark.functions.analyzer import analyze_text
+from search_engine_spark.functions.snippet import make_snippet
+from search_engine_spark.operators.incremental import incremental_update
+from search_engine_spark.operators.index_build import build_index
+from search_engine_spark.operators.query import SearchEngine
+from search_engine_spark.synth import make_transcripts
+
+MISSING = "zzqnotaterm"
+
+
+@pytest.fixture(scope="module")
+def eng(spark, tmp_path_factory):
+    """An engine over an upserted index (a live delete vector)."""
+    pdf = make_transcripts(n_conversations=24, seed=71)
+    idx = str(tmp_path_factory.mktemp("local_frames") / "idx")
+    build_index(spark, spark.createDataFrame(pdf), idx, n_parts=1,
+                resume=False)
+    changed = pdf[pdf["text"].fillna("").str.strip() != ""].iloc[::7].copy()
+    changed["text"] = changed["text"] + " query index rewritten"
+    res = incremental_update(spark, spark.createDataFrame(changed), idx,
+                             upsert=True)
+    assert res["replaced_docs"] > 0
+    e = SearchEngine(spark, idx)
+    assert e._deleted is not None
+    return e
+
+
+READ_FRAMES = {
+    "delete-vector-antijoin": lambda e: e.documents,
+    "empty-topk": lambda e: e._empty_topk(),
+    "search-many-names": lambda e: e.search_many({"a": "query index"}, k=5),
+    "search-many-empty": lambda e: e.search_many({"a": MISSING}, k=5),
+    "match-count-missing": lambda e: e.match_count(MISSING),
+    "facets-missing": lambda e: e.facet_counts(MISSING),
+}
+
+
+@pytest.mark.parametrize("name", sorted(READ_FRAMES))
+def test_read_frames_scan_no_python_rdd(eng, name):
+    df = READ_FRAMES[name](eng)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
+
+def _composed(eng, ids, query, with_snippets=True):
+    """The reference composition: collected ids joined to the documents
+    in Spark, snippets by make_snippet, (score DESC, doc_id ASC)."""
+    lemmas = set(analyze_text(query))
+    rows = ids.join(eng.documents, "doc_id").collect()
+    return sorted(
+        (
+            (r["doc_id"], r["conv_id"], r["turn_idx"], r["score"],
+             make_snippet(r["text"], lemmas) if with_snippets else None)
+            for r in rows
+        ),
+        key=lambda t: (-t[3], t[0]),
+    )
+
+
+CASES = {
+    "page1": ("query index", {}),
+    "page2": ("query index", {"offset": 10}),
+    "role": ("query", {"role": "user"}),
+    "scope": ("index", {"scope": "conv-00001"}),
+    "one-term": ("rewritten", {}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_search_equals_ids_plus_documents_plus_snippets(eng, case):
+    query, kw = CASES[case]
+    got = [tuple(r) for r in eng.search(query, k=10, **kw).collect()]
+    want = _composed(eng, eng.search_ids(query, k=10, **kw), query)
+    assert got and got == want
+
+
+def test_search_exclude_and_no_snippets_compose_the_same(eng):
+    got = [tuple(r) for r in
+           eng.search("index", k=10, exclude="query").collect()]
+    assert got == _composed(
+        eng, eng.search_not("index", "query", k=10), "index"
+    )
+    bare = [tuple(r) for r in
+            eng.search("query", k=10, with_snippets=False).collect()]
+    assert bare == _composed(
+        eng, eng.search_ids("query", k=10), "query", with_snippets=False
+    )
+
+
+def test_missing_term_search_is_empty_with_result_schema(eng):
+    df = eng.search(MISSING, k=10)
+    assert df.collect() == []
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in schemas.SEARCH_RESULT
+    ]

@@ -9,6 +9,13 @@ None (leave the launcher's value untouched) exactly when the process was
 launched by spark-submit and the caller didn't force a master.
 """
 
+import importlib
+import os
+import sys
+import zipfile
+import zipimport
+
+import search_engine_spark  # installs the zip re-scan shim
 from search_engine_spark.session import resolve_master
 
 
@@ -44,3 +51,41 @@ def test_explicit_shuffle_partitions_pass_through():
     m, sp = resolve_master("local[4]", under_submit=False, cpus=32,
                            shuffle_partitions=7)
     assert sp == 7
+
+
+def _write_module_zip(path, value):
+    tmp = f"{path}.tmp"
+    with zipfile.ZipFile(tmp, "w") as zf:
+        zf.writestr("m_zipshim.py", f"VALUE = {value}\n")
+    os.replace(tmp, path)  # atomic, like ship_package
+
+
+def test_zip_shim_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """PySpark workers call importlib.invalidate_caches() on every task;
+    an unchanged zip on sys.path must not have its directory re-read,
+    and an atomically replaced one must be."""
+    z = str(tmp_path / "m.zip")
+    _write_module_zip(z, 1)
+    monkeypatch.syspath_prepend(z)
+    sys.modules.pop("m_zipshim", None)
+    m = importlib.import_module("m_zipshim")
+    assert m.VALUE == 1
+    reads = []
+    inner = zipimport._read_directory
+
+    def counting(archive):
+        reads.append(archive)
+        return inner(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    for _ in range(5):
+        importlib.invalidate_caches()
+    assert z not in reads
+    shimmed = zipimport.zipimporter.invalidate_caches
+    search_engine_spark._install_zip_shim()  # a second install is a no-op
+    assert zipimport.zipimporter.invalidate_caches is shimmed
+    _write_module_zip(z, 2)
+    importlib.invalidate_caches()
+    m = importlib.reload(m)
+    assert z in reads and m.VALUE == 2
+    sys.modules.pop("m_zipshim", None)
