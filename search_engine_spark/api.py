@@ -45,6 +45,9 @@ ERR_EMPTY_QUERY = "Задан пустой поисковый запрос"     
 # is not a failure; the constant stays as the documented reference string.
 ERR_NOT_FOUND = "Ничего не найдено"                      # SearchService.java:8-9
 ERR_NO_INDEX = "Индекс ещё не построен"                  # no-index-yet envelope
+# what opening a never-built index raises: Spark's PATH_NOT_FOUND, or
+# FileNotFoundError from the driver-side corpus_stats read (schemas.read_row)
+NO_INDEX_ERRORS = (AnalysisException, FileNotFoundError)
 
 
 @dataclass
@@ -265,10 +268,10 @@ class EngineAPI:
 
     def _get_engine(self) -> SearchEngine:
         """One memoized engine per index snapshot: SearchEngine.__init__
-        costs a corpus_stats collect + parquet resolutions, and its
+        costs parquet resolutions (and a delete-vector collect), and its
         per-term dictionary/range caches only pay off across calls on
         the same instance. Invalidated by index_batch, compact, and build
-        completion. Raises AnalysisException while no index exists.
+        completion. Raises one of NO_INDEX_ERRORS while no index exists.
 
         Construction happens OUTSIDE the lock (it runs Spark jobs), so
         the memoization is generation-checked: if any mutation landed
@@ -319,7 +322,7 @@ class EngineAPI:
                     self.spark, self.index_dir, snapshot_id=snapshot_id
                 )
             )
-        except AnalysisException:
+        except NO_INDEX_ERRORS:
             # first build still running (or never run): keep the
             # envelope contract instead of leaking a raw read error
             return {"result": False, "error": ERR_NO_INDEX,
@@ -391,7 +394,7 @@ class EngineAPI:
         if live:
             try:
                 eng = self._get_engine()
-            except AnalysisException:
+            except NO_INDEX_ERRORS:
                 return {"result": False, "error": ERR_NO_INDEX,
                         "is_indexing": self.is_indexing()}
             ids = eng.search_many(
@@ -461,7 +464,7 @@ class EngineAPI:
             return {"result": False, "error": ERR_EMPTY_QUERY}
         try:
             eng = self._get_engine()
-        except AnalysisException:
+        except NO_INDEX_ERRORS:
             return {"result": False, "error": ERR_NO_INDEX,
                     "is_indexing": self.is_indexing()}
         n = eng.match_count(query, conjunctive=conjunctive).collect()[0]
@@ -479,7 +482,7 @@ class EngineAPI:
         (SearchServiceImpl.java:60-62)."""
         try:
             eng = self._get_engine()
-        except AnalysisException:
+        except NO_INDEX_ERRORS:
             return {"result": False, "error": ERR_NO_INDEX,
                     "is_indexing": self.is_indexing()}
         try:
@@ -505,7 +508,7 @@ class EngineAPI:
         excluded. Same presentation envelope as search()."""
         try:
             eng = self._get_engine()
-        except AnalysisException:
+        except NO_INDEX_ERRORS:
             return {"result": False, "error": ERR_NO_INDEX,
                     "is_indexing": self.is_indexing()}
         try:
@@ -539,7 +542,7 @@ class EngineAPI:
             return {"result": False, "error": ERR_EMPTY_QUERY}
         try:
             eng = self._get_engine()
-        except AnalysisException:
+        except NO_INDEX_ERRORS:
             return {"result": False, "error": ERR_NO_INDEX,
                     "is_indexing": self.is_indexing()}
         try:
@@ -566,7 +569,7 @@ class EngineAPI:
         total pages/lemmas + per-site status)."""
         try:
             eng = self._get_engine()
-        except AnalysisException:
+        except NO_INDEX_ERRORS:
             return {"result": False, "error": ERR_NO_INDEX,
                     "is_indexing": self.is_indexing(),
                     "last_error": self._build_error[-1] if self._build_error else None}

@@ -692,7 +692,7 @@ def q_engine_upsert_stats(spark, sf_dir):
     shape) and its true text is indexed as a new doc; a key whose truth
     is hygiene-blank is deleted WITHOUT re-add (the "page now empty"
     case). Returns the final LIVE term dictionary (the vector-subtracted
-    stats _recompute_stats persists). Oracle = plain term_stats SQL over
+    stats the upsert's stats writer persists). Oracle = plain term_stats SQL over
     the true corpus — green iff corrupt-build + upsert is exactly
     equivalent to indexing the truth from scratch. Replay-safe: the base
     build resumes off its manifest and a re-upsert of already-true rows

@@ -24,13 +24,10 @@ import shutil
 import time
 from pathlib import Path
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
-from ..session import local_frame
-
 from .index_build import (
     _attach_terms,
     _manifest_path,
@@ -83,9 +80,9 @@ def compact_index(
     postings_path = f"{out_dir}/postings"
     new_postings = f"{out_dir}/_postings_compacting"
 
-    corpus_row = spark.read.parquet(f"{out_dir}/corpus_stats").collect()[0]
+    corpus_row = schemas.read_row(f"{out_dir}/corpus_stats")
     # n_docs from corpus_stats, the SAME source as avgdl/stats_epoch (and
-    # rewritten in the same _recompute_stats commit): the manifest
+    # rewritten in the same stats swap): the manifest
     # stage_docs copy goes stale in the crash window between an
     # incremental's stats recompute and its manifest rewrite, and a
     # mismatched pair here would truncate the part range (dropping the
@@ -95,27 +92,23 @@ def compact_index(
     # part ranges divide the ID SPACE (max assigned id + 1, deleted ids
     # included), which diverges from the live n_docs once upserts delete
     # docs — dividing by n_docs there would truncate the highest parts
-    id_space = int(corpus_row.asDict().get("id_space") or n_docs)
+    id_space = int(corpus_row.get("id_space") or n_docs)
     part_size = max(1, math.ceil(id_space / n_parts))
     avgdl = float(corpus_row["avgdl"]) if corpus_row["avgdl"] else 1.0
     # parts are re-encoded with the CURRENT stats read right here, so
     # they regain the current epoch — compaction restores the stored
     # block_max_score pruning an incremental run disabled
-    _ep = corpus_row.asDict().get("stats_epoch")
+    _ep = corpus_row.get("stats_epoch")
     stats_epoch = int(_ep) if _ep is not None else None
-    term_stats = spark.read.parquet(stats_path)
+    term_stats = schemas.read_table(spark, stats_path, schemas.TERM_STATS)
 
-    try:
-        raw = spark.read.parquet(staging_path)
-    except AnalysisException as staging_err:
-        # an index whose every document analyzed to zero terms (or an
-        # empty corpus) has a staging dir with no data files — same
-        # loud/quiet split as build_index's stage-C read: ONLY the
-        # no-schema shape may fall back; a MISSING dir stays loud
-        # (require_staging above already rejects it for part-ful indexes)
-        if "UNABLE_TO_INFER_SCHEMA" not in str(staging_err):
-            raise
-        raw = local_frame(spark, [], schemas.staging_schema(store_pos))
+    # an index whose every document analyzed to zero terms (or an empty
+    # corpus) has a staging dir with no data files: no rows (declared
+    # schema); a MISSING dir stays loud (require_staging above already
+    # rejects it for part-ful indexes)
+    raw = schemas.read_table(
+        spark, staging_path, schemas.staging_schema(store_pos)
+    )
     # compaction IS the merge of merge-on-read: deleted docs' staging rows
     # are dropped here, so the rebuilt parts carry no replaced postings
     # and the delete vector can be purged after the swaps
@@ -233,7 +226,7 @@ def compact_index(
         docs_path = f"{out_dir}/documents"
         new_docs = f"{out_dir}/_documents_compacting"
         shutil.rmtree(new_docs, ignore_errors=True)
-        spark.read.parquet(docs_path).join(
+        schemas.read_table(spark, docs_path, schemas.DOCUMENTS).join(
             del_df, "doc_id", "left_anti"
         ).write.mode("overwrite").parquet(new_docs)
         old_docs = f"{out_dir}/_documents_old"

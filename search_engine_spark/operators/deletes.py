@@ -8,7 +8,7 @@ the way Iceberg's merge-on-read does it: the old doc_id goes into a
 delete vector, the new text is indexed as a new doc in the batch's new
 part, and every read subtracts the vector — queries via a numpy mask in
 the one decode kernel (query.py:_decode_blocks), stats via an anti-join
-in `_recompute_stats`.
+in the one stats writer (incremental.py:_write_stats_new).
 `compact_index` is the merge: it rewrites staging/postings/documents
 without the deleted rows and purges the vector.
 
@@ -38,6 +38,8 @@ from pathlib import Path
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import schemas
+
 DELETES_DIR = "_deletes"
 
 
@@ -65,12 +67,13 @@ def deleted_ids_df(
     """Union view of the delete vector as a (doc_id) DataFrame, or None
     when there are no deletes (callers skip their anti-join entirely —
     the common case costs nothing). ``dirs`` pins a snapshot's batch
-    list for as-of reads."""
+    list for as-of reads. Not deduplicated: every consumer is an
+    anti-join or load_deleted_ids, neither of which needs it."""
     names = delete_batch_dirs(out_dir) if dirs is None else list(dirs)
     if not names:
         return None
     paths = [str(_root(out_dir) / n) for n in names]
-    return spark.read.parquet(*paths).select("doc_id").distinct()
+    return schemas.read_table(spark, paths, schemas.DELETES)
 
 
 def load_deleted_ids(
@@ -81,11 +84,15 @@ def load_deleted_ids(
     df = deleted_ids_df(spark, out_dir, dirs)
     if df is None:
         return None
-    ids = np.array([r[0] for r in df.collect()], dtype=np.int64)
-    if ids.size == 0:
-        return None
-    ids.sort()
-    return ids
+    ids = collect_ids(df)
+    return ids if ids.size else None
+
+
+def collect_ids(frame: DataFrame) -> np.ndarray:
+    """A one-column doc_id frame as a sorted unique int64 array."""
+    return np.unique(
+        np.array([r[0] for r in frame.collect()], dtype=np.int64)
+    )
 
 
 def is_batch_committed(name: str, manifest: dict) -> bool:
@@ -129,13 +136,18 @@ def write_delete_batch(
     part that carries their replacements. Written to a _tmp_ sibling and
     renamed in (atomic locally): a crash mid-write leaves only _tmp_
     debris the batch glob never matches (and recovery sweeps), never a
-    half-written batch dir that would brick deleted_ids_df with
-    UNABLE_TO_INFER_SCHEMA. Idempotent on replay."""
+    half-written batch dir whose partial doc_ids readers would apply
+    (a batch dir with no data files reads as no rows: deleted_ids_df
+    reads with the declared schema). Idempotent on replay."""
     name = batch_dir_name(part_id)
     root = _root(out_dir)
     tmp = root / f"_tmp_{name}"
     shutil.rmtree(tmp, ignore_errors=True)
-    replaced.select("doc_id").write.mode("overwrite").parquet(str(tmp))
+    # one file: a batch is bounded by its upsert, and a local frame
+    # would otherwise write one file per core
+    replaced.select("doc_id").coalesce(1).write.mode("overwrite").parquet(
+        str(tmp)
+    )
     final = root / name
     shutil.rmtree(final, ignore_errors=True)
     tmp.rename(final)
@@ -232,7 +244,7 @@ def tombstones_df(spark: SparkSession, out_dir: str) -> DataFrame | None:
     root = _tomb_root(out_dir)
     if not root.exists():
         return None
-    return spark.read.parquet(str(root))
+    return schemas.read_table(spark, str(root), schemas.TOMBSTONES)
 
 
 def filter_tombstoned(incoming: DataFrame, tombs: DataFrame) -> DataFrame:

@@ -8,10 +8,14 @@ EntitySaver.java:35-54) re-expressed as an idempotent batch merge:
        (replaces the reference's synchronized get-or-create point lookups,
         EntitySaver.java:45-50 / PageRepository.java:18 — J4/S3)
     -> assign doc_ids continuing after the existing max (append order)
-    -> analyze -> staging + postings for the NEW part -> append documents
-    -> RECOMPUTE term_stats / corpus_stats -> manifest part row (COMMIT)
+    -> analyze -> staging for the NEW part
+    -> RECOMPUTE the post-batch live term_stats / corpus_stats into
+       term_stats_new/ + corpus_stats_new/ (one pass per batch)
+    -> postings for the NEW part, encoded with those stats
+    -> append documents -> swap the *_new stats in
+    -> manifest part row (COMMIT)
 
-Recomputing df from postings fixes the reference's df-drift bug
+Recomputing df from staging fixes the reference's df-drift bug
 (EntitySaver.java:88-101 increments lemma.frequency again on re-index —
 SURVEY.md §3.3/§7.5): our df is always exactly "distinct docs containing
 the term", no matter how many times a batch is replayed.
@@ -20,7 +24,10 @@ Crash-safety (the multi-table append commit protocol):
   The MANIFEST PART ROW is the commit marker and is written LAST. Write
   order is staging -> postings -> deletes -> documents -> stats ->
   manifest (the delete vector, upsert mode only, travels with its part —
-  operators/deletes.py), so at
+  operators/deletes.py). The stats are WRITTEN to *_new before the
+  encode but only SWAPPED in after the documents append, so the live
+  stats change where they always did, and a crashed attempt's *_new is
+  debris that recovery drops. So at
   entry `_recover_uncommitted` can classify any staging part that has no
   manifest row:
     (a) documents do NOT cover its doc_id range -> the crash happened
@@ -36,8 +43,13 @@ Crash-safety (the multi-table append commit protocol):
   on a local FS the marker file is the atomic bit.
 
 Scale notes: the anti-join is a shuffle on (conv_id, turn_idx) sized by the
-NEW batch (existing side is pruned to two columns); stats recompute is one
-agg over the staging table (columnar, term+tf columns only).
+NEW batch (existing side is pruned to two columns); the stats recompute is
+one agg over the staging table (columnar, term+tf columns only) and one
+over the doc lengths, once per batch. The delete vector and the batch's
+replaced ids are collected to the driver (both are bounded, by compaction
+and by the batch) and join as local frames. Every table is read with its
+declared schema (schemas.read_table; corpus_stats via schemas.read_row),
+so no read runs a schema-inference job.
 
 Duplicate (conv_id, turn_idx) rows WITHIN one batch are deliberately kept
 (each gets its own doc_id) — a fresh build over the same rows does the
@@ -51,12 +63,16 @@ import shutil
 import time
 from pathlib import Path
 
-from pyspark.errors import AnalysisException
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import schemas
 from ..errors import QueryArgumentError
 from ..functions.analyzer import ANALYZER_VERSION, terms_col
+from ..schemas import read_row, read_table
+from ..session import local_frame
 from .index_build import (
     _attach_terms,
     _read_manifest,
@@ -69,6 +85,8 @@ from .index_build import (
     nonblank_text,
     prepare_salted,
 )
+
+STATS_TABLES = ("term_stats", "corpus_stats")
 
 
 def _part_ids_under(out_dir: str, subdir: str) -> set[int]:
@@ -107,8 +125,7 @@ def resolve_n_buckets(spark: SparkSession, out_dir: str,
     """The bucket->directory layout persisted at build time
     (corpus_stats.n_buckets). A caller-supplied mismatch would write/read
     postings under a different bucket mapping — fail loudly."""
-    row = spark.read.parquet(f"{out_dir}/corpus_stats").collect()[0]
-    persisted = row.asDict().get("n_buckets")
+    persisted = read_row(f"{out_dir}/corpus_stats").get("n_buckets")
     if persisted is not None:
         if requested is not None and int(requested) != int(persisted):
             raise QueryArgumentError(
@@ -119,74 +136,108 @@ def resolve_n_buckets(spark: SparkSession, out_dir: str,
     return 16 if requested is None else int(requested)
 
 
-def _recompute_stats(spark: SparkSession, out_dir: str, version: str,
-                     n_buckets: int,
-                     stats_epoch: int | None = None,
-                     delete_dirs: list[str] | None = None) -> tuple[int, float]:
-    """Global stats from the durable fact tables (drift-free df —
-    SURVEY.md §7.5). Returns (n_docs, avgdl). ``stats_epoch`` stamps the
-    rewrite; part manifest rows carrying a DIFFERENT epoch are thereby
-    marked as encoded under older stats, which disables the query
-    engine's stored-block_max_score pruning until a compaction
-    re-encodes them (query.py:_bound_col_multi).
+def _ids_frame(
+    spark: SparkSession, ids: np.ndarray | None
+) -> DataFrame | None:
+    """A driver-held doc_id set as a local frame (the broadcast side of
+    an anti-join, evaluated without a job), or None when it is empty."""
+    if ids is None or ids.size == 0:
+        return None
+    return local_frame(spark, pd.DataFrame({"doc_id": ids}), "doc_id long")
 
-    ``delete_dirs`` pins the delete-vector batch list the stats subtract
-    (recovery's sweep passes the committed set so an about-to-be-rolled-
-    back batch never poisons the rewrite); None = every batch on disk
-    (the in-commit default: the new batch has landed, its marker has
-    not)."""
-    from .deletes import deleted_ids_df
 
-    stats_path = f"{out_dir}/term_stats"
-    corpus_path = f"{out_dir}/corpus_stats"
-    raw = spark.read.parquet(f"{out_dir}/_staging_postings_raw")
-    docs_all = spark.read.parquet(f"{out_dir}/documents")
-    # stats describe the LIVE corpus: the delete vector's docs are
-    # subtracted from df/cf and from n_docs/avgdl/max_tf_sum. id_space is
-    # the ID-SPACE size (max assigned + 1, deleted ids included) — the
-    # layout quantity part-range math needs, which diverges from n_docs
-    # once upserts delete docs.
-    del_df = deleted_ids_df(spark, out_dir, delete_dirs)
-    raw_live = (
-        raw.join(del_df, "doc_id", "left_anti") if del_df is not None else raw
-    )
-    docs_live = (
-        docs_all.join(del_df, "doc_id", "left_anti")
-        if del_df is not None
-        else docs_all
-    )
+def _write_stats_new(
+    out_dir: str,
+    raw_live: DataFrame,
+    dls_live: DataFrame,
+    id_space: int,
+    version: str,
+    n_buckets: int,
+    stats_epoch: int | None,
+) -> tuple[int, float]:
+    """The one stats writer: the LIVE term_stats (df, cf over the
+    ``raw_live`` staging rows) to ``term_stats_new/`` and the corpus row
+    (over the ``dls_live`` doc lengths) to ``corpus_stats_new/``;
+    _swap_stats publishes both. Returns (n_docs, avgdl) as the encoder
+    scores with them, read back on the driver (no job). avgdl is an
+    integer sum over a count, so any union order of the same lengths
+    gives the same double."""
     raw_live.groupBy("term").agg(
         F.count("*").alias("df"), F.sum("tf").alias("cf")
-    ).write.mode("overwrite").parquet(f"{stats_path}_new")
-    id_row = docs_all.agg(
-        F.coalesce(F.max("doc_id") + 1, F.lit(0))
-        .cast("long")
-        .alias("id_space")
-    )
-    docs_live.agg(
+    ).write.mode("overwrite").parquet(f"{out_dir}/term_stats_new")
+    corpus_new = f"{out_dir}/corpus_stats_new"
+    dls_live.agg(
         F.count("*").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
         F.max("dl").cast("double").alias("max_tf_sum"),
         F.lit(version).alias("index_version"),
         F.lit(n_buckets).alias("n_buckets"),
         F.lit(stats_epoch).cast("long").alias("stats_epoch"),
-    ).crossJoin(id_row).write.mode("overwrite").parquet(f"{corpus_path}_new")
-    # rename swap (same idiom as compact_index's postings/staging swap;
-    # one Iceberg snapshot commit on clusters). Spark's mode("overwrite")
-    # would DELETE the live table before its write job runs — a crash in
-    # that window loses corpus_stats/term_stats outright, bricking every
-    # subsequent operation at entry. The rename gap is instantaneous and
-    # leaves *_old on disk for manual restore; it also skips re-writing
-    # each table a second time through Spark.
-    for tgt in (stats_path, corpus_path):
+        F.lit(id_space).cast("long").alias("id_space"),
+    ).write.mode("overwrite").parquet(corpus_new)
+    r = read_row(corpus_new)
+    return int(r["n_docs"]), float(r["avgdl"]) if r["avgdl"] else 1.0
+
+
+def _swap_stats(out_dir: str) -> None:
+    """Publish _write_stats_new's tables by rename swap (same idiom as
+    compact_index's postings/staging swap; one Iceberg snapshot commit
+    on clusters). Spark's mode("overwrite") would DELETE the live table
+    before its write job runs — a crash in that window loses the stats
+    outright, bricking every subsequent operation at entry. The rename
+    gap is instantaneous and leaves *_old on disk for manual restore."""
+    for table in STATS_TABLES:
+        tgt = f"{out_dir}/{table}"
         old = f"{tgt}_old"
         shutil.rmtree(old, ignore_errors=True)
         if Path(tgt).exists():
             Path(tgt).rename(old)
         Path(f"{tgt}_new").rename(tgt)
         shutil.rmtree(old, ignore_errors=True)
-    row = spark.read.parquet(corpus_path).collect()[0]
-    return int(row["n_docs"]), float(row["avgdl"]) if row["avgdl"] else 1.0
+
+
+def _recompute_stats(spark: SparkSession, out_dir: str, version: str,
+                     n_buckets: int,
+                     stats_epoch: int | None = None,
+                     delete_dirs: list[str] | None = None) -> tuple[int, float]:
+    """Global stats from the durable fact tables (drift-free df —
+    SURVEY.md §7.5), through the same writer and swap as an upsert.
+    Recovery and deletes-only commits use it; an upsert writes its
+    post-batch stats once, before its encode. Returns (n_docs, avgdl).
+    ``stats_epoch`` stamps the rewrite; part manifest rows carrying a
+    DIFFERENT epoch are thereby marked as encoded under older stats,
+    which disables the query engine's stored-block_max_score pruning
+    until a compaction re-encodes them (query.py:_bound_col_multi).
+
+    ``delete_dirs`` pins the delete-vector batch list the stats subtract
+    (recovery's sweep passes the committed set so an about-to-be-rolled-
+    back batch never poisons the rewrite); None = every batch on disk
+    (the in-commit default: the new batch has landed, its marker has
+    not)."""
+    from .deletes import load_deleted_ids
+
+    raw = read_table(
+        spark, f"{out_dir}/_staging_postings_raw", schemas.STAGING
+    )
+    docs_all = read_table(spark, f"{out_dir}/documents", schemas.DOCUMENTS)
+    # stats describe the LIVE corpus: the delete vector's docs are
+    # subtracted from df/cf and from n_docs/avgdl/max_tf_sum. id_space is
+    # the ID-SPACE size (max assigned + 1, deleted ids included) — the
+    # layout quantity part-range math needs, which diverges from n_docs
+    # once upserts delete docs.
+    dead = _ids_frame(spark, load_deleted_ids(spark, out_dir, delete_dirs))
+    docs_live = docs_all
+    if dead is not None:
+        raw = raw.join(dead, "doc_id", "left_anti")
+        docs_live = docs_all.join(dead, "doc_id", "left_anti")
+    id_space = docs_all.agg(F.max("doc_id")).collect()[0][0]
+    n_docs, avgdl = _write_stats_new(
+        out_dir, raw, docs_live.select("dl"),
+        0 if id_space is None else int(id_space) + 1,
+        version, n_buckets, stats_epoch,
+    )
+    _swap_stats(out_dir)
+    return n_docs, avgdl
 
 
 def require_staging(out_dir: str, manifest: dict) -> None:
@@ -195,8 +246,8 @@ def require_staging(out_dir: str, manifest: dict) -> None:
     staging swap (rename-out done, rename-in not) leaves behind. Without
     this guard the next incremental_update would recreate the directory
     with ONLY its own batch (parquet append creates missing dirs) and its
-    closing _recompute_stats would silently rewrite global df/cf/avgdl
-    from that partial staging; a later compact_index would then rebuild
+    stats pass would silently rewrite global df/cf/avgdl from that
+    partial staging; a later compact_index would then rebuild
     postings from it, permanently dropping all prior postings."""
     if not any(k.startswith("part_") for k in manifest):
         return
@@ -243,6 +294,11 @@ def _recover_uncommitted(spark: SparkSession, out_dir: str,
     )
 
     sweep_tmp_debris(out_dir)  # crashed write_delete_batch _tmp_ dirs
+    # *_new stats are valid only inside the call that wrote them: a
+    # crashed attempt's copy must never be swapped in (every later swap
+    # follows its own _write_stats_new anyway; this drops the debris)
+    for table in STATS_TABLES:
+        shutil.rmtree(f"{out_dir}/{table}_new", ignore_errors=True)
     staged_now = _staging_part_ids(out_dir)
     orphan_batches: list[int] = []
     keep_dirs: list[str] = []
@@ -280,7 +336,7 @@ def _recover_uncommitted(spark: SparkSession, out_dir: str,
     if not orphans:
         return manifest
     version = manifest["stage_docs"].get("index_version", "v1")
-    documents = spark.read.parquet(f"{out_dir}/documents")
+    documents = read_table(spark, f"{out_dir}/documents", schemas.DOCUMENTS)
     docs_max = documents.agg(F.max("doc_id")).collect()[0][0]
     docs_max = -1 if docs_max is None else int(docs_max)
     finish: list[int] = []
@@ -289,21 +345,16 @@ def _recover_uncommitted(spark: SparkSession, out_dir: str,
     for p in orphans:
         staging_part = f"{out_dir}/_staging_postings_raw/part_id={p}"
         postings_part = f"{out_dir}/postings/part_id={p}"
-        try:
-            span = (
-                spark.read.parquet(staging_part)
-                .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-                .collect()[0]
-            )
-            lo = None if span["lo"] is None else int(span["lo"])
-            hi = None if span["hi"] is None else int(span["hi"])
-        except AnalysisException as ex:
-            # a crash during the staging append's job commit can leave
-            # the part DIRECTORY with zero data files — definitionally
-            # case-(a) garbage, not a reason to brick recovery forever
-            if "UNABLE_TO_INFER_SCHEMA" not in str(ex):
-                raise
-            lo = hi = None
+        # a crash during the staging append's job commit can leave the
+        # part DIRECTORY with zero data files: it reads as no rows
+        # (declared schema), i.e. definitionally case-(a) garbage
+        span = (
+            read_table(spark, staging_part, schemas.STAGING)
+            .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
+            .collect()[0]
+        )
+        lo = None if span["lo"] is None else int(span["lo"])
+        hi = None if span["hi"] is None else int(span["hi"])
         # the documents append commits files one at a time, so covering
         # the part's MIN doc_id does not prove the whole append landed:
         # batch doc_ids are dense in [lo, hi], so the append is complete
@@ -345,7 +396,7 @@ def _recover_uncommitted(spark: SparkSession, out_dir: str,
         # rewrite documents without the partial batch's rows (doc_ids at
         # or above the rolled-back batch start — batches are sequential,
         # so nothing committed lives past a rolled-back range). Rename
-        # swap, same idiom as _recompute_stats.
+        # swap, same idiom as _swap_stats.
         docs_path = f"{out_dir}/documents"
         documents.filter(F.col("doc_id") < partial_lo).write.mode(
             "overwrite"
@@ -378,7 +429,9 @@ def _recover_uncommitted(spark: SparkSession, out_dir: str,
                                  stats_epoch=int(time.time() * 1e6))
     for p in finish:
         m = (
-            spark.read.parquet(f"{out_dir}/postings/part_id={p}")
+            read_table(
+                spark, f"{out_dir}/postings/part_id={p}", schemas.POSTINGS
+            )
             .agg(
                 F.sum("n").alias("postings_written"),
                 F.approx_count_distinct("term").alias("terms_merged"),
@@ -503,13 +556,13 @@ def delete_docs(
     require_staging(out_dir, manifest)
     manifest = _recover_uncommitted(spark, out_dir, manifest, n_buckets)
 
-    from .deletes import deleted_ids_df, write_tombstones
+    from .deletes import collect_ids, load_deleted_ids, write_tombstones
 
     if tombstone:
         write_tombstones(keys, out_dir)
 
-    existing = spark.read.parquet(f"{out_dir}/documents")
-    prior_del = deleted_ids_df(spark, out_dir)
+    existing = read_table(spark, f"{out_dir}/documents", schemas.DOCUMENTS)
+    prior_del = _ids_frame(spark, load_deleted_ids(spark, out_dir))
     live = (
         existing.join(prior_del, "doc_id", "left_anti")
         if prior_del is not None
@@ -539,16 +592,17 @@ def delete_docs(
         matched = live.join(
             keys.select("conv_id").distinct(), "conv_id", "left_semi"
         )
-    # localCheckpoint: the commit below mutates the vector this plan
-    # reads through (same self-dependency rule as the upsert anti-join)
-    doomed = matched.select("doc_id").distinct().localCheckpoint()
-    n = doomed.count()
-    if n == 0:
+    # collected once (batch-bounded, like the vector itself): the commit
+    # below mutates the vector this plan reads through, and a driver-
+    # held set has no lineage to re-evaluate (self-dependency rule)
+    doomed = collect_ids(matched.select("doc_id"))
+    if doomed.size == 0:
         return {"deleted_docs": 0}
     _commit_deletes_only(
-        spark, out_dir, manifest, doomed, n, version, n_buckets
+        spark, out_dir, manifest, _ids_frame(spark, doomed), int(doomed.size),
+        version, n_buckets,
     )
-    return {"deleted_docs": n}
+    return {"deleted_docs": int(doomed.size)}
 
 
 def apply_cdc_batch(
@@ -655,15 +709,20 @@ def incremental_update(
     staging_path = f"{out_dir}/_staging_postings_raw"
     postings_path = f"{out_dir}/postings"
 
-    existing = spark.read.parquet(docs_path)
+    existing = read_table(spark, docs_path, schemas.DOCUMENTS)
     base = existing.agg(F.max("doc_id")).collect()[0][0]
     base = int(base) + 1 if base is not None else 0
 
     # the live view subtracts the delete vector: replaced docs must not
-    # anchor the anti-join (their replacement row does) nor feed stats
-    from .deletes import deleted_ids_df, write_delete_batch
+    # anchor the anti-join (their replacement row does) nor feed stats.
+    # The vector is collected once (the engine does the same) and rides
+    # every anti-join below as a local frame.
+    from .deletes import collect_ids, load_deleted_ids, write_delete_batch
 
-    prior_del = deleted_ids_df(spark, out_dir)
+    prior_ids = load_deleted_ids(spark, out_dir)
+    if prior_ids is None:
+        prior_ids = np.empty(0, dtype=np.int64)
+    prior_del = _ids_frame(spark, prior_ids)
     existing_live = (
         existing.join(prior_del, "doc_id", "left_anti")
         if prior_del is not None
@@ -736,12 +795,12 @@ def incremental_update(
             (F.col("_old_ids").isNull() | F.col("_changed"))
             & nonblank_text()
         ).select(*base_cols)
-        replaced = (
-            j.filter(F.col("_changed"))
-            .select(F.explode("_old_ids").alias("doc_id"))
-            .distinct()
+        # the replaced ids are batch-bounded: collected once, they feed
+        # the stats, the delete batch and the count without re-running
+        # the checkpoint's explode + distinct
+        replaced_ids = collect_ids(
+            j.filter(F.col("_changed")).select(F.explode("_old_ids"))
         )
-        n_replaced = replaced.count()
     else:
         incoming_ins = clean_transcripts(new_transcripts)
         if tombs is not None:
@@ -754,8 +813,9 @@ def incremental_update(
             )
             .localCheckpoint()
         )
-        replaced = None
-        n_replaced = 0
+        replaced_ids = np.empty(0, dtype=np.int64)
+    replaced = _ids_frame(spark, replaced_ids)
+    n_replaced = int(replaced_ids.size)
     with_ids, ranged, n_new = assign_doc_ids(fresh, spark, base=base)
     if n_new == 0:
         ranged.unpersist()
@@ -813,30 +873,34 @@ def incremental_update(
             )
         exploded.write.mode("append").partitionBy("part_id").parquet(staging_path)
 
-        # postings for the new part (df comes from a post-merge recompute below,
-        # but the encoder needs df now for idf-at-encode — use the union view:
-        # staging already contains the new part). LIVE view throughout:
-        # prior deletes AND this batch's replacements are subtracted so the
-        # encode-time stats stay bit-identical to what _recompute_stats
-        # persists once the delete batch is on disk.
-        raw = spark.read.parquet(staging_path)
-        raw_live = raw
-        live_prev = existing_live
-        if prior_del is not None:
-            raw_live = raw_live.join(prior_del, "doc_id", "left_anti")
-        if n_replaced:
-            raw_live = raw_live.join(replaced, "doc_id", "left_anti")
-            live_prev = live_prev.join(replaced, "doc_id", "left_anti")
-        term_stats_now = raw_live.groupBy("term").agg(F.count("*").alias("df"))
-        # n_docs + avgdl over LIVE docs after this batch, in one job
-        stat_row = (
-            live_prev.select("dl")
-            .unionByName(analyzed.select("dl"))
-            .agg(F.count("*").alias("n"), F.avg("dl").alias("a"))
-            .collect()[0]
+        # ONE stats pass per batch: the post-batch LIVE stats (staging
+        # already holds the new part; prior deletes AND this batch's
+        # replacements are subtracted) go to *_new now, the encoder
+        # reads its df and scalars from them, and _swap_stats publishes
+        # them after the documents append — exactly what a recompute
+        # over the committed tables would write (integer df/dl sums;
+        # the batch's ids are dense from base, so id_space = base + n_new)
+        raw = read_table(
+            spark, staging_path, schemas.staging_schema(store_pos)
         )
-        docs_after = int(stat_row["n"])
-        avgdl = float(stat_row["a"]) if stat_row["a"] else 1.0
+        dead = _ids_frame(spark, np.union1d(prior_ids, replaced_ids))
+        raw_live, live_prev = raw, existing
+        if dead is not None:
+            raw_live = raw.join(dead, "doc_id", "left_anti")
+            live_prev = existing.join(dead, "doc_id", "left_anti")
+        # the new part is encoded with these POST-merge stats, so it
+        # carries the new epoch; PRE-existing parts keep their old
+        # epochs, which correctly disables stored-block-max pruning
+        # until compaction re-encodes them
+        new_epoch = int(time.time() * 1e6)
+        n_docs, avgdl = _write_stats_new(
+            out_dir, raw_live,
+            live_prev.select("dl").unionByName(analyzed.select("dl")),
+            base + n_new, version, n_buckets, new_epoch,
+        )
+        term_stats_now = read_table(
+            spark, f"{out_dir}/term_stats_new", schemas.TERM_STATS
+        )
 
         raw_p = raw.filter(F.col("part_id") == part_new)
         batch_span = max(1, n_new)
@@ -846,7 +910,7 @@ def incremental_update(
             store_positions=store_pos,
         )
         encoded = _attach_terms(
-            encode_salted(salted, spark, docs_after, avgdl, block_size,
+            encode_salted(salted, spark, n_docs, avgdl, block_size,
                           store_positions=store_pos),
             term_stats_now,
             n_buckets,
@@ -884,14 +948,7 @@ def incremental_update(
         analyzed.unpersist()
         ranged.unpersist()
 
-    # the new part was encoded with POST-merge stats (docs_after, union
-    # df, union avgdl — integer dl/df sums make those bit-identical to
-    # what _recompute_stats persists), so it may carry the new epoch;
-    # PRE-existing parts keep their old epochs, which correctly disables
-    # stored-block-max pruning until compaction re-encodes them
-    new_epoch = int(time.time() * 1e6)
-    n_docs, _ = _recompute_stats(spark, out_dir, version, n_buckets,
-                                 stats_epoch=new_epoch)
+    _swap_stats(out_dir)
 
     # COMMIT: the manifest part row marks the batch durable
     _write_manifest_row(

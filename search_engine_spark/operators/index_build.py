@@ -49,7 +49,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.errors import AnalysisException
 
 from ..functions.analyzer import ANALYZER_VERSION, terms_col
 from ..functions.codec import varbyte_encode_sliced
@@ -692,9 +691,7 @@ def build_index(
     if manifest.get("stage_docs", {}).get("status") == "DONE" and Path(
         corpus_path
     ).exists():
-        persisted = (
-            spark.read.parquet(corpus_path).collect()[0].asDict().get("n_buckets")
-        )
+        persisted = schemas.read_row(corpus_path).get("n_buckets")
         if persisted is not None:
             if n_buckets is not None and int(n_buckets) != int(persisted):
                 raise ValueError(
@@ -755,9 +752,7 @@ def build_index(
         if reuse_epoch is not None:
             try:
                 if Path(corpus_path).exists():
-                    prev_corpus = (
-                        spark.read.parquet(corpus_path).collect()[0].asDict()
-                    )
+                    prev_corpus = schemas.read_row(corpus_path)
             except Exception:  # noqa: BLE001 — torn previous write
                 prev_corpus = None
             if (
@@ -840,24 +835,17 @@ def build_index(
                 spark, corpus_pdf, schemas.CORPUS_STATS
             ).write.mode("overwrite").parquet(corpus_path)
 
-        def _write_stats(n_postings: int) -> None:
+        def _write_stats() -> None:
             # term_stats from the staging parquet: a column-pruned read of
             # (term, tf) only — runs concurrently with the part encodes.
-            # An all-empty corpus writes no staging part files (the dir is
-            # unreadable), so the empty dictionary comes from the schema.
+            # An all-empty corpus writes no staging part files, which the
+            # declared-schema read sees as no rows: an empty dictionary.
             tw = time.time()
-            if n_postings == 0:
-                term_stats_df = local_frame(
-                    spark, [], schemas.TERM_STATS
-                ).observe(stats_ob, F.count(F.lit(1)).alias("n_terms"))
-            else:
-                term_stats_df = (
-                    spark.read.parquet(staging_path)
-                    .groupBy("term")
-                    .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-                    .observe(stats_ob, F.count(F.lit(1)).alias("n_terms"))
-                )
-            term_stats_df.write.mode("overwrite").parquet(stats_path)
+            schemas.read_table(spark, staging_path, schemas.STAGING).groupBy(
+                "term"
+            ).agg(F.count("*").alias("df"), F.sum("tf").alias("cf")).observe(
+                stats_ob, F.count(F.lit(1)).alias("n_terms")
+            ).write.mode("overwrite").parquet(stats_path)
             _plog("term_stats write (from staging)", tw)
 
         from concurrent.futures import ThreadPoolExecutor
@@ -872,7 +860,6 @@ def build_index(
             tw = time.time()
             exploded.observe(
                 fill_ob,
-                F.count(F.lit(1)).alias("n_postings"),
                 F.sum("tf").alias("tok_sum"),
                 F.max("dl").alias("max_dl"),
             ).write.mode("overwrite").partitionBy("part_id").parquet(
@@ -906,18 +893,14 @@ def build_index(
                 ):
                     stats_epoch = int(time.time() * 1e6)
                     f_docs.result()  # corpus row written with stale epoch
-                    row = (
-                        spark.read.parquet(corpus_path)
-                        .collect()[0]
-                        .asDict()
-                    )
+                    row = schemas.read_row(corpus_path)
                     row["stats_epoch"] = stats_epoch
                     local_frame(
                         spark,
                         [tuple(map(row.get, schemas.CORPUS_STATS.names))],
                         schemas.CORPUS_STATS,
                     ).write.mode("overwrite").parquet(corpus_path)
-            f_stats = ex.submit(_write_stats, int(fm["n_postings"] or 0))
+            f_stats = ex.submit(_write_stats)
         except BaseException:
             # a failed staging/docs job must not leak the pinned cache or
             # the in-flight executor
@@ -997,7 +980,7 @@ def build_index(
     # recompute stats from the durable staging/documents tables
     if fresh is None and manifest.get("stage_stats", {}).get("status") != "DONE":
         t0 = time.time()
-        raw = spark.read.parquet(staging_path)
+        raw = schemas.read_table(spark, staging_path, schemas.STAGING)
         stats_ob = Observation(f"stats_{int(t0)}")
         raw.groupBy("term").agg(
             F.count("*").alias("df"), F.sum("tf").alias("cf")
@@ -1009,7 +992,7 @@ def build_index(
         # the stamp here would null the epoch and silently disable
         # stored-block-max pruning on a fully consistent index)
         fb_epoch = _manifest_part_epoch(manifest) or int(t0 * 1e6)
-        spark.read.parquet(docs_path).agg(
+        schemas.read_table(spark, docs_path, schemas.DOCUMENTS).agg(
             F.count("*").alias("n_docs"),
             F.avg("dl").alias("avgdl"),
             F.max("dl").cast("double").alias("max_tf_sum"),
@@ -1039,10 +1022,10 @@ def build_index(
         max_tf_sum = fresh["max_tf_sum"]
         stats_epoch = fresh["stats_epoch"]
     else:
-        corpus_row = spark.read.parquet(corpus_path).collect()[0]
+        corpus_row = schemas.read_row(corpus_path)
         avgdl = float(corpus_row["avgdl"]) if corpus_row["avgdl"] else 1.0
         max_tf_sum = float(corpus_row["max_tf_sum"] or 0.0)
-        _ep = corpus_row.asDict().get("stats_epoch")
+        _ep = corpus_row.get("stats_epoch")
         stats_epoch = int(_ep) if _ep is not None else None
 
     # ---------------- Stage C: per-part posting encode ---------------------
@@ -1074,26 +1057,16 @@ def build_index(
     try:
         if fresh is not None:
             fresh["stats_future"].result()
-        term_stats = spark.read.parquet(stats_path)
-        try:
-            staging_df = spark.read.parquet(staging_path)
-        except AnalysisException as staging_err:
-            # a corpus whose every document analyzed to zero terms writes
-            # no staging part files (dir exists, no schema) — encode empty
-            # parts. ONLY that exact shape (UNABLE_TO_INFER_SCHEMA) may
-            # fall back: a MISSING staging dir on a resume (PATH_NOT_FOUND
-            # — lost/partial copy) would otherwise silently commit every
-            # part DONE with zero postings over a populated documents
-            # table. Same loud/quiet split as the query engine's postings
-            # read (query.py:83-115).
-            if "UNABLE_TO_INFER_SCHEMA" not in str(staging_err):
-                raise
-            empty_schema = T.StructType(
-                list(schemas.STAGING.fields)
-                + ([T.StructField("pos", T.ArrayType(T.IntegerType()), False)]
-                   if store_positions else [])
-            )
-            staging_df = local_frame(spark, [], empty_schema)
+        term_stats = schemas.read_table(spark, stats_path, schemas.TERM_STATS)
+        # a corpus whose every document analyzed to zero terms writes no
+        # staging part files — the declared-schema read sees no rows and
+        # the parts encode empty. A MISSING staging dir on a resume
+        # (lost/partial copy) still raises PATH_NOT_FOUND here: it must
+        # never commit every part DONE with zero postings over a
+        # populated documents table.
+        staging_df = schemas.read_table(
+            spark, staging_path, schemas.staging_schema(store_positions)
+        )
         actual_parts = math.ceil(n_docs / part_size) if n_docs else 0
         todo = [
             p for p in range(actual_parts)
@@ -1213,7 +1186,7 @@ def build_index(
     )
     n_terms = int(
         manifest.get("stage_stats", {}).get("n_terms")
-        or spark.read.parquet(stats_path).count()
+        or schemas.read_table(spark, stats_path, schemas.TERM_STATS).count()
     )
     return IndexBuildResult(
         out_dir=out_dir,

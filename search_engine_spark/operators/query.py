@@ -162,11 +162,16 @@ class SearchEngine:
 
             self.snapshot = resolve_snapshot(index_dir, snapshot_id)
             stats_root = str(stats_dir(index_dir, self.snapshot["stats_epoch"]))
-        corpus = spark.read.parquet(f"{stats_root}/corpus_stats").collect()[0]
+        # the one-row corpus_stats is read on the driver (pyarrow, no
+        # Spark job); documents and term_stats with their declared
+        # schemas (no inference job). postings keeps inference on
+        # purpose: has_positions and the empty/missing-dir split below
+        # read the on-disk schema.
+        corpus = schemas.read_row(f"{stats_root}/corpus_stats")
         # bucket layout is persisted with the index (corpus_stats.n_buckets);
         # a caller-supplied mismatch would silently prune the wrong partition
         # dirs, so fail loudly instead
-        persisted = corpus.asDict().get("n_buckets")
+        persisted = corpus.get("n_buckets")
         if persisted is not None:
             if n_buckets is not None and int(n_buckets) != int(persisted):
                 raise QueryArgumentError(
@@ -183,13 +188,15 @@ class SearchEngine:
         # into an array slot (search_many's range buckets, the MaxScore
         # grid) must size by id_space, never n_docs. Older indexes lack
         # the column; there ids are dense and n_docs IS the space.
-        _isp = corpus.asDict().get("id_space")
+        _isp = corpus.get("id_space")
         self.id_space = int(_isp) if _isp is not None else self.n_docs
         self.avgdl = float(corpus["avgdl"]) if corpus["avgdl"] else 1.0
         self.max_tf_sum = float(corpus["max_tf_sum"] or 1.0)
-        _ep = corpus.asDict().get("stats_epoch")
+        _ep = corpus.get("stats_epoch")
         self._stats_epoch = int(_ep) if _ep is not None else None
-        self.term_stats = spark.read.parquet(f"{stats_root}/term_stats")
+        self.term_stats = schemas.read_table(
+            spark, f"{stats_root}/term_stats", schemas.TERM_STATS
+        )
         try:
             self.postings = spark.read.parquet(f"{index_dir}/postings")
         except AnalysisException as ex:
@@ -236,12 +243,14 @@ class SearchEngine:
                 for name in self.snapshot["documents_files"]
             ]
             self.documents = (
-                spark.read.parquet(*files)
+                schemas.read_table(spark, files, schemas.DOCUMENTS)
                 if files
                 else local_frame(spark, [], schemas.DOCUMENTS)
             )
         else:
-            self.documents = spark.read.parquet(f"{index_dir}/documents")
+            self.documents = schemas.read_table(
+                spark, f"{index_dir}/documents", schemas.DOCUMENTS
+            )
         # delete vector (operators/deletes.py, upsert support): collected
         # once per engine, masked out by the decode kernel and
         # anti-joined off the documents view, so replaced docs neither

@@ -55,6 +55,7 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from .. import schemas
 from ..errors import QueryArgumentError
 
 SNAP_DIR = "_snapshots"
@@ -235,8 +236,8 @@ def commit_snapshot(
     work — no Spark job rides the hot build path. When omitted (ad-hoc
     callers), they are read back from corpus_stats."""
     if stats_epoch is None or n_docs is None:
-        corpus = spark.read.parquet(f"{out_dir}/corpus_stats").collect()[0]
-        _ep = corpus.asDict().get("stats_epoch")
+        corpus = schemas.read_row(f"{out_dir}/corpus_stats")
+        _ep = corpus.get("stats_epoch")
         stats_epoch = int(_ep) if _ep is not None else 0
         n_docs = int(corpus["n_docs"])
     from .deletes import delete_batch_dirs

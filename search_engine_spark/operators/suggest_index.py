@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from .. import schemas
+
 SUGGEST_DIR = "_suggest_deletes"
 DEFAULT_MAX_EDIT = 2
 # deletes per term is O(L^max_edit); cap the term length so one
@@ -92,9 +94,10 @@ def build_suggest_index(
     handshake."""
     if max_edit < 1:
         raise ValueError("max_edit must be >= 1")
-    terms = spark.read.parquet(f"{index_dir}/term_stats").select("term")
-    corpus = spark.read.parquet(f"{index_dir}/corpus_stats").collect()[0]
-    epoch = corpus.asDict().get("stats_epoch")
+    terms = schemas.read_table(
+        spark, f"{index_dir}/term_stats", schemas.TERM_STATS
+    ).select("term")
+    epoch = schemas.read_row(f"{index_dir}/corpus_stats").get("stats_epoch")
     if epoch is None:
         # a legacy pre-epoch index has no freshness handle, so the
         # O(|vocab| * L^e) build would produce an artifact

@@ -3,11 +3,13 @@
 Mirrors the reference's four JPA entities (Site/Page/Lemma/Index —
 model/Site.java:13-38, model/Page.java:12-32, model/Lemma.java:12-31,
 model/Index.java:11-27) re-shaped for columnar storage; see SURVEY.md §1.3
-for the mapping table.
+for the mapping table. ``read_table`` and ``read_row`` (end of file) read
+a table back with its declared schema, without a schema-inference job.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -119,6 +121,19 @@ CORPUS_STATS = T.StructType(
     ]
 )
 
+# _deletes/batch_part_{P}/ — one upsert or delete batch's replaced doc_ids
+# (operators/deletes.py, the delete vector).
+DELETES = T.StructType([T.StructField("doc_id", T.LongType(), False)])
+
+# _tombstones/ — takedown keys every ingest path drops (turn_idx NULL =
+# the whole conversation; operators/deletes.py).
+TOMBSTONES = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType(), True),
+        T.StructField("turn_idx", T.IntegerType(), True),
+    ]
+)
+
 # ---------------------------------------------------------------------------
 # postings — the inverted index (reference `indexes`, model/Index.java:11-27,
 # one MySQL row per (term, doc)). Here: per-term posting blocks, doc_ids
@@ -187,3 +202,31 @@ SEARCH_RESULT = T.StructType(
         T.StructField("snippet", T.StringType(), True),
     ]
 )
+
+
+def read_table(
+    spark: SparkSession, paths: str | list[str], schema: T.StructType
+) -> DataFrame:
+    """An engine table read with its declared schema. A schema-less
+    ``spark.read.parquet`` runs a Spark job to infer the schema from a
+    footer; a declared one runs none. A column the files lack reads as
+    null, and a directory with no data files reads as no rows (a missing
+    path still raises PATH_NOT_FOUND)."""
+    if isinstance(paths, str):
+        paths = [paths]
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def read_row(path: str) -> dict:
+    """The first row of a one-row table (corpus_stats), read on the
+    driver with pyarrow: no Spark job. A column the files lack is simply
+    absent, so ``.get`` reads it as None (legacy indexes without
+    ``id_space``/``stats_epoch``). Raises FileNotFoundError when the
+    path is missing or holds no row yet (a first write in flight has
+    only ``_temporary/``, which pyarrow skips)."""
+    import pyarrow.parquet as pq
+
+    rows = pq.read_table(path).slice(0, 1).to_pylist()
+    if not rows:
+        raise FileNotFoundError(f"no row in {path}")
+    return rows[0]

@@ -13,6 +13,7 @@ All settings are chosen for a 100 TB corpus on a ~1000-executor cluster:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -118,12 +119,19 @@ def ship_package(spark: SparkSession) -> None:
     of ``spark-submit --py-files engine.zip``). Without this, pandas-UDF
     deserialization fails with ModuleNotFoundError whenever the driver
     script runs outside the repo root."""
-    import os
+    zip_path = package_zip(Path(__file__).resolve().parent)
+    spark.sparkContext.addPyFile(str(zip_path))
 
-    pkg_dir = Path(__file__).resolve().parent
-    # per-uid name (sticky /tmp: another user's zip is not replaceable)
+
+def package_zip(pkg_dir: Path) -> Path:
+    """The zip of ``pkg_dir``'s sources in the temp dir, rebuilt when a
+    source is newer than it. The name carries the uid (sticky /tmp:
+    another user's zip is not replaceable) and a short hash of the
+    package path, so two checkouts on one host never ship each other's
+    code."""
+    tag = hashlib.sha1(str(pkg_dir).encode()).hexdigest()[:12]
     zip_path = Path(tempfile.gettempdir()) / (
-        f"search_engine_spark_pyfiles_{os.getuid()}.zip"
+        f"search_engine_spark_pyfiles_{os.getuid()}_{tag}.zip"
     )
     sources = sorted(pkg_dir.rglob("*.py"))
     stale = zip_path.exists() and any(
@@ -139,10 +147,10 @@ def ship_package(spark: SparkSession) -> None:
         os.close(fd)
         tmp = Path(tmp_name)
         with zipfile.ZipFile(tmp, "w") as zf:
-            for py in sorted(pkg_dir.rglob("*.py")):
+            for py in sources:
                 zf.write(py, f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
         tmp.replace(zip_path)
-    spark.sparkContext.addPyFile(str(zip_path))
+    return zip_path
 
 
 def local_frame(

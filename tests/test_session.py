@@ -12,6 +12,7 @@ launched by spark-submit and the caller didn't force a master.
 import importlib
 import os
 import sys
+import tempfile
 import zipfile
 import zipimport
 
@@ -89,3 +90,37 @@ def test_zip_shim_rereads_only_a_changed_archive(tmp_path, monkeypatch):
     m = importlib.reload(m)
     assert z in reads and m.VALUE == 2
     sys.modules.pop("m_zipshim", None)
+
+
+def test_package_zip_is_per_checkout_and_rebuilds_when_stale(
+    tmp_path, monkeypatch
+):
+    """Two checkouts of the package on one host (say a parent and a
+    change) get two zips, so neither ships the other's code to the
+    Python workers; a source newer than its zip still rebuilds it."""
+    from search_engine_spark.session import package_zip
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    pkgs = []
+    for name, value in (("a", 1), ("b", 2)):
+        pkg = tmp_path / name / "search_engine_spark"
+        pkg.mkdir(parents=True)
+        (pkg / "m.py").write_text(f"VALUE = {value}\n")
+        pkgs.append(pkg)
+    za, zb = package_zip(pkgs[0]), package_zip(pkgs[1])
+    assert za != zb and za.parent == zb.parent == tmp_path / "tmp"
+
+    def shipped(z):
+        with zipfile.ZipFile(z) as zf:
+            return zf.read("search_engine_spark/m.py").decode()
+
+    assert (shipped(za), shipped(zb)) == ("VALUE = 1\n", "VALUE = 2\n")
+    assert package_zip(pkgs[0]) == za and shipped(za) == "VALUE = 1\n"
+    src = pkgs[0] / "m.py"
+    src.write_text("VALUE = 3\n")
+    later = za.stat().st_mtime + 10
+    os.utime(src, (later, later))
+    assert package_zip(pkgs[0]) == za
+    assert shipped(za) == "VALUE = 3\n"
+    assert shipped(zb) == "VALUE = 2\n"
