@@ -5,8 +5,8 @@
   answer a BM25 top-k query through the real engine (varbyte postings,
   block-max metadata, df-asc term scheduling).
 - ``queries()`` / ``oracle_sql()``: one entry per implemented operator from
-  SURVEY.md §2 + the training-data pipeline ops; oracle SQL strings are
-  generated from the same constants as the Spark pipelines
+  SURVEY.md §2 and per engine search or mutation path; oracle SQL strings
+  are generated from the same constants as the Spark pipelines
   (search_engine_spark/entry_queries.py) so value-hashes match bit-exactly.
 """
 

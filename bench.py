@@ -49,12 +49,6 @@ def _sf_of(sf_dir: str) -> float:
         return -1.0
 
 
-def _timed(fn) -> tuple[float, int]:
-    t0 = time.time()
-    n = fn()
-    return time.time() - t0, n
-
-
 # Headline-suite steal gating (round-3 lesson: the driver's n=1 numbers
 # moved +/-2x with host CPU-steal episodes and regressions were
 # unattributable). Each query is timed up to HEADLINE_MAX_ATTEMPTS times;
@@ -197,12 +191,6 @@ def run_suite(sf_dir: str, cpus: int) -> dict:
         "bm25_dataframe_native": lambda: len(
             EQ._topk_spark(spark, sf_dir, EQ.QUERY_TERMS, "bm25").collect()
         ),
-        "dedup_lsh_pairs": lambda: EQ.q_lsh_pairs(spark, sf_dir).count(),
-        "training_shard_prep": lambda: EQ.q_pipeline_training_shard(
-            spark, sf_dir
-        ).count(),
-        "dedup_simhash": lambda: EQ.q_simhash(spark, sf_dir).count(),
-        "cosine_topk": lambda: len(EQ.q_cosine_topk(spark, sf_dir).collect()),
         "term_stats": lambda: EQ.q_term_stats(spark, sf_dir).count(),
     }
     per_query: dict[str, float] = {"index_build": round(t_build, 3)}
@@ -412,56 +400,6 @@ def _scaling_stage_a(cpus: int) -> dict:
         "build_sec": round(sec, 2),  # keyed like the full build for reuse
         "steal_sec": round((s1[7] - s0[7]) / 100.0, 1),
         "n_docs": n_docs,
-    }
-
-
-def _scaling_pipeline(cpus: int) -> dict:
-    """The composed training-shard prep funnel (hygiene -> exact dedup ->
-    language gate -> quality gate -> length gate -> shard id; see
-    entry_queries.q_pipeline_training_shard) over the big scaling corpus,
-    materialized through the `noop` sink. The plan is ONE scan + ONE
-    shuffle with every gate a per-row JVM codegen expression — the
-    workload class the north rule's >=0.8 criterion is most directly
-    about for data prep, with zero Python workers to hit this box's
-    Arrow bandwidth ceiling."""
-    from pyspark.sql import functions as F
-
-    from search_engine_spark import entry_queries as EQ
-
-    spark = get_spark(
-        app_name=f"pipe{cpus}",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-        extra_conf={
-            "spark.local.dir": f"{SCALE_DIR}/sparktmp",
-            # ALL of this job's per-row work rides the scan stage, so
-            # split count IS the parallelism ceiling: the ~358 MB corpus
-            # packs into 4 splits at the 128 MB default, silently capping
-            # the 16-core leg at 4-way (the PERF.md input-split lesson).
-            # 8 MB splits give both legs the same ~45-way layout — at
-            # 100 TB any cluster size has thousands of splits.
-            "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
-        },
-    )
-    # the SAME funnel definition the oracled gate entry runs
-    # (entry_queries.training_shard_funnel) — only the row identity and
-    # shard-hash input differ for the transcript-shaped scaling corpus
-    out = EQ.training_shard_funnel(
-        spark.read.parquet(SCALE_CORPUS),
-        ["conv_id", "turn_idx"],
-        F.concat(F.col("conv_id"), F.lit(":"), F.col("turn_idx")),
-    )
-    s0 = _read_proc_stat()
-    t0 = time.time()
-    out.write.format("noop").mode("overwrite").save()
-    sec = time.time() - t0
-    s1 = _read_proc_stat()
-    spark.stop()
-    busy = ((s1[0] - s0[0]) + (s1[1] - s0[1]) + (s1[2] - s0[2])) / 100.0
-    return {
-        "build_sec": round(sec, 2),  # keyed like the full build for reuse
-        "steal_sec": round((s1[7] - s0[7]) / 100.0, 1),
-        "busy_cores_avg": round(busy / sec, 2),
     }
 
 
@@ -1445,8 +1383,6 @@ def main() -> None:
     ap.add_argument("--scaling", action="store_true")
     ap.add_argument("--scale-one", type=int, default=None,
                     help="internal: one scaling measurement in this process")
-    ap.add_argument("--scale-pipeline-one", type=int, default=None,
-                    help="one training-shard-pipeline leg at local[N]")
     ap.add_argument("--scale-cluster-one", type=int, default=None,
                     help="one full build on a standalone cluster with "
                          "N/4 single-executor workers (spark-submit)")
@@ -1479,11 +1415,6 @@ def main() -> None:
         _ensure_scaling_corpus()
         r = _scaling_stage_a(args.scale_stage_a_one)
         r["cores"] = args.scale_stage_a_one
-        print(json.dumps(r))
-    elif args.scale_pipeline_one is not None:
-        _ensure_scaling_corpus()
-        r = _scaling_pipeline(args.scale_pipeline_one)
-        r["cores"] = args.scale_pipeline_one
         print(json.dumps(r))
     elif args.scale_cluster_one is not None:
         _ensure_scaling_corpus()

@@ -14,8 +14,7 @@ SURVEY.md) as idiomatic, distributed Spark jobs:
   (IndexRepository.java:14-20 semantics), rank-identical with deterministic
   tie-breaks,
 - checkpoint/resume via a per-partition build manifest,
-- training-data pipeline operators (dedup, similarity search, text
-  analysis, multimodal plumbing).
+- incremental upserts, deletes, compaction and snapshot time travel.
 
 Everything is DataFrame-first: Catalyst plans the physical execution; the
 only Python on the hot path is Arrow-batched pandas UDFs.

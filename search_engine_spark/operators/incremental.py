@@ -54,7 +54,7 @@ so no read runs a schema-inference job.
 Duplicate (conv_id, turn_idx) rows WITHIN one batch are deliberately kept
 (each gets its own doc_id) — a fresh build over the same rows does the
 same (assign_doc_ids has no dedup), so incremental == full-rebuild parity
-holds; dedup is the ingest pipeline's job (dedup_exact and friends).
+holds; deduplicating a batch before it is ingested is the caller's job.
 """
 
 from __future__ import annotations

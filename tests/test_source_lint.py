@@ -1,12 +1,16 @@
-"""Source guard: engine local frames go through session.local_frame.
+"""Source guards.
 
-``spark.createDataFrame`` over a Python list (literal or comprehension)
-builds a Python-RDD scan: an RDD job on every evaluation, run by a
-second pool of Python workers. This fails if one comes back in the
-operators or the API."""
+Engine local frames go through session.local_frame: ``spark.createDataFrame``
+over a Python list (literal or comprehension) builds a Python-RDD scan: an
+RDD job on every evaluation, run by a second pool of Python workers. This
+fails if one comes back in the operators or the API.
+
+The driver-contract registry (entry_queries.py) defines no name that
+nothing reads."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -33,3 +37,54 @@ def test_lint_pattern_catches_list_frames():
     ):
         assert LIST_FRAME.search(src), src
     assert not LIST_FRAME.search("spark.createDataFrame(pdf, schema=s)")
+
+
+REPO = PKG.parent
+ENTRY = PKG / "entry_queries.py"
+
+
+def _defined_names(tree: ast.Module) -> dict[str, ast.stmt]:
+    """Top-level names a module binds itself (imports aside)."""
+    out = {}
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            out[node.name] = node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                if isinstance(t, ast.Name):
+                    out[t.id] = node
+    return out
+
+
+def _identifiers(tree: ast.AST) -> set[str]:
+    """Every name a tree reads: bare names, attributes, imported names."""
+    ids = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            ids.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            ids.add(n.attr)
+        elif isinstance(n, ast.alias):
+            ids.add(n.name)
+    return ids
+
+
+def test_entry_queries_defines_no_dead_names():
+    """Every top-level name in entry_queries.py is read somewhere: in the
+    module outside its own definition, or by the driver contract, bench.py,
+    tools/ or tests/. A registry entry deleted without the constants and
+    helpers only it used fails here."""
+    tree = ast.parse(ENTRY.read_text())
+    users = [REPO / "__spark_entry__.py", REPO / "bench.py",
+             *sorted((REPO / "tools").rglob("*.py")),
+             *sorted((REPO / "tests").rglob("*.py"))]
+    outside = set().union(*(_identifiers(ast.parse(f.read_text()))
+                            for f in users))
+    reads = [(node, _identifiers(node)) for node in tree.body]
+    dead = sorted(
+        name for name, node in _defined_names(tree).items()
+        if name not in outside
+        and not any(name in ids for other, ids in reads if other is not node)
+    )
+    assert not dead, f"entry_queries.py names nothing reads: {dead}"

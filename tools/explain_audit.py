@@ -59,12 +59,6 @@ def main() -> None:
     # MapInPandas decode plan into the "native" section
     show("dataframe-native BM25",
          EQ._topk_spark(spark, sf_dir, EQ.QUERY_TERMS, "bm25"))
-    show("LSH candidate pairs", EQ.q_lsh_pairs(spark, sf_dir))
-    show("cosine top-k", EQ.q_cosine_topk(spark, sf_dir))
-    show(
-        "training-shard prep (1 scan, 1 exchange)",
-        EQ.q_pipeline_training_shard(spark, sf_dir),
-    )
     show(
         "phrase match (narrow scan: ReadSchema doc_id+text only, no "
         "exchange; JVM higher-order exprs — codegen-opaque but no Python)",
@@ -72,11 +66,6 @@ def main() -> None:
     )
     show("prefix search (classic plan over expanded terms)",
          eng.search_prefix("s", max_expansions=1024))
-    show(
-        "ANN bucketed probe scan (PartitionFilters: bucket IN 9 probes "
-        "over the hive-partitioned embeddings layout — 9/256 dirs read)",
-        EQ.q_ann_bucketed(spark, sf_dir),
-    )
     show(
         "indexed phrase search (candidate-first: index scans + residual "
         "filter on the k-bounded join; no full-corpus re-analysis)",
@@ -116,30 +105,6 @@ def main() -> None:
         "role-restricted search (classic plan + one left-semi join "
         "against the doc store's filtered (doc_id, role) projection)",
         eng.search_ids(" ".join(EQ.QUERY_TERMS), k=10, role="user"),
-    )
-    show(
-        "decontamination (eval shingle set as BroadcastHashJoin — the "
-        "corpus side never shuffles for the membership probe)",
-        EQ.q_decontaminate(spark, sf_dir),
-    )
-    show(
-        "PII scrub (pure per-row regex exprs: one scan, zero Exchange)",
-        EQ.q_pii_scrub(spark, sf_dir),
-    )
-    show(
-        "shuffle order (one hashpartitioning(shard) exchange, sort is "
-        "shard-local — no global Sort/rangepartitioning)",
-        EQ.q_shuffle_order(spark, sf_dir),
-    )
-    show(
-        "chunk dedup (per-row explode/hash, ONE hash-partitioned Window "
-        "exchange — the canonical dedup shuffle — then the doc_id agg)",
-        EQ.q_chunk_dedup(spark, sf_dir),
-    )
-    show(
-        "sample mix (per-row hash thresholds, one source-keyed "
-        "HashAggregate exchange, nothing else)",
-        EQ.q_sample_mix(spark, sf_dir),
     )
     from search_engine_spark.operators.snapshots import list_snapshots
 

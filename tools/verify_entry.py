@@ -17,19 +17,16 @@ import duckdb
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["documents"]
 
 
 def driver_canon_check(pdf) -> str | None:
     """Reproduce the DRIVER's canonicalization step, which the stringified
     hash below masks: the driver sorts the raw frame with pandas
     sort_values over all columns, and that raises `TypeError: unhashable
-    type: 'list'` on any array-typed column (what turned embed_quantize
-    red in CORRECTNESS_r02 despite correct values). Returns an error
-    string if the frame would crash the driver's harness, else None."""
+    type: 'list'` on any array-typed column, however correct its values.
+    Returns an error string if the frame would crash the driver's harness,
+    else None."""
     try:
         pdf.sort_values(by=sorted(pdf.columns))
     except Exception as ex:  # noqa: BLE001
@@ -74,12 +71,6 @@ def main() -> int:
         except Exception as ex:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {ex}")
             failed.append(name)
-            continue
-        if name not in oracles:
-            print(f"rows  {name}: {len(sdf)} rows (no oracle) "
-                  f"[{time.time() - t0:.1f}s]")
-            if len(sdf) == 0 and name != "build_manifest":
-                failed.append(name)
             continue
         try:
             odf = con.execute(oracles[name]).df()
