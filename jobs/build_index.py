@@ -29,8 +29,17 @@ def main() -> None:
     ap.add_argument("--out", required=True, help="index output directory")
     ap.add_argument("--n-parts", type=int, default=4)
     ap.add_argument("--n-buckets", type=int, default=16)
-    ap.add_argument("--block-size", type=int, default=128)
-    ap.add_argument("--salt-budget", type=int, default=100_000)
+    ap.add_argument(
+        "--block-size", type=int, default=128,
+        help="postings per encoded block; fixed for the index's life "
+        "(every later upsert and compaction encodes with it)",
+    )
+    ap.add_argument(
+        "--salt-budget", type=int, default=100_000,
+        help="df above which a term's postings split into doc_id subranges; "
+        "fixed for the index's life (every later upsert and compaction "
+        "encodes with it)",
+    )
     ap.add_argument("--part-concurrency", type=int, default=1)
     ap.add_argument("--index-version", default="v1")
     ap.add_argument("--no-resume", action="store_true")

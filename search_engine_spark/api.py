@@ -243,6 +243,8 @@ class EngineAPI:
                 return {"result": False, "error": ERR_ALREADY_RUNNING}
         try:
             res = compact_index(self.spark, self.index_dir, **kwargs)
+        except QueryArgumentError as ex:
+            return {"result": False, "error": str(ex)}
         finally:
             # even a failed compaction may have swapped directories —
             # never serve plans pinned to the pre-compaction layout

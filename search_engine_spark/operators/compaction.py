@@ -14,29 +14,36 @@ restartable and much cheaper than a rebuild from raw text.
 
 Query equivalence is exact: postings content is (term -> {(doc,tf)}) no
 matter the part layout, and BM25 stats are recomputed from the same
-staging rows (tests/test_api_compaction.py asserts score identity).
+staging rows (tests/test_api_compaction.py asserts score identity). Only
+the part COUNT changes: every part is re-encoded through the one part
+writer (index_build.write_part) in the layout build_index fixed for the
+index (block_size, salt_budget, n_buckets, positions), read back from
+the index itself.
 """
 
 from __future__ import annotations
 
 import math
 import shutil
-import time
 from pathlib import Path
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
+from .incremental import _live, open_index, swap_dir
 from .index_build import (
-    _attach_terms,
     _manifest_path,
     _read_manifest,
     _write_manifest_row,
     check_hash_ids,
-    encode_salted,
-    prepare_salted,
+    run_parts,
+    write_part,
 )
+
+# part jobs run concurrently like build_index's: they write disjoint dirs,
+# and the swap below stays atomic
+PART_CONCURRENCY = 2
 
 
 def compact_index(
@@ -44,35 +51,14 @@ def compact_index(
     out_dir: str,
     *,
     n_parts: int = 4,
-    n_buckets: int | None = None,
-    block_size: int = 128,
-    salt_budget: int = 100_000,
-    part_concurrency: int = 2,
 ) -> dict:
     """Rewrite postings into ``n_parts`` balanced parts. Returns
     {"parts_before": int, "parts_after": int}."""
-    from .incremental import resolve_n_buckets
-
-    manifest = _read_manifest(out_dir)
-    if manifest.get("stage_docs", {}).get("status") != "DONE":
-        raise ValueError(f"no complete index at {out_dir}")
-    # a positions index compacts positionally: staging carries the
-    # per-(doc, term) position arrays (they survive incremental appends
-    # too — incremental.py writes the same shape), so the re-encode
-    # rebuilds each part WITH its delta-varbyte positions stream and the
-    # phrase reader keeps a uniform schema across parts
-    store_pos = bool(manifest["stage_docs"].get("store_positions", False))
-    from .incremental import require_staging
-
-    require_staging(out_dir, manifest)
-    version = manifest["stage_docs"].get("index_version", "v1")
-    n_buckets = resolve_n_buckets(spark, out_dir, n_buckets)
-    # repair any crashed incremental batch FIRST: compacting over an
-    # uncommitted orphan staging part would fold its ghost postings into
-    # committed parts (and its replay would then duplicate doc_ids)
-    from .incremental import _recover_uncommitted
-
-    manifest = _recover_uncommitted(spark, out_dir, manifest, n_buckets)
+    # open_index repairs any crashed incremental batch FIRST: compacting
+    # over an uncommitted orphan staging part would fold its ghost
+    # postings into committed parts (and its replay would then duplicate
+    # doc_ids)
+    manifest, layout = open_index(spark, out_dir)
     parts_before = sum(1 for k in manifest if k.startswith("part_"))
 
     staging_path = f"{out_dir}/_staging_postings_raw"
@@ -104,10 +90,13 @@ def compact_index(
 
     # an index whose every document analyzed to zero terms (or an empty
     # corpus) has a staging dir with no data files: no rows (declared
-    # schema); a MISSING dir stays loud (require_staging above already
-    # rejects it for part-ful indexes)
+    # schema); a MISSING dir stays loud (open_index already rejects it
+    # for part-ful indexes). A positions index compacts positionally:
+    # staging carries the per-(doc, term) position arrays (incremental
+    # appends write the same shape), so every re-encoded part keeps the
+    # delta-varbyte positions stream the phrase reader needs
     raw = schemas.read_table(
-        spark, staging_path, schemas.staging_schema(store_pos)
+        spark, staging_path, schemas.staging_schema(layout.store_positions)
     )
     # compaction IS the merge of merge-on-read: deleted docs' staging rows
     # are dropped here, so the rebuilt parts carry no replaced postings
@@ -115,69 +104,22 @@ def compact_index(
     from .deletes import deleted_ids_df, purge_deletes
 
     del_df = deleted_ids_df(spark, out_dir)
-    if del_df is not None:
-        raw = raw.join(del_df, "doc_id", "left_anti")
-    raw = raw.withColumn(
+    raw = _live(raw, del_df).withColumn(
         "part_id", (F.col("doc_id") / F.lit(part_size)).cast("int")
     )
     shutil.rmtree(new_postings, ignore_errors=True)
-    t0 = time.time()
-    rows_per_part: dict[int, dict] = {}
     actual_parts = math.ceil(id_space / part_size) if id_space else 0
-
     hash_ids = check_hash_ids(term_stats)
 
-    def _compact_part(p: int) -> None:
-        raw_p = raw.filter(F.col("part_id") == p)
-        salted = prepare_salted(
-            raw_p, term_stats, p * part_size, part_size, salt_budget, hash_ids,
-            store_positions=store_pos,
+    def _compact_part(p: int) -> dict:
+        return write_part(
+            spark, raw.filter(F.col("part_id") == p), term_stats, p,
+            p * part_size, part_size, f"{new_postings}/part_id={p}",
+            n_docs=n_docs, avgdl=avgdl, stats_epoch=stats_epoch,
+            hash_ids=hash_ids, layout=layout,
         )
-        encoded = _attach_terms(
-            encode_salted(salted, spark, n_docs, avgdl, block_size,
-                          store_positions=store_pos),
-            term_stats,
-            n_buckets,
-            hash_ids,
-            store_positions=store_pos,
-        )
-        obs = Observation(f"compact_{p}_{int(t0)}")
-        encoded = encoded.observe(
-            obs,
-            F.sum("n").alias("postings_written"),
-            F.approx_count_distinct("term").alias("terms_merged"),
-            F.sum(
-                F.length("doc_ids") + F.length("tfs") + F.length("dls")
-            ).alias("bytes_compressed"),
-            F.count(F.lit(1)).alias("blocks"),
-        )
-        encoded.write.mode("overwrite").partitionBy("bucket").parquet(
-            f"{new_postings}/part_id={p}"
-        )
-        m = obs.get
-        rows_per_part[p] = {
-            "partition_id": p,
-            "status": "DONE",
-            "started_ts": t0,
-            "finished_ts": time.time(),
-            "postings_written": int(m["postings_written"] or 0),
-            "terms_merged": int(m["terms_merged"] or 0),
-            "bytes_compressed": int(m["bytes_compressed"] or 0),
-            "blocks": int(m["blocks"] or 0),
-            "index_version": version,
-            "stats_epoch": stats_epoch,
-        }
 
-    # parts are independent jobs writing disjoint dirs — run them
-    # concurrently like build_index does (the swap below stays atomic)
-    if part_concurrency > 1 and actual_parts > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=part_concurrency) as ex:
-            list(ex.map(_compact_part, range(actual_parts)))
-    else:
-        for p in range(actual_parts):
-            _compact_part(p)
+    rows = run_parts(_compact_part, range(actual_parts), PART_CONCURRENCY)
 
     # staging must land in the SAME part layout the new manifest will
     # describe: a leftover old-layout staging dir with part ids outside the
@@ -205,18 +147,9 @@ def compact_index(
     # part rows rewritten (on a cluster this is one Iceberg REPLACE
     # snapshot commit; locally the rename gaps are the crash windows and
     # SearchEngine fails loudly on a populated index with no postings dir)
-    old = f"{out_dir}/_postings_old"
-    shutil.rmtree(old, ignore_errors=True)
-    if Path(postings_path).exists():  # empty-corpus index has no postings
-        Path(postings_path).rename(old)
-    if Path(new_postings).exists():
-        Path(new_postings).rename(postings_path)
-    shutil.rmtree(old, ignore_errors=True)
-    old_staging = f"{out_dir}/_staging_old"
-    shutil.rmtree(old_staging, ignore_errors=True)
-    Path(staging_path).rename(old_staging)
-    Path(new_staging).rename(staging_path)
-    shutil.rmtree(old_staging, ignore_errors=True)
+    if Path(new_postings).exists():  # an empty corpus has no postings
+        swap_dir(new_postings, postings_path, f"{out_dir}/_postings_old")
+    swap_dir(new_staging, staging_path, f"{out_dir}/_staging_old")
     if del_df is not None:
         # merge-on-read merge, documents side: rewrite the doc store
         # without the deleted rows (ids keep their values — the id space
@@ -229,11 +162,7 @@ def compact_index(
         schemas.read_table(spark, docs_path, schemas.DOCUMENTS).join(
             del_df, "doc_id", "left_anti"
         ).write.mode("overwrite").parquet(new_docs)
-        old_docs = f"{out_dir}/_documents_old"
-        shutil.rmtree(old_docs, ignore_errors=True)
-        Path(docs_path).rename(old_docs)
-        Path(new_docs).rename(docs_path)
-        shutil.rmtree(old_docs, ignore_errors=True)
+        swap_dir(new_docs, docs_path, f"{out_dir}/_documents_old")
         purge_deletes(out_dir)
     for name in list(_read_manifest(out_dir)):
         # deletes_* rows are deletes-only commit markers (incremental.py);
@@ -241,8 +170,8 @@ def compact_index(
         # go too — a stale marker would pin a part id forever
         if name.startswith("part_") or name.startswith("deletes_"):
             (_manifest_path(out_dir) / f"{name}.json").unlink()
-    for p, row in rows_per_part.items():
-        _write_manifest_row(out_dir, f"part_{p:05d}", row)
+    for row in rows:
+        _write_manifest_row(out_dir, f"part_{row['partition_id']:05d}", row)
     stage = dict(manifest["stage_docs"])
     stage["part_size"] = part_size
     _write_manifest_row(out_dir, "stage_docs", stage)

@@ -11,9 +11,17 @@ EntitySaver.java:35-54) re-expressed as an idempotent batch merge:
     -> analyze -> staging for the NEW part
     -> RECOMPUTE the post-batch live term_stats / corpus_stats into
        term_stats_new/ + corpus_stats_new/ (one pass per batch)
-    -> postings for the NEW part, encoded with those stats
+    -> postings for the NEW part, encoded with those stats by the one
+       part writer (index_build.write_part) in the layout build_index
+       fixed (block_size, salt_budget, n_buckets, positions — read from
+       the index, never taken per call)
     -> append documents -> swap the *_new stats in
     -> manifest part row (COMMIT)
+
+Every mutation (upsert, delete_docs, compact_index) opens the index
+through open_index: a directory with no complete index is a caller error
+(QueryArgumentError), a lost staging table is refused, and any crashed
+batch is repaired before the new one starts.
 
 Recomputing df from staging fixes the reference's df-drift bug
 (EntitySaver.java:88-101 increments lemma.frequency again on re-index —
@@ -65,7 +73,7 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import schemas
@@ -74,16 +82,19 @@ from ..functions.analyzer import ANALYZER_VERSION, terms_col
 from ..schemas import read_row, read_table
 from ..session import local_frame
 from .index_build import (
-    _attach_terms,
+    PartLayout,
+    _part_metrics,
     _read_manifest,
     _write_manifest_row,
     assign_doc_ids,
     check_hash_ids,
     clean_transcripts,
     conform_transcripts,
-    encode_salted,
     nonblank_text,
-    prepare_salted,
+    done_row,
+    read_layout,
+    staging_rows,
+    write_part,
 )
 
 STATS_TABLES = ("term_stats", "corpus_stats")
@@ -120,22 +131,6 @@ def _next_part_id(out_dir: str, manifest: dict) -> int:
     )
 
 
-def resolve_n_buckets(spark: SparkSession, out_dir: str,
-                      requested: int | None = None) -> int:
-    """The bucket->directory layout persisted at build time
-    (corpus_stats.n_buckets). A caller-supplied mismatch would write/read
-    postings under a different bucket mapping — fail loudly."""
-    persisted = read_row(f"{out_dir}/corpus_stats").get("n_buckets")
-    if persisted is not None:
-        if requested is not None and int(requested) != int(persisted):
-            raise QueryArgumentError(
-                f"index at {out_dir} was built with n_buckets="
-                f"{int(persisted)}, caller requested {requested}"
-            )
-        return int(persisted)
-    return 16 if requested is None else int(requested)
-
-
 def _ids_frame(
     spark: SparkSession, ids: np.ndarray | None
 ) -> DataFrame | None:
@@ -144,6 +139,11 @@ def _ids_frame(
     if ids is None or ids.size == 0:
         return None
     return local_frame(spark, pd.DataFrame({"doc_id": ids}), "doc_id long")
+
+
+def _live(df: DataFrame, dead: DataFrame | None) -> DataFrame:
+    """``df`` without the doc_ids of ``dead`` (None: nothing to drop)."""
+    return df if dead is None else df.join(dead, "doc_id", "left_anti")
 
 
 def _write_stats_new(
@@ -179,21 +179,25 @@ def _write_stats_new(
     return int(r["n_docs"]), float(r["avgdl"]) if r["avgdl"] else 1.0
 
 
+def swap_dir(new: str, live: str, old: str) -> None:
+    """Publish the table written to ``new`` as ``live`` by rename swap
+    (one Iceberg snapshot commit on clusters). Spark's mode("overwrite")
+    would DELETE the live table before its write job runs — a crash in
+    that window loses it outright (for the stats: bricking every
+    subsequent operation at entry). The rename gap is instantaneous and
+    leaves ``old`` on disk for manual restore."""
+    shutil.rmtree(old, ignore_errors=True)
+    if Path(live).exists():
+        Path(live).rename(old)
+    Path(new).rename(live)
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def _swap_stats(out_dir: str) -> None:
-    """Publish _write_stats_new's tables by rename swap (same idiom as
-    compact_index's postings/staging swap; one Iceberg snapshot commit
-    on clusters). Spark's mode("overwrite") would DELETE the live table
-    before its write job runs — a crash in that window loses the stats
-    outright, bricking every subsequent operation at entry. The rename
-    gap is instantaneous and leaves *_old on disk for manual restore."""
+    """Publish _write_stats_new's tables."""
     for table in STATS_TABLES:
         tgt = f"{out_dir}/{table}"
-        old = f"{tgt}_old"
-        shutil.rmtree(old, ignore_errors=True)
-        if Path(tgt).exists():
-            Path(tgt).rename(old)
-        Path(f"{tgt}_new").rename(tgt)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_dir(f"{tgt}_new", tgt, f"{tgt}_old")
 
 
 def _recompute_stats(spark: SparkSession, out_dir: str, version: str,
@@ -226,10 +230,7 @@ def _recompute_stats(spark: SparkSession, out_dir: str, version: str,
     # layout quantity part-range math needs, which diverges from n_docs
     # once upserts delete docs.
     dead = _ids_frame(spark, load_deleted_ids(spark, out_dir, delete_dirs))
-    docs_live = docs_all
-    if dead is not None:
-        raw = raw.join(dead, "doc_id", "left_anti")
-        docs_live = docs_all.join(dead, "doc_id", "left_anti")
+    raw, docs_live = _live(raw, dead), _live(docs_all, dead)
     id_space = docs_all.agg(F.max("doc_id")).collect()[0][0]
     n_docs, avgdl = _write_stats_new(
         out_dir, raw, docs_live.select("dl"),
@@ -270,8 +271,23 @@ def require_staging(out_dir: str, manifest: dict) -> None:
     )
 
 
+def open_index(spark: SparkSession, out_dir: str) -> tuple[dict, PartLayout]:
+    """The shared entry of every mutation (upsert, delete, compaction):
+    refuse a directory with no complete index, read the part layout the
+    build fixed, refuse a lost staging table, and repair any crashed
+    batch. Returns the recovered manifest and the layout."""
+    manifest = _read_manifest(out_dir)
+    if manifest.get("stage_docs", {}).get("status") != "DONE":
+        raise QueryArgumentError(
+            f"no complete index at {out_dir}; run build_index first"
+        )
+    layout = read_layout(out_dir, manifest["stage_docs"])
+    require_staging(out_dir, manifest)
+    return _recover_uncommitted(spark, out_dir, manifest, layout), layout
+
+
 def _recover_uncommitted(spark: SparkSession, out_dir: str,
-                         manifest: dict, n_buckets: int) -> dict:
+                         manifest: dict, layout: PartLayout) -> dict:
     """See module docstring: delete or finish any staging part whose commit
     marker (manifest part row) is missing."""
     # deletes-only commits (blank-new-text upserts / delete_docs) have no
@@ -315,9 +331,8 @@ def _recover_uncommitted(spark: SparkSession, out_dir: str,
         else:
             orphan_batches.append(p)
     if orphan_batches:
-        version = manifest["stage_docs"].get("index_version", "v1")
         n_docs, _ = _recompute_stats(
-            spark, out_dir, version, n_buckets,
+            spark, out_dir, layout.index_version, layout.n_buckets,
             stats_epoch=int(time.time() * 1e6),
             delete_dirs=keep_dirs,
         )
@@ -335,7 +350,6 @@ def _recover_uncommitted(spark: SparkSession, out_dir: str,
     orphans = sorted(_staging_part_ids(out_dir) - committed)
     if not orphans:
         return manifest
-    version = manifest["stage_docs"].get("index_version", "v1")
     documents = read_table(spark, f"{out_dir}/documents", schemas.DOCUMENTS)
     docs_max = documents.agg(F.max("doc_id")).collect()[0][0]
     docs_max = -1 if docs_max is None else int(docs_max)
@@ -395,17 +409,12 @@ def _recover_uncommitted(spark: SparkSession, out_dir: str,
             )
         # rewrite documents without the partial batch's rows (doc_ids at
         # or above the rolled-back batch start — batches are sequential,
-        # so nothing committed lives past a rolled-back range). Rename
-        # swap, same idiom as _swap_stats.
+        # so nothing committed lives past a rolled-back range).
         docs_path = f"{out_dir}/documents"
         documents.filter(F.col("doc_id") < partial_lo).write.mode(
             "overwrite"
         ).parquet(f"{docs_path}_new")
-        old = f"{docs_path}_old"
-        shutil.rmtree(old, ignore_errors=True)
-        Path(docs_path).rename(old)
-        Path(f"{docs_path}_new").rename(docs_path)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_dir(f"{docs_path}_new", docs_path, f"{docs_path}_old")
         # the rewrite renamed every documents file, so retained snapshots'
         # pinned documents_files lists now dangle — expire those records
         # (resolve_snapshot then reports them expired; leaving them would
@@ -425,44 +434,37 @@ def _recover_uncommitted(spark: SparkSession, out_dir: str,
     # recovered orphan parts were encoded under unknowable pre-crash
     # stats: a fresh epoch here (with no matching part stamps) keeps the
     # stored-block-max validity check conservatively false
-    n_docs, _ = _recompute_stats(spark, out_dir, version, n_buckets,
-                                 stats_epoch=int(time.time() * 1e6))
+    n_docs, _ = _recompute_stats(
+        spark, out_dir, layout.index_version, layout.n_buckets,
+        stats_epoch=int(time.time() * 1e6),
+    )
     for p in finish:
-        m = (
-            read_table(
-                spark, f"{out_dir}/postings/part_id={p}", schemas.POSTINGS
-            )
-            .agg(
-                F.sum("n").alias("postings_written"),
-                F.approx_count_distinct("term").alias("terms_merged"),
-                F.sum(
-                    F.length("doc_ids") + F.length("tfs") + F.length("dls")
-                ).alias("bytes_compressed"),
-                F.count(F.lit(1)).alias("blocks"),
-            )
-            .collect()[0]
-        )
-        now = time.time()
-        _write_manifest_row(
-            out_dir,
-            f"part_{p:05d}",
-            {
-                "partition_id": p,
-                "status": "DONE",
-                "started_ts": now,
-                "finished_ts": now,
-                "postings_written": int(m["postings_written"] or 0),
-                "terms_merged": int(m["terms_merged"] or 0),
-                "bytes_compressed": int(m["bytes_compressed"] or 0),
-                "blocks": int(m["blocks"] or 0),
-                "index_version": version,
-                "recovered": True,
-            },
-        )
+        m = read_table(
+            spark, f"{out_dir}/postings/part_id={p}", schemas.POSTINGS
+        ).agg(*_part_metrics()).collect()[0]
+        _write_manifest_row(out_dir, f"part_{p:05d}", done_row(
+            p, time.time(), **{k: int(v or 0) for k, v in m.asDict().items()},
+            index_version=layout.index_version, recovered=True,
+        ))
     stage = dict(manifest["stage_docs"])
     stage["n_docs"] = n_docs
     _write_manifest_row(out_dir, "stage_docs", stage)
     return _read_manifest(out_dir)
+
+
+def _commit(spark: SparkSession, out_dir: str, manifest: dict, name: str,
+            row: dict, n_docs: int, op: str) -> None:
+    """Commit a batch: its manifest row ``name`` (the commit marker,
+    written after every artifact it vouches for), then the live doc count
+    on the stage_docs row and an ``op`` snapshot at the row's epoch."""
+    from .snapshots import commit_snapshot
+
+    _write_manifest_row(out_dir, name, row)
+    _write_manifest_row(
+        out_dir, "stage_docs", {**manifest["stage_docs"], "n_docs": n_docs}
+    )
+    commit_snapshot(spark, out_dir, op, stats_epoch=row["stats_epoch"],
+                    n_docs=n_docs)
 
 
 def _commit_deletes_only(
@@ -471,8 +473,7 @@ def _commit_deletes_only(
     manifest: dict,
     doomed: DataFrame,
     n_doomed: int,
-    version: str,
-    n_buckets: int,
+    layout: PartLayout,
 ) -> int:
     """Commit a batch of pure deletions (no staging/postings/documents
     write): the doomed (doc_id) rows join the delete vector and the live
@@ -484,35 +485,18 @@ def _commit_deletes_only(
     stats, since the crash may have landed after the rewrite). Returns
     the id the batch was committed under."""
     from .deletes import write_delete_batch
-    from .snapshots import commit_snapshot
 
     part_new = _next_part_id(out_dir, manifest)
     write_delete_batch(doomed, out_dir, part_new)
     new_epoch = int(time.time() * 1e6)
     n_docs, _ = _recompute_stats(
-        spark, out_dir, version, n_buckets, stats_epoch=new_epoch
+        spark, out_dir, layout.index_version, layout.n_buckets,
+        stats_epoch=new_epoch,
     )
-    now = time.time()
-    _write_manifest_row(
-        out_dir,
-        f"deletes_{part_new:05d}",
-        {
-            "partition_id": part_new,
-            "status": "DONE",
-            "started_ts": now,
-            "finished_ts": now,
-            "index_version": version,
-            "stats_epoch": new_epoch,
-            "replaced_docs": n_doomed,
-            "deletes_only": True,
-        },
-    )
-    row = dict(manifest["stage_docs"])
-    row.update({"n_docs": n_docs})
-    _write_manifest_row(out_dir, "stage_docs", row)
-    commit_snapshot(
-        spark, out_dir, "delete", stats_epoch=new_epoch, n_docs=n_docs
-    )
+    _commit(spark, out_dir, manifest, f"deletes_{part_new:05d}", done_row(
+        part_new, time.time(), index_version=layout.index_version,
+        stats_epoch=new_epoch, replaced_docs=n_doomed, deletes_only=True,
+    ), n_docs, "delete")
     return part_new
 
 
@@ -546,15 +530,7 @@ def delete_docs(
     deletes.clear_tombstones. ``tombstone=False`` is the soft delete:
     a later incremental_update of the same (conv_id, turn_idx)
     re-indexes it as a NEW doc (the anti-join anchor is the LIVE view)."""
-    manifest = _read_manifest(out_dir)
-    if manifest.get("stage_docs", {}).get("status") != "DONE":
-        raise QueryArgumentError(
-            f"no complete index at {out_dir}; run build_index first"
-        )
-    version = manifest["stage_docs"].get("index_version", "v1")
-    n_buckets = resolve_n_buckets(spark, out_dir, None)
-    require_staging(out_dir, manifest)
-    manifest = _recover_uncommitted(spark, out_dir, manifest, n_buckets)
+    manifest, layout = open_index(spark, out_dir)
 
     from .deletes import collect_ids, load_deleted_ids, write_tombstones
 
@@ -562,12 +538,7 @@ def delete_docs(
         write_tombstones(keys, out_dir)
 
     existing = read_table(spark, f"{out_dir}/documents", schemas.DOCUMENTS)
-    prior_del = _ids_frame(spark, load_deleted_ids(spark, out_dir))
-    live = (
-        existing.join(prior_del, "doc_id", "left_anti")
-        if prior_del is not None
-        else existing
-    )
+    live = _live(existing, _ids_frame(spark, load_deleted_ids(spark, out_dir)))
     # a NULL turn_idx row in a turn-keyed frame means the WHOLE
     # conversation — the tombstone table's own encoding, so a ledger
     # round-trips through delete_docs/clear_tombstones symmetrically
@@ -600,7 +571,7 @@ def delete_docs(
         return {"deleted_docs": 0}
     _commit_deletes_only(
         spark, out_dir, manifest, _ids_frame(spark, doomed), int(doomed.size),
-        version, n_buckets,
+        layout,
     )
     return {"deleted_docs": int(doomed.size)}
 
@@ -658,10 +629,6 @@ def incremental_update(
     new_transcripts: DataFrame,
     out_dir: str,
     *,
-    n_buckets: int | None = None,
-    block_size: int = 128,
-    salt_budget: int = 100_000,
-    index_version: str | None = None,
     upsert: bool = False,
 ) -> dict:
     """Merge a batch of new turns into an existing index at ``out_dir``.
@@ -679,12 +646,11 @@ def incremental_update(
     no-ops either way. Replacement is text-keyed: rows differing only in
     role/tool/ts are treated as unchanged. With upsert=False (default) a
     changed turn is dropped like any already-indexed key — pure insert
-    semantics, bit-compatible with every pre-upsert index."""
-    manifest = _read_manifest(out_dir)
-    if manifest.get("stage_docs", {}).get("status") != "DONE":
-        raise QueryArgumentError(
-            f"no complete index at {out_dir}; run build_index first"
-        )
+    semantics, bit-compatible with every pre-upsert index.
+
+    The new part is encoded in the layout build_index fixed (read_layout:
+    n_buckets, block_size, salt_budget, positions, index_version)."""
+    manifest, layout = open_index(spark, out_dir)
     built_with = manifest["stage_docs"].get("analyzer_version", "a1")
     if built_with != ANALYZER_VERSION:
         raise QueryArgumentError(
@@ -696,14 +662,10 @@ def incremental_update(
     # a positions index propagates its layout: the new part's staging rows
     # carry the per-(doc,term) position arrays and its posting blocks gain
     # the same delta-varbyte positions stream the base build wrote, so the
-    # phrase reader sees a uniform schema across every part (the guard
-    # this path replaced existed because a position-less merged part would
-    # be silently skipped by the positions phrase plan)
-    store_pos = bool(manifest["stage_docs"].get("store_positions", False))
-    version = index_version or manifest["stage_docs"].get("index_version", "v1")
-    n_buckets = resolve_n_buckets(spark, out_dir, n_buckets)
-    require_staging(out_dir, manifest)
-    manifest = _recover_uncommitted(spark, out_dir, manifest, n_buckets)
+    # phrase reader sees a uniform schema across every part (a
+    # position-less part would be silently skipped by the positions
+    # phrase plan)
+    store_pos = layout.store_positions
 
     docs_path = f"{out_dir}/documents"
     staging_path = f"{out_dir}/_staging_postings_raw"
@@ -722,12 +684,7 @@ def incremental_update(
     prior_ids = load_deleted_ids(spark, out_dir)
     if prior_ids is None:
         prior_ids = np.empty(0, dtype=np.int64)
-    prior_del = _ids_frame(spark, prior_ids)
-    existing_live = (
-        existing.join(prior_del, "doc_id", "left_anti")
-        if prior_del is not None
-        else existing
-    )
+    existing_live = _live(existing, _ids_frame(spark, prior_ids))
 
     # localCheckpoint truncates lineage at the anti-join: everything below
     # appends to `documents`, and a lazily re-evaluated anti-join against
@@ -825,12 +782,10 @@ def incremental_update(
             # (deleteAllByPageId wipes the rows, the re-add indexes
             # nothing).
             _commit_deletes_only(
-                spark, out_dir, manifest, replaced, n_replaced,
-                version, n_buckets,
+                spark, out_dir, manifest, replaced, n_replaced, layout
             )
         return {"new_docs": 0, "new_parts": 0, "replaced_docs": n_replaced}
 
-    t0 = time.time()
     analyzed = with_ids.withColumn("terms", terms_col(F.col("text")))
     analyzed = analyzed.withColumn("dl", F.size("terms")).persist()
 
@@ -846,32 +801,9 @@ def incremental_update(
         # half-committed part id (or a part a crashed compaction swapped in
         # before its manifest rewrite) is never reused/clobbered.
         part_new = _next_part_id(out_dir, manifest)
-        if store_pos:
-            # same staging shape as build_index's positions branch
-            # (index_build.py stage A): pos = 0-based token index in the
-            # analyzed lemma array, one SORTED array per (doc, term)
-            exploded = (
-                analyzed.select(
-                    "doc_id", "dl",
-                    F.posexplode("terms").alias("pos", "term"),
-                )
-                .groupBy("term", "doc_id", "dl")
-                .agg(
-                    F.count("*").alias("tf"),
-                    F.sort_array(F.collect_list("pos")).alias("pos"),
-                )
-                .withColumn("part_id", F.lit(part_new).cast("int"))
-            )
-        else:
-            exploded = (
-                analyzed.select(
-                    "doc_id", "dl", F.explode("terms").alias("term")
-                )
-                .groupBy("term", "doc_id", "dl")
-                .agg(F.count("*").alias("tf"))
-                .withColumn("part_id", F.lit(part_new).cast("int"))
-            )
-        exploded.write.mode("append").partitionBy("part_id").parquet(staging_path)
+        staging_rows(
+            analyzed, F.lit(part_new).cast("int"), store_pos
+        ).write.mode("append").partitionBy("part_id").parquet(staging_path)
 
         # ONE stats pass per batch: the post-batch LIVE stats (staging
         # already holds the new part; prior deletes AND this batch's
@@ -884,10 +816,7 @@ def incremental_update(
             spark, staging_path, schemas.staging_schema(store_pos)
         )
         dead = _ids_frame(spark, np.union1d(prior_ids, replaced_ids))
-        raw_live, live_prev = raw, existing
-        if dead is not None:
-            raw_live = raw.join(dead, "doc_id", "left_anti")
-            live_prev = existing.join(dead, "doc_id", "left_anti")
+        raw_live, live_prev = _live(raw, dead), _live(existing, dead)
         # the new part is encoded with these POST-merge stats, so it
         # carries the new epoch; PRE-existing parts keep their old
         # epochs, which correctly disables stored-block-max pruning
@@ -896,41 +825,20 @@ def incremental_update(
         n_docs, avgdl = _write_stats_new(
             out_dir, raw_live,
             live_prev.select("dl").unionByName(analyzed.select("dl")),
-            base + n_new, version, n_buckets, new_epoch,
+            base + n_new, layout.index_version, layout.n_buckets, new_epoch,
         )
         term_stats_now = read_table(
             spark, f"{out_dir}/term_stats_new", schemas.TERM_STATS
         )
 
-        raw_p = raw.filter(F.col("part_id") == part_new)
-        batch_span = max(1, n_new)
-        hash_ids = check_hash_ids(term_stats_now)
-        salted = prepare_salted(
-            raw_p, term_stats_now, base, batch_span, salt_budget, hash_ids,
-            store_positions=store_pos,
+        # the batch's ids are dense from base: the part spans them all
+        part = write_part(
+            spark, raw.filter(F.col("part_id") == part_new), term_stats_now,
+            part_new, base, max(1, n_new),
+            f"{postings_path}/part_id={part_new}",
+            n_docs=n_docs, avgdl=avgdl, stats_epoch=new_epoch,
+            hash_ids=check_hash_ids(term_stats_now), layout=layout,
         )
-        encoded = _attach_terms(
-            encode_salted(salted, spark, n_docs, avgdl, block_size,
-                          store_positions=store_pos),
-            term_stats_now,
-            n_buckets,
-            hash_ids,
-            store_positions=store_pos,
-        )
-        obs = Observation(f"incr_part_{part_new}_{int(t0)}")
-        encoded = encoded.observe(
-            obs,
-            F.sum("n").alias("postings_written"),
-            F.approx_count_distinct("term").alias("terms_merged"),
-            F.sum(
-                F.length("doc_ids") + F.length("tfs") + F.length("dls")
-            ).alias("bytes_compressed"),
-            F.count(F.lit(1)).alias("blocks"),
-        )
-        encoded.write.mode("overwrite").partitionBy("bucket").parquet(
-            f"{postings_path}/part_id={part_new}"
-        )
-        m = obs.get
 
         # delete vector AFTER postings, BEFORE documents: recovery
         # classifies it with the part (an uncommitted batch's deletes are
@@ -950,33 +858,10 @@ def incremental_update(
 
     _swap_stats(out_dir)
 
-    # COMMIT: the manifest part row marks the batch durable
-    _write_manifest_row(
-        out_dir,
-        f"part_{part_new:05d}",
-        {
-            "partition_id": part_new,
-            "status": "DONE",
-            "started_ts": t0,
-            "finished_ts": time.time(),
-            "postings_written": int(m["postings_written"] or 0),
-            "terms_merged": int(m["terms_merged"] or 0),
-            "bytes_compressed": int(m["bytes_compressed"] or 0),
-            "blocks": int(m["blocks"] or 0),
-            "index_version": version,
-            "stats_epoch": new_epoch,
-            "replaced_docs": n_replaced,
-        },
-    )
-    row = dict(manifest["stage_docs"])
-    row.update({"n_docs": n_docs})
-    _write_manifest_row(out_dir, "stage_docs", row)
-    # AppendFiles commit: the new part + appended documents files (and any
-    # delete batch) become one retained snapshot; prior snapshots still
-    # resolve (time travel)
-    from .snapshots import commit_snapshot
-
-    commit_snapshot(
-        spark, out_dir, "append", stats_epoch=new_epoch, n_docs=n_docs
-    )
+    # COMMIT: the manifest part row marks the batch durable. The snapshot
+    # is an AppendFiles commit: the new part + appended documents files
+    # (and any delete batch) become one retained snapshot; prior
+    # snapshots still resolve (time travel)
+    _commit(spark, out_dir, manifest, f"part_{part_new:05d}",
+            {**part, "replaced_docs": n_replaced}, n_docs, "append")
     return {"new_docs": n_new, "new_parts": 1, "replaced_docs": n_replaced}

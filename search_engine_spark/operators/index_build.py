@@ -41,6 +41,7 @@ import json
 import math
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -53,11 +54,17 @@ from pyspark.sql import types as T
 from ..functions.analyzer import ANALYZER_VERSION, terms_col
 from ..functions.codec import varbyte_encode_sliced
 from .. import schemas
+from ..errors import QueryArgumentError
 from ..session import local_frame
 
 K1 = 1.2
 B = 0.75
 BLOCKS_PER_SALT_CAP = 1 << 20  # block_id = salt * CAP + local
+# build_index's layout defaults, and the layout of an index written before
+# stage_docs recorded block_size / salt_budget (every maintenance path
+# encoded with these then)
+BLOCK_SIZE = 128
+SALT_BUDGET = 100_000
 
 
 def _plog(label: str, t0: float) -> None:
@@ -80,6 +87,52 @@ class IndexBuildResult:
     parts_built: int
     parts_skipped: int
     index_version: str
+
+
+@dataclass(frozen=True)
+class PartLayout:
+    """How every part of an index is encoded and laid out on disk. Fixed
+    by build_index (recorded in the stage_docs manifest row, n_buckets in
+    corpus_stats); upserts and compaction read it back with read_layout,
+    so the layout holds across the index's whole life."""
+
+    n_buckets: int
+    block_size: int
+    salt_budget: int
+    store_positions: bool
+    index_version: str
+
+
+def resolve_n_buckets(corpus: dict, requested: int | None,
+                      index_dir: str) -> int:
+    """The bucket->directory mapping of an index from its corpus_stats
+    row: the persisted value wins and a different caller value is refused
+    (postings would be written or pruned under another mapping); an index
+    written before the value was persisted (or a fresh build) takes the
+    caller's value, default 16."""
+    persisted = corpus.get("n_buckets")
+    if persisted is None:
+        return 16 if requested is None else int(requested)
+    if requested is not None and int(requested) != int(persisted):
+        raise QueryArgumentError(
+            f"index at {index_dir} was built with n_buckets="
+            f"{int(persisted)}, caller requested {requested}"
+        )
+    return int(persisted)
+
+
+def read_layout(out_dir: str, stage: dict) -> PartLayout:
+    """The layout build_index fixed for the index at ``out_dir``
+    (``stage`` is its stage_docs manifest row)."""
+    return PartLayout(
+        n_buckets=resolve_n_buckets(
+            schemas.read_row(f"{out_dir}/corpus_stats"), None, out_dir
+        ),
+        block_size=int(stage.get("block_size", BLOCK_SIZE)),
+        salt_budget=int(stage.get("salt_budget", SALT_BUDGET)),
+        store_positions=bool(stage.get("store_positions", False)),
+        index_version=stage.get("index_version", "v1"),
+    )
 
 
 def conform_transcripts(transcripts: DataFrame) -> DataFrame:
@@ -234,6 +287,10 @@ def manifest_df(spark: SparkSession, out_dir: str) -> DataFrame:
     """The build_manifest table (per-partition lineage + metrics)."""
     rows = []
     for name, r in _read_manifest(out_dir).items():
+        if name.startswith("deletes_"):
+            # deletes-only commit markers (incremental.py) carry a
+            # partition_id to reserve it, but they are not parts
+            continue
         rows.append(
             (
                 int(r.get("partition_id", -1)),
@@ -433,7 +490,7 @@ def prepare_salted(
     """Staging slice -> slim encode input: broadcast-join df, range-salt
     hot terms (df > budget -> contiguous doc_id subranges; merge across
     salts == concatenation), replace the term string with term_id, narrow
-    tf/df to int32. Shared by build_index and compact_index."""
+    tf/df to int32."""
     joined = raw_p.join(F.broadcast(term_stats.select("term", "df")), "term")
     n_salts = F.greatest(
         F.lit(1), F.ceil(F.col("df") / F.lit(salt_budget)).cast("long")
@@ -615,14 +672,103 @@ def check_hash_ids(term_stats: DataFrame) -> bool:
     return int(row["n"]) == int(row["h"])
 
 
+def staging_rows(
+    analyzed: DataFrame, part_id: F.Column, store_positions: bool
+) -> DataFrame:
+    """Analyzed docs (doc_id, dl, terms) -> staging rows: one (term,
+    doc_id, dl, tf[, pos], part_id) row per distinct term of a doc. The
+    one staging shape of build_index stage A and incremental_update.
+    Positions are 0-based token indexes in the analyzed lemma array (the
+    coordinate space phrase_count_col checks), one SORTED array per (doc,
+    term) — collect_list order is not guaranteed across the partial agg,
+    sort_array pins it."""
+    if store_positions:
+        term_col = F.posexplode("terms").alias("pos", "term")
+        aggs = [F.count("*").alias("tf"),
+                F.sort_array(F.collect_list("pos")).alias("pos")]
+    else:
+        term_col = F.explode("terms").alias("term")
+        aggs = [F.count("*").alias("tf")]
+    return (
+        analyzed.select("doc_id", "dl", term_col)
+        # dl functionally dep. on doc_id
+        .groupBy("term", "doc_id", "dl")
+        .agg(*aggs)
+        .withColumn("part_id", part_id)
+    )
+
+
+def _part_metrics() -> list[F.Column]:
+    """The lineage aggregates of a part's manifest row, over its posting
+    blocks: observed on the part write (no second pass), aggregated from
+    the written postings by recovery."""
+    return [
+        F.sum("n").alias("postings_written"),
+        # observed metrics forbid DISTINCT aggregates; HLL approximation
+        # is fine for lineage metadata
+        F.approx_count_distinct("term").alias("terms_merged"),
+        F.sum(
+            F.length("doc_ids") + F.length("tfs") + F.length("dls")
+        ).alias("bytes_compressed"),
+        F.count(F.lit(1)).alias("blocks"),
+    ]
+
+
+def done_row(p: int, started_ts: float, **fields) -> dict:
+    """A DONE manifest row finishing now: a part's (checkpoint + lineage),
+    a deletes-only commit marker's, or a stage's (``p`` = -1)."""
+    return {"partition_id": p, "status": "DONE", "started_ts": started_ts,
+            "finished_ts": time.time(), **fields}
+
+
+def write_part(spark: SparkSession, raw_p: DataFrame, term_stats: DataFrame,
+               p: int, part_lo: int, part_size: int, part_dir: str, *,
+               n_docs: int, avgdl: float, stats_epoch: int | None,
+               hash_ids: bool, layout: PartLayout) -> dict:
+    """Encode one part — the staging slice ``raw_p`` of doc_ids
+    [part_lo, part_lo + part_size) — into posting blocks under
+    ``part_dir`` and return its manifest row. The one part writer of
+    build_index, incremental_update and compact_index; the caller writes
+    the row when its commit protocol says to. ``hash_ids`` is the
+    caller's check_hash_ids over ``term_stats`` (one check per call, not
+    one job per part)."""
+    t0 = time.time()
+    pos = layout.store_positions
+    salted = prepare_salted(raw_p, term_stats, part_lo, part_size,
+                            layout.salt_budget, hash_ids, store_positions=pos)
+    encoded = _attach_terms(
+        encode_salted(salted, spark, n_docs, avgdl, layout.block_size,
+                      store_positions=pos),
+        term_stats, layout.n_buckets, hash_ids, store_positions=pos,
+    )
+    # one Observation per write (name unique across concurrent parts)
+    obs = Observation(f"part_{p}_{time.time_ns()}")
+    encoded.observe(obs, *_part_metrics()).write.mode(
+        "overwrite"
+    ).partitionBy("bucket").parquet(part_dir)
+    return done_row(p, t0, **{k: int(v or 0) for k, v in obs.get.items()},
+                    index_version=layout.index_version,
+                    stats_epoch=stats_epoch)
+
+
+def run_parts(fn, parts, concurrency: int) -> list:
+    """``fn`` over every part, ``concurrency`` parts at a time; results in
+    part order. Parts are independent jobs (own output dir), so the
+    scheduler interleaves their stages across the worker pool."""
+    if concurrency > 1 and len(parts) > 1:
+        with ThreadPoolExecutor(max_workers=concurrency) as ex:
+            return list(ex.map(fn, parts))
+    return [fn(p) for p in parts]
+
+
 def build_index(
     spark: SparkSession,
     transcripts: DataFrame,
     out_dir: str,
     *,
     n_buckets: int | None = None,
-    block_size: int = 128,
-    salt_budget: int = 100_000,
+    block_size: int = BLOCK_SIZE,
+    salt_budget: int = SALT_BUDGET,
     n_parts: int = 4,
     index_version: str = "v1",
     resume: bool = True,
@@ -635,6 +781,12 @@ def build_index(
     persisted in corpus_stats (remaining parts must land in the same
     bucket->directory mapping as the committed ones) and refuses an
     explicit caller mismatch.
+
+    ``block_size``, ``salt_budget`` and ``store_positions`` are the part
+    layout: recorded in the stage_docs manifest row, read back by every
+    later part write (read_layout), so they hold for the index's whole
+    life; a resume refuses a caller value that differs from the recorded
+    one.
 
     ``store_positions=True`` widens the index with per-posting token
     positions (staging carries a sorted pos array per (doc, term);
@@ -666,14 +818,20 @@ def build_index(
                 "serve queries analyzed differently than the committed "
                 "postings — rebuild with build_index(resume=False)"
             )
-        built_pos = bool(manifest["stage_docs"].get("store_positions", False))
-        if built_pos != store_positions:
-            raise ValueError(
-                f"index at {out_dir} was built with store_positions="
-                f"{built_pos}, caller requested {store_positions}: resumed "
-                "parts would write a different postings schema than the "
-                "committed ones — rebuild with build_index(resume=False)"
-            )
+        # the part layout is fixed for the index's life; an index built
+        # before block_size / salt_budget were recorded is not checked on
+        # them (their values are unknown)
+        recorded = {"store_positions": False, **manifest["stage_docs"]}
+        for key, want in (("store_positions", store_positions),
+                          ("block_size", block_size),
+                          ("salt_budget", salt_budget)):
+            if recorded.get(key, want) != want:
+                raise ValueError(
+                    f"index at {out_dir} was built with {key}="
+                    f"{recorded[key]}, caller requested {want}: resumed "
+                    "parts would be encoded differently than the "
+                    "committed ones — rebuild with build_index(resume=False)"
+                )
 
     docs_path = str(out / "documents")
     staging_path = str(out / "_staging_postings_raw")
@@ -688,19 +846,15 @@ def build_index(
         import shutil as _shutil
 
         _shutil.rmtree(postings_path, ignore_errors=True)
-    if manifest.get("stage_docs", {}).get("status") == "DONE" and Path(
-        corpus_path
-    ).exists():
-        persisted = schemas.read_row(corpus_path).get("n_buckets")
-        if persisted is not None:
-            if n_buckets is not None and int(n_buckets) != int(persisted):
-                raise ValueError(
-                    f"index at {out_dir} was built with n_buckets="
-                    f"{int(persisted)}, caller requested {n_buckets}"
-                )
-            n_buckets = int(persisted)
-    if n_buckets is None:
-        n_buckets = 16
+    n_buckets = resolve_n_buckets(
+        schemas.read_row(corpus_path)
+        if manifest.get("stage_docs", {}).get("status") == "DONE"
+        and Path(corpus_path).exists()
+        else {},
+        n_buckets, out_dir,
+    )
+    layout = PartLayout(n_buckets, block_size, salt_budget,
+                        store_positions, index_version)
 
     # ---------------- Stage A+B: documents, staging, stats ------------------
     # One materializing pass (shuffle+sort -> cache of the RAW text, counted
@@ -778,32 +932,9 @@ def build_index(
         terms_df = with_ids.select(
             "doc_id", terms_col(F.col("text")).alias("terms")
         ).withColumn("dl", F.size("terms"))
-        if store_positions:
-            # positions = 0-based token index in the analyzed lemma array
-            # (the same coordinate space phrase_count_col checks), one
-            # SORTED array per (doc, term) — collect_list order is not
-            # guaranteed across the partial agg, sort_array pins it
-            exploded = (
-                terms_df.select(
-                    "doc_id", "dl",
-                    F.posexplode("terms").alias("pos", "term"),
-                )
-                .groupBy("term", "doc_id", "dl")
-                .agg(
-                    F.count("*").alias("tf"),
-                    F.sort_array(F.collect_list("pos")).alias("pos"),
-                )
-            )
-        else:
-            exploded = (
-                terms_df
-                .select("doc_id", "dl", F.explode("terms").alias("term"))
-                # dl functionally dep. on doc_id
-                .groupBy("term", "doc_id", "dl")
-                .agg(F.count("*").alias("tf"))
-            )
-        exploded = exploded.withColumn(
-            "part_id", (F.col("doc_id") / F.lit(part_size)).cast("int")
+        exploded = staging_rows(
+            terms_df, (F.col("doc_id") / F.lit(part_size)).cast("int"),
+            store_positions,
         )
         stats_ob = Observation(f"stats_{int(t0)}")
         fill_ob = Observation(f"fill_{int(t0)}")
@@ -847,8 +978,6 @@ def build_index(
                 stats_ob, F.count(F.lit(1)).alias("n_terms")
             ).write.mode("overwrite").parquet(stats_path)
             _plog("term_stats write (from staging)", tw)
-
-        from concurrent.futures import ThreadPoolExecutor
 
         ex = ThreadPoolExecutor(max_workers=3)
         try:
@@ -920,37 +1049,22 @@ def build_index(
                 f_docs.result()
             finally:
                 ex.shutdown(wait=True)
-            now = time.time()
-            _write_manifest_row(
-                out_dir,
-                "stage_docs",
-                {
-                    "partition_id": -1,
-                    "status": "DONE",
-                    "started_ts": t0,
-                    "finished_ts": now,
-                    "index_version": index_version,
-                    # new documents must tokenize exactly like the postings
-                    # they join against — incremental_update refuses an
-                    # index stamped with a different analyzer version
-                    "analyzer_version": ANALYZER_VERSION,
-                    "store_positions": store_positions,
-                    "n_docs": n_docs,
-                    "part_size": part_size,
-                },
-            )
-            _write_manifest_row(
-                out_dir,
-                "stage_stats",
-                {
-                    "partition_id": -1,
-                    "status": "DONE",
-                    "started_ts": t0,
-                    "finished_ts": now,
-                    "index_version": index_version,
-                    "n_terms": int(stats_ob.get["n_terms"] or 0),
-                },
-            )
+            _write_manifest_row(out_dir, "stage_docs", done_row(
+                -1, t0, index_version=index_version,
+                # new documents must tokenize exactly like the postings
+                # they join against — incremental_update refuses an
+                # index stamped with a different analyzer version
+                analyzer_version=ANALYZER_VERSION,
+                store_positions=store_positions,
+                block_size=block_size,
+                salt_budget=salt_budget,
+                n_docs=n_docs,
+                part_size=part_size,
+            ))
+            _write_manifest_row(out_dir, "stage_stats", done_row(
+                -1, t0, index_version=index_version,
+                n_terms=int(stats_ob.get["n_terms"] or 0),
+            ))
 
         # encode-side scalars from the staging Observation — bit-identical
         # to the corpus_stats the docs write persists: sum(tf) over posting
@@ -976,45 +1090,27 @@ def build_index(
         n_docs = int(manifest["stage_docs"]["n_docs"])
         part_size = int(manifest["stage_docs"]["part_size"])
 
-    # Resume fallback (old-layout index: stage_docs DONE, stats missing):
-    # recompute stats from the durable staging/documents tables
+    # Resume fallback (stage_docs DONE, stats missing — a crash between
+    # _finalize_stage_a's two row writes): recompute the stats from the
+    # durable staging/documents tables through the one stats writer
     if fresh is None and manifest.get("stage_stats", {}).get("status") != "DONE":
+        from .incremental import _recompute_stats  # imports this module
+
         t0 = time.time()
-        raw = schemas.read_table(spark, staging_path, schemas.STAGING)
-        stats_ob = Observation(f"stats_{int(t0)}")
-        raw.groupBy("term").agg(
-            F.count("*").alias("df"), F.sum("tf").alias("cf")
-        ).observe(stats_ob, F.count(F.lit(1)).alias("n_terms")).write.mode(
-            "overwrite"
-        ).parquet(stats_path)
         # the recompute is deterministic over the durable tables, so the
-        # rewritten stats stay on the surviving parts' epoch (omitting
-        # the stamp here would null the epoch and silently disable
-        # stored-block-max pruning on a fully consistent index)
-        fb_epoch = _manifest_part_epoch(manifest) or int(t0 * 1e6)
-        schemas.read_table(spark, docs_path, schemas.DOCUMENTS).agg(
-            F.count("*").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-            F.max("dl").cast("double").alias("max_tf_sum"),
-            F.lit(index_version).alias("index_version"),
-            F.lit(n_buckets).alias("n_buckets"),
-            F.lit(fb_epoch).cast("long").alias("stats_epoch"),
-            F.coalesce(F.max("doc_id") + 1, F.lit(0))
-            .cast("long")
-            .alias("id_space"),
-        ).write.mode("overwrite").parquet(corpus_path)
-        _write_manifest_row(
-            out_dir,
-            "stage_stats",
-            {
-                "partition_id": -1,
-                "status": "DONE",
-                "started_ts": t0,
-                "finished_ts": time.time(),
-                "index_version": index_version,
-                "n_terms": int(stats_ob.get["n_terms"] or 0),
-            },
+        # rewritten stats stay on the surviving parts' epoch (a fresh
+        # epoch would silently disable stored-block-max pruning on a
+        # fully consistent index)
+        _recompute_stats(
+            spark, out_dir, index_version, n_buckets,
+            stats_epoch=_manifest_part_epoch(manifest) or int(t0 * 1e6),
         )
+        _write_manifest_row(out_dir, "stage_stats", done_row(
+            -1, t0, index_version=index_version,
+            n_terms=schemas.read_table(
+                spark, stats_path, schemas.TERM_STATS
+            ).count(),
+        ))
         manifest = _read_manifest(out_dir)
 
     if fresh is not None:
@@ -1077,56 +1173,15 @@ def build_index(
         hash_ids = check_hash_ids(term_stats) if todo else True
 
         def _build_part(p: int) -> None:
-            t0 = time.time()
-            tpart = t0
-            part_lo = p * part_size
-            raw_p = staging_df.filter(F.col("part_id") == p)
-            salted = prepare_salted(
-                raw_p, term_stats, part_lo, part_size, salt_budget, hash_ids,
-                store_positions=store_positions,
+            tpart = time.time()
+            row = write_part(
+                spark, staging_df.filter(F.col("part_id") == p), term_stats,
+                p, p * part_size, part_size, f"{postings_path}/part_id={p}",
+                n_docs=n_docs, avgdl=avgdl, stats_epoch=stats_epoch,
+                hash_ids=hash_ids, layout=layout,
             )
-            encoded = _attach_terms(
-                encode_salted(salted, spark, n_docs, avgdl, block_size,
-                              store_positions=store_positions),
-                term_stats,
-                n_buckets,
-                hash_ids,
-                store_positions=store_positions,
-            )
-            part_dir = f"{postings_path}/part_id={p}"
-            # lineage metrics piggy-back on the write action (Observation) —
-            # no second pass over the encoded part
-            obs = Observation(f"part_{p}")
-            encoded = encoded.observe(
-                obs,
-                F.sum("n").alias("postings_written"),
-                # observed metrics forbid DISTINCT aggregates; HLL approximation
-                # is fine for lineage metadata
-                F.approx_count_distinct("term").alias("terms_merged"),
-                F.sum(
-                    F.length("doc_ids") + F.length("tfs") + F.length("dls")
-                ).alias("bytes_compressed"),
-                F.count(F.lit(1)).alias("blocks"),
-            )
-            encoded.write.mode("overwrite").partitionBy("bucket").parquet(part_dir)
             _plog(f"part {p} encode+write", tpart)
-            m = obs.get
-            _write_manifest_row(
-                out_dir,
-                f"part_{p:05d}",
-                {
-                    "partition_id": p,
-                    "status": "DONE",
-                    "started_ts": t0,
-                    "finished_ts": time.time(),
-                    "postings_written": int(m["postings_written"] or 0),
-                    "terms_merged": int(m["terms_merged"] or 0),
-                    "bytes_compressed": int(m["bytes_compressed"] or 0),
-                    "blocks": int(m["blocks"] or 0),
-                    "index_version": index_version,
-                    "stats_epoch": stats_epoch,
-                },
-            )
+            _write_manifest_row(out_dir, f"part_{p:05d}", row)
 
         if fail_after_parts is not None:
             # deterministic sequential order for the kill-simulation hook
@@ -1135,17 +1190,8 @@ def build_index(
                     raise RuntimeError(f"simulated kill before part {p}")
                 _build_part(p)
             built = min(len(todo), fail_after_parts)
-        elif part_concurrency > 1 and len(todo) > 1:
-            # parts are independent jobs (own output dir + manifest row);
-            # the scheduler interleaves their stages across the worker pool
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=part_concurrency) as pex:
-                list(pex.map(_build_part, todo))
-            built = len(todo)
         else:
-            for p in todo:
-                _build_part(p)
+            run_parts(_build_part, todo, part_concurrency)
             built = len(todo)
     except BaseException as exc:
         # clean up then propagate the ORIGINAL failure: _stage_a_cleanup's

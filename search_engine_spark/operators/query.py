@@ -51,7 +51,7 @@ from .. import schemas
 from ..errors import QueryArgumentError
 from ..functions.snippet import make_snippet
 from ..session import local_frame
-from .index_build import K1, B
+from .index_build import K1, B, resolve_n_buckets
 
 
 @dataclass
@@ -171,16 +171,7 @@ class SearchEngine:
         # bucket layout is persisted with the index (corpus_stats.n_buckets);
         # a caller-supplied mismatch would silently prune the wrong partition
         # dirs, so fail loudly instead
-        persisted = corpus.get("n_buckets")
-        if persisted is not None:
-            if n_buckets is not None and int(n_buckets) != int(persisted):
-                raise QueryArgumentError(
-                    f"index at {index_dir} was built with n_buckets="
-                    f"{int(persisted)}, caller requested {n_buckets}"
-                )
-            self.n_buckets = int(persisted)
-        else:  # pre-persistence index layout
-            self.n_buckets = 16 if n_buckets is None else int(n_buckets)
+        self.n_buckets = resolve_n_buckets(corpus, n_buckets, index_dir)
         self.n_docs = int(corpus["n_docs"])
         # layout bound: doc_ids span [0, id_space) — on an index that ever
         # replaced docs (operators/deletes.py) this EXCEEDS n_docs (the

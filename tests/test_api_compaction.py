@@ -187,6 +187,11 @@ def test_index_batch_without_index_errors(spark, tmp_path):
     pdf = make_transcripts(n_conversations=3, seed=1)
     out = a.index_batch(_sdf(spark, pdf))
     assert out["result"] is False and "no complete index" in out["error"]
+    # every mutation opens the index through the same check
+    out = a.compact()
+    assert out["result"] is False and "no complete index" in out["error"]
+    out = a.delete_batch(_sdf(spark, pdf).select("conv_id"))
+    assert out["result"] is False and "no complete index" in out["error"]
 
 
 def test_api_envelope_before_first_build(spark, tmp_path):

@@ -20,8 +20,11 @@ def test_api_tombstone_lifecycle(spark, tmp_path):
 
     taken = tdf.filter(F.col("conv_id") == "conv-000003")
     keys = taken.select("conv_id", "turn_idx")
+    parts = api.statistics()["statistics"]["parts"]
     res = api.delete_batch(keys, tombstone=True)
     assert res["result"] is True and res["deleted_docs"] > 0
+    # the deletes-only commit marker is not a part
+    assert api.statistics()["statistics"]["parts"] == parts
 
     # replayed ingest is blocked while the tombstones stand
     replay = api.index_batch(taken)

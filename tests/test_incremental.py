@@ -193,6 +193,40 @@ def test_n_buckets_persisted_and_enforced(spark, split_corpora):
         SearchEngine(spark, full_dir, n_buckets=64)
 
 
+def test_part_layout_fixed_for_index_life(spark, tmp_path):
+    """block_size and salt_budget are recorded at build time and every
+    later part write reads them back: the upsert's part and the compacted
+    parts keep the build's 32-posting blocks (a resume asking for another
+    layout is refused)."""
+    import json
+    from pathlib import Path as P
+
+    from search_engine_spark.operators.compaction import compact_index
+
+    def max_block_n():
+        return spark.read.parquet(f"{idx}/postings").agg(F.max("n")).first()[0]
+
+    pdf = make_transcripts(n_conversations=30, seed=17)
+    convs = sorted(pdf["conv_id"].unique())
+    idx = str(tmp_path / "idx_layout")
+    base = _to_sdf(spark, pdf[pdf["conv_id"].isin(convs[:24])])
+    build_index(spark, base, idx, n_parts=2, resume=False,
+                block_size=32, salt_budget=64)
+    stage = json.loads((P(idx) / "_manifest" / "stage_docs.json").read_text())
+    assert (stage["block_size"], stage["salt_budget"]) == (32, 64)
+    assert max_block_n() == 32
+    with pytest.raises(ValueError, match="block_size"):
+        build_index(spark, base, idx, n_parts=2, salt_budget=64)
+
+    batch = pdf[pdf["conv_id"].isin(convs[20:])].copy()
+    batch.loc[batch["conv_id"] == convs[20], "text"] += " rewritten turn"
+    res = incremental_update(spark, _to_sdf(spark, batch), idx, upsert=True)
+    assert res["replaced_docs"] > 0
+    assert max_block_n() <= 32
+    compact_index(spark, idx, n_parts=1)
+    assert max_block_n() <= 32
+
+
 def test_analyzer_version_mismatch_refused(spark, split_corpora, tmp_path):
     """An index stamped with a different analyzer version must refuse
     incremental updates (its postings would not match new tokenization)."""

@@ -319,3 +319,31 @@ def test_resume_epoch_minted_fresh_on_changed_text(spark, tmp_path):
         if n.startswith("part_") and r.get("stats_epoch") is not None
     }
     assert int(row["stats_epoch"]) not in part_epochs or len(part_epochs) > 1
+
+
+def test_resume_rewrites_lost_stage_stats(spark, tmp_path):
+    """A crash between _finalize_stage_a's two row writes leaves
+    stage_docs DONE and no stage_stats row: the resume rewrites the stats
+    through the one stats writer, equal to the lost commit's and on the
+    surviving parts' epoch (stored block maxima stay valid)."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.operators.query import SearchEngine
+    from search_engine_spark.synth import make_transcripts
+
+    idx = str(tmp_path / "idx_lost_stats")
+    sdf = _mk_sdf(spark, make_transcripts(n_conversations=20, seed=31))
+    build_index(spark, sdf, idx, n_parts=2, resume=False)
+
+    def stats():
+        return [sorted(pq.read_table(f"{idx}/{t}").to_pylist(), key=str)
+                for t in ("term_stats", "corpus_stats")]
+
+    before = stats()
+    (Path(idx) / "_manifest" / "stage_stats.json").unlink()
+    res = build_index(spark, sdf, idx, n_parts=2, resume=True)
+    assert (res.parts_built, res.parts_skipped) == (0, 2)
+    assert stats() == before
+    assert SearchEngine(spark, idx)._stored_blockmax_valid() is True

@@ -6,7 +6,10 @@ RDD job on every evaluation, run by a second pool of Python workers. This
 fails if one comes back in the operators or the API.
 
 The driver-contract registry (entry_queries.py) defines no name that
-nothing reads."""
+nothing reads.
+
+Every posting part is encoded by one writer (index_build.write_part):
+each step of its chain has one call site under operators/."""
 
 from __future__ import annotations
 
@@ -88,3 +91,26 @@ def test_entry_queries_defines_no_dead_names():
         and not any(name in ids for other, ids in reads if other is not node)
     )
     assert not dead, f"entry_queries.py names nothing reads: {dead}"
+
+
+PART_CHAIN = ("prepare_salted", "encode_salted", "_attach_terms", "posexplode")
+
+
+def _call_sites(src: str, name: str) -> int:
+    return len(re.findall(rf"(?<!def )\b{name}\(", src))
+
+
+def test_part_chain_has_one_call_site():
+    """Every posting part is written by index_build.write_part and every
+    staging row built by index_build.staging_rows: under operators/ each
+    step of that chain has exactly one call site, so a hand-written copy
+    of the chain cannot grow back."""
+    src = "".join(f.read_text() for f in sorted((PKG / "operators").rglob("*.py")))
+    counts = {name: _call_sites(src, name) for name in PART_CHAIN}
+    assert counts == dict.fromkeys(PART_CHAIN, 1), counts
+
+
+def test_call_site_pattern():
+    assert _call_sites("def prepare_salted(\n", "prepare_salted") == 0
+    assert _call_sites("x = F.posexplode('t')", "posexplode") == 1
+    assert _call_sites("_encode_salted(x)", "encode_salted") == 0
