@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .errors import QueryArgumentError
+from .functions.analyzer import analyze_text
 from .operators.incremental import incremental_update
 from .operators.index_build import build_index, manifest_df
 from .operators.query import SearchEngine
@@ -270,12 +271,13 @@ class EngineAPI:
 
     def _get_engine(self) -> SearchEngine:
         """One memoized engine per index snapshot: SearchEngine.__init__
-        costs parquet resolutions (and a delete-vector collect), and its
+        costs file listings, a footer and the delete-vector read (all
+        driver-side, no Spark job), and its
         per-term dictionary/range caches only pay off across calls on
         the same instance. Invalidated by index_batch, compact, and build
         completion. Raises one of NO_INDEX_ERRORS while no index exists.
 
-        Construction happens OUTSIDE the lock (it runs Spark jobs), so
+        Construction happens OUTSIDE the lock (it reads the index), so
         the memoization is generation-checked: if any mutation landed
         while this thread was constructing — e.g. a background build's
         finally-invalidate — the partial-snapshot engine is returned for
@@ -376,14 +378,17 @@ class EngineAPI:
         """Batched search with the reference envelope PER QUERY: one Spark
         job scores the whole workload through the packed single-scan plan
         (SearchEngine.search_many — every posting block decoded once for
-        the union vocabulary), then one k-bounded presentation join adds
-        conv_id/turn_idx/snippets for all queries at once. Response:
-        {"result": True, "results": {qid: {result, count, data:[...]}}};
-        a blank query text gets its own {"result": False, ERR_EMPTY_QUERY}
-        row without failing the batch (per-query contract, same strings
-        as search()). Pagination matches search(): the engine is asked
-        for the top-(offset+limit) and the page is sliced per query from
-        that bound — never a full-result materialization."""
+        the union vocabulary); its (query_id, doc_id, score) rows are
+        collected, each query's page is cut, ONE driver-side point-read
+        of the union of the pages' doc ids fetches their documents, and
+        SearchEngine.present adds conv_id/turn_idx/snippets per query.
+        Response: {"result": True, "results": {qid: {result, count,
+        data:[...]}}}; a blank query text gets its own {"result": False,
+        ERR_EMPTY_QUERY} row without failing the batch (per-query
+        contract, same strings as search()). Pagination matches search():
+        the engine is asked for the top-(offset+limit) and the page is
+        sliced per query from that bound — never a full-result
+        materialization."""
         if not isinstance(queries, dict):
             queries = {f"q{i}": q for i, q in enumerate(queries)}
         blank = {
@@ -399,58 +404,38 @@ class EngineAPI:
             except NO_INDEX_ERRORS:
                 return {"result": False, "error": ERR_NO_INDEX,
                         "is_indexing": self.is_indexing()}
-            ids = eng.search_many(
+            hits: dict[str, list[tuple[int, float]]] = {
+                qid: [] for qid in live
+            }
+            for qid, doc_id, score in eng.search_many(
                 live, k=offset + limit, mode=mode, conjunctive=conjunctive
+            ).collect():
+                hits[qid].append((doc_id, score))
+            pages = {
+                qid: sorted(hs, key=lambda h: (-h[1], h[0]))[
+                    offset:offset + limit
+                ]
+                for qid, hs in hits.items()
+            }
+            # one point-read of the union of the pages' doc ids
+            docs = eng.documents_by_id(
+                {d for page in pages.values() for d, _ in page}
             )
-            joined = eng.documents.join(F.broadcast(ids), "doc_id")
-            if with_snippets:
-                from .functions.analyzer import analyze_text
-                from .functions.snippet import make_snippet
-
-                q_lemmas = {
-                    qid: set(analyze_text(q)) for qid, q in live.items()
-                }
-
-                @F.pandas_udf("string")
-                def snippet_udf(qids, texts):  # type: ignore[no-untyped-def]
-                    import pandas as pd
-
-                    return pd.Series(
-                        [
-                            make_snippet(t, q_lemmas[qid])
-                            for qid, t in zip(qids, texts)
-                        ]
-                    )
-
-                joined = joined.withColumn(
-                    "snippet", snippet_udf(F.col("query_id"), F.col("text"))
+            for qid, page in pages.items():
+                rows = eng.present(
+                    page,
+                    set(analyze_text(live[qid])) if with_snippets else None,
+                    docs,
                 )
-            else:
-                joined = joined.withColumn(
-                    "snippet", F.lit(None).cast("string")
-                )
-            rows = joined.select(
-                "query_id", "doc_id", "conv_id", "turn_idx", "score",
-                "snippet",
-            ).collect()
-            by_query: dict[str, list[Any]] = {qid: [] for qid in live}
-            for r in rows:
-                by_query[r["query_id"]].append(r)
-            for qid, rs in by_query.items():
-                rs.sort(key=lambda r: (-r["score"], r["doc_id"]))
-                page = rs[offset:offset + limit]
                 results[qid] = {
                     "result": True,
-                    "count": len(page),
+                    "count": len(rows),
                     "data": [
-                        {
-                            "doc_id": r["doc_id"],
-                            "conv_id": r["conv_id"],
-                            "turn_idx": r["turn_idx"],
-                            "relevance": r["score"],
-                            "snippet": r["snippet"],
-                        }
-                        for r in page
+                        dict(zip(
+                            ("doc_id", "conv_id", "turn_idx", "relevance",
+                             "snippet"), r,
+                        ))
+                        for r in rows
                     ],
                 }
         return {"result": True, "results": results}

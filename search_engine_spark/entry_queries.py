@@ -26,6 +26,7 @@ from __future__ import annotations
 import hashlib
 import math
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,7 +51,14 @@ QUERY_TERMS = ("spark", "window", "customer")  # df-asc at sf0.01: 385/387/394
 RARE_QUERY_TERMS = ("dup", "spark")            # rare (df=25) + hot
 ANY_TERMS = ("vector", "stream", "filter")
 TOPK = 10
-BUILD_TAG = "v6"     # bump to invalidate cached /tmp indexes (v6: min_dl block bound)
+# the modules that write an index: the registry's cached indexes are keyed
+# on their bytes, so code that writes differently never resumes over (and
+# verifies) an index older code built
+WRITE_PATH_SOURCES = (
+    "operators/index_build.py", "operators/incremental.py",
+    "operators/compaction.py", "operators/deletes.py",
+    "functions/codec.py", "functions/analyzer.py",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -277,12 +285,23 @@ def _topk_spark(
 # input shape (BASELINE.json input_hint), build the inverted index once per
 # sf_dir (cached in /tmp, manifest-resumable), query it.
 # ---------------------------------------------------------------------------
+def _write_path_digest() -> str:
+    """md5 over the bytes of WRITE_PATH_SOURCES."""
+    pkg = Path(__file__).resolve().parent
+    h = hashlib.md5()
+    for rel in WRITE_PATH_SOURCES:
+        h.update((pkg / rel).read_bytes())
+    return h.hexdigest()
+
+
 def _tagged_index_dir(sf_dir: str, tag: str = "") -> str:
     """Cache dir for a gate entry's throwaway index build, keyed on the
-    build recipe (BUILD_TAG), the corpus dir, and the entry's ``tag``
-    (incr/scope/cpct/skew builds diverge from the plain one)."""
+    write-path code (_write_path_digest), the corpus dir, and the entry's
+    ``tag`` (incr/scope/cpct/skew builds diverge from the plain one)."""
     sel = f"{tag}:" if tag else ""
-    key = hashlib.md5(f"{BUILD_TAG}:{sel}{sf_dir}".encode()).hexdigest()[:10]
+    key = hashlib.md5(
+        f"{_write_path_digest()}:{sel}{sf_dir}".encode()
+    ).hexdigest()[:10]
     return f"/tmp/ses_index_{key}"
 
 

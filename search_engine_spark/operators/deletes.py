@@ -22,9 +22,10 @@ a rolled-back batch rolls its deletes back too, resurrecting the old
 docs it would have replaced).
 
 Scale notes: the vector holds only docs replaced since the last
-compaction — it is collected to the driver once per SearchEngine and
-shipped to the decode kernel as a Spark broadcast, once per executor
-rather than inside every task's UDF closure (at Iceberg scale the
+compaction — it is read on the driver (pyarrow) once per SearchEngine,
+handed to the decode kernel as is by the driver-side local plan, and
+shipped to the Spark plans as a broadcast, once per executor rather
+than inside every task's UDF closure (at Iceberg scale the
 broadcast value becomes a roaring bitmap; same plan shape). The decode
 mask is one vectorized ``np.isin`` per (term, batch). Compaction bounds
 the vector's growth exactly as it bounds part-count growth.
@@ -68,7 +69,7 @@ def deleted_ids_df(
     when there are no deletes (callers skip their anti-join entirely —
     the common case costs nothing). ``dirs`` pins a snapshot's batch
     list for as-of reads. Not deduplicated: every consumer is an
-    anti-join or load_deleted_ids, neither of which needs it."""
+    anti-join, which does not need it."""
     names = delete_batch_dirs(out_dir) if dirs is None else list(dirs)
     if not names:
         return None
@@ -80,11 +81,17 @@ def load_deleted_ids(
     spark: SparkSession, out_dir: str, dirs: list[str] | None = None
 ) -> np.ndarray | None:
     """The vector as a sorted unique int64 array for the decode kernels,
-    or None when empty."""
-    df = deleted_ids_df(spark, out_dir, dirs)
-    if df is None:
+    or None when empty. ``dirs`` pins a batch list like deleted_ids_df.
+    Read on the driver with pyarrow and the declared schema: no Spark
+    job (``spark`` is unused, kept for the callers' signature)."""
+    names = delete_batch_dirs(out_dir) if dirs is None else list(dirs)
+    if not names:
         return None
-    ids = collect_ids(df)
+    ids = np.unique(np.concatenate([
+        schemas.arrow_dataset(str(_root(out_dir) / n), schemas.DELETES)
+        .to_table().column("doc_id").to_numpy()
+        for n in names
+    ]).astype(np.int64))
     return ids if ids.size else None
 
 

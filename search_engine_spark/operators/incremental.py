@@ -162,9 +162,13 @@ def _write_stats_new(
     scores with them, read back on the driver (no job). avgdl is an
     integer sum over a count, so any union order of the same lengths
     gives the same double."""
+    # each file sorted by term (no extra job or shuffle), like the
+    # build's writer: the driver-side dictionary lookup prunes row groups
     raw_live.groupBy("term").agg(
         F.count("*").alias("df"), F.sum("tf").alias("cf")
-    ).write.mode("overwrite").parquet(f"{out_dir}/term_stats_new")
+    ).sortWithinPartitions("term").write.mode("overwrite").parquet(
+        f"{out_dir}/term_stats_new"
+    )
     corpus_new = f"{out_dir}/corpus_stats_new"
     dls_live.agg(
         F.count("*").alias("n_docs"),

@@ -972,11 +972,15 @@ def build_index(
             # An all-empty corpus writes no staging part files, which the
             # declared-schema read sees as no rows: an empty dictionary.
             tw = time.time()
+            # each file sorted by term (no extra job or shuffle): the
+            # driver-side dictionary lookup then prunes row groups
             schemas.read_table(spark, staging_path, schemas.STAGING).groupBy(
                 "term"
             ).agg(F.count("*").alias("df"), F.sum("tf").alias("cf")).observe(
                 stats_ob, F.count(F.lit(1)).alias("n_terms")
-            ).write.mode("overwrite").parquet(stats_path)
+            ).sortWithinPartitions("term").write.mode("overwrite").parquet(
+                stats_path
+            )
             _plog("term_stats write (from staging)", tw)
 
         ex = ThreadPoolExecutor(max_workers=3)

@@ -1,13 +1,28 @@
 """Top-k query engine over the built index (reference search lifecycle,
 SearchServiceImpl.java:34-103; SURVEY.md §3.1).
 
+Engine init reads only metadata, all on the driver with pyarrow (no
+Spark job): the corpus_stats row, the delete vector, and the postings /
+term_stats / documents datasets (file listings; postings' schema, which
+tells has_positions, from one footer). The Spark frames over the same
+tables are built on first use.
+
 Flow per query:
   1. analyze the query driver-side (tiny; same analyzer as the build).
-  2. dictionary lookup in term_stats — filter + collect of <=|q| rows
-     (J3, LemmaRepository.java:18-21); df-ascending term order (O1).
+  2. dictionary lookup in term_stats — a pyarrow read of <=|q| rows
+     (J3, LemmaRepository.java:18-21); term_stats files are sorted by
+     term, so the OR-of-equalities filter prunes row groups;
+     df-ascending term order (O1).
   3. optional df cutoff (P3, SearchServiceImpl.java:169-178; OFF by default
      — documented deviation, it changes recall).
-  4. posting-block scan: parquet read pruned by `bucket` partition dirs +
+  4. route (_route). A query whose summed df is under
+     LOCAL_PLAN_MAX_POSTINGS runs the LOCAL plan on the driver: pyarrow
+     reads the query terms' posting blocks (bucket partition filter +
+     term row-group filter), the one decode kernel decodes them and
+     masks the delete vector, numpy scores, combines (step 5's order)
+     and cuts the top-k (step 6's order) — no Spark job, bit-identical
+     to the classic plan. Larger queries run a Spark plan, steps 4'-6.
+  4'. posting-block scan: parquet read pruned by `bucket` partition dirs +
      `term` row-group min/max; decode + per-term BM25 partials in
      mapInPandas (Arrow, numpy). Multi-term conjunctive queries
      additionally prune to the RAREST term's doc_id ranges (the
@@ -23,8 +38,10 @@ Flow per query:
   6. TakeOrderedAndProject top-(offset+k) by (score DESC, doc_id ASC) —
      deterministic tie-break (fixes the reference's HashSet
      nondeterminism; SURVEY.md §7.5).
-  7. collect the k ids, point-read their documents (doc_id isin) and
-     build the snippets on the driver (SearchEngine.present).
+  7. point-read the k hits' documents with pyarrow (doc_id filter,
+     delete vector subtracted) and build the snippets on the driver
+     (SearchEngine.present). A bounded search() thus runs 0 Spark jobs
+     from engine init to snippets.
 
 Scoring modes:
   - "bm25" (default): idf = ln(1 + (N - df + .5)/(df + .5)), k1=1.2, b=.75
@@ -34,13 +51,17 @@ Scoring modes:
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 import warnings
 from dataclasses import dataclass
+from functools import cached_property
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
-from pyspark.errors import AnalysisException
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -70,28 +91,64 @@ def _span_arrays(spans: list[tuple[int, int]]) -> tuple[np.ndarray, np.ndarray]:
     )
 
 
-def _decode_blocks(batches, streams, ranges, deleted_bc):
-    """The one decode kernel every posting reader runs in mapInPandas.
-    It closes over nothing (arrays and the broadcast handle come in as
-    arguments), so a reader's UDF pickles without the engine.
+def _pa_any_of(name: str, values, cap: int = 64) -> ds.Expression:
+    """pyarrow filter: column ``name`` equals one of ``values``, shaped
+    so row-group min/max stats prune. pyarrow 16 prunes row groups on
+    ``==`` but not on ``isin``, so up to ``cap`` values this is an OR of
+    equalities. Past the cap the OR's cost grows with its length (1,667
+    equalities took 5.8 s over 50 row groups), so ``cap`` sorted value
+    runs prune the row groups and an ``isin`` keeps the rows."""
+    values = sorted(set(values))
+    field = ds.field(name)
+    if len(values) <= cap:
+        return functools.reduce(operator.or_, (field == v for v in values))
+    step = -(-len(values) // cap)
+    runs = [values[i:i + step] for i in range(0, len(values), step)]
+    return functools.reduce(
+        operator.or_, ((field >= r[0]) & (field <= r[-1]) for r in runs)
+    ) & field.isin(values)
+
+
+def _partial_scores(tfs, dls, idf, mode, avgdl, max_tf_sum) -> np.ndarray:
+    """Per-posting partial scores of one term: the one numpy copy of the
+    BM25 expression (CLAUDE.md "Score formula shape"), shared by the
+    Spark decode UDFs (candidate_scores, search_many) and the local
+    plan. ``dls`` is read only in bm25 mode."""
+    if mode == "bm25":
+        dls = dls.astype(np.float64)
+        denom = tfs + K1 * (1 - B + B * dls / avgdl)
+        return idf * (tfs * (K1 + 1)) / denom
+    return tfs / max_tf_sum  # relevance_ref (IndexRepository.java:14-20)
+
+
+def _value(bc):
+    """A broadcast's value inside a UDF, None for no broadcast."""
+    return bc.value if bc is not None else None
+
+
+def _decode_blocks(batches, streams, ranges, deleted):
+    """The one decode kernel every posting reader runs: in mapInPandas
+    for the Spark plans, in-process for the local plan. It closes over
+    nothing (arrays come in as arguments), so a reader's UDF pickles
+    without the engine.
 
     For each term group of each scan batch: ONE grouped codec pass over
     the doc_ids plus only the requested ``streams`` (any of "tfs",
     "dls", "positions"; VByte buffers concatenate, see
     codec.varbyte_decode_groups), then the doc_id range mask (``ranges``:
     term -> (lo, hi) span arrays, so ranges may differ per term; a term
-    without an entry is unmasked) and the delete-vector mask, each
-    applied once to every stream row-aligned — positions by repeating
-    the row mask over each row's tf. Yields, per batch that keeps any
-    posting, a list of (term, cols): "doc_ids"/"tfs" int64, "dls"
-    uint64, "positions" one flat int64 array segmented by cols["tfs"]."""
+    without an entry is unmasked) and the delete-vector mask
+    (``deleted``: the sorted id array, or None), each applied once to
+    every stream row-aligned — positions by repeating the row mask over
+    each row's tf. Yields, per batch that keeps any posting, a list of
+    (term, cols): "doc_ids"/"tfs" int64, "dls" uint64, "positions" one
+    flat int64 array segmented by cols["tfs"]."""
     from ..functions.codec import (
         decode_doc_ids_grouped,
         decode_positions_grouped,
         varbyte_decode_groups,
     )
 
-    deleted = deleted_bc.value if deleted_bc is not None else None
     for pdf in batches:
         if len(pdf) == 0:
             continue
@@ -138,9 +195,11 @@ def _decode_blocks(batches, streams, ranges, deleted_bc):
 
 
 class SearchEngine:
-    """Loads index metadata once, then serves queries over that
-    snapshot. A ``search`` call runs the top-k plan's jobs (AQE splits
-    one collect into stage jobs) plus one doc-store point-read."""
+    """Loads index metadata once, on the driver (pyarrow, no Spark job),
+    then serves queries over that snapshot. A bounded ``search`` runs the
+    local plan and the point-read on the driver (0 Spark jobs); a larger
+    one runs its Spark plan's jobs (AQE splits one collect into stage
+    jobs) plus the same point-read."""
 
     def __init__(
         self, spark: SparkSession, index_dir: str,
@@ -162,11 +221,13 @@ class SearchEngine:
 
             self.snapshot = resolve_snapshot(index_dir, snapshot_id)
             stats_root = str(stats_dir(index_dir, self.snapshot["stats_epoch"]))
-        # the one-row corpus_stats is read on the driver (pyarrow, no
-        # Spark job); documents and term_stats with their declared
-        # schemas (no inference job). postings keeps inference on
-        # purpose: has_positions and the empty/missing-dir split below
-        # read the on-disk schema.
+        self._stats_root = stats_root
+        # every init read runs on the driver with pyarrow (no Spark job):
+        # the one-row corpus_stats, the delete vector, and the datasets
+        # (file listings) of term_stats and documents with their declared
+        # schemas — a missing dir raises FileNotFoundError here, the
+        # API's no-index signal. The Spark frames over the same tables
+        # (postings, term_stats, documents below) are built on first use.
         corpus = schemas.read_row(f"{stats_root}/corpus_stats")
         # bucket layout is persisted with the index (corpus_stats.n_buckets);
         # a caller-supplied mismatch would silently prune the wrong partition
@@ -185,69 +246,58 @@ class SearchEngine:
         self.max_tf_sum = float(corpus["max_tf_sum"] or 1.0)
         _ep = corpus.get("stats_epoch")
         self._stats_epoch = int(_ep) if _ep is not None else None
-        self.term_stats = schemas.read_table(
-            spark, f"{stats_root}/term_stats", schemas.TERM_STATS
+        self._dictionary = schemas.arrow_dataset(
+            f"{stats_root}/term_stats", schemas.TERM_STATS, ("term", "df")
         )
-        try:
-            self.postings = spark.read.parquet(f"{index_dir}/postings")
-        except AnalysisException as ex:
-            # a valid index over an EMPTY corpus has zero parts and thus no
-            # postings directory at all — queries must return empty, not
-            # die. Anything but the missing-path case is a REAL error
-            # (corrupt footer, permissions) and must propagate, never be
-            # silently read as "no matches". The empty fallback is ONLY
-            # legal when the corpus is actually empty: a populated index
-            # with no postings dir means a crashed compaction swap
-            # (postings renamed away, replacement not renamed in) — that
-            # must stay loud, never become silently-zero results.
-            # UNABLE_TO_INFER_SCHEMA = the postings dir EXISTS with part
-            # dirs but zero data files: the committed shape of a build
-            # whose every document analyzed to zero terms (non-blank but
-            # symbol-only text — hygiene keeps the docs, the analyzer
-            # emits nothing, and writing an empty partitioned frame
-            # produces no files). That index is valid; queries are empty.
-            if "UNABLE_TO_INFER_SCHEMA" in str(ex):
-                self.postings = local_frame(spark, [], schemas.POSTINGS)
-            else:
-                if "PATH_NOT_FOUND" not in str(ex):
-                    raise
-                if self.n_docs > 0:
-                    raise RuntimeError(
-                        f"index at {index_dir} has n_docs={self.n_docs} but "
-                        "no postings directory — likely a crashed "
-                        "compact_index swap; restore _postings_old/"
-                        "_postings_compacting or rebuild"
-                    ) from ex
-                self.postings = local_frame(spark, [], schemas.POSTINGS)
-        if self.snapshot is not None:
-            # as-of reads pin the commit's membership: parts by partition
-            # predicate (isin over the part_id dir column — an empty live
-            # set matches nothing), documents by exact file list (appends
-            # only ever ADD files, so the pinned list is immutable)
-            live = [int(p) for p in self.snapshot["part_ids"]]
-            if "part_id" in self.postings.columns:
-                self.postings = self.postings.filter(
-                    F.col("part_id").isin(live) if live else F.lit(False)
-                )
-            files = [
+        # as-of reads pin the commit's documents by exact file list
+        # (appends only ever ADD files, so the pinned list is immutable)
+        self._documents_files: str | list[str] = (
+            f"{index_dir}/documents" if self.snapshot is None else [
                 f"{index_dir}/documents/{name}"
                 for name in self.snapshot["documents_files"]
             ]
-            self.documents = (
-                schemas.read_table(spark, files, schemas.DOCUMENTS)
-                if files
-                else local_frame(spark, [], schemas.DOCUMENTS)
+        )
+        self._docstore = schemas.arrow_dataset(
+            self._documents_files, schemas.DOCUMENTS,
+            ("doc_id", "conv_id", "turn_idx", "text"),
+        )
+        # postings: discovered (hive part_id/bucket dirs), so the schema
+        # — has_positions — comes from one footer. A valid index over an
+        # EMPTY corpus has no postings directory at all, and one whose
+        # every document analyzed to zero terms (symbol-only text:
+        # hygiene keeps the docs, the analyzer emits nothing) has part
+        # dirs but no data files; both serve empty results (_blocks is
+        # None). The missing dir is legal ONLY when the corpus is empty:
+        # a populated index without one means a crashed compaction swap
+        # (postings renamed away, replacement not renamed in) — that must
+        # stay loud, never become silently-zero results. Any other read
+        # error (corrupt footer, permissions) propagates.
+        self._blocks: ds.Dataset | None = None
+        postings_dir = Path(index_dir) / "postings"
+        if postings_dir.exists():
+            blocks = ds.dataset(
+                str(postings_dir), format="parquet", partitioning="hive"
             )
-        else:
-            self.documents = schemas.read_table(
-                spark, f"{index_dir}/documents", schemas.DOCUMENTS
+            self._blocks = blocks if blocks.files else None
+        elif self.n_docs > 0:
+            raise RuntimeError(
+                f"index at {index_dir} has n_docs={self.n_docs} but "
+                "no postings directory — likely a crashed "
+                "compact_index swap; restore _postings_old/"
+                "_postings_compacting or rebuild"
             )
-        # delete vector (operators/deletes.py, upsert support): collected
-        # once per engine, masked out by the decode kernel and
-        # anti-joined off the documents view, so replaced docs neither
-        # score nor surface. Pinned snapshots load THEIR vector (a
-        # snapshot taken before an upsert correctly still sees the old
-        # doc). None (the common case) costs nothing anywhere.
+        # store_positions=True builds widen postings with the per-block
+        # positions stream; search_phrase picks the indexed path off it
+        self.has_positions = (
+            self._blocks is not None
+            and "positions" in self._blocks.schema.names
+        )
+        # delete vector (operators/deletes.py, upsert support): read once
+        # per engine, masked out by the decode kernel, subtracted from
+        # every documents read (present, the Spark documents view), so
+        # replaced docs neither score nor surface. Pinned snapshots load
+        # THEIR vector (a snapshot taken before an upsert correctly still
+        # sees the old doc). None (the common case) costs nothing.
         from .deletes import committed_delete_batch_dirs, load_deleted_ids
 
         # HEAD reads apply only COMMITTED batches (marker row present):
@@ -261,27 +311,65 @@ class SearchEngine:
             if self.snapshot is not None
             else committed_delete_batch_dirs(index_dir),
         )
-        # the decode kernel consumes the vector via a Spark BROADCAST, not
-        # a closure capture: a closure ships the O(replaced-docs) int64
-        # array inside EVERY task's serialized UDF, a broadcast ships it
-        # once per executor (torrent blocks) and tasks read the cached
-        # value — the difference between O(tasks) and O(executors) copies
-        # on a high-churn corpus between compactions. It lives as long as
-        # the engine's SparkContext (vectors are compaction-bounded and
-        # tiny next to executor memory, so no explicit unpersist).
-        self._deleted_bc = (
-            spark.sparkContext.broadcast(self._deleted)
-            if self._deleted is not None
-            else None
-        )
-        if self._deleted is not None:
-            ddf = local_frame(
-                spark, pd.DataFrame({"doc_id": self._deleted}), "doc_id long"
-            )
-            self.documents = self.documents.join(
-                F.broadcast(ddf), "doc_id", "left_anti"
-            )
         self._init_caches()
+
+    # -- the Spark views, built on first use (a bounded query needs none)
+    @cached_property
+    def postings(self) -> DataFrame:
+        """The posting blocks, read with their declared schema (the
+        part_id dir column is discovered from the paths, no job)."""
+        schema = schemas.postings_schema(self.has_positions)
+        if self._blocks is None:
+            return local_frame(self.spark, [], schema)
+        blocks = schemas.read_table(
+            self.spark, f"{self.index_dir}/postings", schema
+        )
+        if self.snapshot is not None and "part_id" in blocks.columns:
+            # as-of reads pin the commit's parts by partition predicate
+            # (an empty live set matches nothing)
+            live = [int(p) for p in self.snapshot["part_ids"]]
+            blocks = blocks.filter(
+                F.col("part_id").isin(live) if live else F.lit(False)
+            )
+        return blocks
+
+    @cached_property
+    def term_stats(self) -> DataFrame:
+        return schemas.read_table(
+            self.spark, f"{self._stats_root}/term_stats", schemas.TERM_STATS
+        )
+
+    @cached_property
+    def documents(self) -> DataFrame:
+        """The doc store (the pinned file list when snapshot-pinned),
+        delete vector anti-joined."""
+        files = self._documents_files
+        docs = (
+            schemas.read_table(self.spark, files, schemas.DOCUMENTS)
+            if files
+            else local_frame(self.spark, [], schemas.DOCUMENTS)
+        )
+        if self._deleted is None:
+            return docs
+        ddf = local_frame(
+            self.spark, pd.DataFrame({"doc_id": self._deleted}), "doc_id long"
+        )
+        return docs.join(F.broadcast(ddf), "doc_id", "left_anti")
+
+    @cached_property
+    def _deleted_bc(self):
+        """The delete vector as a Spark BROADCAST for the Spark plans'
+        decode UDFs, not a closure capture: a closure ships the
+        O(replaced-docs) int64 array inside EVERY task's serialized UDF,
+        a broadcast ships it once per executor (torrent blocks) and tasks
+        read the cached value — the difference between O(tasks) and
+        O(executors) copies on a high-churn corpus between compactions.
+        It lives as long as the engine's SparkContext (vectors are
+        compaction-bounded and tiny next to executor memory, so no
+        explicit unpersist). None when there are no deletes."""
+        if self._deleted is None:
+            return None
+        return self.spark.sparkContext.broadcast(self._deleted)
 
     def _init_caches(self) -> None:
         # A SearchEngine is a SNAPSHOT view of an immutable index (it
@@ -295,9 +383,6 @@ class SearchEngine:
         self._stored_bmx_valid: bool | None = None
         # plan-audit breadcrumbs from the last _maxscore_topk run
         self.last_maxscore_stats: dict | None = None
-        # store_positions=True builds widen postings with the per-block
-        # positions stream; search_phrase picks the indexed path off it
-        self.has_positions = "positions" in self.postings.columns
 
     VALID_MODES = ("bm25", "relevance_ref")
 
@@ -345,18 +430,21 @@ class SearchEngine:
         return infos, n_missing
 
     def _fill_df_cache(self, terms: list[str]) -> None:
-        """Memoize dictionary rows for ``terms`` in one driver job; absent
-        terms memoize as None (the single- and batch-query paths must
-        share this contract — see lookup_terms / search_many)."""
+        """Memoize dictionary rows for ``terms`` in one driver-side
+        pyarrow read (no Spark job); absent terms memoize as None (the
+        single- and batch-query paths must share this contract — see
+        lookup_terms / search_many). Both term_stats writers sort each
+        file by term, so the equality filter keeps each file's footer
+        plus <= |terms| row groups, not the whole vocabulary."""
         uncached = [t for t in terms if t not in self._df_cache]
         if not uncached:
             return
-        rows = (
-            self.term_stats.filter(F.col("term").isin(uncached))
-            .select("term", "df")
-            .collect()
+        found = self._dictionary.to_table(
+            columns=["term", "df"], filter=_pa_any_of("term", uncached)
         )
-        hit = {r["term"]: int(r["df"]) for r in rows}
+        hit = dict(zip(
+            found.column("term").to_pylist(), found.column("df").to_pylist()
+        ))
         for t in uncached:
             self._df_cache[t] = hit.get(t)
 
@@ -373,12 +461,24 @@ class SearchEngine:
     # decoded doc_ids to the ranges so pruned docs never enter the shuffle.
     PRUNE_MAX_RARE_BLOCKS = 4096   # skip pruning when the rarest term is hot
     PRUNE_MAX_FILTER_RANGES = 64   # OR-chain size Catalyst handles happily
-    # Interactive plan routing: a plain search_ids runs the packed
-    # search_many plan only when the query's summed df (= decoded
-    # postings volume) clears this floor; below it the classic pivot
-    # plan's lower fixed cost wins. Measured crossover ~1M postings at
-    # local[8] on 717k- and 2.87M-doc corpora (BENCH.md).
+    # Interactive plan routing (_route), on the query's summed df (=
+    # decoded postings volume). A plain search_ids runs the packed
+    # search_many plan only when it clears this floor; below it the
+    # classic pivot plan's lower fixed cost wins. Measured crossover ~1M
+    # postings at local[8] on 717k- and 2.87M-doc corpora (BENCH.md).
     BATCH_PLAN_MIN_POSTINGS = 1_000_000
+    # Single-term block-max pruning (SURVEY.md §7.3, the true block-max
+    # half of "block-max WAND") and multi-term MaxScore: engage only when
+    # decoding the whole posting list is expensive enough to buy back
+    # the extra seed job
+    BLOCKMAX_MIN_POSTINGS = 100_000
+    # Below this the query runs on the driver (the local plan): decoding
+    # 100k postings takes a few ms at the measured ~22 Mpostings/s,
+    # against ~1 CPU-s of Spark fixed cost per query. Postings average
+    # ~7.2 B, so the df bound also bounds the bytes read. Equal to
+    # BLOCKMAX_MIN_POSTINGS, so the regimes do not overlap: local below,
+    # the Spark plans at or above it.
+    LOCAL_PLAN_MAX_POSTINGS = BLOCKMAX_MIN_POSTINGS
 
     @staticmethod
     def _merge_spans(
@@ -629,8 +729,7 @@ class SearchEngine:
                 if not ranges:
                     ranges = [(1, 0)]  # empty intersection -> no blocks
 
-        bm25 = mode == "bm25"
-        streams = ("tfs", "dls") if bm25 else ("tfs",)
+        streams = ("tfs", "dls") if mode == "bm25" else ("tfs",)
         cols = ["term", "doc_ids", *streams]
         blocks = (
             self._scan_blocks(terms, ranges, cols)
@@ -639,7 +738,7 @@ class SearchEngine:
         )
         span = {t: _span_arrays(ranges) for t in terms} if ranges else None
         # ship-once-per-executor broadcast handle (None when no deletes);
-        # the kernel dereferences .value executor-side
+        # the UDF dereferences .value executor-side
         deleted_bc = self._deleted_bc
 
         out_schema = T.StructType(
@@ -651,17 +750,14 @@ class SearchEngine:
         )
 
         def decode_score(batches):
-            for groups in _decode_blocks(batches, streams, span, deleted_bc):
+            deleted = _value(deleted_bc)
+            for groups in _decode_blocks(batches, streams, span, deleted):
                 outs = []
                 for term, c in groups:
                     order, idf = params[term]
-                    tfs = c["tfs"]
-                    if bm25:
-                        dls = c["dls"].astype(np.float64)
-                        denom = tfs + K1 * (1 - B + B * dls / avgdl)
-                        s = idf * (tfs * (K1 + 1)) / denom
-                    else:  # relevance_ref (IndexRepository.java:14-20)
-                        s = tfs / max_tf_sum
+                    s = _partial_scores(
+                        c["tfs"], c.get("dls"), idf, mode, avgdl, max_tf_sum
+                    )
                     outs.append(
                         pd.DataFrame(
                             {
@@ -676,7 +772,10 @@ class SearchEngine:
         return blocks.mapInPandas(decode_score, schema=out_schema)
 
     # ------------------------------------------------------------------
-    PLANS = ("classic", "packed", "blockmax", "maxscore")
+    PLANS = ("local", "classic", "packed", "blockmax", "maxscore")
+    # arguments only the classic plan serves (every other plan refuses
+    # them when forced); the local plan also serves offset and max_df
+    CLASSIC_ONLY = ("scope", "role")
 
     def _route(
         self,
@@ -692,24 +791,38 @@ class SearchEngine:
         """Pick the top-k plan for an already looked-up query -> (plan,
         reason). Pure: no Spark job, it reads only the dfs in ``infos``
         and the routing thresholds. ``plan`` forces one; a forced
-        non-classic plan refuses offset/scope/role/max_df (those ride the
-        classic plan) with ONE QueryArgumentError."""
+        non-classic plan refuses the arguments that ride the classic plan
+        (the local plan: scope/role; the Spark plans: offset/scope/role/
+        max_df too) with ONE QueryArgumentError.
+
+        Auto routing: scope/role ride the classic plan. Otherwise a plain
+        query's hot plans come first (block-max, MaxScore, packed — the
+        thresholds a caller shadows low to force them at toy scale),
+        then a summed df under LOCAL_PLAN_MAX_POSTINGS runs on the
+        driver (offset and max_df too), and the rest runs the classic
+        plan. With the default thresholds the local and Spark regimes
+        do not overlap."""
         if plan is not None and plan not in self.PLANS:
             raise QueryArgumentError(
                 f"unknown plan {plan!r}; valid: {self.PLANS}"
             )
-        feature = next((name for name, on in (
+        features = [name for name, on in (
             ("offset", offset != 0), ("scope", scope is not None),
             ("role", role is not None), ("max_df", max_df is not None),
-        ) if on), None)
+        ) if on]
+        classic_only = [f for f in features if f in self.CLASSIC_ONLY]
         if plan == "classic":
             return plan, "forced"
         if plan is not None:
-            if feature is not None:
+            refused, needs = (
+                (classic_only, "scope=None, role=None") if plan == "local"
+                else (features, "offset=0, scope=None, role=None, "
+                      "max_df=None")
+            )
+            if refused:
                 raise QueryArgumentError(
-                    f"plan={plan!r} requires offset=0, scope=None, "
-                    f"role=None, max_df=None ({feature} rides the classic "
-                    "plan)"
+                    f"plan={plan!r} requires {needs} ({refused[0]} rides "
+                    "the classic plan)"
                 )
             if plan == "blockmax" and len(infos) != 1 and not (
                 conjunctive and n_missing
@@ -725,18 +838,25 @@ class SearchEngine:
                     "doc_id ranges"
                 )
             return plan, "forced"
-        if feature is not None:
-            return "classic", feature
+        if classic_only:
+            return "classic", classic_only[0]
         if not infos or (conjunctive and n_missing):
             return "classic", "no match"
         total = sum(ti.df for ti in infos)
-        if len(infos) == 1 and total >= self.BLOCKMAX_MIN_POSTINGS:
-            return "blockmax", "df >= BLOCKMAX_MIN_POSTINGS"
-        if not conjunctive and total >= self.BLOCKMAX_MIN_POSTINGS:
-            return "maxscore", "summed df >= BLOCKMAX_MIN_POSTINGS"
-        if total >= self.BATCH_PLAN_MIN_POSTINGS:
-            return "packed", "summed df >= BATCH_PLAN_MIN_POSTINGS"
+        if not features:
+            if len(infos) == 1 and total >= self.BLOCKMAX_MIN_POSTINGS:
+                return "blockmax", "df >= BLOCKMAX_MIN_POSTINGS"
+            if not conjunctive and total >= self.BLOCKMAX_MIN_POSTINGS:
+                return "maxscore", "summed df >= BLOCKMAX_MIN_POSTINGS"
+            if total >= self.BATCH_PLAN_MIN_POSTINGS:
+                return "packed", "summed df >= BATCH_PLAN_MIN_POSTINGS"
+        if total < self.LOCAL_PLAN_MAX_POSTINGS:
+            return "local", "summed df < LOCAL_PLAN_MAX_POSTINGS"
+        if features:
+            return "classic", features[0]
         return "classic", "summed df < BATCH_PLAN_MIN_POSTINGS"
+
+    TOPK_SCHEMA = "doc_id long, score double"
 
     def search_ids(
         self,
@@ -761,24 +881,44 @@ class SearchEngine:
         stats stay global like scope.
 
         Plan selection (``plan``: None = route by cost, or one of
-        "classic" | "packed" | "blockmax" | "maxscore" to force it; see
-        _route). Any
-        offset/scope/role/max_df query runs the classic row-partials
-        pivot. A plain query routes on the query terms' summed df (the
-        exact decoded-postings volume, already memoized by the dictionary
-        lookup): a hot SINGLE term (df >= BLOCKMAX_MIN_POSTINGS) runs the
-        two-pass block-max plan (_single_term_topk); a hot multi-term
-        DISJUNCTIVE query the two-pass MaxScore bound-sum plan
-        (_maxscore_topk, which may bail back to classic when its bounds
-        are too flat to prune — a forced "maxscore" never bails); a
-        summed df >= BATCH_PLAN_MIN_POSTINGS the packed varbyte exchange
-        + dense-numpy scoring plan (flat until large volumes — 4.1 s ->
+        "local" | "classic" | "packed" | "blockmax" | "maxscore" to force
+        it; see _route). Any scope/role query runs the classic
+        row-partials pivot. A query routes on the query terms' summed df
+        (the exact decoded-postings volume, already memoized by the
+        dictionary lookup): under LOCAL_PLAN_MAX_POSTINGS it runs on the
+        driver (_local_topk: pyarrow read + the one decode kernel +
+        numpy, no Spark job; offset and max_df included). Above it, an
+        offset/max_df query runs the classic plan, and a plain one: a
+        hot SINGLE term (df >= BLOCKMAX_MIN_POSTINGS) the two-pass
+        block-max plan (_single_term_topk); a hot multi-term DISJUNCTIVE
+        query the two-pass MaxScore bound-sum plan (_maxscore_topk,
+        which may bail back to classic when its bounds are too flat to
+        prune — a forced "maxscore" never bails); a summed df >=
+        BATCH_PLAN_MIN_POSTINGS the packed varbyte exchange +
+        dense-numpy scoring plan (flat until large volumes — 4.1 s ->
         1.5 s on a 7.5M-posting query over a 2.8M-doc index at local[8];
         measured crossover ~1M postings on both the 717k- and 2.87M-doc
-        corpora, BENCH.md "interactive plan routing"); anything smaller
-        the classic plan, whose fixed cost is lower. All plans are
-        bit-identical by contract (tests/test_query.py compares each
-        against "classic")."""
+        corpora, BENCH.md "interactive plan routing"); anything in
+        between the classic plan, whose fixed cost is lower. All plans
+        are bit-identical by contract (tests/test_query.py compares each
+        against "classic"). The local plan's rows come back as a local
+        frame (no job to collect)."""
+        top = self._topk(
+            query, k, offset, mode, max_df, conjunctive, scope, role, plan
+        )
+        if isinstance(top, DataFrame):
+            return top
+        return local_frame(self.spark, top, self.TOPK_SCHEMA)
+
+    def _topk(
+        self, query: str, k: int, offset: int, mode: str,
+        max_df: int | None, conjunctive: bool, scope: str | None,
+        role: str | None, plan: str | None,
+    ) -> list[tuple[int, float]] | DataFrame:
+        """Route and run one query: the (doc_id, score) rows when no
+        Spark plan runs (the local plan, an empty result), else the
+        Spark plan's lazy top-k frame. search_ids wraps rows in a local
+        frame; search hands them to present as they are."""
         self._check_mode(mode)
         infos, n_missing = self.lookup_terms(query, max_df=max_df)
         plan, reason = self._route(
@@ -789,7 +929,9 @@ class SearchEngine:
             # (reference error contract, SearchServiceImpl.java:60-62);
             # df-pruned terms (P3) do NOT trigger this — they are merely
             # excluded from scoring, matching the reference's pickNonFrequent
-            return self._empty_topk()
+            return []
+        if plan == "local":
+            return self._local_topk(infos, k, offset, mode, conjunctive)
         if plan == "blockmax":
             return self._single_term_topk(infos[0], k, mode)
         if plan == "maxscore":
@@ -808,7 +950,7 @@ class SearchEngine:
         if scope is not None:
             scope_ranges = self._scope_ranges(scope)
             if scope_ranges is None:  # scope matches no documents
-                return self._empty_topk()
+                return []
 
         return self._classic_topk(
             infos, k=k, offset=offset, mode=mode,
@@ -816,8 +958,89 @@ class SearchEngine:
             role=role,
         )
 
+    def _local_topk(
+        self, infos: list[TermInfo], k: int, offset: int, mode: str,
+        conjunctive: bool,
+    ) -> list[tuple[int, float]]:
+        """The local plan: the classic plan's answer, computed on the
+        driver with no Spark job. pyarrow reads the query terms' posting
+        blocks (_read_blocks: bucket partition filter + term row-group
+        filter), the one decode kernel decodes them and masks the delete
+        vector, _partial_scores scores each term, and the per-doc combine
+        sums the partials left to right in df-ascending order with +0.0
+        for a missing term — _pivot_combine's chain, so the doubles are
+        bit-identical. Conjunctive queries keep the docs holding every
+        term; the cut is (score DESC, doc_id ASC), then [offset,
+        offset + k). No rarest-term range pass: under the bound decoding
+        every block costs less than the extra read, and conjunctive
+        presence yields the same set."""
+        if k <= 0:
+            return []
+        streams = ("tfs", "dls") if mode == "bm25" else ("tfs",)
+        blocks = self._read_blocks(
+            [ti.term for ti in infos], ["term", "doc_ids", *streams]
+        )
+        decoded = {
+            term: c
+            for groups in _decode_blocks(
+                [blocks], streams, None, self._deleted
+            )
+            for term, c in groups
+        }
+        if not decoded:
+            return []
+        docs = np.unique(np.concatenate(
+            [c["doc_ids"] for c in decoded.values()]
+        ))
+        score = np.zeros(docs.size)
+        n_terms = np.zeros(docs.size, dtype=np.int64)
+        for ti in infos:  # df-ascending, left to right
+            part = np.zeros(docs.size)  # +0.0 where the term is missing
+            c = decoded.get(ti.term)
+            if c is not None:
+                rows = np.searchsorted(docs, c["doc_ids"])
+                part[rows] = _partial_scores(
+                    c["tfs"], c.get("dls"), self._idf(ti.df), mode,
+                    self.avgdl, self.max_tf_sum,
+                )
+                n_terms[rows] += 1
+            score += part
+        if conjunctive:
+            keep = n_terms == len(infos)
+            docs, score = docs[keep], score[keep]
+        order = np.lexsort((docs, -score))[offset:offset + k]
+        return list(zip(docs[order].tolist(), score[order].tolist()))
+
+    def _read_blocks(
+        self, terms: list[str], columns: list[str]
+    ) -> pd.DataFrame:
+        """The local plan's posting-block read: pyarrow over the postings
+        dataset, with the terms' bucket partition filter (whole bucket
+        dirs skipped), the term filter (row-group min/max; equalities,
+        see _pa_any_of) and, on a snapshot-pinned engine, the pinned
+        part_ids — the driver-side twin of _scan_blocks."""
+        from ..functions.spark_hash import spark_bucket
+
+        if self._blocks is None:
+            return pd.DataFrame(columns=columns)
+        pred = _pa_any_of(
+            "bucket", [spark_bucket(t, self.n_buckets) for t in terms]
+        ) & _pa_any_of("term", terms)
+        pinned = self.snapshot is not None
+        if pinned and "part_id" in self._blocks.schema.names:
+            live = [int(p) for p in self.snapshot["part_ids"]]
+            if not live:
+                return pd.DataFrame(columns=columns)
+            pred = pred & _pa_any_of("part_id", live)
+        # one thread: a bounded read touches a few dozen small files, and
+        # the thread pool cost more CPU than it saved (22 vs 39 ms for 72
+        # fragments)
+        return self._blocks.to_table(
+            columns=columns, filter=pred, use_threads=False
+        ).to_pandas()
+
     def _empty_topk(self) -> DataFrame:
-        return local_frame(self.spark, [], "doc_id long, score double")
+        return local_frame(self.spark, [], self.TOPK_SCHEMA)
 
     def _classic_topk(
         self,
@@ -890,11 +1113,6 @@ class SearchEngine:
         return scored.select("doc_id", "score")
 
     # ------------------------------------------------------------------
-    # Single-term block-max pruning (SURVEY.md §7.3, the true block-max
-    # half of "block-max WAND"): engage only when decoding the whole
-    # posting list is expensive enough to buy back the extra seed job
-    BLOCKMAX_MIN_POSTINGS = 100_000
-
     def _stored_blockmax_valid(self) -> bool:
         """True iff the stored per-block ``block_max_score`` column is
         provably consistent with CURRENT corpus stats: every part's
@@ -1008,15 +1226,15 @@ class SearchEngine:
         (tf, dl) == (max_tf, dl_eff) the bound equals its score
         bit-for-bit, so the ``bound >= tau`` keep-test is tie-safe.
         Indexes encoded before the min_dl column exist fall back to
-        dl_eff = max_tf (sound, looser)."""
+        dl_eff = max_tf (sound, looser: the declared read gives null)."""
         mt = F.col("max_tf").cast("double")
         if mode == "bm25":
             if self._stored_blockmax_valid():
                 return F.col("block_max_score")
-            dl_eff = (
-                F.greatest(F.col("min_dl"), F.col("max_tf")).cast("double")
-                if "min_dl" in self.postings.columns
-                else mt
+            # min_dl reads as null on indexes encoded before the
+            # column, and greatest skips nulls: dl_eff = max_tf there
+            dl_eff = F.greatest(F.col("min_dl"), F.col("max_tf")).cast(
+                "double"
             )
             idf_map = F.create_map(
                 *[
@@ -1316,7 +1534,8 @@ class SearchEngine:
         deleted_bc = self._deleted_bc
 
         def gen(batches):
-            for groups in _decode_blocks(batches, streams, span, deleted_bc):
+            deleted = _value(deleted_bc)
+            for groups in _decode_blocks(batches, streams, span, deleted):
                 outs = []
                 for term, c in groups:
                     pos = c["positions"].astype(np.int32)
@@ -1589,7 +1808,8 @@ class SearchEngine:
         )
 
         def decode_ids(batches):
-            for groups in _decode_blocks(batches, (), span, deleted_bc):
+            deleted = _value(deleted_bc)
+            for groups in _decode_blocks(batches, (), span, deleted):
                 ids = np.concatenate([c["doc_ids"] for _, c in groups])
                 yield pd.DataFrame({"doc_id": ids})
 
@@ -1768,26 +1988,24 @@ class SearchEngine:
     def mlt_terms(self, doc_id: int, n_terms: int = 3) -> list[str]:
         """The term-selection half of ``more_like_this``: the source
         doc's top ``n_terms`` dictionary lemmas by tf*idf (tie: term
-        ASC), returned sorted — one pruned point-read of the doc store
-        plus the memoized dictionary lookup; the idf is the scorer's
-        own (_idf over LIVE n_docs), so selection and scoring can never
-        disagree about term weight. Exposed so presentation layers
-        (api.similar) can highlight the very terms the query used.
+        ASC), returned sorted — one driver-side point-read of the doc
+        store plus the memoized dictionary lookup (no Spark job); the
+        idf is the scorer's own (_idf over LIVE n_docs), so selection
+        and scoring can never disagree about term weight. Exposed so
+        presentation layers (api.similar) can highlight the very terms
+        the query used.
         Raises QueryArgumentError for an unknown (or deleted/replaced)
         doc."""
         doc_id = int(doc_id)
-        rows = (
-            self.documents.filter(F.col("doc_id") == doc_id)
-            .select("text").collect()
-        )
-        if not rows:
+        doc = self.documents_by_id([doc_id]).get(doc_id)
+        if doc is None:
             raise QueryArgumentError(
                 f"doc_id {doc_id} not found in the doc store "
                 "(or deleted/replaced)"
             )
         from collections import Counter
 
-        tf = Counter(analyze_text(rows[0]["text"] or ""))
+        tf = Counter(analyze_text(doc[2] or ""))
         self._fill_df_cache(sorted(tf))
         ranked = sorted(
             (
@@ -1810,10 +2028,10 @@ class SearchEngine:
         the top-k cut. Cite: beyond-reference surface (Lucene's
         MoreLikeThis shape re-expressed over the classic pivot plan).
 
-        Plan: ONE pruned point-read of the doc store fetches the source
-        text (k-row work); term selection is driver-side arithmetic over
-        its |doc| lemma counts plus the already-memoized dictionary rows
-        (no extra job beyond the <=|doc|-row dictionary lookup); then the
+        Plan: ONE driver-side point-read of the doc store fetches the
+        source text; term selection is driver-side arithmetic over its
+        |doc| lemma counts plus the <=|doc|-row dictionary lookup (both
+        pyarrow reads, no Spark job); then the
         standard disjunctive classic plan — bucket/term-pruned scan,
         pivot, FIXED df-asc accumulation order — scores the candidates.
         tf*idf selection uses the same idf the scorer uses (_idf over
@@ -2087,7 +2305,8 @@ class SearchEngine:
             # the kernel's per-term mask is the union over ALL subscribing
             # queries' rarest ranges (lossless, see docstring), so pruned
             # docs never enter the exchange
-            for groups in _decode_blocks(ordered, streams, span, deleted_bc):
+            deleted = _value(deleted_bc)
+            for groups in _decode_blocks(ordered, streams, span, deleted):
                 o_rb, o_ti, o_ids, o_tf, o_dl = [], [], [], [], []
                 for term, c in groups:
                     ids, tfs, dls = c["doc_ids"], c["tfs"], c.get("dls")
@@ -2190,17 +2409,13 @@ class SearchEngine:
                 )
                 if ids.size == 0:
                     continue
-                if mode == "bm25":
-                    dls, _ = varbyte_decode_groups(list(dl_col[rows]))
-                    dls = dls.astype(np.float64)
-                    numer = tfs * (K1 + 1)
-                    denom = tfs + K1 * (1 - B + B * dls / avgdl)
-                    # literal operation order of the single-query path:
-                    # (idf * numer) / denom — NOT idf * (numer / denom),
-                    # which differs by an ulp
-                    s = idf_by_ti[ti_val] * numer / denom
-                else:  # relevance_ref
-                    s = tfs / max_tf_sum
+                dls = (
+                    varbyte_decode_groups(list(dl_col[rows]))[0]
+                    if mode == "bm25" else None
+                )
+                s = _partial_scores(
+                    tfs, dls, idf_by_ti[ti_val], mode, avgdl, max_tf_sum
+                )
                 row_rank = np.searchsorted(rbs, rb_col[rows])
                 rank = np.repeat(row_rank, cnt)
                 idx = cum[rank] + (ids - rb_lo[rank])
@@ -2293,10 +2508,11 @@ class SearchEngine:
         only — pagination/scope/role/df-cutoff ride the classic plan);
         ``role`` restricts to matching doc-store roles (search_ids).
 
-        The top-k (doc_id, score) rows are collected once, then
-        ``present`` point-reads their documents and builds the snippets
-        on the driver; the result is a local frame ordered by
-        (score DESC, doc_id ASC)."""
+        The top-k (doc_id, score) rows — the local plan's as they are, a
+        Spark plan's collected once — go to ``present``, which
+        point-reads their documents and builds the snippets on the
+        driver; the result is a local frame ordered by (score DESC,
+        doc_id ASC). A bounded query runs no Spark job."""
         if exclude is not None:
             if (offset != 0 or scope is not None or max_df is not None
                     or role is not None):
@@ -2304,45 +2520,69 @@ class SearchEngine:
                     "exclude= requires offset=0, scope=None, role=None, "
                     "max_df=None"
                 )
-            ids = self.search_not(
+            top = self.search_not(
                 query, exclude, k=k, mode=mode, conjunctive=conjunctive
             )
         else:
-            ids = self.search_ids(
-                query, k=k, offset=offset, mode=mode, max_df=max_df,
-                conjunctive=conjunctive, scope=scope, role=role,
+            top = self._topk(
+                query, k, offset, mode, max_df, conjunctive, scope, role,
+                None,
             )
+        hits = top.collect() if isinstance(top, DataFrame) else top
         lemmas = set(analyze_text(query)) if with_snippets else None
         return local_frame(
-            self.spark, self.present(ids.collect(), lemmas),
-            schemas.SEARCH_RESULT,
+            self.spark, self.present(hits, lemmas), schemas.SEARCH_RESULT
         )
 
     def present(
-        self, hits: list, lemmas: set[str] | None
+        self, hits: list, lemmas: set[str] | None,
+        docs: dict[int, tuple] | None = None,
     ) -> list[tuple]:
         """Top-k (doc_id, score) rows -> result rows (doc_id, conv_id,
         turn_idx, score, snippet) sorted by (score DESC, doc_id ASC).
-        One doc_id ``isin`` point-read of the (delete-masked) doc store —
-        a JVM-only job over k ids — then ``make_snippet`` per row on the
-        driver; ``lemmas=None`` leaves the snippet null. Serves
-        ``search`` and ``EngineAPI.similar``."""
-        scores = {int(r["doc_id"]): float(r["score"]) for r in hits}
-        if not scores:
-            return []
-        docs = (
-            self.documents.filter(F.col("doc_id").isin(list(scores)))
-            .select("doc_id", "conv_id", "turn_idx", "text")
-            .collect()
-        )
+        One driver-side point-read of the doc store (documents_by_id,
+        no Spark job; ``docs`` passes one already read for a superset of
+        the hits), then ``make_snippet`` per row; ``lemmas=None`` leaves
+        the snippet null. Serves ``search`` (every plan),
+        ``EngineAPI.similar`` and ``EngineAPI.search_many``."""
+        scores = {int(d): float(s) for d, s in hits}
+        if docs is None:
+            docs = self.documents_by_id(scores)
         rows = [
             (
-                d["doc_id"], d["conv_id"], d["turn_idx"], scores[d["doc_id"]],
-                None if lemmas is None else make_snippet(d["text"], lemmas),
+                d, *docs[d][:2], s,
+                None if lemmas is None else make_snippet(docs[d][2], lemmas),
             )
-            for d in docs
+            for d, s in scores.items()
+            if d in docs
         ]
         return sorted(rows, key=lambda r: (-r[3], r[0]))
+
+    def documents_by_id(self, ids) -> dict[int, tuple]:
+        """doc_id -> (conv_id, turn_idx, text) for ``ids``, read on the
+        driver with pyarrow (the pinned file list on a snapshot-pinned
+        engine). Deleted ids are subtracted first, like every reader, so
+        a replaced doc never surfaces. The filter is doc_id between the
+        ids' min and max AND the equalities: documents are appended in
+        doc_id order, so row-group min/max stats prune."""
+        want = np.unique(np.fromiter(ids, dtype=np.int64))
+        if self._deleted is not None:
+            want = want[~np.isin(want, self._deleted)]
+        if want.size == 0:
+            return {}
+        vals = want.tolist()
+        doc_id = ds.field("doc_id")
+        found = self._docstore.to_table(
+            columns=["doc_id", "conv_id", "turn_idx", "text"],
+            filter=(doc_id >= vals[0]) & (doc_id <= vals[-1])
+            & _pa_any_of("doc_id", vals),
+        )
+        return {
+            d: rest for d, *rest in zip(*(
+                found.column(c).to_pylist()
+                for c in ("doc_id", "conv_id", "turn_idx", "text")
+            ))
+        }
 
     # ------------------------------------------------------------------
     def statistics(self) -> DataFrame:

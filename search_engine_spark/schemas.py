@@ -3,8 +3,9 @@
 Mirrors the reference's four JPA entities (Site/Page/Lemma/Index —
 model/Site.java:13-38, model/Page.java:12-32, model/Lemma.java:12-31,
 model/Index.java:11-27) re-shaped for columnar storage; see SURVEY.md §1.3
-for the mapping table. ``read_table`` and ``read_row`` (end of file) read
-a table back with its declared schema, without a schema-inference job.
+for the mapping table. ``read_table``, ``read_row`` and ``arrow_dataset``
+(end of file) read a table back with its declared schema, without a
+schema-inference job.
 """
 
 from __future__ import annotations
@@ -230,3 +231,29 @@ def read_row(path: str) -> dict:
     if not rows:
         raise FileNotFoundError(f"no row in {path}")
     return rows[0]
+
+
+def arrow_dataset(
+    paths: str | list[str], schema: T.StructType,
+    columns: tuple[str, ...] | None = None,
+):
+    """A driver-side pyarrow dataset over an engine table (a directory or
+    a list of files), declared like ``read_table``: no footer is read to
+    find the schema, a column the files lack reads as null, and a
+    directory with no data files reads as no rows (a missing path raises
+    FileNotFoundError). ``columns`` narrows the declared fields to the
+    ones a reader needs (documents carry Spark's INT96 ``ts``, which the
+    declared timestamp type would not match). Files whose names start
+    with ``.`` or ``_`` (``_SUCCESS``, checksums, ``_temporary/``) are
+    skipped. Scanning runs no Spark job."""
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fields = [
+        T.StructField(f.name, f.dataType, True)
+        for f in schema
+        if columns is None or f.name in columns
+    ]
+    return ds.dataset(
+        paths, schema=to_arrow_schema(T.StructType(fields)), format="parquet"
+    )

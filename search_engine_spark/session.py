@@ -13,6 +13,7 @@ All settings are chosen for a 100 TB corpus on a ~1000-executor cluster:
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 import os
 import tempfile
@@ -21,7 +22,6 @@ from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -153,23 +153,44 @@ def package_zip(pkg_dir: Path) -> Path:
     return zip_path
 
 
+def _placeholder(dt: T.DataType):
+    """A value of type ``dt`` for the one row an empty local frame drops."""
+    if isinstance(dt, T.StringType):
+        return ""
+    if isinstance(dt, T.BinaryType):
+        return b""
+    if isinstance(dt, T.BooleanType):
+        return False
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return 0.0
+    if isinstance(dt, T.IntegralType):
+        return 0
+    if isinstance(dt, T.TimestampType):
+        return datetime.datetime(1970, 1, 1)
+    if isinstance(dt, T.ArrayType):
+        return []
+    raise TypeError(f"no placeholder value for {dt.simpleString()}")
+
+
 def local_frame(
     spark: SparkSession, rows, schema: T.StructType | str
 ) -> DataFrame:
     """A small driver-built frame (``rows``: tuples in schema order or a
     pandas frame) that never becomes a Python RDD. ``createDataFrame`` of
     a Python list runs an RDD job every time the frame is evaluated, on
-    a second pool of Python workers; non-empty data goes as pandas with
-    the explicit schema, through Arrow into a LocalRelation (no job), and
-    an empty frame is typed null literals over ``range(0)`` (empty pandas
-    would fall back to the RDD path). Every engine local frame goes
-    through here."""
+    a second pool of Python workers; the rows go as pandas with the
+    explicit schema, through Arrow into a LocalRelation (no job). An
+    empty frame is one typed placeholder row cut by ``limit(0)``: empty
+    pandas would fall back to the RDD path, and typed nulls over
+    ``range(0)`` run a job on collect and lose the schema's non-null
+    fields. Every engine local frame goes through here."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     if len(rows) == 0:
-        return spark.range(0, 0, 1, 1).select(
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
-        )
+        row = [_placeholder(f.dataType) for f in schema]
+        return spark.createDataFrame(
+            pd.DataFrame([row], columns=schema.names), schema=schema
+        ).limit(0)
     if not isinstance(rows, pd.DataFrame):
         rows = pd.DataFrame(list(rows), columns=schema.names)
     return spark.createDataFrame(rows, schema=schema)

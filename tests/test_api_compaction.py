@@ -50,7 +50,7 @@ def test_search_no_results(spark, api):
 
 
 def test_search_many_envelope_matches_single(spark, api):
-    """Batched endpoint: one Spark job, per-query reference envelope,
+    """Batched endpoint: one scoring plan, per-query reference envelope,
     each query's page identical to the sequential search() on it."""
     qs = {"a": "query index", "b": "token stream"}
     out = api.search_many(qs, limit=5)
@@ -67,6 +67,32 @@ def test_search_many_envelope_matches_single(spark, api):
             d["relevance"] for d in single["data"]
         ]
         assert all("<b>" in d["snippet"] for d in batch["data"])
+
+
+@pytest.mark.parametrize("offset", [0, 5])
+@pytest.mark.parametrize("with_snippets", [True, False])
+def test_search_many_pages_equal_search(spark, api, offset, with_snippets):
+    """Every query's page in a search_many envelope equals search() for
+    that query: the same rows (doc_id, conv_id, turn_idx, relevance) in
+    the same order, and the same snippets when asked for (None when
+    not). The batch is presented through one point-read of the union
+    of its pages' doc ids."""
+    qs = {"a": "query index", "b": "token stream", "c": "token",
+          "d": "query zzzznonexistent", "e": "index merge spark"}
+    out = api.search_many(qs, offset=offset, limit=5,
+                          with_snippets=with_snippets)
+    assert out["result"]
+    for qid, q in qs.items():
+        single = api.search(q, offset=offset, limit=5)
+        batch = out["results"][qid]
+        assert batch["result"] and batch["count"] == single["count"], qid
+        if not with_snippets:
+            assert all(d["snippet"] is None for d in batch["data"]), qid
+            for d in single["data"]:
+                d["snippet"] = None
+        assert batch["data"] == single["data"], qid
+    assert out["results"]["a"]["count"] == 5
+    assert out["results"]["d"]["count"] == 0
 
 
 def test_search_many_pagination(spark, api):

@@ -1,21 +1,25 @@
-"""Read paths build no Python-RDD frames, and ``SearchEngine.search`` is
-exactly ``search_ids`` + the documents + ``make_snippet``.
+"""Read paths build no Python-RDD frames, ``SearchEngine.search`` is
+exactly ``search_ids`` + the documents + ``make_snippet``, and a bounded
+search runs no Spark job at all.
 
 A frame from ``createDataFrame(<python list>)`` scans a Python RDD: an
 RDD job on every evaluation, run by a second pool of Python workers.
 Every read-path local frame goes through ``session.local_frame``
-instead (Arrow LocalRelation, or typed nulls over ``range(0)``)."""
+instead (Arrow LocalRelation; one placeholder row cut by ``limit(0)``
+when empty)."""
 
 from __future__ import annotations
 
 import pytest
 
 from search_engine_spark import schemas
+from search_engine_spark.api import EngineAPI
 from search_engine_spark.functions.analyzer import analyze_text
 from search_engine_spark.functions.snippet import make_snippet
 from search_engine_spark.operators.incremental import incremental_update
 from search_engine_spark.operators.index_build import build_index
 from search_engine_spark.operators.query import SearchEngine
+from search_engine_spark.session import local_frame
 from search_engine_spark.synth import make_transcripts
 
 MISSING = "zzqnotaterm"
@@ -107,3 +111,49 @@ def test_missing_term_search_is_empty_with_result_schema(eng):
     assert [(f.name, f.dataType) for f in df.schema] == [
         (f.name, f.dataType) for f in schemas.SEARCH_RESULT
     ]
+
+
+def _jobs_since(spark, start: int | None = None) -> int:
+    """The highest Spark job id so far (``start=None``), or the number of
+    jobs started since ``start``. The status store is fed by the
+    listener bus, so it is drained first: an undrained bus under-counts."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    tracker = spark.sparkContext.statusTracker()
+    hw = max(tracker.getJobIdsForGroup(None) or [-1])
+    while tracker.getJobInfo(hw + 1) is not None:
+        hw += 1
+    return hw if start is None else hw - start
+
+
+@pytest.mark.parametrize(
+    "schema", [schemas.SEARCH_RESULT, schemas.POSTINGS, schemas.DOCUMENTS,
+               "doc_id long, score double"],
+    ids=["search-result", "postings", "documents", "topk"],
+)
+def test_empty_local_frame_collects_without_a_job(spark, schema):
+    df = local_frame(spark, [], schema)
+    h0 = _jobs_since(spark)
+    assert df.collect() == []
+    assert _jobs_since(spark, h0) == 0
+    if not isinstance(schema, str):
+        # nullability included: SEARCH_RESULT's fields are non-null
+        assert df.schema == schema
+
+
+def test_bounded_api_search_runs_no_spark_job(eng):
+    """A freshly invalidated engine (init) + bounded searches with
+    snippets — page 1, page 2, a one-term query and a missing term —
+    run 0 Spark jobs: every read is driver-side pyarrow, the plan is
+    the local one and the envelope collects a LocalRelation."""
+    api = EngineAPI(eng.spark, eng.index_dir)
+    h0 = _jobs_since(eng.spark)
+    pages = []
+    for query, offset in (("query index", 0), ("query index", 10),
+                          ("rewritten", 0), (MISSING, 0)):
+        api.invalidate()
+        res = api.search(query, offset=offset, limit=10)
+        assert res["result"] is True
+        pages.append(res["data"])
+    assert _jobs_since(eng.spark, h0) == 0
+    assert pages[0] and pages[1] and pages[2] and pages[3] == []
+    assert all("<b>" in row["snippet"] for row in pages[0])

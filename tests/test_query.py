@@ -27,6 +27,11 @@ def engine(spark, built_index):
     return SearchEngine(spark, out)
 
 
+# the oracle checks both the driver-side local plan (where every bounded
+# query routes) and the classic Spark plan (where larger queries route)
+ORACLE_PLANS = ("local", "classic")
+
+
 @pytest.mark.parametrize("spec", QUERIES, ids=[q["name"] for q in QUERIES])
 @pytest.mark.parametrize("mode", ["bm25", "relevance_ref"])
 def test_rank_identity(spec, mode, engine, oracle_idx):
@@ -36,22 +41,27 @@ def test_rank_identity(spec, mode, engine, oracle_idx):
         max_df=spec.get("max_df"),
         mode=mode,
     )
-    got = engine.search_ids(spec["q"], **kwargs).toPandas().reset_index(drop=True)
     exp = oracle_search(oracle_idx, spec["q"], **kwargs)
-    assert got["doc_id"].tolist() == exp["doc_id"].tolist(), spec["name"]
-    assert got["score"].tolist() == exp["score"].tolist(), spec["name"]
+    for plan in ORACLE_PLANS:
+        got = (
+            engine.search_ids(spec["q"], plan=plan, **kwargs)
+            .toPandas().reset_index(drop=True)
+        )
+        assert got["doc_id"].tolist() == exp["doc_id"].tolist(), plan
+        assert got["score"].tolist() == exp["score"].tolist(), plan
 
 
 @pytest.mark.parametrize("spec", QUERIES[:8], ids=[q["name"] for q in QUERIES[:8]])
 def test_rank_identity_disjunctive(spec, engine, oracle_idx):
-    got = (
-        engine.search_ids(spec["q"], k=10, conjunctive=False)
-        .toPandas()
-        .reset_index(drop=True)
-    )
     exp = oracle_search(oracle_idx, spec["q"], k=10, conjunctive=False)
-    assert got["doc_id"].tolist() == exp["doc_id"].tolist()
-    assert got["score"].tolist() == exp["score"].tolist()
+    for plan in ORACLE_PLANS:
+        got = (
+            engine.search_ids(spec["q"], k=10, conjunctive=False, plan=plan)
+            .toPandas()
+            .reset_index(drop=True)
+        )
+        assert got["doc_id"].tolist() == exp["doc_id"].tolist(), plan
+        assert got["score"].tolist() == exp["score"].tolist(), plan
 
 
 def test_full_search_projection(engine):
@@ -73,16 +83,17 @@ def test_full_search_projection(engine):
     ],
 )
 def test_batch_plan_equals_classic_plan(spec, engine):
-    """search_ids auto-routes plain queries through the packed
-    search_many plan; the two physical plans must stay bit-identical on
-    the whole (plain) reference query set."""
+    """The packed search_many plan (large plain queries) and the
+    driver-side local plan (bounded ones) must each stay bit-identical
+    to the classic plan on the whole (plain) reference query set."""
     k = spec.get("k", 10)
-    fast = engine.search_ids(spec["q"], k=k, plan="packed").toPandas()
     classic = engine.search_ids(
         spec["q"], k=k, plan="classic"
     ).toPandas()
-    assert fast["doc_id"].tolist() == classic["doc_id"].tolist(), spec["name"]
-    assert fast["score"].tolist() == classic["score"].tolist(), spec["name"]
+    for plan in ("packed", "local"):
+        fast = engine.search_ids(spec["q"], k=k, plan=plan).toPandas()
+        assert fast["doc_id"].tolist() == classic["doc_id"].tolist(), plan
+        assert fast["score"].tolist() == classic["score"].tolist(), plan
 
 
 def test_batch_plan_rejects_unsupported_args(engine):
@@ -457,8 +468,26 @@ FEATURES = {"offset": 5, "scope": "conv-0", "role": "user", "max_df": 9}
     [
         pytest.param(
             _infos(3, 40), 0, True, {}, {},
+            ("local", "summed df < LOCAL_PLAN_MAX_POSTINGS"),
+            id="local-small-df",
+        ),
+        *[
+            pytest.param(
+                _infos(3, 40), 0, True, {name: value}, {},
+                ("local", "summed df < LOCAL_PLAN_MAX_POSTINGS"),
+                id=f"local-{name}",
+            )
+            for name, value in (("offset", 5), ("max_df", 9))
+        ],
+        pytest.param(
+            _infos(3, 40), 0, False, {}, {},
+            ("local", "summed df < LOCAL_PLAN_MAX_POSTINGS"),
+            id="local-disjunctive",
+        ),
+        pytest.param(
+            _infos(3, 40), 0, True, {}, {"LOCAL_PLAN_MAX_POSTINGS": 0},
             ("classic", "summed df < BATCH_PLAN_MIN_POSTINGS"),
-            id="classic-small-df",
+            id="classic-above-local-bound",
         ),
         pytest.param(
             _infos(3, 40), 0, True, {}, {"BATCH_PLAN_MIN_POSTINGS": 43},
@@ -483,7 +512,8 @@ FEATURES = {"offset": 5, "scope": "conv-0", "role": "user", "max_df": 9}
         *[
             pytest.param(
                 _infos(3, 40), 0, False, {name: value},
-                {"BATCH_PLAN_MIN_POSTINGS": 1, "BLOCKMAX_MIN_POSTINGS": 1},
+                {"BATCH_PLAN_MIN_POSTINGS": 1, "BLOCKMAX_MIN_POSTINGS": 1,
+                 "LOCAL_PLAN_MAX_POSTINGS": 0},
                 ("classic", name),
                 id=f"classic-{name}",
             )
@@ -500,8 +530,12 @@ def test_route(engine, monkeypatch, infos, n_missing, conjunctive, kwargs,
     assert engine._route(infos, n_missing, conjunctive, **kwargs) == want
 
 
-@pytest.mark.parametrize("feature", sorted(FEATURES))
-@pytest.mark.parametrize("plan", ["packed", "blockmax", "maxscore"])
+@pytest.mark.parametrize(
+    "plan, feature",
+    [(plan, feature) for plan in ("packed", "blockmax", "maxscore")
+     for feature in sorted(FEATURES)]
+    + [("local", feature) for feature in ("role", "scope")],
+)
 def test_route_forced_plan_conflicts(engine, plan, feature):
     n = 1 if plan == "blockmax" else 2
     with pytest.raises(ValueError, match=f"{feature} rides the classic plan"):
@@ -599,3 +633,34 @@ def test_search_phrase_missing_lemma_is_empty(engine):
 def test_search_phrase_rejects_empty(engine):
     with pytest.raises(ValueError, match="zero lemmas"):
         engine.search_phrase("...", k=10)
+
+
+def test_dictionary_lookup_filter_prunes_row_groups(tmp_path):
+    """The lookup filter (_pa_any_of) on a term-sorted term_stats file
+    with many row groups keeps at most |q| row groups: an OR of
+    equalities, which pyarrow prunes on row-group min/max. Past the
+    equality cap, value runs still prune (clustered values -> the
+    row groups they fall in)."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.operators.query import _pa_any_of
+
+    terms = [f"term{i:05d}" for i in range(5000)]
+    path = str(tmp_path / "term_stats.parquet")
+    pq.write_table(
+        pa.table({"term": terms, "df": range(5000), "cf": range(5000)}),
+        path, row_group_size=100,
+    )
+    frag = next(ds.dataset(path, format="parquet").get_fragments())
+    assert frag.num_row_groups == 50
+    q = ["term00007", "term02500", "term04999", "zzzmissing"]
+    kept = frag.split_by_row_group(_pa_any_of("term", q))
+    assert 3 <= len(kept) <= len(q)
+    many = terms[1000:1200]  # past the cap, in two row groups
+    assert len(frag.split_by_row_group(_pa_any_of("term", many))) <= 3
+    found = ds.dataset(path, format="parquet").to_table(
+        filter=_pa_any_of("term", many)
+    )
+    assert found.column("term").to_pylist() == many

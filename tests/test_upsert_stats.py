@@ -1,4 +1,5 @@
-"""Post-batch stats of the upsert path (operators/incremental.py).
+"""Post-batch stats of the upsert path (operators/incremental.py), and
+the plans' answers over the same mutation history.
 
 An upsert computes its post-batch live term_stats/corpus_stats ONCE,
 into term_stats_new/ + corpus_stats_new/, encodes the new part with
@@ -7,7 +8,10 @@ that the one pass writes exactly what a recompute over the committed
 tables writes, and what the oracle computes over the net corpus, over
 a whole mutation history; that a crash before the documents append
 leaves the live stats untouched and never publishes the stale *_new;
-and how many Spark jobs one upsert runs.
+and how many Spark jobs one upsert runs. The same history drives the
+plan parity check: the driver-side local plan answers bit-identically
+to the classic Spark plan on every state, every snapshot pin and after
+compaction.
 """
 
 from __future__ import annotations
@@ -80,14 +84,16 @@ def _split(pdf):
             for a, b in ((0, 14), (14, 18), (18, 22))]
 
 
-def test_stats_parity_over_a_mutation_history(spark, tmp_path):
+def _history(spark, idx):
+    """Build, then upsert with replacements, an insert-only batch, a
+    deletes-only upsert (blank new text) and delete_docs of a whole
+    conversation over ``idx``; yields the net corpus after each step."""
     pdf = make_transcripts(n_conversations=22, seed=31)
     base, new, more = _split(pdf)
-    idx = str(tmp_path / "idx")
     build_index(spark, _sdf(spark, base), idx, n_parts=1, n_buckets=4,
                 resume=False)
     truth = base
-    _assert_stats_parity(spark, idx, truth)
+    yield truth
 
     # upsert with replacements: 4 changed base turns + new conversations
     changed = base[base["text"].str.strip() != ""].head(4).copy()
@@ -101,13 +107,13 @@ def test_stats_parity_over_a_mutation_history(spark, tmp_path):
         .query("_merge == 'left_only'").drop(columns="_merge"),
         changed, new,
     ])
-    _assert_stats_parity(spark, idx, truth)
+    yield truth
 
     # insert-only batch
     res = incremental_update(spark, _sdf(spark, more), idx)
     assert res["new_parts"] == 1 and res["replaced_docs"] == 0
     truth = pd.concat([truth, more])
-    _assert_stats_parity(spark, idx, truth)
+    yield truth
 
     # upsert whose new text is blank: a deletes-only commit
     blank = new[new["text"].str.strip() != ""].head(3).copy()
@@ -116,7 +122,7 @@ def test_stats_parity_over_a_mutation_history(spark, tmp_path):
     assert res == {"new_docs": 0, "new_parts": 0, "replaced_docs": 3}
     truth = truth.merge(blank[KEY], on=KEY, how="left", indicator=True)
     truth = truth[truth["_merge"] == "left_only"].drop(columns="_merge")
-    _assert_stats_parity(spark, idx, truth)
+    yield truth
 
     # delete_docs of a whole conversation
     gone = more["conv_id"].iloc[0]
@@ -125,7 +131,76 @@ def test_stats_parity_over_a_mutation_history(spark, tmp_path):
     )
     assert res["deleted_docs"] > 0
     truth = truth[truth["conv_id"] != gone]
-    _assert_stats_parity(spark, idx, truth)
+    yield truth
+
+
+def test_stats_parity_over_a_mutation_history(spark, tmp_path):
+    idx = str(tmp_path / "idx")
+    for truth in _history(spark, idx):
+        _assert_stats_parity(spark, idx, truth)
+
+
+# queries for the plan parity below: 1-3 terms, a page-2 cut, a df
+# cutoff, disjunctive, both scoring modes, a term the replacements add
+PARITY_QUERIES = [
+    ("token", {}),
+    ("query index", {}),
+    ("query index", {"offset": 5}),
+    ("token batch query", {"mode": "relevance_ref"}),
+    ("query index merge", {"conjunctive": False}),
+    ("spark token", {"max_df": 40}),
+    ("revised wording", {}),
+    ("revised token", {"conjunctive": False}),
+]
+
+
+def _assert_local_equals_classic(eng):
+    """Every parity query: the local plan's rows equal the classic
+    plan's, ids and score bits; most queries must hit something, or the
+    comparison would be vacuous."""
+    hits = 0
+    for q, kw in PARITY_QUERIES:
+        local = [tuple(r) for r in
+                 eng.search_ids(q, k=10, plan="local", **kw).collect()]
+        classic = [tuple(r) for r in
+                   eng.search_ids(q, k=10, plan="classic", **kw).collect()]
+        assert local == classic, (q, kw)
+        hits += bool(local)
+    assert hits >= 4, hits
+
+
+def test_local_plan_equals_classic_over_a_mutation_history(spark, tmp_path):
+    """The driver-side local plan against the classic Spark plan, bit
+    for bit, over a fresh, upserted, insert-appended, deleted (both
+    delete paths), compacted and snapshot-pinned index."""
+    from search_engine_spark.operators.compaction import compact_index
+    from search_engine_spark.operators.snapshots import list_snapshots
+
+    idx = str(tmp_path / "idx")
+    for _ in _history(spark, idx):
+        _assert_local_equals_classic(SearchEngine(spark, idx))
+        # both term_stats writers sort each file by term (the driver-side
+        # lookup's row-group pruning rests on it)
+        for f in Path(idx, "term_stats").glob("*.parquet"):
+            terms = pq.read_table(f, columns=["term"]).column("term")
+            assert terms.to_pylist() == sorted(terms.to_pylist()), f
+    head = SearchEngine(spark, idx)
+    assert head._deleted is not None
+    before = [head.search_ids(q, k=10, **kw).collect()
+              for q, kw in PARITY_QUERIES]
+    # every snapshot of the history, pinned: its parts, documents files,
+    # delete dirs and stats copy
+    for snap in list_snapshots(idx):
+        _assert_local_equals_classic(
+            SearchEngine(spark, idx, snapshot_id=snap["snapshot_id"])
+        )
+    compact_index(spark, idx, n_parts=2)
+    compacted = SearchEngine(spark, idx)
+    assert compacted._deleted is None
+    _assert_local_equals_classic(compacted)
+    # compaction drops the vector's rows: same answers as before it
+    assert [compacted.search_ids(q, k=10, **kw).collect()
+            for q, kw in PARITY_QUERIES] == before
 
 
 def _index_state(spark, idx):

@@ -13,7 +13,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import functions as F  # noqa: E402
 from search_engine_spark import entry_queries as EQ  # noqa: E402
 from search_engine_spark.operators.query import SearchEngine  # noqa: E402
 from search_engine_spark.session import get_spark  # noqa: E402
@@ -45,12 +44,11 @@ def main() -> None:
     infos, _ = eng.lookup_terms(" ".join(EQ.RARE_QUERY_TERMS))
     show("candidate block scan (bucket+term+range pruning)",
          eng.candidate_scores(infos, conjunctive=True))
+    # plan="classic": a bounded query routes to the driver-side local
+    # plan, which has no Spark plan to audit
     show("top-k search (TakeOrderedAndProject)",
-         eng.search_ids(" ".join(EQ.RARE_QUERY_TERMS), k=10))
-    top = [r["doc_id"] for r in
-           eng.search_ids(" ".join(EQ.QUERY_TERMS), k=10).collect()]
-    show("presentation point-read (doc_id isin over the k ids)",
-         eng.documents.filter(F.col("doc_id").isin(top)))
+         eng.search_ids(" ".join(EQ.RARE_QUERY_TERMS), k=10,
+                        plan="classic"))
     show("batched multi-query search (WindowGroupLimit top-k per query)",
          eng.search_many({q: " ".join(t) for q, t in
                           EQ.BATCH_QUERIES.items()}, k=10))
