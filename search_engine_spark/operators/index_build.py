@@ -65,6 +65,11 @@ BLOCKS_PER_SALT_CAP = 1 << 20  # block_id = salt * CAP + local
 # encoded with these then)
 BLOCK_SIZE = 128
 SALT_BUDGET = 100_000
+# estimated postings up to which a part encodes in one task
+# (encode_partitions). A task's fixed cost (Python worker, one file per
+# bucket) is ~0.24 CPU-s, a posting's encode + write ~7 CPU-us: a full
+# task's variable work is ~15x its fixed cost (PERF.md "Build path")
+ENCODE_POSTINGS_PER_TASK = 500_000
 
 
 def _plog(label: str, t0: float) -> None:
@@ -510,9 +515,22 @@ def prepare_salted(
     return joined.select(*cols)
 
 
+def encode_partitions(part_size: int, avgdl: float,
+                      shuffle_partitions: int) -> int:
+    """The encode's partition count for a part of ``part_size`` doc ids:
+    one task when the part's estimated postings, ``part_size * avgdl``,
+    fit ENCODE_POSTINGS_PER_TASK, else 3 * shuffle_partitions for a
+    balanced tail (write_part). ``avgdl`` is the index's, not the part's, so
+    a part of longer-than-average docs is underestimated and a part
+    thinned by deletes overestimated."""
+    if part_size * avgdl <= ENCODE_POSTINGS_PER_TASK:
+        return 1
+    return 3 * shuffle_partitions
+
+
 def encode_salted(
     salted: DataFrame,
-    spark: SparkSession,
+    n_partitions: int,
     n_docs: int,
     avgdl: float,
     block_size: int,
@@ -535,16 +553,17 @@ def encode_salted(
     baseline at local[16] (storm-bounded); output blocks bit-identical
     (xxhash64 checksum over all 269k blocks).
 
-    Partition count stays 3x spark.sql.shuffle.partitions (pre-agg
-    repartition on the grouping keys — the agg reuses it, no second
-    exchange): the encode is the longest stage in the build and a
-    1-partition-per-core layout leaves its tail on a handful of cores
-    when the (term_id, salt) hash deals uneven partitions. Size
-    shuffle.partitions so a partition's groups fit executor memory (the
-    aggregation buffers hold its groups' postings as JVM lists). Output
-    rows are term_id-keyed blocks; _attach_terms restores the string +
-    bucket."""
-    n_enc = 3 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    ``n_partitions`` is write_part's encode_partitions for the part: the
+    pre-agg repartition on the grouping keys (the agg reuses it, no
+    second exchange). The count decides which task encodes a group, never
+    the group: salting bounds each (term_id, salt) group by the salt
+    budget whatever the count, and the blocks are bit-identical across
+    counts (tests/test_encode_sizing.py).
+    A task's aggregation buffers hold its groups' postings as JVM lists:
+    a one-task part holds about ENCODE_POSTINGS_PER_TASK postings (times
+    the estimate's error); above it, size shuffle.partitions so a
+    partition's groups fit executor memory. Output rows are term_id-keyed
+    blocks; _attach_terms restores the string + bucket."""
     id_type = dict(salted.dtypes)["term_id"]  # bigint | string (fallback)
     out_schema = T.StructType(
         [T.StructField("term_id", T.LongType() if id_type == "bigint"
@@ -554,7 +573,7 @@ def encode_salted(
     )
     ps_fields = ["doc_id", "tf", "dl"] + (["pos"] if store_positions else [])
     grouped = (
-        salted.repartition(n_enc, "term_id", "salt")
+        salted.repartition(n_partitions, "term_id", "salt")
         .groupBy("term_id", "salt")
         .agg(
             F.first("df").alias("df"),
@@ -731,13 +750,27 @@ def write_part(spark: SparkSession, raw_p: DataFrame, term_stats: DataFrame,
     build_index, incremental_update and compact_index; the caller writes
     the row when its commit protocol says to. ``hash_ids`` is the
     caller's check_hash_ids over ``term_stats`` (one check per call, not
-    one job per part)."""
+    one job per part).
+
+    The one place the encode's partition count is chosen:
+    encode_partitions(part_size, avgdl, shuffle.partitions). Each
+    mapInArrow task pays a fixed Python-worker cost and writes its own
+    file into every bucket dir, so a part estimated at no more than
+    ENCODE_POSTINGS_PER_TASK postings (an upsert's batch, a small build)
+    encodes in one task and one file per bucket. A larger part keeps 3x
+    shuffle.partitions: the encode is the longest stage of the build,
+    and one partition per core would leave its tail on a few cores when
+    the (term_id, salt) hash deals uneven partitions."""
     t0 = time.time()
     pos = layout.store_positions
     salted = prepare_salted(raw_p, term_stats, part_lo, part_size,
                             layout.salt_budget, hash_ids, store_positions=pos)
+    n_enc = encode_partitions(
+        part_size, avgdl,
+        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+    )
     encoded = _attach_terms(
-        encode_salted(salted, spark, n_docs, avgdl, layout.block_size,
+        encode_salted(salted, n_enc, n_docs, avgdl, layout.block_size,
                       store_positions=pos),
         term_stats, layout.n_buckets, hash_ids, store_positions=pos,
     )

@@ -10,6 +10,18 @@ from search_engine_spark.session import get_spark
 from search_engine_spark.synth import make_transcripts
 
 
+def jobs_since(spark, start: int | None = None) -> int:
+    """The highest Spark job id so far (``start=None``), or the number of
+    jobs started since ``start``. The status store is fed by the
+    listener bus, so it is drained first: an undrained bus under-counts."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    tracker = spark.sparkContext.statusTracker()
+    hw = max(tracker.getJobIdsForGroup(None) or [-1])
+    while tracker.getJobInfo(hw + 1) is not None:
+        hw += 1
+    return hw if start is None else hw - start
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=8)

@@ -22,6 +22,8 @@ from search_engine_spark.operators.query import SearchEngine
 from search_engine_spark.session import local_frame
 from search_engine_spark.synth import make_transcripts
 
+from conftest import jobs_since
+
 MISSING = "zzqnotaterm"
 
 
@@ -113,18 +115,6 @@ def test_missing_term_search_is_empty_with_result_schema(eng):
     ]
 
 
-def _jobs_since(spark, start: int | None = None) -> int:
-    """The highest Spark job id so far (``start=None``), or the number of
-    jobs started since ``start``. The status store is fed by the
-    listener bus, so it is drained first: an undrained bus under-counts."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    tracker = spark.sparkContext.statusTracker()
-    hw = max(tracker.getJobIdsForGroup(None) or [-1])
-    while tracker.getJobInfo(hw + 1) is not None:
-        hw += 1
-    return hw if start is None else hw - start
-
-
 @pytest.mark.parametrize(
     "schema", [schemas.SEARCH_RESULT, schemas.POSTINGS, schemas.DOCUMENTS,
                "doc_id long, score double"],
@@ -132,9 +122,9 @@ def _jobs_since(spark, start: int | None = None) -> int:
 )
 def test_empty_local_frame_collects_without_a_job(spark, schema):
     df = local_frame(spark, [], schema)
-    h0 = _jobs_since(spark)
+    h0 = jobs_since(spark)
     assert df.collect() == []
-    assert _jobs_since(spark, h0) == 0
+    assert jobs_since(spark, h0) == 0
     if not isinstance(schema, str):
         # nullability included: SEARCH_RESULT's fields are non-null
         assert df.schema == schema
@@ -146,7 +136,7 @@ def test_bounded_api_search_runs_no_spark_job(eng):
     run 0 Spark jobs: every read is driver-side pyarrow, the plan is
     the local one and the envelope collects a LocalRelation."""
     api = EngineAPI(eng.spark, eng.index_dir)
-    h0 = _jobs_since(eng.spark)
+    h0 = jobs_since(eng.spark)
     pages = []
     for query, offset in (("query index", 0), ("query index", 10),
                           ("rewritten", 0), (MISSING, 0)):
@@ -154,6 +144,6 @@ def test_bounded_api_search_runs_no_spark_job(eng):
         res = api.search(query, offset=offset, limit=10)
         assert res["result"] is True
         pages.append(res["data"])
-    assert _jobs_since(eng.spark, h0) == 0
+    assert jobs_since(eng.spark, h0) == 0
     assert pages[0] and pages[1] and pages[2] and pages[3] == []
     assert all("<b>" in row["snippet"] for row in pages[0])

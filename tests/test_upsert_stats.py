@@ -36,6 +36,8 @@ from search_engine_spark.operators.query import SearchEngine
 from search_engine_spark.oracle import build_oracle_index
 from search_engine_spark.synth import make_transcripts
 
+from conftest import jobs_since
+
 KEY = ["conv_id", "turn_idx"]
 
 
@@ -264,11 +266,11 @@ def test_crash_before_documents_append_keeps_live_stats(
 
 
 def test_upsert_job_ceiling(spark, tmp_path):
-    """Spark jobs (job-id delta from statusTracker) over one upsert with
-    replacements into a small index. The parent of the one-stats-pass
-    change ran 57 jobs here; the change runs 30 (no schema-inference
-    reads, one stats pass, replaced ids collected once). The ceiling is
-    that count + 2."""
+    """Spark jobs (job-id delta from statusTracker, listener bus drained
+    first) over one upsert with replacements into a small index. The
+    parent of the one-stats-pass change ran 57 jobs here; the change runs
+    30 (no schema-inference reads, one stats pass, replaced ids collected
+    once). The ceiling is that count + 2."""
     pdf = make_transcripts(n_conversations=18, seed=33)
     base, new, _ = _split(pdf)
     idx = str(tmp_path / "idx")
@@ -278,17 +280,9 @@ def test_upsert_job_ceiling(spark, tmp_path):
     changed["text"] = changed["text"] + " revised wording"
     batch = _sdf(spark, pd.concat([changed, new])).cache()
     batch.count()
-    tracker = spark.sparkContext.statusTracker()
-
-    def high_water():
-        hw = max(tracker.getJobIdsForGroup(None) or [-1])
-        while tracker.getJobInfo(hw + 1) is not None:
-            hw += 1
-        return hw
-
-    h0 = high_water()
+    h0 = jobs_since(spark)
     res = incremental_update(spark, batch, idx, upsert=True)
-    jobs = high_water() - h0
+    jobs = jobs_since(spark, h0)
     batch.unpersist()
     assert res["replaced_docs"] == 5 and res["new_parts"] == 1
     assert jobs <= 32, jobs
