@@ -149,7 +149,7 @@ def run_suite(sf_dir: str, cpus: int) -> dict:
             ).collect()
         ),
         "engine_snippets": lambda: len(
-            eng.search(" ".join(EQ.QUERY_TERMS), k=10).collect()
+            eng.search(" ".join(EQ.QUERY_TERMS), k=10)
         ),
         # forced block-max plan (sf0.1 dfs are below the auto-routing
         # floor): tracks the two-pass seed+prune path round-over-round

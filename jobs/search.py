@@ -14,6 +14,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from search_engine_spark import schemas  # noqa: E402
 from search_engine_spark.operators.query import SearchEngine  # noqa: E402
 from search_engine_spark.session import get_spark  # noqa: E402
 
@@ -38,9 +39,9 @@ def main() -> None:
         mode=args.mode,
         max_df=args.max_df,
         with_snippets=not args.no_snippets,
-    ).collect()
+    )
     for r in rows:
-        print(json.dumps(r.asDict(), default=str))
+        print(json.dumps(dict(zip(schemas.SEARCH_RESULT.names, r))))
     spark.stop()
 
 

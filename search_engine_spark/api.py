@@ -51,6 +51,15 @@ ERR_NO_INDEX = "Индекс ещё не построен"                  # no
 NO_INDEX_ERRORS = (AnalysisException, FileNotFoundError)
 
 
+def _page(rows: list[tuple], snippets: bool = True) -> dict[str, Any]:
+    """The {result, count, data} envelope of SearchEngine.present rows
+    (doc_id, conv_id, turn_idx, score, snippet); the score is reported
+    as ``relevance``. ``snippets=False`` leaves the snippet key out."""
+    keys = ("doc_id", "conv_id", "turn_idx", "relevance", "snippet")
+    data = [dict(zip(keys if snippets else keys[:4], r)) for r in rows]
+    return {"result": True, "count": len(data), "data": data}
+
+
 @dataclass
 class EngineAPI:
     """One facade per (SparkSession, index_dir)."""
@@ -293,6 +302,31 @@ class EngineAPI:
                 self._engine = eng
         return eng
 
+    def _open(
+        self, snapshot_id: int | None = None
+    ) -> tuple[SearchEngine | None, dict[str, Any] | None]:
+        """(engine, None) for a read endpoint — the memoized HEAD engine,
+        or an as-of engine built for this call only — or (None, the
+        error envelope) when none can be opened: ERR_NO_INDEX while no
+        index exists (the first build still running, or never run), or
+        the QueryArgumentError of an unknown/expired snapshot id or a
+        missing/truncated snapshot store. Only the construction is
+        enveloped; engine faults during the read propagate."""
+        try:
+            eng = (
+                self._get_engine()
+                if snapshot_id is None
+                else SearchEngine(
+                    self.spark, self.index_dir, snapshot_id=snapshot_id
+                )
+            )
+        except NO_INDEX_ERRORS:
+            return None, {"result": False, "error": ERR_NO_INDEX,
+                          "is_indexing": self.is_indexing()}
+        except QueryArgumentError as ex:
+            return None, {"result": False, "error": str(ex)}
+        return eng, None
+
     # -- GET /api/search ---------------------------------------------------
     def search(
         self,
@@ -318,51 +352,21 @@ class EngineAPI:
         adds boolean NOT (SearchEngine.search_not; first page only)."""
         if not query or not query.strip():
             return {"result": False, "error": ERR_EMPTY_QUERY}
-        try:
-            eng = (
-                self._get_engine()
-                if snapshot_id is None
-                else SearchEngine(
-                    self.spark, self.index_dir, snapshot_id=snapshot_id
-                )
-            )
-        except NO_INDEX_ERRORS:
-            # first build still running (or never run): keep the
-            # envelope contract instead of leaking a raw read error
-            return {"result": False, "error": ERR_NO_INDEX,
-                    "is_indexing": self.is_indexing()}
-        except QueryArgumentError as ex:
-            # resolve_snapshot raises it for an unknown/expired snapshot
-            # id or a missing/truncated snapshot store — same envelope
-            # contract as every other API error path
-            return {"result": False, "error": str(ex)}
+        eng, err = self._open(snapshot_id)
+        if err:
+            return err
         try:
             rows = eng.search(
                 query, k=limit, offset=offset, mode=mode, max_df=max_df,
                 scope=site, exclude=exclude, role=role,
-            ).collect()
+            )
         except QueryArgumentError as ex:
             # a caller-argument error (exclude= composed with
             # offset/site/role/max_df, a forced-plan conflict, an unknown
             # mode) — envelope it; any other ValueError is an engine
             # fault and propagates
             return {"result": False, "error": str(ex)}
-        if not rows:
-            return {"result": True, "count": 0, "data": []}
-        return {
-            "result": True,
-            "count": len(rows),
-            "data": [
-                {
-                    "doc_id": r["doc_id"],
-                    "conv_id": r["conv_id"],
-                    "turn_idx": r["turn_idx"],
-                    "relevance": r["score"],
-                    "snippet": r["snippet"],
-                }
-                for r in rows
-            ],
-        }
+        return _page(rows)
 
     # -- POST /api/searchMany (beyond-reference batched surface) -----------
     def search_many(
@@ -399,11 +403,9 @@ class EngineAPI:
             qid: {"result": False, "error": ERR_EMPTY_QUERY} for qid in blank
         }
         if live:
-            try:
-                eng = self._get_engine()
-            except NO_INDEX_ERRORS:
-                return {"result": False, "error": ERR_NO_INDEX,
-                        "is_indexing": self.is_indexing()}
+            eng, err = self._open()
+            if err:
+                return err
             hits: dict[str, list[tuple[int, float]]] = {
                 qid: [] for qid in live
             }
@@ -427,17 +429,7 @@ class EngineAPI:
                     set(analyze_text(live[qid])) if with_snippets else None,
                     docs,
                 )
-                results[qid] = {
-                    "result": True,
-                    "count": len(rows),
-                    "data": [
-                        dict(zip(
-                            ("doc_id", "conv_id", "turn_idx", "relevance",
-                             "snippet"), r,
-                        ))
-                        for r in rows
-                    ],
-                }
+                results[qid] = _page(rows)
         return {"result": True, "results": results}
 
     # -- GET /api/count (beyond-reference: total-hits figure) --------------
@@ -449,11 +441,9 @@ class EngineAPI:
         decode, no scores computed)."""
         if not query or not query.strip():
             return {"result": False, "error": ERR_EMPTY_QUERY}
-        try:
-            eng = self._get_engine()
-        except NO_INDEX_ERRORS:
-            return {"result": False, "error": ERR_NO_INDEX,
-                    "is_indexing": self.is_indexing()}
+        eng, err = self._open()
+        if err:
+            return err
         n = eng.match_count(query, conjunctive=conjunctive).collect()[0]
         return {"result": True, "n_matches": int(n["n_matches"])}
 
@@ -467,11 +457,9 @@ class EngineAPI:
         (SearchEngine.suggest). The recovery path right after the
         reference's hard 'lemma not found' failure
         (SearchServiceImpl.java:60-62)."""
-        try:
-            eng = self._get_engine()
-        except NO_INDEX_ERRORS:
-            return {"result": False, "error": ERR_NO_INDEX,
-                    "is_indexing": self.is_indexing()}
+        eng, err = self._open()
+        if err:
+            return err
         try:
             rows = eng.suggest(word, max_edit=max_edit, k=limit).collect()
         except QueryArgumentError as ex:
@@ -493,11 +481,9 @@ class EngineAPI:
         """Documents similar to ``doc_id`` (SearchEngine.more_like_this):
         the source doc's top tf*idf lemmas as a disjunctive query, source
         excluded. Same presentation envelope as search()."""
-        try:
-            eng = self._get_engine()
-        except NO_INDEX_ERRORS:
-            return {"result": False, "error": ERR_NO_INDEX,
-                    "is_indexing": self.is_indexing()}
+        eng, err = self._open()
+        if err:
+            return err
         try:
             sel = eng.mlt_terms(doc_id, n_terms=n_terms)
             # pass the selection back so the engine skips the second
@@ -510,11 +496,7 @@ class EngineAPI:
         # same presentation as search(); the snippets highlight the very
         # lemmas the MLT query used
         rows = eng.present(ids.collect(), set(sel) if with_snippets else None)
-        keys = ["doc_id", "conv_id", "turn_idx", "relevance"]
-        if with_snippets:
-            keys.append("snippet")
-        data = [dict(zip(keys, r)) for r in rows]
-        return {"result": True, "count": len(data), "data": data}
+        return _page(rows, snippets=with_snippets)
 
     # -- GET /api/facets (beyond-reference: refine-by panel) ---------------
     def facets(
@@ -527,11 +509,9 @@ class EngineAPI:
         list."""
         if not query or not query.strip():
             return {"result": False, "error": ERR_EMPTY_QUERY}
-        try:
-            eng = self._get_engine()
-        except NO_INDEX_ERRORS:
-            return {"result": False, "error": ERR_NO_INDEX,
-                    "is_indexing": self.is_indexing()}
+        eng, err = self._open()
+        if err:
+            return err
         try:
             df = eng.facet_counts(query, by=by, mode=mode)
         except QueryArgumentError as ex:
@@ -554,12 +534,11 @@ class EngineAPI:
     def statistics(self) -> dict[str, Any]:
         """Totals + per-partition build state (StatisticsServiceImpl.java:33-51:
         total pages/lemmas + per-site status)."""
-        try:
-            eng = self._get_engine()
-        except NO_INDEX_ERRORS:
-            return {"result": False, "error": ERR_NO_INDEX,
-                    "is_indexing": self.is_indexing(),
-                    "last_error": self._build_error[-1] if self._build_error else None}
+        eng, err = self._open()
+        if err:
+            return {**err, "last_error": (
+                self._build_error[-1] if self._build_error else None
+            )}
         total_terms = eng.term_stats.count()
         parts = [
             {

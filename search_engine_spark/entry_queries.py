@@ -31,6 +31,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import schemas
 from .functions.analyzer import (
     analyze_text,
     lemma_case_sql,
@@ -43,6 +44,7 @@ from .operators.index_build import (
     B, BLANK_CLASS, K1, build_index, nonblank_text,
 )
 from .operators.query import SearchEngine
+from .session import local_frame
 
 # ---------------------------------------------------------------------------
 # Fixed constants shared by Spark impls and SQL oracles
@@ -1691,8 +1693,8 @@ def q_search_snippets(spark, sf_dir):
     highlights, 240-char word-boundary cut. The engine's snippets are
     hash-checked against a full SQL reimplementation of the same spec."""
     eng = SearchEngine(spark, ensure_index(spark, sf_dir))
-    res = eng.search(" ".join(QUERY_TERMS), k=TOPK)
-    return res.select(
+    rows = eng.search(" ".join(QUERY_TERMS), k=TOPK)
+    return local_frame(spark, rows, schemas.SEARCH_RESULT).select(
         F.col("turn_idx").cast("long").alias("doc_id"), "score", "snippet"
     )
 

@@ -40,8 +40,9 @@ Flow per query:
      nondeterminism; SURVEY.md §7.5).
   7. point-read the k hits' documents with pyarrow (doc_id filter,
      delete vector subtracted) and build the snippets on the driver
-     (SearchEngine.present). A bounded search() thus runs 0 Spark jobs
-     from engine init to snippets.
+     (SearchEngine.present); search() returns those rows as a list. A
+     bounded search() thus runs 0 Spark jobs from engine init to
+     snippets, and builds no DataFrame.
 
 Scoring modes:
   - "bm25" (default): idf = ln(1 + (N - df + .5)/(df + .5)), k1=1.2, b=.75
@@ -54,7 +55,6 @@ from __future__ import annotations
 import functools
 import math
 import operator
-import warnings
 from dataclasses import dataclass
 from functools import cached_property
 from pathlib import Path
@@ -72,7 +72,9 @@ from .. import schemas
 from ..errors import QueryArgumentError
 from ..functions.snippet import make_snippet
 from ..session import local_frame
-from .index_build import K1, B, resolve_n_buckets
+from .index_build import (
+    K1, B, _read_manifest, read_layout, resolve_n_buckets,
+)
 
 
 @dataclass
@@ -448,13 +450,56 @@ class SearchEngine:
         for t in uncached:
             self._df_cache[t] = hit.get(t)
 
+    def _fill_ranges_cache(self, infos: list[TermInfo]) -> None:
+        """Memoize the merged doc_id spans of ``infos``' posting blocks
+        (the rarest-term ranges conjunctive reads prune to) in one
+        driver-side pyarrow read (_read_blocks, no Spark job) — the
+        block-range twin of _fill_df_cache. A term memoizes as None (no
+        pruning) when it has no blocks or more than PRUNE_MAX_RARE_BLOCKS
+        of them; two kinds memoize None without being read: a term absent
+        from the dictionary, and one whose df exceeds
+        PRUNE_MAX_RARE_BLOCKS * block_size (a block holds at most
+        block_size postings, so it has too many blocks)."""
+        terms = [ti.term for ti in infos if ti.term not in self._ranges_cache]
+        if not terms:
+            return
+        self._fill_df_cache(terms)
+        cap = self.PRUNE_MAX_RARE_BLOCKS
+        read = sorted({
+            t for t in terms
+            if self._df_cache[t] is not None
+            and self._df_cache[t] <= cap * self._block_size
+        })
+        spans: dict[str, list[tuple[int, int]]] = {}
+        if read:
+            blocks = self._read_blocks(
+                read, ["term", "first_doc_id", "last_doc_id"]
+            )
+            for t, lo, hi in zip(*(
+                blocks[c].tolist()
+                for c in ("term", "first_doc_id", "last_doc_id")
+            )):
+                spans.setdefault(t, []).append((lo, hi))
+        for t in terms:
+            sp = spans.get(t, [])
+            self._ranges_cache[t] = (
+                self._merge_spans(sp) if 0 < len(sp) <= cap else None
+            )
+
+    @cached_property
+    def _block_size(self) -> int:
+        """The most postings one block holds: the block size the index
+        was built with (its recorded layout, 128 for older indexes)."""
+        stage = _read_manifest(self.index_dir).get("stage_docs", {})
+        return read_layout(self.index_dir, stage).block_size
+
     def _idf(self, df: int) -> float:
         return math.log(1.0 + (self.n_docs - df + 0.5) / (df + 0.5))
 
     # ------------------------------------------------------------------
     # Block skipping (the distributed analog of WAND pointer advance,
     # SURVEY.md §7.3): under conjunctive semantics every match must fall in
-    # a doc_id range covered by the RAREST term's blocks. Collect those
+    # a doc_id range covered by the RAREST term's blocks. Read those
     # ranges (few — df-ascending order O1 makes term 0 the rarest), merge
     # them, and (a) push an OR-of-ranges filter into the parquet scan so
     # row-group min/max stats skip hot-term blocks entirely, (b) mask
@@ -492,64 +537,6 @@ class SearchEngine:
             else:
                 merged.append((lo, hi))
         return merged
-
-    def _rare_term_ranges(self, rare: TermInfo) -> list[tuple[int, int]] | None:
-        if rare.term in self._ranges_cache:
-            return self._ranges_cache[rare.term]
-        # bucket-pruned like every scan, so this cold-path metadata
-        # collect lists ONE bucket dir, not all N
-        rows = (
-            self._scan_blocks(
-                [rare.term], columns=["first_doc_id", "last_doc_id"]
-            )
-            .limit(self.PRUNE_MAX_RARE_BLOCKS + 1)
-            .collect()
-        )
-        if not rows or len(rows) > self.PRUNE_MAX_RARE_BLOCKS:
-            self._ranges_cache[rare.term] = None
-            return None
-        merged = self._merge_spans(
-            [(int(r["first_doc_id"]), int(r["last_doc_id"])) for r in rows]
-        )
-        self._ranges_cache[rare.term] = merged
-        return merged
-
-    def _collect_ranges_bulk(self, terms: list[str]) -> None:
-        """Fill _ranges_cache for MANY rarest terms in two driver jobs
-        total (a per-term count, then one ranges fetch for the terms under
-        the block cap) — the batch analog of _rare_term_ranges, so a
-        whole search_many workload pays O(1) collects instead of one per
-        query. Hot terms (> PRUNE_MAX_RARE_BLOCKS blocks) memoize as None
-        (no pruning), exactly like the single-query path."""
-        scoped = self._scan_blocks(
-            terms, columns=["term", "first_doc_id", "last_doc_id"]
-        )
-        n_by_term = {
-            r["term"]: int(r["n"])
-            for r in scoped.groupBy("term")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        for t in terms:  # default: hot (or absent) -> no pruning
-            self._ranges_cache[t] = None
-        small = [
-            t
-            for t in terms
-            if 0 < n_by_term.get(t, 0) <= self.PRUNE_MAX_RARE_BLOCKS
-        ]
-        if not small:
-            return
-        spans: dict[str, list[tuple[int, int]]] = {}
-        for r in (
-            scoped.filter(F.col("term").isin(small))
-            .select("term", "first_doc_id", "last_doc_id")
-            .collect()
-        ):
-            spans.setdefault(r["term"], []).append(
-                (int(r["first_doc_id"]), int(r["last_doc_id"]))
-            )
-        for t, sp in spans.items():
-            self._ranges_cache[t] = self._merge_spans(sp)
 
     # a scope's run count is structurally <= 1 + #incremental batches
     # (see _scope_ranges); blowing past this cap means the doc_id-order
@@ -640,24 +627,18 @@ class SearchEngine:
         """The one OR-of-ranges pushdown predicate: rows whose
         [lo_col, hi_col] interval overlaps any doc_id span (posting
         blocks: first/last_doc_id; the doc store: doc_id twice). None
-        when there is nothing to push, or — LOUDLY — when the span list
-        is too long for Catalyst: the decode-side mask (or the join
-        against already-pruned scores) keeps results exact either way,
-        but every row group gets scanned."""
+        when there is nothing to push. Past PRUNE_MAX_FILTER_RANGES spans
+        the smallest gaps are bridged (_coarsen_spans): a superset only
+        skips fewer row groups, and the decode-side mask (or the join
+        against already-pruned scores) keeps results exact."""
         if not ranges:
             return None
-        if len(ranges) > self.PRUNE_MAX_FILTER_RANGES:
-            warnings.warn(
-                f"{len(ranges)} doc_id ranges exceed "
-                f"PRUNE_MAX_FILTER_RANGES={self.PRUNE_MAX_FILTER_RANGES}; "
-                "row-group pushdown dropped (results stay exact via the "
-                "decode-side mask). Many incremental batches? "
-                "compact_index restores dense ordering.",
-                stacklevel=3,
-            )
-            return None
+        # merged first: coarsening bridges gaps between disjoint spans
+        spans = self._coarsen_spans(
+            self._merge_spans(ranges), self.PRUNE_MAX_FILTER_RANGES
+        )
         pred = None
-        for lo, hi in ranges:
+        for lo, hi in spans:
             c = (F.col(lo_col) <= hi) & (F.col(hi_col) >= lo)
             pred = c if pred is None else (pred | c)
         return pred
@@ -718,7 +699,8 @@ class SearchEngine:
 
         ranges = None
         if conjunctive and len(infos) > 1:
-            ranges = self._rare_term_ranges(infos[0])
+            self._fill_ranges_cache(infos[:1])
+            ranges = self._ranges_cache[infos[0].term]
         if scope_ranges is not None:
             if ranges is None:
                 ranges = scope_ranges
@@ -1282,11 +1264,11 @@ class SearchEngine:
            cannot enter the top-k even via the doc_id tie-break. Every
            true top-k doc's bucket necessarily survives (its ceiling >=
            its score >= true-kth >= tau).
-        4. the kept buckets merge into doc_id spans (coarsened to
-           PRUNE_MAX_FILTER_RANGES by bridging the smallest gaps — a
-           superset, always sound) and the classic plan runs with them as
-           scope_ranges: row-group min/max skips non-competitive blocks
-           at the SCAN, the decode-side mask drops stragglers.
+        4. the kept buckets merge into doc_id spans and the classic
+           plan runs with them as scope_ranges: row-group min/max skips
+           non-competitive blocks at the SCAN (the pushdown coarsens the
+           spans to PRUNE_MAX_FILTER_RANGES, _ranges_pred — a superset,
+           always sound), the decode-side mask drops stragglers.
 
         Records {tau, buckets_total, buckets_kept, n_spans} in
         ``last_maxscore_stats`` for plan audits."""
@@ -1385,8 +1367,6 @@ class SearchEngine:
         spans = self._merge_spans(
             [(int(g) * width, int(g) * width + width - 1) for g in kept]
         )
-        if len(spans) > self.PRUNE_MAX_FILTER_RANGES:
-            spans = self._coarsen_spans(spans, self.PRUNE_MAX_FILTER_RANGES)
         self.last_maxscore_stats["n_spans"] = len(spans)
         return self._classic_topk(
             infos, k=k, mode=mode, conjunctive=False, scope_ranges=spans
@@ -1655,7 +1635,8 @@ class SearchEngine:
             return self._empty_topk()
         partials = self.candidate_scores(infos, mode=mode, conjunctive=True)
         scored = self._pivot_combine(partials, len(infos), conjunctive=True)
-        ranges = self._rare_term_ranges(infos[0])
+        self._fill_ranges_cache(infos[:1])
+        ranges = self._ranges_cache[infos[0].term]
         if via_positions and len(lemmas) > 1:
             # indexed phrase test: decode the phrase lemmas' position
             # streams (already range-pruned to the rarest lemma's spans),
@@ -1754,7 +1735,8 @@ class SearchEngine:
             return self._empty_topk()
         partials = self.candidate_scores(infos, mode=mode, conjunctive=True)
         scored = self._pivot_combine(partials, len(infos), conjunctive=True)
-        ranges = self._rare_term_ranges(infos[0])
+        self._fill_ranges_cache(infos[:1])
+        ranges = self._ranges_cache[infos[0].term]
         if via_positions:
             # indexed within-window test over the shared pivot (a doc
             # missing a lemma pivots to NULL and the exists() evaluates
@@ -1832,11 +1814,10 @@ class SearchEngine:
         infos, n_missing = self.lookup_terms(query)
         if (conjunctive and n_missing) or not infos:
             return local_frame(self.spark, [(0,)], "n_matches long")
-        ranges = (
-            self._rare_term_ranges(infos[0])
-            if conjunctive and len(infos) > 1
-            else None
-        )
+        ranges = None
+        if conjunctive and len(infos) > 1:
+            self._fill_ranges_cache(infos[:1])
+            ranges = self._ranges_cache[infos[0].term]
         pairs = self.matching_doc_ids(infos, ranges=ranges)
         if conjunctive and len(infos) > 1:
             matched = (
@@ -2145,13 +2126,14 @@ class SearchEngine:
         with a dictionary-missing term, contribute zero rows (the
         ``search_ids`` empty-result contract). Rarest-term block-range
         pruning carries over from the single-query path, amortized:
-        ALL queries' rarest-term ranges are fetched in two driver jobs
-        (_collect_ranges_bulk, memoized per engine snapshot), decoded
-        doc_ids are masked per TERM before the shuffle (a (term, doc)
-        row is dropped only when EVERY subscribing query prunes that
-        doc — lossless, since such a doc lacks each subscriber's rarest
-        term and fails their conjunctive filters regardless), and a
-        coarse union-of-ranges filter is pushed into the parquet scan.
+        ALL queries' rarest-term ranges are read in one driver-side
+        pyarrow pass (_fill_ranges_cache, no Spark job, memoized per
+        engine snapshot), decoded doc_ids are masked per TERM before the
+        shuffle (a (term, doc) row is dropped only when EVERY subscribing
+        query prunes that doc — lossless, since such a doc lacks each
+        subscriber's rarest term and fails their conjunctive filters
+        regardless), and the union of the ranges, coarsened to
+        PRUNE_MAX_FILTER_RANGES spans, is pushed into the parquet scan.
 
         Exchange volume is per-TERM and PACKED, not per-subscription:
         BM25/relevance partials are query-independent, so each (term,
@@ -2194,24 +2176,16 @@ class SearchEngine:
         # broadcast join on the k-bounded result
         qid_idx = {qid: i for i, qid in enumerate(per_q)}
         # rarest-term doc_id ranges per query (conjunctive, multi-term
-        # only — same rule as search_ids), fetched for the WHOLE workload
-        # in two driver jobs and memoized
+        # only — same rule as search_ids), read for the WHOLE workload
+        # in one driver-side pass and memoized
         q_ranges: dict[int, list[tuple[int, int]]] = {}
         if conjunctive:
-            rare_uncached = sorted(
-                {
-                    infos[0].term
-                    for infos in per_q.values()
-                    if len(infos) > 1
-                    and infos[0].term not in self._ranges_cache
-                }
-            )
-            if rare_uncached:
-                self._collect_ranges_bulk(rare_uncached)
-            for qid, infos in per_q.items():
-                if len(infos) <= 1:
-                    continue
-                merged = self._ranges_cache.get(infos[0].term)
+            multi = {
+                qid: infos for qid, infos in per_q.items() if len(infos) > 1
+            }
+            self._fill_ranges_cache([infos[0] for infos in multi.values()])
+            for qid, infos in multi.items():
+                merged = self._ranges_cache[infos[0].term]
                 if merged:
                     q_ranges[qid_idx[qid]] = merged
         # term -> [qid_idx] subscriber lists (partials are query-
@@ -2502,7 +2476,7 @@ class SearchEngine:
         scope: str | None = None,
         role: str | None = None,
         exclude: str | None = None,
-    ) -> DataFrame:
+    ) -> list[tuple]:
         """Full result projection (P6): doc metadata + score + snippet.
         ``exclude`` routes through search_not (boolean NOT; first page
         only — pagination/scope/role/df-cutoff ride the classic plan);
@@ -2511,7 +2485,8 @@ class SearchEngine:
         The top-k (doc_id, score) rows — the local plan's as they are, a
         Spark plan's collected once — go to ``present``, which
         point-reads their documents and builds the snippets on the
-        driver; the result is a local frame ordered by (score DESC,
+        driver. Returns its (doc_id, conv_id, turn_idx, score, snippet)
+        tuples (schemas.SEARCH_RESULT's columns) ordered by (score DESC,
         doc_id ASC). A bounded query runs no Spark job."""
         if exclude is not None:
             if (offset != 0 or scope is not None or max_df is not None
@@ -2530,9 +2505,7 @@ class SearchEngine:
             )
         hits = top.collect() if isinstance(top, DataFrame) else top
         lemmas = set(analyze_text(query)) if with_snippets else None
-        return local_frame(
-            self.spark, self.present(hits, lemmas), schemas.SEARCH_RESULT
-        )
+        return self.present(hits, lemmas)
 
     def present(
         self, hits: list, lemmas: set[str] | None,

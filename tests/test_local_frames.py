@@ -1,6 +1,6 @@
-"""Read paths build no Python-RDD frames, ``SearchEngine.search`` is
-exactly ``search_ids`` + the documents + ``make_snippet``, and a bounded
-search runs no Spark job at all.
+"""Read paths build no Python-RDD frames, ``SearchEngine.search``'s rows
+are exactly ``search_ids`` + the documents + ``make_snippet``, and a
+bounded search runs no Spark job and collects no DataFrame at all.
 
 A frame from ``createDataFrame(<python list>)`` scans a Python RDD: an
 RDD job on every evaluation, run by a second pool of Python workers.
@@ -11,6 +11,7 @@ when empty)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 
 from search_engine_spark import schemas
 from search_engine_spark.api import EngineAPI
@@ -89,30 +90,24 @@ CASES = {
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_search_equals_ids_plus_documents_plus_snippets(eng, case):
     query, kw = CASES[case]
-    got = [tuple(r) for r in eng.search(query, k=10, **kw).collect()]
+    got = eng.search(query, k=10, **kw)
     want = _composed(eng, eng.search_ids(query, k=10, **kw), query)
     assert got and got == want
 
 
 def test_search_exclude_and_no_snippets_compose_the_same(eng):
-    got = [tuple(r) for r in
-           eng.search("index", k=10, exclude="query").collect()]
+    got = eng.search("index", k=10, exclude="query")
     assert got == _composed(
         eng, eng.search_not("index", "query", k=10), "index"
     )
-    bare = [tuple(r) for r in
-            eng.search("query", k=10, with_snippets=False).collect()]
+    bare = eng.search("query", k=10, with_snippets=False)
     assert bare == _composed(
         eng, eng.search_ids("query", k=10), "query", with_snippets=False
     )
 
 
-def test_missing_term_search_is_empty_with_result_schema(eng):
-    df = eng.search(MISSING, k=10)
-    assert df.collect() == []
-    assert [(f.name, f.dataType) for f in df.schema] == [
-        (f.name, f.dataType) for f in schemas.SEARCH_RESULT
-    ]
+def test_missing_term_search_is_empty(eng):
+    assert eng.search(MISSING, k=10) == []
 
 
 @pytest.mark.parametrize(
@@ -130,11 +125,19 @@ def test_empty_local_frame_collects_without_a_job(spark, schema):
         assert df.schema == schema
 
 
-def test_bounded_api_search_runs_no_spark_job(eng):
+def test_bounded_api_search_runs_no_spark_job(eng, monkeypatch):
     """A freshly invalidated engine (init) + bounded searches with
     snippets — page 1, page 2, a one-term query and a missing term —
-    run 0 Spark jobs: every read is driver-side pyarrow, the plan is
-    the local one and the envelope collects a LocalRelation."""
+    run 0 Spark jobs and collect no DataFrame: every read is
+    driver-side pyarrow, the plan is the local one and the envelope is
+    built from the rows. (A LocalRelation collect runs no job either,
+    so the collects are counted.)"""
+    collects = []
+    real_collect = DataFrame.collect
+    monkeypatch.setattr(
+        DataFrame, "collect",
+        lambda self: collects.append(self) or real_collect(self),
+    )
     api = EngineAPI(eng.spark, eng.index_dir)
     h0 = jobs_since(eng.spark)
     pages = []
@@ -145,5 +148,6 @@ def test_bounded_api_search_runs_no_spark_job(eng):
         assert res["result"] is True
         pages.append(res["data"])
     assert jobs_since(eng.spark, h0) == 0
+    assert collects == []
     assert pages[0] and pages[1] and pages[2] and pages[3] == []
     assert all("<b>" in row["snippet"] for row in pages[0])

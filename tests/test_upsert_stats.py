@@ -214,8 +214,7 @@ def _index_state(spark, idx):
             tuple(r) for r in spark.read.parquet(f"{idx}/postings").collect()
         ),
         "deleted": list(load_deleted_ids(spark, idx)),
-        "hits": [tuple(r) for r in eng.search("token batch query", k=10)
-                 .collect()],
+        "hits": eng.search("token batch query", k=10),
     }
 
 
