@@ -732,20 +732,24 @@ def _scaling_query_replicas(replicas: int) -> dict:
     }
 
 
-# distinct queries scored in ONE job by search_many; override for size
-# sweeps — per-job fixed costs (scan, plan, k-bounded combine) amortize
-# with batch size, so throughput efficiency is batch-size-dependent
+# distinct queries scored at once by search_many (on the driver while
+# the batch's union df is under LOCAL_PLAN_MAX_POSTINGS, else in one
+# packed Spark plan); override for size sweeps — per-batch fixed costs
+# (read or scan, plan, k-bounded combine) amortize with batch size, so
+# throughput efficiency is batch-size-dependent
 BATCH_TOTAL = int(os.environ.get("SPARK_GRAFT_BATCH_QUERIES", "64"))
 
 
 def _scaling_query_batch(cpus: int) -> dict:
     """Batched query throughput at local[cpus]: BATCH_TOTAL distinct
-    queries scored in ONE Spark job via SearchEngine.search_many over the
-    same prebuilt index as _scaling_query. The sequential path is
-    latency-bound (driver round-trips per query — it measures latency
-    hiding, not capacity); the batch path is the throughput shape an
-    offline workload actually uses, and the axis that scales with
-    executors."""
+    queries scored at once via SearchEngine.search_many over the same
+    prebuilt index as _scaling_query (one packed Spark plan when the
+    batch's union df reaches LOCAL_PLAN_MAX_POSTINGS, as the hot
+    vocabulary below does at scale; on the driver otherwise). The
+    sequential path is latency-bound (driver round-trips per query — it
+    measures latency hiding, not capacity); the batch path is the
+    throughput shape an offline workload actually uses, and the axis
+    that scales with executors."""
     from itertools import combinations
 
     spark = get_spark(

@@ -379,12 +379,14 @@ class EngineAPI:
         conjunctive: bool = True,
         with_snippets: bool = True,
     ) -> dict[str, Any]:
-        """Batched search with the reference envelope PER QUERY: one Spark
-        job scores the whole workload through the packed single-scan plan
-        (SearchEngine.search_many — every posting block decoded once for
-        the union vocabulary); its (query_id, doc_id, score) rows are
-        collected, each query's page is cut, ONE driver-side point-read
-        of the union of the pages' doc ids fetches their documents, and
+        """Batched search with the reference envelope PER QUERY: the
+        engine scores the whole workload at once (SearchEngine.search_many
+        — every posting block decoded once for the union vocabulary; a
+        batch whose union df is under LOCAL_PLAN_MAX_POSTINGS runs on the
+        driver with no Spark job, a larger one runs the packed Spark plan
+        and is collected once); each query's page is cut from its
+        (query_id, doc_id, score) rows, ONE driver-side point-read of the
+        union of the pages' doc ids fetches their documents, and
         SearchEngine.present adds conv_id/turn_idx/snippets per query.
         Response: {"result": True, "results": {qid: {result, count,
         data:[...]}}}; a blank query text gets its own {"result": False,
@@ -409,9 +411,12 @@ class EngineAPI:
             hits: dict[str, list[tuple[int, float]]] = {
                 qid: [] for qid in live
             }
-            for qid, doc_id, score in eng.search_many(
+            top = eng._search_many(
                 live, k=offset + limit, mode=mode, conjunctive=conjunctive
-            ).collect():
+            )
+            if isinstance(top, DataFrame):
+                top = top.collect()
+            for qid, doc_id, score in top:
                 hits[qid].append((doc_id, score))
             pages = {
                 qid: sorted(hs, key=lambda h: (-h[1], h[0]))[

@@ -1014,15 +1014,17 @@ BATCH_QUERIES: dict[str, list[str]] = {
 
 def q_engine_batch_topk(spark, sf_dir):
     """Batched multi-query scoring (SearchEngine.search_many): ALL queries
-    of an offline workload scored in ONE Spark job — union-vocabulary
-    scan, each posting block decoded once and fanned out to every
-    subscribing query, per-query conjunctive filter + fixed-order float
-    sum, per-query top-k via row_number (WindowGroupLimit: partial top-k
-    before the shuffle). The throughput shape for eval suites / query-log
-    replays over a 100 TB index, where the sequential path would pay
-    ~0.5 s of driver fixed cost per query. Oracle = UNION ALL of the
-    per-query single-search oracles — green iff batching is bit-invisible
-    to every query's ranking and scores."""
+    of an offline workload scored at once — each posting block of the
+    union vocabulary decoded once and its partials shared by every
+    subscribing query, then one combine kernel per query (conjunctive
+    filter + fixed-order float sum + tie-safe top-k). A batch whose
+    union df is under LOCAL_PLAN_MAX_POSTINGS runs on the driver with no
+    Spark job; a larger one runs the packed Spark plan (one scan, packed
+    exchange, per-partition top-k, WindowGroupLimit). The throughput
+    shape for eval suites / query-log replays over a 100 TB index, where
+    the sequential path would pay ~0.5 s of driver fixed cost per query.
+    Oracle = UNION ALL of the per-query single-search oracles — green iff
+    batching is bit-invisible to every query's ranking and scores."""
     eng = SearchEngine(spark, ensure_index(spark, sf_dir))
     res = eng.search_many(
         {qid: " ".join(ts) for qid, ts in BATCH_QUERIES.items()}, k=TOPK

@@ -111,10 +111,22 @@ def _pa_any_of(name: str, values, cap: int = 64) -> ds.Expression:
     ) & field.isin(values)
 
 
+def _sql_in(name: str, values) -> F.Column:
+    """``name IN (values)`` (str or int values) parsed from ONE SQL
+    string: Column.isin makes one Py4J round trip per literal (720 for
+    a 128-query batch's scan)."""
+    lits = ", ".join(
+        str(v) if isinstance(v, int) else
+        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        for v in values
+    )
+    return F.expr(f"`{name}` IN ({lits})")
+
+
 def _partial_scores(tfs, dls, idf, mode, avgdl, max_tf_sum) -> np.ndarray:
     """Per-posting partial scores of one term: the one numpy copy of the
     BM25 expression (CLAUDE.md "Score formula shape"), shared by the
-    Spark decode UDFs (candidate_scores, search_many) and the local
+    Spark decode UDFs (candidate_scores, _packed_topk) and the local
     plan. ``dls`` is read only in bm25 mode."""
     if mode == "bm25":
         dls = dls.astype(np.float64)
@@ -194,6 +206,39 @@ def _decode_blocks(batches, streams, ranges, deleted):
             groups.append((term, cols))
         if groups:
             yield groups
+
+
+def _combine_topk(docs, mat, hit, cols, conjunctive, k, offset=0):
+    """The one per-query combine and cut (the local plan, one query or a
+    batch, and the packed plan's scoring stage). ``mat`` / ``hit`` are
+    (rows x terms) partials (+0.0 where missing) / presence, ``docs``
+    each row's doc_id, ``cols`` the query's columns df-ascending.
+    Presence is the AND (conjunctive) / OR of its hit columns; a kept
+    row's score sums its partials left to right, _pivot_combine's chain,
+    so the doubles are bit-identical. The cut is (score DESC, doc_id
+    ASC) rows [offset, offset + k); past 4x that many candidates an O(n)
+    argpartition preselects by score, keeping every tie of the cut
+    score. Returns (doc_ids, scores)."""
+    n = offset + k
+    present = hit[:, cols[0]].copy()
+    merge = np.logical_and if conjunctive else np.logical_or
+    for c in cols[1:]:
+        merge(present, hit[:, c], out=present)
+    cand = np.flatnonzero(present)
+    if cand.size <= offset:
+        return np.empty(0, dtype=np.int64), np.empty(0)
+    # presence first (1-byte bool traffic), then 8-byte gathers of the
+    # candidate rows only
+    cs = mat[cand, cols[0]]
+    for c in cols[1:]:
+        cs += mat[cand, c]
+    docs = docs[cand]
+    if cand.size > 4 * n:
+        thr = cs[np.argpartition(-cs, n - 1)[n - 1]]
+        keep = np.flatnonzero(cs >= thr)
+        docs, cs = docs[keep], cs[keep]
+    order = np.lexsort((docs, -cs))[offset:n]
+    return docs[order], cs[order]
 
 
 class SearchEngine:
@@ -508,7 +553,7 @@ class SearchEngine:
     PRUNE_MAX_FILTER_RANGES = 64   # OR-chain size Catalyst handles happily
     # Interactive plan routing (_route), on the query's summed df (=
     # decoded postings volume). A plain search_ids runs the packed
-    # search_many plan only when it clears this floor; below it the
+    # plan only when it clears this floor; below it the
     # classic pivot plan's lower fixed cost wins. Measured crossover ~1M
     # postings at local[8] on 717k- and 2.87M-doc corpora (BENCH.md).
     BATCH_PLAN_MIN_POSTINGS = 1_000_000
@@ -517,12 +562,12 @@ class SearchEngine:
     # decoding the whole posting list is expensive enough to buy back
     # the extra seed job
     BLOCKMAX_MIN_POSTINGS = 100_000
-    # Below this the query runs on the driver (the local plan): decoding
-    # 100k postings takes a few ms at the measured ~22 Mpostings/s,
-    # against ~1 CPU-s of Spark fixed cost per query. Postings average
-    # ~7.2 B, so the df bound also bounds the bytes read. Equal to
-    # BLOCKMAX_MIN_POSTINGS, so the regimes do not overlap: local below,
-    # the Spark plans at or above it.
+    # Below this a query (a search_many batch: its union df) runs on the
+    # driver (the local plan): decoding 100k postings takes a few ms at
+    # the measured ~22 Mpostings/s, against ~1 CPU-s of Spark fixed cost.
+    # Postings average ~7.2 B, so the df bound also bounds the bytes read.
+    # Equal to BLOCKMAX_MIN_POSTINGS, so the regimes do not overlap:
+    # local below, the Spark plans at or above it.
     LOCAL_PLAN_MAX_POSTINGS = BLOCKMAX_MIN_POSTINGS
 
     @staticmethod
@@ -658,19 +703,19 @@ class SearchEngine:
         row-group filter. ``ranges`` pushes the doc_id OR-of-ranges
         overlap into the scan (row-group min/max over first/last_doc_id);
         ``keep_terms`` exempts terms whose blocks must be read whole
-        (search_many's terms with an unpruned subscriber). ``columns``
+        (the packed plan's terms with an unpruned subscriber). ``columns``
         projects only the streams a reader decodes; None keeps every
         column for planners that filter on block metadata first."""
         from ..functions.spark_hash import spark_bucket
 
         buckets = sorted({spark_bucket(t, self.n_buckets) for t in terms})
         blocks = self.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+            _sql_in("bucket", buckets) & _sql_in("term", terms)
         )
         overlap = self._ranges_pred(ranges, "first_doc_id", "last_doc_id")
         if overlap is not None:
             if keep_terms:
-                overlap = F.col("term").isin(keep_terms) | overlap
+                overlap = _sql_in("term", keep_terms) | overlap
             blocks = blocks.filter(overlap)
         return blocks if columns is None else blocks.select(*columns)
 
@@ -864,27 +909,18 @@ class SearchEngine:
 
         Plan selection (``plan``: None = route by cost, or one of
         "local" | "classic" | "packed" | "blockmax" | "maxscore" to force
-        it; see _route). Any scope/role query runs the classic
-        row-partials pivot. A query routes on the query terms' summed df
-        (the exact decoded-postings volume, already memoized by the
-        dictionary lookup): under LOCAL_PLAN_MAX_POSTINGS it runs on the
-        driver (_local_topk: pyarrow read + the one decode kernel +
-        numpy, no Spark job; offset and max_df included). Above it, an
-        offset/max_df query runs the classic plan, and a plain one: a
-        hot SINGLE term (df >= BLOCKMAX_MIN_POSTINGS) the two-pass
-        block-max plan (_single_term_topk); a hot multi-term DISJUNCTIVE
-        query the two-pass MaxScore bound-sum plan (_maxscore_topk,
-        which may bail back to classic when its bounds are too flat to
-        prune — a forced "maxscore" never bails); a summed df >=
-        BATCH_PLAN_MIN_POSTINGS the packed varbyte exchange +
-        dense-numpy scoring plan (flat until large volumes — 4.1 s ->
-        1.5 s on a 7.5M-posting query over a 2.8M-doc index at local[8];
-        measured crossover ~1M postings on both the 717k- and 2.87M-doc
-        corpora, BENCH.md "interactive plan routing"); anything in
-        between the classic plan, whose fixed cost is lower. All plans
-        are bit-identical by contract (tests/test_query.py compares each
-        against "classic"). The local plan's rows come back as a local
-        frame (no job to collect)."""
+        it): _route, on the query terms' summed df (the exact
+        decoded-postings volume, memoized by the dictionary lookup).
+        Under LOCAL_PLAN_MAX_POSTINGS the query runs on the driver
+        (_local_topk, a batch of one: no Spark job, offset and max_df
+        included) and its rows come back as a local frame; scope/role
+        and larger offset/max_df queries run the classic pivot plan; a
+        large plain one a hot-term plan (_single_term_topk,
+        _maxscore_topk, which may bail back to classic), the packed
+        plan (summed df >= BATCH_PLAN_MIN_POSTINGS, the measured
+        crossover, BENCH.md "interactive plan routing") or the classic
+        plan. All plans are bit-identical by contract
+        (tests/test_query.py compares each against "classic")."""
         top = self._topk(
             query, k, offset, mode, max_df, conjunctive, scope, role, plan
         )
@@ -913,7 +949,9 @@ class SearchEngine:
             # excluded from scoring, matching the reference's pickNonFrequent
             return []
         if plan == "local":
-            return self._local_topk(infos, k, offset, mode, conjunctive)
+            top = self._local_topk({query: infos}, k, offset, mode,
+                                   conjunctive)
+            return [(d, s) for _, d, s in top]
         if plan == "blockmax":
             return self._single_term_topk(infos[0], k, mode)
         if plan == "maxscore":
@@ -922,9 +960,7 @@ class SearchEngine:
             )
         if plan == "packed":
             return (
-                self.search_many(
-                    {"_q": query}, k=k, mode=mode, conjunctive=conjunctive
-                )
+                self._packed_topk({query: infos}, k, mode, conjunctive)
                 .select("doc_id", "score")
                 .orderBy(F.desc("score"), F.asc("doc_id"))
             )
@@ -941,57 +977,48 @@ class SearchEngine:
         )
 
     def _local_topk(
-        self, infos: list[TermInfo], k: int, offset: int, mode: str,
-        conjunctive: bool,
-    ) -> list[tuple[int, float]]:
-        """The local plan: the classic plan's answer, computed on the
-        driver with no Spark job. pyarrow reads the query terms' posting
-        blocks (_read_blocks: bucket partition filter + term row-group
-        filter), the one decode kernel decodes them and masks the delete
-        vector, _partial_scores scores each term, and the per-doc combine
-        sums the partials left to right in df-ascending order with +0.0
-        for a missing term — _pivot_combine's chain, so the doubles are
-        bit-identical. Conjunctive queries keep the docs holding every
-        term; the cut is (score DESC, doc_id ASC), then [offset,
-        offset + k). No rarest-term range pass: under the bound decoding
-        every block costs less than the extra read, and conjunctive
-        presence yields the same set."""
+        self, per_q: dict[str, list[TermInfo]], k: int, offset: int,
+        mode: str, conjunctive: bool,
+    ) -> list[tuple[str, int, float]]:
+        """The local plan, one query or a batch: the classic plan's
+        answers on the driver, no Spark job. ONE _read_blocks of the
+        union's blocks, ONE decode pass (delete vector masked), partials
+        once per term, then _combine_topk per query over arrays sized to
+        its own postings -> (query_id, doc_id, score) rows. No range
+        pass: under the bound decoding every block costs less than the
+        extra read, and conjunctive presence yields the same set."""
         if k <= 0:
             return []
+        dfs = {ti.term: ti.df for infos in per_q.values() for ti in infos}
         streams = ("tfs", "dls") if mode == "bm25" else ("tfs",)
-        blocks = self._read_blocks(
-            [ti.term for ti in infos], ["term", "doc_ids", *streams]
-        )
-        decoded = {
-            term: c
+        blocks = self._read_blocks(sorted(dfs), ["term", "doc_ids", *streams])
+        partials = {
+            term: (c["doc_ids"], _partial_scores(
+                c["tfs"], c.get("dls"), self._idf(dfs[term]), mode,
+                self.avgdl, self.max_tf_sum,
+            ))
             for groups in _decode_blocks(
                 [blocks], streams, None, self._deleted
             )
             for term, c in groups
         }
-        if not decoded:
-            return []
-        docs = np.unique(np.concatenate(
-            [c["doc_ids"] for c in decoded.values()]
-        ))
-        score = np.zeros(docs.size)
-        n_terms = np.zeros(docs.size, dtype=np.int64)
-        for ti in infos:  # df-ascending, left to right
-            part = np.zeros(docs.size)  # +0.0 where the term is missing
-            c = decoded.get(ti.term)
-            if c is not None:
-                rows = np.searchsorted(docs, c["doc_ids"])
-                part[rows] = _partial_scores(
-                    c["tfs"], c.get("dls"), self._idf(ti.df), mode,
-                    self.avgdl, self.max_tf_sum,
-                )
-                n_terms[rows] += 1
-            score += part
-        if conjunctive:
-            keep = n_terms == len(infos)
-            docs, score = docs[keep], score[keep]
-        order = np.lexsort((docs, -score))[offset:offset + k]
-        return list(zip(docs[order].tolist(), score[order].tolist()))
+        none = (np.empty(0, dtype=np.int64), np.empty(0))
+        rows = []
+        for qid, infos in per_q.items():
+            terms = [partials.get(ti.term, none) for ti in infos]
+            docs = np.unique(np.concatenate([ids for ids, _ in terms]))
+            # this query's own (docs x terms), never the union's
+            mat = np.zeros((docs.size, len(terms)))
+            hit = np.zeros(mat.shape, dtype=bool)
+            for j, (ids, s) in enumerate(terms):
+                at = np.searchsorted(docs, ids)
+                mat[at, j], hit[at, j] = s, True
+            top_d, top_s = _combine_topk(
+                docs, mat, hit, range(len(terms)), conjunctive, k, offset
+            )
+            rows += [(qid, d, s) for d, s in zip(top_d.tolist(),
+                                                 top_s.tolist())]
+        return rows
 
     def _read_blocks(
         self, terms: list[str], columns: list[str]
@@ -2106,54 +2133,33 @@ class SearchEngine:
         mode: str = "bm25",
         conjunctive: bool = True,
     ) -> DataFrame:
-        """Batch top-k: score MANY queries in ONE Spark job, returning
-        (query_id, doc_id, score). The sequential read path is
-        latency-bound — each ``search`` is a few driver-coordinated jobs
-        with ~0.5 s of fixed cost — so an offline query workload (eval
-        suites, relevance regressions, query-log replays over a 100 TB
-        index) should be scored in bulk: one scan covers the union
-        vocabulary, every posting block is decoded ONCE and fanned out to
-        all subscribing queries, and the per-query fixed cost disappears;
-        throughput then scales with executors instead of round-trips.
+        """Batch top-k -> (query_id, doc_id, score), each query's rows
+        bit-identical to ``search_ids``: every posting block of the union
+        vocabulary is decoded ONCE and its (query-independent) partials
+        serve every query holding the term. A batch whose union df (the
+        summed df of the distinct terms its queries keep) is under
+        LOCAL_PLAN_MAX_POSTINGS runs the local plan on the driver (no
+        Spark job, rows in a local frame); a larger one runs the packed
+        Spark plan (_packed_topk, a lazy frame). Queries empty after
+        analysis, or conjunctive ones with a dictionary-missing term,
+        contribute zero rows (the ``search_ids`` contract)."""
+        top = self._search_many(queries, k, mode, conjunctive)
+        if isinstance(top, DataFrame):
+            return top
+        return local_frame(
+            self.spark, top, "query_id string, doc_id long, score double"
+        )
 
-        Per query the result is bit-identical to ``search_ids``:
-        per-(doc, term) partials are query-independent, accumulation is
-        the same left-to-right df-ascending COALESCE chain (orders a
-        shorter query never emits coalesce to +0.0, an IEEE no-op on the
-        positive partials), conjunctive presence is enforced per query,
-        and top-k uses the same (score DESC, doc_id ASC) tie-break.
-        Queries that are empty after analysis, or conjunctive queries
-        with a dictionary-missing term, contribute zero rows (the
-        ``search_ids`` empty-result contract). Rarest-term block-range
-        pruning carries over from the single-query path, amortized:
-        ALL queries' rarest-term ranges are read in one driver-side
-        pyarrow pass (_fill_ranges_cache, no Spark job, memoized per
-        engine snapshot), decoded doc_ids are masked per TERM before the
-        shuffle (a (term, doc) row is dropped only when EVERY subscribing
-        query prunes that doc — lossless, since such a doc lacks each
-        subscriber's rarest term and fails their conjunctive filters
-        regardless), and the union of the ranges, coarsened to
-        PRUNE_MAX_FILTER_RANGES spans, is pushed into the parquet scan.
-
-        Exchange volume is per-TERM and PACKED, not per-subscription:
-        BM25/relevance partials are query-independent, so each (term,
-        doc) posting crosses the exchange exactly ONCE no matter how
-        many queries share the term — and it crosses as a delta-varbyte
-        slice keyed by doc-range bucket (~4-6 bytes/posting), re-encoded
-        vectorized in the decode stage, never as a row. The scoring
-        stage decodes each bucket straight into dense (docs x terms)
-        numpy arrays (doc -> row is arithmetic on the bucket layout — no
-        sort/unique over postings), evaluates every query's score as a
-        left-to-right sum of its df-ascending term columns, applies the
-        conjunctive/disjunctive presence mask, and emits per-partition
-        top-k (argpartition + tie-safe (score DESC, doc_id ASC)
-        lexsort) — k-bounded rows per (query, partition). The final
-        combine is a row_number window over |queries| x partitions x k
-        rows that compiles to WindowGroupLimit."""
+    def _search_many(
+        self, queries: dict[str, str] | list[str], k: int, mode: str,
+        conjunctive: bool,
+    ) -> list[tuple[str, int, float]] | DataFrame:
+        """Route and run one batch: (query_id, doc_id, score) rows when no
+        Spark plan runs, else the packed plan's lazy frame (search_many
+        wraps rows in a local frame; EngineAPI.search_many pages them)."""
         self._check_mode(mode)
         if not isinstance(queries, dict):
             queries = {f"q{i}": q for i, q in enumerate(queries)}
-        out_schema = "query_id string, doc_id long, score double"
         # analyze each query text exactly ONCE, then one dictionary
         # lookup for the union vocabulary (the per-query info builds
         # below are pure cache hits on the pre-analyzed lemma sets)
@@ -2169,7 +2175,30 @@ class SearchEngine:
                 continue
             per_q[qid] = infos
         if not per_q:
-            return local_frame(self.spark, [], out_schema)
+            return []
+        dfs = {ti.term: ti.df for infos in per_q.values() for ti in infos}
+        if sum(dfs.values()) < self.LOCAL_PLAN_MAX_POSTINGS:  # union df
+            return self._local_topk(per_q, k, 0, mode, conjunctive)
+        return self._packed_topk(per_q, k, mode, conjunctive)
+
+    def _packed_topk(
+        self, per_q: dict[str, list[TermInfo]], k: int, mode: str,
+        conjunctive: bool,
+    ) -> DataFrame:
+        """The packed Spark plan over looked-up queries (a batch at or
+        above LOCAL_PLAN_MAX_POSTINGS; a search_ids query routed or
+        forced to "packed") -> lazy (query_id, doc_id, score). One scan
+        covers the union vocabulary; every block is decoded ONCE and
+        fanned out to its subscribing queries. Rarest-term pruning is
+        amortized: all queries' rarest-term ranges come from one
+        driver-side pass (_fill_ranges_cache, memoized), decoded doc_ids
+        are masked per TERM before the shuffle (a (term, doc) row is
+        dropped only when EVERY subscribing query prunes the doc —
+        lossless: such a doc lacks each subscriber's rarest term), and
+        the ranges' union, coarsened, is pushed into the scan. Postings
+        cross the exchange packed (see below); the scoring stage runs
+        _combine_topk per query, and a row_number window (compiled to
+        WindowGroupLimit) merges the k-bounded per-partition rows."""
         # query ids travel the hot path as dense int32 — a string id on
         # every partial row is pure Arrow/shuffle weight (the partials
         # frame is |queries| x df-sized); the string comes back via a
@@ -2321,20 +2350,13 @@ class SearchEngine:
                 )
 
         partials = blocks.mapInPandas(decode_pack, schema=pack_schema)
-        # co-locate each doc's term partials, then score EVERY query and
-        # take per-partition top-k in ONE vectorized numpy pass: a dense
-        # (docs x terms) matrix per partition, each query's score as a
-        # left-to-right sum of its df-ascending term columns (missing
-        # terms contribute literally +0.0 — the exact COALESCE-chain
-        # accumulation order of search_ids), presence as a bool-matrix
-        # AND (conjunctive) / OR (disjunctive), and (score DESC, doc_id
-        # ASC) top-k per query via lexsort. Output is k-bounded per
-        # (query, partition), so the final combine touches at most
-        # |queries| x partitions x k rows. (A Catalyst formulation —
-        # per-doc map + per-query struct array + explode + window — was
-        # measured 2-4x slower here: the |queries|-way expression fanout
-        # runs per doc row, and the pre-window sort pays
-        # O(matches log matches) on the exploded set.)
+        # co-locate each doc's term partials, then per partition a dense
+        # (docs x terms) matrix (+0.0 where a term is missing) and
+        # _combine_topk per query: k-bounded rows per (query, partition).
+        # (A Catalyst formulation — per-doc map + per-query struct array +
+        # explode + window — was measured 2-4x slower here: the
+        # |queries|-way expression fanout runs per doc row, and the
+        # pre-window sort pays O(matches log matches) on the exploded set.)
         m = len(terms)
         q_cols = [
             [term_ti[info.term] for info in infos]
@@ -2395,49 +2417,22 @@ class SearchEngine:
                 idx = cum[rank] + (ids - rb_lo[rank])
                 mat[idx, ti_val] = s
                 hit[idx, ti_val] = True
-            qi_a, doc_a, s_a = [], [], []
-            for qi, cols in enumerate(q_cols):
-                # presence first (1-byte bool traffic), THEN score only
-                # the candidate rows (8-byte gathers) — same left-to-right
-                # df-ascending additions as search_ids on a row subset,
-                # so the doubles are bit-identical
-                present = hit[:, cols[0]].copy()
-                for c in cols[1:]:
-                    if conjunctive:
-                        present &= hit[:, c]
-                    else:
-                        present |= hit[:, c]
-                cand = np.flatnonzero(present)
-                if cand.size == 0:
-                    continue
-                cs = mat[cand, cols[0]].copy()
-                for c in cols[1:]:  # df-ascending, left to right
-                    cs += mat[cand, c]
-                # dense row -> doc_id (needed for the ASC tie-break too)
-                rank = np.searchsorted(cum, cand, side="right") - 1
-                docs = cand - cum[rank] + rb_lo[rank]
-                if cand.size > 4 * k:
-                    # O(n) preselect by score alone, then tie-safe: keep
-                    # EVERY candidate scoring >= the provisional k-th
-                    # before the (score DESC, doc_id ASC) lexsort decides
-                    thr = cs[np.argpartition(-cs, k - 1)[k - 1]]
-                    keep = np.flatnonzero(cs >= thr)
-                    order = np.lexsort((docs[keep], -cs[keep]))[:k]
-                    sel_d, sel_s = docs[keep[order]], cs[keep[order]]
-                else:
-                    order = np.lexsort((docs, -cs))[:k]
-                    sel_d, sel_s = docs[order], cs[order]
-                qi_a.append(np.full(sel_d.size, qi, dtype=np.int32))
-                doc_a.append(sel_d)
-                s_a.append(sel_s)
-            if qi_a:
-                yield pd.DataFrame(
-                    {
-                        "qi": np.concatenate(qi_a),
-                        "doc_id": np.concatenate(doc_a),
-                        "score": np.concatenate(s_a),
-                    }
-                )
+            # dense row -> doc_id, for the kernel's doc_id ASC tie-break
+            row_doc = np.arange(n_rows, dtype=np.int64) + np.repeat(
+                rb_lo - cum[:-1], rb_widths[rbs]
+            )
+            tops = [
+                _combine_topk(row_doc, mat, hit, cols, conjunctive, k)
+                for cols in q_cols
+            ]
+            yield pd.DataFrame({
+                "qi": np.repeat(
+                    np.arange(len(tops), dtype=np.int32),
+                    [d.size for d, _ in tops],
+                ),
+                "doc_id": np.concatenate([d for d, _ in tops]),
+                "score": np.concatenate([sc for _, sc in tops]),
+            })
 
         # explicit partition count: without it AQE's advisory-size
         # coalescing is free to merge this exchange down to a handful of

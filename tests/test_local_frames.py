@@ -1,6 +1,7 @@
 """Read paths build no Python-RDD frames, ``SearchEngine.search``'s rows
 are exactly ``search_ids`` + the documents + ``make_snippet``, and a
-bounded search runs no Spark job and collects no DataFrame at all.
+bounded search or search_many batch runs no Spark job and collects no
+DataFrame at all.
 
 A frame from ``createDataFrame(<python list>)`` scans a Python RDD: an
 RDD job on every evaluation, run by a second pool of Python workers.
@@ -11,7 +12,6 @@ when empty)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import DataFrame
 
 from search_engine_spark import schemas
 from search_engine_spark.api import EngineAPI
@@ -125,19 +125,32 @@ def test_empty_local_frame_collects_without_a_job(spark, schema):
         assert df.schema == schema
 
 
-def test_bounded_api_search_runs_no_spark_job(eng, monkeypatch):
+@pytest.fixture
+def collects(eng, monkeypatch):
+    """Every DataFrame.collect call while the test runs. Spark's frames
+    are pyspark.sql.classic DataFrames, whose collect overrides the one
+    on pyspark.sql.DataFrame, so the spy goes on the concrete class."""
+    calls = []
+    cls = type(eng.spark.range(1))
+    real_collect = cls.collect
+    monkeypatch.setattr(
+        cls, "collect", lambda self: calls.append(self) or real_collect(self)
+    )
+    return calls
+
+
+def test_collects_spy_sees_a_collect(eng, collects):
+    eng.spark.range(1).collect()
+    assert len(collects) == 1
+
+
+def test_bounded_api_search_runs_no_spark_job(eng, collects):
     """A freshly invalidated engine (init) + bounded searches with
     snippets — page 1, page 2, a one-term query and a missing term —
     run 0 Spark jobs and collect no DataFrame: every read is
     driver-side pyarrow, the plan is the local one and the envelope is
     built from the rows. (A LocalRelation collect runs no job either,
     so the collects are counted.)"""
-    collects = []
-    real_collect = DataFrame.collect
-    monkeypatch.setattr(
-        DataFrame, "collect",
-        lambda self: collects.append(self) or real_collect(self),
-    )
     api = EngineAPI(eng.spark, eng.index_dir)
     h0 = jobs_since(eng.spark)
     pages = []
@@ -151,3 +164,30 @@ def test_bounded_api_search_runs_no_spark_job(eng, monkeypatch):
     assert collects == []
     assert pages[0] and pages[1] and pages[2] and pages[3] == []
     assert all("<b>" in row["snippet"] for row in pages[0])
+
+
+def test_bounded_api_search_many_runs_no_spark_job(eng, collects):
+    """A freshly invalidated engine + bounded batches (one with a
+    missing-term query) with snippets on and off, at offset 0 and 5, run
+    0 Spark jobs and collect no DataFrame: the batch runs the local plan
+    and the envelope pages its rows."""
+    api = EngineAPI(eng.spark, eng.index_dir)
+    batch = {"a": "query index", "b": "rewritten", "gone": MISSING}
+    h0 = jobs_since(eng.spark)
+    outs = {}
+    for with_snippets in (True, False):
+        for offset in (0, 5):
+            api.invalidate()
+            outs[with_snippets, offset] = api.search_many(
+                batch, offset=offset, limit=5, with_snippets=with_snippets
+            )["results"]
+    assert jobs_since(eng.spark, h0) == 0
+    assert collects == []
+    for (with_snippets, offset), res in outs.items():
+        assert res["a"]["data"] and res["b"]["data"], (with_snippets, offset)
+        assert res["gone"] == {"result": True, "count": 0, "data": []}
+        snippets = [row["snippet"] for row in res["a"]["data"]]
+        if with_snippets:
+            assert all("<b>" in sn for sn in snippets)
+        else:
+            assert snippets == [None] * len(snippets)

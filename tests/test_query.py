@@ -11,10 +11,13 @@ from pathlib import Path
 
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.oracle import oracle_search
 from search_engine_spark.operators.query import SearchEngine, TermInfo
+
+from conftest import jobs_since
 
 QUERIES = json.loads(
     (Path(__file__).parent / "fixtures" / "queries.json").read_text()
@@ -137,11 +140,26 @@ def test_statistics(engine):
     assert set(stats["role"]) <= {"user", "assistant", "system", "tool"}
 
 
-def test_search_many_matches_sequential(engine):
-    """Batching must be bit-invisible: search_many over a mixed-width
-    workload (3/2/1-term, shared vocabulary, a dictionary-missing term,
-    an analyzes-to-nothing query) returns exactly each query's
-    search_ids rows — same doc_ids, bit-equal float scores."""
+# search_many's two routes: the driver-side local plan (every batch here
+# is under the bound) and the packed Spark plan (the bound shadowed to 0)
+MANY_BOUNDS = {"driver": None, "packed": 0}
+
+
+def _shadow_bound(engine, monkeypatch, route):
+    if MANY_BOUNDS[route] is not None:
+        monkeypatch.setattr(
+            engine, "LOCAL_PLAN_MAX_POSTINGS", MANY_BOUNDS[route]
+        )
+
+
+@pytest.mark.parametrize("route", sorted(MANY_BOUNDS))
+def test_search_many_matches_sequential(engine, monkeypatch, route):
+    """Batching must be bit-invisible on both routes: search_many over a
+    mixed-width workload (3/2/1-term, shared vocabulary, a
+    dictionary-missing term, an analyzes-to-nothing query) returns
+    exactly each query's search_ids rows — same doc_ids, bit-equal float
+    scores."""
+    _shadow_bound(engine, monkeypatch, route)
     workload = {
         "multi": "query index merge",
         "pair": "token batch",
@@ -156,9 +174,8 @@ def test_search_many_matches_sequential(engine):
             got[got["query_id"] == qid]
             .sort_values(["score", "doc_id"], ascending=[False, True])
         )
-        # plan="classic": compare against the CLASSIC row-partials
-        # plan — search_ids now auto-routes plain queries through
-        # search_many itself, which would make this test circular
+        # plan="classic": the Spark pivot plan shares no combine code
+        # with either search_many route (the local plan would)
         exp = engine.search_ids(q, k=7, plan="classic").toPandas()
         assert part["doc_id"].tolist() == exp["doc_id"].tolist(), qid
         assert part["score"].tolist() == exp["score"].tolist(), qid
@@ -166,7 +183,9 @@ def test_search_many_matches_sequential(engine):
     assert (got["query_id"] == "blank").sum() == 0
 
 
-def test_search_many_disjunctive_and_modes(engine):
+@pytest.mark.parametrize("route", sorted(MANY_BOUNDS))
+def test_search_many_disjunctive_and_modes(engine, monkeypatch, route):
+    _shadow_bound(engine, monkeypatch, route)
     for mode in ["bm25", "relevance_ref"]:
         got = (
             engine.search_many(
@@ -187,6 +206,35 @@ def test_search_many_disjunctive_and_modes(engine):
     assert [f.name for f in empty.schema.fields] == [
         "query_id", "doc_id", "score",
     ]
+
+
+def test_search_many_routes_on_the_union_df(engine, monkeypatch):
+    """A batch routes on the summed df of its DISTINCT kept terms
+    ("query" is shared; the missing-term query keeps none, not even
+    "spark"): one below the bound runs on the driver (rows, no Spark
+    plan), exactly the bound runs the packed Spark plan (a lazy frame),
+    with equal answers."""
+    workload = {"a": "query index", "b": "query token", "c": "zzznope spark"}
+    dfs = {ti.term: ti.df for q in ("query index", "query token")
+           for ti in engine.lookup_terms(q)[0]}
+    union_df = sum(dfs.values())
+    monkeypatch.setattr(engine, "LOCAL_PLAN_MAX_POSTINGS", union_df + 1)
+    driver = engine._search_many(workload, 7, "bm25", True)
+    assert isinstance(driver, list) and driver
+    monkeypatch.setattr(engine, "LOCAL_PLAN_MAX_POSTINGS", union_df)
+    packed = engine._search_many(workload, 7, "bm25", True)
+    assert isinstance(packed, DataFrame)
+    assert sorted(driver) == sorted(tuple(r) for r in packed.collect())
+
+
+def test_forced_packed_plan_runs_spark_and_equals_classic(spark, engine):
+    """search_ids(plan="packed") runs the packed Spark plan itself, not
+    the auto-routing batch (which would serve it on the driver)."""
+    h0 = jobs_since(spark)
+    packed = engine.search_ids("query index", k=10, plan="packed").collect()
+    assert jobs_since(spark, h0) >= 1
+    classic = engine.search_ids("query index", k=10, plan="classic")
+    assert packed and packed == classic.collect()
 
 
 def _hot_terms(engine, n=5):

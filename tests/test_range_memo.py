@@ -11,6 +11,7 @@ span list is too long for Catalyst.
 
 from __future__ import annotations
 
+import re
 import shutil
 import warnings
 
@@ -118,11 +119,13 @@ def test_fill_ranges_cache_equals_spark_scan(spark, indexes, state,
     assert all(memo[t] is None for t in by_df + by_count + [MISSING])
 
 
-def test_cold_search_many_runs_no_range_job(spark, indexes):
-    """A cold batch fills its range memo without a Spark job: it runs
-    only its scoring plan's jobs (4 here; the two Spark range collectors
-    the memo replaced made it 7)."""
+def test_cold_search_many_runs_no_range_job(spark, indexes, monkeypatch):
+    """A cold batch on the packed plan (the local-plan bound shadowed to
+    0) fills its range memo without a Spark job: it runs only its
+    scoring plan's jobs (4 here; the two Spark range collectors the memo
+    replaced made it 7)."""
     eng = SearchEngine(spark, indexes["base"][0])
+    monkeypatch.setattr(eng, "LOCAL_PLAN_MAX_POSTINGS", 0)
     batch = ["query index", "token batch", "spark merge", "revised shard",
              "cache hash", "join token"]
     h0 = jobs_since(spark)
@@ -147,3 +150,45 @@ def test_ranges_pred_coarsens_long_span_lists(spark):
     frame = local_frame(spark, pd.DataFrame({"doc_id": inside}),
                         "doc_id long")
     assert frame.filter(pred).count() == len(inside)
+
+
+def _plan(df) -> str:
+    """The executed plan without expression ids."""
+    return re.sub(
+        r"#\d+L?", "", df._jdf.queryExecution().executedPlan().toString()
+    )
+
+
+def test_scan_blocks_builds_its_term_lists_in_one_call(spark, indexes,
+                                                       monkeypatch):
+    """A 100-term scan with ranges and exempt terms builds its IN lists
+    without a Py4J literal per term, and keeps Column.isin's plan (the
+    same PartitionFilters and pushed term filter) and rows."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.classic import column
+
+    eng = SearchEngine(spark, indexes["base"][0])
+    dictionary = eng._dictionary.to_table(columns=["term"]).to_pandas()
+    terms = sorted(dictionary["term"])[:99] + ["o'k\\x"]
+    keep = terms[:3]
+    ranges = [(0, 40), (90, 120)]
+    calls = []
+    real = column._create_column_from_literal
+    monkeypatch.setattr(column, "_create_column_from_literal",
+                        lambda v: calls.append(v) or real(v))
+    new = eng._scan_blocks(terms, ranges, keep_terms=keep)
+    assert calls == []  # Column.isin made one per term and bucket
+    monkeypatch.undo()
+
+    from search_engine_spark.functions.spark_hash import spark_bucket
+
+    buckets = sorted({spark_bucket(t, eng.n_buckets) for t in terms})
+    old = eng.postings.filter(
+        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+    ).filter(
+        F.col("term").isin(keep)
+        | eng._ranges_pred(ranges, "first_doc_id", "last_doc_id")
+    )
+    assert _plan(new) == _plan(old)
+    rows = sorted(map(tuple, new.collect()))
+    assert rows and rows == sorted(map(tuple, old.collect()))

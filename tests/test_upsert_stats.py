@@ -9,8 +9,9 @@ tables writes, and what the oracle computes over the net corpus, over
 a whole mutation history; that a crash before the documents append
 leaves the live stats untouched and never publishes the stale *_new;
 and how many Spark jobs one upsert runs. The same history drives the
-plan parity check: the driver-side local plan answers bit-identically
-to the classic Spark plan on every state, every snapshot pin and after
+plan parity check: the driver-side local plan and search_many (on the
+driver and on the packed Spark plan) answer bit-identically to the
+classic Spark plan on every state, every snapshot pin and after
 compaction.
 """
 
@@ -156,25 +157,62 @@ PARITY_QUERIES = [
 ]
 
 
+def _batches(eng, k):
+    """search_many's rows for the parity queries: one batch per (mode,
+    conjunctive), k rows per query -> {query index: [(doc_id, score)]}.
+    search_many has no df cutoff, so max_df is left out."""
+    groups: dict[tuple, dict[int, str]] = {}
+    for i, (q, kw) in enumerate(PARITY_QUERIES):
+        key = (kw.get("mode", "bm25"), kw.get("conjunctive", True))
+        groups.setdefault(key, {})[i] = q
+    got = {i: [] for i in range(len(PARITY_QUERIES))}
+    for (mode, conjunctive), batch in groups.items():
+        rows = eng.search_many(
+            {str(i): q for i, q in batch.items()}, k=k, mode=mode,
+            conjunctive=conjunctive,
+        ).collect()
+        for qid, doc_id, score in sorted(rows, key=lambda r: (-r[2], r[1])):
+            got[int(qid)].append((doc_id, score))
+    return got
+
+
 def _assert_local_equals_classic(eng):
-    """Every parity query: the local plan's rows equal the classic
-    plan's, ids and score bits; most queries must hit something, or the
+    """Every parity query: the local plan's rows, and its page of a
+    search_many batch on both routes (the driver, and the packed plan
+    with the local-plan bound shadowed to 0), equal the classic plan's,
+    ids and score bits; most queries must hit something, or the
     comparison would be vacuous."""
     hits = 0
+    classic = []
     for q, kw in PARITY_QUERIES:
         local = [tuple(r) for r in
                  eng.search_ids(q, k=10, plan="local", **kw).collect()]
-        classic = [tuple(r) for r in
-                   eng.search_ids(q, k=10, plan="classic", **kw).collect()]
-        assert local == classic, (q, kw)
+        classic.append([tuple(r) for r in
+                        eng.search_ids(q, k=10, plan="classic", **kw)
+                        .collect()])
+        assert local == classic[-1], (q, kw)
         hits += bool(local)
     assert hits >= 4, hits
+    for bound in (eng.LOCAL_PLAN_MAX_POSTINGS, 0):
+        eng.LOCAL_PLAN_MAX_POSTINGS = bound
+        batches = _batches(eng, k=15)
+        for i, (q, kw) in enumerate(PARITY_QUERIES):
+            offset = kw.get("offset", 0)
+            want = classic[i] if "max_df" not in kw else [
+                tuple(r) for r in eng.search_ids(
+                    q, k=10, plan="classic",
+                    **{key: v for key, v in kw.items() if key != "max_df"},
+                ).collect()
+            ]
+            assert batches[i][offset:offset + 10] == want, (bound, q, kw)
+    del eng.LOCAL_PLAN_MAX_POSTINGS
 
 
 def test_local_plan_equals_classic_over_a_mutation_history(spark, tmp_path):
-    """The driver-side local plan against the classic Spark plan, bit
-    for bit, over a fresh, upserted, insert-appended, deleted (both
-    delete paths), compacted and snapshot-pinned index."""
+    """The driver-side local plan and both search_many routes against
+    the classic Spark plan, bit for bit, over a fresh, upserted,
+    insert-appended, deleted (both delete paths), compacted and
+    snapshot-pinned index."""
     from search_engine_spark.operators.compaction import compact_index
     from search_engine_spark.operators.snapshots import list_snapshots
 

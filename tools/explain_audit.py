@@ -49,9 +49,13 @@ def main() -> None:
     show("top-k search (TakeOrderedAndProject)",
          eng.search_ids(" ".join(EQ.RARE_QUERY_TERMS), k=10,
                         plan="classic"))
+    # the local-plan bound shadowed to 0: a bounded batch runs on the
+    # driver too, and only the packed plan has a Spark plan to audit
+    eng.LOCAL_PLAN_MAX_POSTINGS = 0
     show("batched multi-query search (WindowGroupLimit top-k per query)",
          eng.search_many({q: " ".join(t) for q, t in
                           EQ.BATCH_QUERIES.items()}, k=10))
+    del eng.LOCAL_PLAN_MAX_POSTINGS
     # native-only helper: the q_bm25_topk GATE entry unions the engine
     # variant too (r5 fold) — auditing that would mix the engine's
     # MapInPandas decode plan into the "native" section
