@@ -828,7 +828,7 @@ def _probe_mp_encode(nproc: int) -> float:
     """Spark-free control for the STAGE-C posting-encode workload: each
     pool worker reads a disjoint set of real staging parquet files (from a
     prior --scaling run's index on tmpfs), sorts them (term, doc_id) and
-    runs the EXACT partition encoder (_make_part_encoder: delta pass,
+    runs the EXACT partition encoder (_encode_part: delta pass,
     varbyte width/scatter passes, reduceat block maxima) — i.e. a stage-C
     task minus Spark's shuffle/Arrow/parquet-write envelope. Its N->4N
     efficiency is what this box grants the byte-scatter-heavy encode
@@ -861,7 +861,7 @@ def _mp_encode_work(paths) -> int:
     import pandas as pd
     import pyarrow.parquet as pq
 
-    from search_engine_spark.operators.index_build import _make_part_encoder
+    from search_engine_spark.operators.index_build import _encode_part
 
     pdf = pd.concat(
         [pq.read_table(p).to_pandas() for p in paths], ignore_index=True
@@ -870,11 +870,7 @@ def _mp_encode_work(paths) -> int:
     pdf = pdf.rename(columns={"term": "term_id"})  # kernel is id-typed
     pdf["salt"] = 0
     pdf["df"] = 1000
-    enc = _make_part_encoder(2_813_043, 16.6, 128)
-    n = 0
-    for out in enc(iter([pdf])):
-        n += len(out)
-    return n
+    return len(_encode_part(pdf, None, 2_813_043, 16.6, 128, False))
 
 
 def _probe_mp_write(nproc: int) -> float:

@@ -31,13 +31,14 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
-from .incremental import _live, open_index, swap_dir
+from .incremental import _live, open_index
 from .index_build import (
     _manifest_path,
     _read_manifest,
     _write_manifest_row,
     check_hash_ids,
     run_parts,
+    swap_dir,
     write_part,
 )
 

@@ -8,7 +8,7 @@ the way Iceberg's merge-on-read does it: the old doc_id goes into a
 delete vector, the new text is indexed as a new doc in the batch's new
 part, and every read subtracts the vector — queries via a numpy mask in
 the one decode kernel (query.py:_decode_blocks), stats via an anti-join
-in the one stats writer (incremental.py:_write_stats_new).
+in the one stats writer (index_build.py:_write_stats_new).
 `compact_index` is the merge: it rewrites staging/postings/documents
 without the deleted rows and purges the vector.
 

@@ -79,13 +79,16 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..errors import QueryArgumentError
 from ..functions.analyzer import ANALYZER_VERSION, terms_col
-from ..schemas import read_row, read_table
+from ..schemas import read_table
 from ..session import local_frame
 from .index_build import (
+    STATS_TABLES,
     PartLayout,
     _part_metrics,
     _read_manifest,
+    _swap_stats,
     _write_manifest_row,
+    _write_stats_new,
     assign_doc_ids,
     check_hash_ids,
     clean_transcripts,
@@ -94,10 +97,9 @@ from .index_build import (
     done_row,
     read_layout,
     staging_rows,
+    swap_dir,
     write_part,
 )
-
-STATS_TABLES = ("term_stats", "corpus_stats")
 
 
 def _part_ids_under(out_dir: str, subdir: str) -> set[int]:
@@ -144,64 +146,6 @@ def _ids_frame(
 def _live(df: DataFrame, dead: DataFrame | None) -> DataFrame:
     """``df`` without the doc_ids of ``dead`` (None: nothing to drop)."""
     return df if dead is None else df.join(dead, "doc_id", "left_anti")
-
-
-def _write_stats_new(
-    out_dir: str,
-    raw_live: DataFrame,
-    dls_live: DataFrame,
-    id_space: int,
-    version: str,
-    n_buckets: int,
-    stats_epoch: int | None,
-) -> tuple[int, float]:
-    """The one stats writer: the LIVE term_stats (df, cf over the
-    ``raw_live`` staging rows) to ``term_stats_new/`` and the corpus row
-    (over the ``dls_live`` doc lengths) to ``corpus_stats_new/``;
-    _swap_stats publishes both. Returns (n_docs, avgdl) as the encoder
-    scores with them, read back on the driver (no job). avgdl is an
-    integer sum over a count, so any union order of the same lengths
-    gives the same double."""
-    # each file sorted by term (no extra job or shuffle), like the
-    # build's writer: the driver-side dictionary lookup prunes row groups
-    raw_live.groupBy("term").agg(
-        F.count("*").alias("df"), F.sum("tf").alias("cf")
-    ).sortWithinPartitions("term").write.mode("overwrite").parquet(
-        f"{out_dir}/term_stats_new"
-    )
-    corpus_new = f"{out_dir}/corpus_stats_new"
-    dls_live.agg(
-        F.count("*").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-        F.max("dl").cast("double").alias("max_tf_sum"),
-        F.lit(version).alias("index_version"),
-        F.lit(n_buckets).alias("n_buckets"),
-        F.lit(stats_epoch).cast("long").alias("stats_epoch"),
-        F.lit(id_space).cast("long").alias("id_space"),
-    ).write.mode("overwrite").parquet(corpus_new)
-    r = read_row(corpus_new)
-    return int(r["n_docs"]), float(r["avgdl"]) if r["avgdl"] else 1.0
-
-
-def swap_dir(new: str, live: str, old: str) -> None:
-    """Publish the table written to ``new`` as ``live`` by rename swap
-    (one Iceberg snapshot commit on clusters). Spark's mode("overwrite")
-    would DELETE the live table before its write job runs — a crash in
-    that window loses it outright (for the stats: bricking every
-    subsequent operation at entry). The rename gap is instantaneous and
-    leaves ``old`` on disk for manual restore."""
-    shutil.rmtree(old, ignore_errors=True)
-    if Path(live).exists():
-        Path(live).rename(old)
-    Path(new).rename(live)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _swap_stats(out_dir: str) -> None:
-    """Publish _write_stats_new's tables."""
-    for table in STATS_TABLES:
-        tgt = f"{out_dir}/{table}"
-        swap_dir(f"{tgt}_new", tgt, f"{tgt}_old")
 
 
 def _recompute_stats(spark: SparkSession, out_dir: str, version: str,

@@ -11,7 +11,9 @@ Pipeline (2 wide shuffles total):
        whole-stage codegen — identical to the pandas/Python/SQL analyzers
        by the 4-way identity test)
     -> documents (+ dl) and exploded (doc_id, term, tf, dl)  [shuffle 2: agg]
-    -> term_stats (df, cf), corpus_stats
+    -> term_stats (df, cf), corpus_stats by the one stats writer
+       (_write_stats_new, shared with upserts), swapped in; the stage_docs
+       manifest row commits stage A
     -> per doc_id-range PART (checkpoint unit):
          broadcast-join term df  -> range-salt hot terms
          -> (term,salt) collect_list groups -> mapInArrow encoder: one
@@ -31,6 +33,8 @@ Scale notes (100 TB / 1000 executors):
   shuffle (SURVEY.md §7.3).
 - each PART is an independent job writing its own partition directory +
   manifest row -> kill/resume skips DONE parts (north-rule checkpointing).
+  Parts are encoded only after stage A commits; a resume over an
+  uncommitted stage A starts over, so no part outlives its stats.
 - postings are hash-bucketed by term (`bucket` partition column) so query
   lookups prune to matching directories.
 """
@@ -40,6 +44,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -273,21 +278,6 @@ def _read_manifest(out_dir: str) -> dict[str, dict]:
     return out
 
 
-def _manifest_part_epoch(manifest: dict) -> int | None:
-    """The single stats_epoch shared by EVERY DONE part row, else None.
-    Used by resume paths to keep rewritten (bit-identical) stats on the
-    same epoch as surviving parts — see build_index."""
-    eps = {
-        r.get("stats_epoch")
-        for name, r in manifest.items()
-        if name.startswith("part_")
-    }
-    eps.discard(None)
-    if len(eps) == 1:
-        return int(next(iter(eps)))
-    return None
-
-
 def manifest_df(spark: SparkSession, out_dir: str) -> DataFrame:
     """The build_manifest table (per-partition lineage + metrics)."""
     rows = []
@@ -320,16 +310,22 @@ def manifest_df(spark: SparkSession, out_dir: str) -> DataFrame:
     return local_frame(spark, pdf, schemas.BUILD_MANIFEST)
 
 
-def _make_part_encoder(
-    n_docs: int, avgdl: float, block_size: int,
-    store_positions: bool = False,
-):
-    """Batch-level posting encoder. Input frames hold (term_id, salt)-
+def _encode_part(
+    pdf: pd.DataFrame, pos_flat: np.ndarray | None, n_docs: int,
+    avgdl: float, block_size: int, store_positions: bool,
+) -> pd.DataFrame:
+    """Batch-level posting encoder: one non-empty frame of posting rows
+    in, its posting blocks out. The frame holds (term_id, salt)-
     CONTIGUOUS runs sorted by doc_id within each run (encode_salted's
-    arrow_encode builds them from collect_list groups with one lexsort);
-    ONE numpy pass per frame encodes every block of every group in it —
-    the delta pass, both varbyte width/scatter passes, and the reduceat
-    block maxima all amortize across thousands of groups at once.
+    arrow_encode builds it from collect_list groups with one lexsort);
+    ONE numpy pass encodes every block of every group in it — the delta
+    pass, both varbyte width/scatter passes, and the reduceat block
+    maxima all amortize across thousands of groups at once.
+
+    With ``store_positions`` the positions ride as ONE flat int64 array,
+    ``pos_flat``, aligned with the frame's rows via tf (row i owns the
+    next tf[i] values, sorted ascending) — never as a per-row object
+    column (1M tiny array objects would dominate the stage).
 
     The input carries term_id (xxhash64 of the term, collision-checked
     against the dictionary — see build_index) instead of the term string,
@@ -349,131 +345,97 @@ def _make_part_encoder(
     idf per group is computed with math.log — bit-identical to the
     query-side scorer (query.py:_idf), which block-skip correctness
     (score <= block_max_score) relies on."""
+    ids = pdf["doc_id"].to_numpy(np.int64)
+    tfs = pdf["tf"].to_numpy(np.int64)
+    dls = pdf["dl"].to_numpy(np.int64)
+    dfs = pdf["df"].to_numpy(np.int64)
+    salts = pdf["salt"].to_numpy(np.int64)
+    terms = pdf["term_id"].to_numpy()
+    n = ids.size
 
-    def encode(batches):
-        # store_positions batches arrive as (pdf, pos_flat) tuples: the
-        # positions ride as ONE flat int64 array aligned with the frame's
-        # rows via tf (row i owns the next tf[i] values) — never as a
-        # per-row object column (1M tiny array objects would dominate
-        # the stage)
-        chunks = []
-        pos_chunks = []
-        for c in batches:
-            if isinstance(c, tuple):
-                c, pflat = c
-                if len(c):
-                    pos_chunks.append(np.asarray(pflat, dtype=np.int64))
-            if len(c):
-                chunks.append(c)
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
+    # group boundaries over the (term, salt) sort prefix
+    new_grp = np.empty(n, dtype=bool)
+    new_grp[0] = True
+    if n > 1:
+        new_grp[1:] = (terms[1:] != terms[:-1]) | (
+            salts[1:] != salts[:-1]
         )
-        pos_flat = (
-            np.concatenate(pos_chunks)
-            if len(pos_chunks) > 1
-            else (pos_chunks[0] if pos_chunks else None)
-        )
-        if store_positions and pos_flat is None:
+    grp_of_row = np.cumsum(new_grp) - 1
+    grp_start = np.flatnonzero(new_grp)
+    rel = np.arange(n, dtype=np.int64) - grp_start[grp_of_row]
+
+    # block starts: every block_size rows within a group (rel == 0 at
+    # each group start, so every group start is a block start)
+    starts = np.flatnonzero(rel % block_size == 0)
+    ends = np.append(starts[1:], n)
+    grp_of_block = grp_of_row[starts]
+    first_block_of_grp = np.flatnonzero(new_grp[starts])
+    local_block = (
+        np.arange(starts.size, dtype=np.int64)
+        - first_block_of_grp[grp_of_block]
+    )
+
+    # delta within blocks: each block's first value stays absolute
+    # (cross-group diffs may wrap negative, but every group start is a
+    # block start and gets overwritten with the absolute id)
+    deltas = np.empty(n, dtype=np.uint64)
+    deltas[0] = np.uint64(ids[0])
+    if n > 1:
+        deltas[1:] = np.diff(ids).astype(np.uint64)
+    deltas[starts] = ids[starts].astype(np.uint64)
+
+    idf_g = np.fromiter(
+        (
+            math.log(1.0 + (n_docs - int(d) + 0.5) / (int(d) + 0.5))
+            for d in dfs[grp_start]
+        ),
+        dtype=np.float64,
+        count=grp_start.size,
+    )
+    denom = tfs + K1 * (1 - B + B * dls / avgdl)
+    bscores = idf_g[grp_of_row] * (tfs * (K1 + 1)) / denom
+
+    out = {
+        "term_id": terms[starts],
+        "block_id": salts[starts] * BLOCKS_PER_SALT_CAP + local_block,
+        "n": (ends - starts).astype(np.int32),
+        "doc_ids": varbyte_encode_sliced(deltas, starts),
+        "tfs": varbyte_encode_sliced(tfs.astype(np.uint64), starts),
+        "dls": varbyte_encode_sliced(dls.astype(np.uint64), starts),
+        "first_doc_id": ids[starts],
+        "last_doc_id": ids[ends - 1],
+        "max_tf": np.maximum.reduceat(tfs, starts).astype(np.int32),
+        # min_dl feeds the query-side drift-immune block bound
+        # (query.py:_bound_col_multi): f(max_tf, max(min_dl,
+        # max_tf)) upper-bounds every score in the block with
+        # CURRENT stats, where the stored block_max_score freezes
+        # encode-time stats
+        "min_dl": np.minimum.reduceat(dls, starts).astype(np.int32),
+        "block_max_score": np.maximum.reduceat(bscores, starts),
+    }
+    if store_positions:
+        # per-row position lists live flattened in pos_flat (row i
+        # owns tf[i] values, already sorted ascending); delta within
+        # each row (first absolute), then slice the stream at BLOCK
+        # boundaries — block start offsets in flat-position space are
+        # the tf prefix sums at the block-start rows
+        tf_prefix = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(tfs, out=tf_prefix[1:])
+        if int(tf_prefix[-1]) != int(pos_flat.size):
             raise ValueError(
-                "store_positions encoder got a frame without positions"
+                f"positions length {pos_flat.size} != sum(tf) "
+                f"{tf_prefix[-1]}"
             )
-        ids = pdf["doc_id"].to_numpy(np.int64)
-        tfs = pdf["tf"].to_numpy(np.int64)
-        dls = pdf["dl"].to_numpy(np.int64)
-        dfs = pdf["df"].to_numpy(np.int64)
-        salts = pdf["salt"].to_numpy(np.int64)
-        terms = pdf["term_id"].to_numpy()
-        n = ids.size
-
-        # group boundaries over the (term, salt) sort prefix
-        new_grp = np.empty(n, dtype=bool)
-        new_grp[0] = True
-        if n > 1:
-            new_grp[1:] = (terms[1:] != terms[:-1]) | (
-                salts[1:] != salts[:-1]
-            )
-        grp_of_row = np.cumsum(new_grp) - 1
-        grp_start = np.flatnonzero(new_grp)
-        rel = np.arange(n, dtype=np.int64) - grp_start[grp_of_row]
-
-        # block starts: every block_size rows within a group (rel == 0 at
-        # each group start, so every group start is a block start)
-        starts = np.flatnonzero(rel % block_size == 0)
-        ends = np.append(starts[1:], n)
-        grp_of_block = grp_of_row[starts]
-        first_block_of_grp = np.flatnonzero(new_grp[starts])
-        local_block = (
-            np.arange(starts.size, dtype=np.int64)
-            - first_block_of_grp[grp_of_block]
+        pdeltas = np.empty(pos_flat.size, dtype=np.uint64)
+        if pos_flat.size:
+            pdeltas[0] = np.uint64(pos_flat[0])
+            pdeltas[1:] = np.diff(pos_flat).astype(np.uint64)
+            row_starts = tf_prefix[:-1]
+            pdeltas[row_starts] = pos_flat[row_starts].astype(np.uint64)
+        out["positions"] = varbyte_encode_sliced(
+            pdeltas, tf_prefix[starts]
         )
-
-        # delta within blocks: each block's first value stays absolute
-        # (cross-group diffs may wrap negative, but every group start is a
-        # block start and gets overwritten with the absolute id)
-        deltas = np.empty(n, dtype=np.uint64)
-        deltas[0] = np.uint64(ids[0])
-        if n > 1:
-            deltas[1:] = np.diff(ids).astype(np.uint64)
-        deltas[starts] = ids[starts].astype(np.uint64)
-
-        idf_g = np.fromiter(
-            (
-                math.log(1.0 + (n_docs - int(d) + 0.5) / (int(d) + 0.5))
-                for d in dfs[grp_start]
-            ),
-            dtype=np.float64,
-            count=grp_start.size,
-        )
-        denom = tfs + K1 * (1 - B + B * dls / avgdl)
-        bscores = idf_g[grp_of_row] * (tfs * (K1 + 1)) / denom
-
-        out = {
-            "term_id": terms[starts],
-            "block_id": salts[starts] * BLOCKS_PER_SALT_CAP + local_block,
-            "n": (ends - starts).astype(np.int32),
-            "doc_ids": varbyte_encode_sliced(deltas, starts),
-            "tfs": varbyte_encode_sliced(tfs.astype(np.uint64), starts),
-            "dls": varbyte_encode_sliced(dls.astype(np.uint64), starts),
-            "first_doc_id": ids[starts],
-            "last_doc_id": ids[ends - 1],
-            "max_tf": np.maximum.reduceat(tfs, starts).astype(np.int32),
-            # min_dl feeds the query-side drift-immune block bound
-            # (query.py:_bound_col_multi): f(max_tf, max(min_dl,
-            # max_tf)) upper-bounds every score in the block with
-            # CURRENT stats, where the stored block_max_score freezes
-            # encode-time stats
-            "min_dl": np.minimum.reduceat(dls, starts).astype(np.int32),
-            "block_max_score": np.maximum.reduceat(bscores, starts),
-        }
-        if store_positions:
-            # per-row position lists live flattened in pos_flat (row i
-            # owns tf[i] values, already sorted ascending); delta within
-            # each row (first absolute), then slice the stream at BLOCK
-            # boundaries — block start offsets in flat-position space are
-            # the tf prefix sums at the block-start rows
-            tf_prefix = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(tfs, out=tf_prefix[1:])
-            if int(tf_prefix[-1]) != int(pos_flat.size):
-                raise ValueError(
-                    f"positions length {pos_flat.size} != sum(tf) "
-                    f"{tf_prefix[-1]}"
-                )
-            pdeltas = np.empty(pos_flat.size, dtype=np.uint64)
-            if pos_flat.size:
-                pdeltas[0] = np.uint64(pos_flat[0])
-                pdeltas[1:] = np.diff(pos_flat).astype(np.uint64)
-                row_starts = tf_prefix[:-1]
-                pdeltas[row_starts] = pos_flat[row_starts].astype(np.uint64)
-            out["positions"] = varbyte_encode_sliced(
-                pdeltas, tf_prefix[starts]
-            )
-        yield pd.DataFrame(out)
-
-    return encode
+    return pd.DataFrame(out)
 
 
 def _term_id_col(hash_ids: bool) -> F.Column:
@@ -580,7 +542,6 @@ def encode_salted(
             F.collect_list(F.struct(*ps_fields)).alias("ps"),
         )
     )
-    encode = _make_part_encoder(n_docs, avgdl, block_size, store_positions)
 
     def arrow_encode(batches):
         import pyarrow as pa
@@ -639,14 +600,15 @@ def encode_salted(
                     - np.repeat(out_starts, lens_o)
                     + np.repeat(starts_o, lens_o)
                 )
-                batch_in = (pdf, pvals[idx])
+                pos_flat = pvals[idx]
             else:
-                batch_in = pdf
-            for out in encode(iter([batch_in])):
-                # mapInArrow requires exact Arrow types (no pandas
-                # coercion): block_id is int32 in the POSTINGS schema
-                out["block_id"] = out["block_id"].astype("int32")
-                yield pa.RecordBatch.from_pandas(out, preserve_index=False)
+                pos_flat = None
+            out = _encode_part(pdf, pos_flat, n_docs, avgdl, block_size,
+                               store_positions)
+            # mapInArrow requires exact Arrow types (no pandas coercion):
+            # block_id is int32 in the POSTINGS schema
+            out["block_id"] = out["block_id"].astype("int32")
+            yield pa.RecordBatch.from_pandas(out, preserve_index=False)
 
     return grouped.mapInArrow(arrow_encode, schema=out_schema)
 
@@ -794,6 +756,68 @@ def run_parts(fn, parts, concurrency: int) -> list:
     return [fn(p) for p in parts]
 
 
+STATS_TABLES = ("term_stats", "corpus_stats")
+
+
+def _write_stats_new(
+    out_dir: str,
+    raw_live: DataFrame,
+    dls_live: DataFrame,
+    id_space: int,
+    version: str,
+    n_buckets: int,
+    stats_epoch: int | None,
+) -> tuple[int, float]:
+    """The one stats writer (build stage A, upserts, recovery and
+    deletes-only commits): the LIVE term_stats (df, cf over the
+    ``raw_live`` staging rows) to ``term_stats_new/`` and the corpus row
+    (over the ``dls_live`` doc lengths) to ``corpus_stats_new/``;
+    _swap_stats publishes both. Returns (n_docs, avgdl) as the encoder
+    scores with them, read back on the driver (no job). avgdl is an
+    integer sum over a count, so any union order of the same lengths
+    gives the same double."""
+    # each file sorted by term (no extra job or shuffle): the driver-side
+    # dictionary lookup prunes row groups
+    raw_live.groupBy("term").agg(
+        F.count("*").alias("df"), F.sum("tf").alias("cf")
+    ).sortWithinPartitions("term").write.mode("overwrite").parquet(
+        f"{out_dir}/term_stats_new"
+    )
+    corpus_new = f"{out_dir}/corpus_stats_new"
+    dls_live.agg(
+        F.count("*").alias("n_docs"),
+        F.avg("dl").alias("avgdl"),
+        F.max("dl").cast("double").alias("max_tf_sum"),
+        F.lit(version).alias("index_version"),
+        F.lit(n_buckets).alias("n_buckets"),
+        F.lit(stats_epoch).cast("long").alias("stats_epoch"),
+        F.lit(id_space).cast("long").alias("id_space"),
+    ).write.mode("overwrite").parquet(corpus_new)
+    r = schemas.read_row(corpus_new)
+    return int(r["n_docs"]), float(r["avgdl"]) if r["avgdl"] else 1.0
+
+
+def swap_dir(new: str, live: str, old: str) -> None:
+    """Publish the table written to ``new`` as ``live`` by rename swap
+    (one Iceberg snapshot commit on clusters). Spark's mode("overwrite")
+    would DELETE the live table before its write job runs — a crash in
+    that window loses it outright (for the stats: bricking every
+    subsequent operation at entry). The rename gap is instantaneous and
+    leaves ``old`` on disk for manual restore."""
+    shutil.rmtree(old, ignore_errors=True)
+    if Path(live).exists():
+        Path(live).rename(old)
+    Path(new).rename(live)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _swap_stats(out_dir: str) -> None:
+    """Publish _write_stats_new's tables."""
+    for table in STATS_TABLES:
+        tgt = f"{out_dir}/{table}"
+        swap_dir(f"{tgt}_new", tgt, f"{tgt}_old")
+
+
 def build_index(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -805,14 +829,19 @@ def build_index(
     n_parts: int = 4,
     index_version: str = "v1",
     resume: bool = True,
-    fail_after_parts: int | None = None,  # test hook: simulate a killed job
     part_concurrency: int = 2,  # concurrent part jobs (Spark schedules both)
     store_positions: bool = False,
 ) -> IndexBuildResult:
-    """Full index build with per-part checkpoint/resume. ``n_buckets``
-    defaults to 16 for fresh builds; a RESUMED build adopts the value
-    persisted in corpus_stats (remaining parts must land in the same
-    bucket->directory mapping as the committed ones) and refuses an
+    """Full index build with per-part checkpoint/resume. Stage A (doc
+    ids, documents, staging, stats) commits with the stage_docs manifest
+    row before any part is encoded; each part then commits with its own
+    row. A resume over a committed stage A builds only the parts without
+    a DONE row; a resume over an uncommitted one starts over, exactly as
+    ``resume=False`` does.
+
+    ``n_buckets`` defaults to 16 for fresh builds; a RESUMED build adopts
+    the value persisted in corpus_stats (remaining parts must land in the
+    same bucket->directory mapping as the committed ones) and refuses an
     explicit caller mismatch.
 
     ``block_size``, ``salt_budget`` and ``store_positions`` are the part
@@ -833,12 +862,24 @@ def build_index(
     store_positions mismatch: the flag is a build-wide layout choice)."""
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
+    docs_path = str(out / "documents")
+    staging_path = str(out / "_staging_postings_raw")
+    stats_path = str(out / "term_stats")
+    corpus_path = str(out / "corpus_stats")
+    postings_path = str(out / "postings")
+
     manifest = _read_manifest(out_dir) if resume else {}
-    if not resume and _manifest_path(out_dir).exists():
+    if manifest.get("stage_docs", {}).get("status") != "DONE":
+        # no committed stage A (a fresh build, resume=False, or a build
+        # killed before its stage-A commit): start over. No part may
+        # outlive the stage A it was encoded under, and a smaller rebuild
+        # would otherwise leave stale part dirs that the postings reader
+        # silently unions in
         for p in _manifest_path(out_dir).glob("*.json"):
             p.unlink()
+        shutil.rmtree(postings_path, ignore_errors=True)
         manifest = {}
-    if manifest.get("stage_docs", {}).get("status") == "DONE":
+    else:
         # same contract as incremental_update: resuming (or no-op'ing over)
         # an index stamped with a DIFFERENT analyzer would leave postings
         # that tokenize differently than the queries analyzed against them
@@ -866,227 +907,73 @@ def build_index(
                     "committed ones — rebuild with build_index(resume=False)"
                 )
 
-    docs_path = str(out / "documents")
-    staging_path = str(out / "_staging_postings_raw")
-    stats_path = str(out / "term_stats")
-    corpus_path = str(out / "corpus_stats")
-    postings_path = str(out / "postings")
-
-    if not resume:
-        # per-part postings writes only overwrite their own part_id dir; a
-        # smaller rebuild would otherwise leave stale part dirs that the
-        # postings reader silently unions in
-        import shutil as _shutil
-
-        _shutil.rmtree(postings_path, ignore_errors=True)
     n_buckets = resolve_n_buckets(
-        schemas.read_row(corpus_path)
-        if manifest.get("stage_docs", {}).get("status") == "DONE"
-        and Path(corpus_path).exists()
-        else {},
-        n_buckets, out_dir,
+        schemas.read_row(corpus_path) if manifest else {}, n_buckets, out_dir
     )
     layout = PartLayout(n_buckets, block_size, salt_budget,
                         store_positions, index_version)
 
-    # ---------------- Stage A+B: documents, staging, stats ------------------
+    # ---------------- Stage A: documents, staging, stats, commit -----------
     # One materializing pass (shuffle+sort -> cache of the RAW text, counted
-    # by the same job that fills the doc_id offsets), then TWO independent
-    # write chains run concurrently off the cache:
-    #   thread 1: documents write (corpus_stats piggy-backs as an
-    #             Observation on the same action — no second docs pass)
-    #   main:     staging write (analyzer -> explode -> tf agg -> parquet,
-    #             partitioned by part_id) — the ONLY pass over the exploded
-    #             postings; avgdl/max_dl ride it as an Observation
-    #   thread 2: term_stats from the staging parquet (column-pruned read
-    #             of (term, tf) — overlaps the part encodes)
-    # The exploded rows are deliberately NOT persisted in executor memory:
-    # at scale that cache is corpus-sized (O(total tokens)), and filling it
-    # costs allocation/GC bandwidth on every task thread — the staging
-    # parquet IS the materialization, and every downstream consumer
-    # (term_stats, part encodes, incremental merge, compaction) reads the
-    # partition-pruned, column-pruned slice it needs. This also makes the
-    # fresh and resume paths take the SAME stage-C code path.
-    # The analyzer is the Catalyst terms_col expression — the whole stage
-    # is JVM-side whole-stage codegen; no Python worker, no Arrow transfer.
-    # (terms are computed independently per chain: recomputing the codegen
-    # expression is cheaper than caching exploded string arrays.)
-    # Serial driver work per build: the range-sample pass, ONE counts
-    # collect, and the commit — everything else overlaps or is parallel.
-    if manifest.get("stage_docs", {}).get("status") != "DONE":
+    # by the same job that fills the doc_id offsets), then the documents
+    # write runs on a helper thread while the main thread writes staging
+    # (analyzer -> explode -> tf agg -> parquet partitioned by part_id, the
+    # ONLY pass over the exploded postings). The analyzer is the Catalyst
+    # terms_col expression, recomputed per chain: cheaper than caching
+    # exploded string arrays, and the whole stage stays JVM codegen. The
+    # exploded rows are deliberately NOT cached: at scale that cache is
+    # corpus-sized, and the staging parquet IS the materialization every
+    # consumer (stats, part encodes, upserts, compaction) reads a pruned
+    # slice of. With both written, the one stats writer reads staging and
+    # the documents' dl column, its tables are swapped in, and the
+    # stage_docs row commits stage A.
+    if not manifest:
         t0 = time.time()
-        # one epoch per stats write; parts stamp it into their manifest
-        # rows so the query engine can prove block_max_score freshness.
-        # A resume that redoes stage A REUSES the epoch any surviving
-        # DONE parts carry: stage A is deterministic over the same input
-        # (the documented resume contract), so the rewritten stats are
-        # bit-identical to what those parts were encoded under — minting
-        # a fresh epoch here would leave them mixed-epoch and silently
-        # disable stored-block-max pruning until a compaction. The
-        # contract is not TRUSTED though: a resume fed different input
-        # would otherwise re-validate stale stored block_max_score bounds
-        # and _single_term_topk could silently drop true top-k hits — so
-        # reuse is gated on a determinism witness (n_docs now; avgdl /
-        # max_tf_sum once the staging Observation lands, below) against
-        # the persisted corpus_stats, and any mismatch mints a fresh
-        # epoch (stored-bound pruning then stays off until a compaction
-        # re-encodes — sound, merely slower).
-        reuse_epoch = _manifest_part_epoch(manifest)
-        clean = clean_transcripts(transcripts)
-        with_ids, cached, n_docs = assign_doc_ids(clean, spark)
+        with_ids, cached, n_docs = assign_doc_ids(
+            clean_transcripts(transcripts), spark
+        )
         _plog("shuffle+count (materialize cache)", t0)
-        prev_corpus: dict | None = None
-        if reuse_epoch is not None:
-            try:
-                if Path(corpus_path).exists():
-                    prev_corpus = schemas.read_row(corpus_path)
-            except Exception:  # noqa: BLE001 — torn previous write
-                prev_corpus = None
-            if (
-                prev_corpus is None
-                or int(prev_corpus.get("n_docs") or -1) != int(n_docs)
-            ):
-                reuse_epoch = None
-        stats_epoch = reuse_epoch or int(t0 * 1e6)
         part_size = max(1, math.ceil(n_docs / n_parts))
-
-        corpus_ob = Observation(f"corpus_{int(t0)}")
         documents = with_ids.withColumn(
             "dl", F.size(terms_col(F.col("text")))
         ).select(
             "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "text", "dl"
-        ).observe(
-            corpus_ob,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-            F.max("dl").cast("double").alias("max_tf_sum"),
         )
-
-        terms_df = with_ids.select(
-            "doc_id", terms_col(F.col("text")).alias("terms")
-        ).withColumn("dl", F.size("terms"))
-        exploded = staging_rows(
-            terms_df, (F.col("doc_id") / F.lit(part_size)).cast("int"),
+        staging = staging_rows(
+            with_ids.select(
+                "doc_id", terms_col(F.col("text")).alias("terms")
+            ).withColumn("dl", F.size("terms")),
+            (F.col("doc_id") / F.lit(part_size)).cast("int"),
             store_positions,
         )
-        stats_ob = Observation(f"stats_{int(t0)}")
-        fill_ob = Observation(f"fill_{int(t0)}")
 
-        def _write_docs_corpus() -> None:
+        def _write_documents() -> None:
             tw = time.time()
             documents.write.mode("overwrite").parquet(docs_path)
             _plog("documents write", tw)
-            m = corpus_ob.get
-            corpus_pdf = pd.DataFrame(
-                [
-                    {
-                        "n_docs": int(m["n_docs"] or 0),
-                        "avgdl": float(m["avgdl"]) if m["avgdl"] else None,
-                        "max_tf_sum": float(m["max_tf_sum"] or 0.0),
-                        "index_version": index_version,
-                        # the bucket->directory mapping is part of the
-                        # index's physical layout: persist it so readers
-                        # never guess a different n_buckets
-                        "n_buckets": int(n_buckets),
-                        "stats_epoch": stats_epoch,
-                        # fresh build: ids are dense 0..n_docs-1, no
-                        # deletes yet, so the id space IS the doc count
-                        "id_space": int(m["n_docs"] or 0),
-                    }
-                ]
-            )
-            local_frame(
-                spark, corpus_pdf, schemas.CORPUS_STATS
-            ).write.mode("overwrite").parquet(corpus_path)
 
-        def _write_stats() -> None:
-            # term_stats from the staging parquet: a column-pruned read of
-            # (term, tf) only — runs concurrently with the part encodes.
-            # An all-empty corpus writes no staging part files, which the
-            # declared-schema read sees as no rows: an empty dictionary.
-            tw = time.time()
-            # each file sorted by term (no extra job or shuffle): the
-            # driver-side dictionary lookup then prunes row groups
-            schemas.read_table(spark, staging_path, schemas.STAGING).groupBy(
-                "term"
-            ).agg(F.count("*").alias("df"), F.sum("tf").alias("cf")).observe(
-                stats_ob, F.count(F.lit(1)).alias("n_terms")
-            ).sortWithinPartitions("term").write.mode("overwrite").parquet(
-                stats_path
-            )
-            _plog("term_stats write (from staging)", tw)
-
-        ex = ThreadPoolExecutor(max_workers=3)
+        pool = ThreadPoolExecutor(max_workers=1)
         try:
-            f_docs = ex.submit(_write_docs_corpus)
-            # THE materializing pass over the postings rows: analyzer ->
-            # explode -> tf agg -> partitioned parquet, with the encode-side
-            # corpus scalars riding as an Observation (sum(tf) over posting
-            # rows == sum(dl) over documents, exactly — integer sums).
+            docs_write = pool.submit(_write_documents)
             tw = time.time()
-            exploded.observe(
-                fill_ob,
-                F.sum("tf").alias("tok_sum"),
-                F.max("dl").alias("max_dl"),
-            ).write.mode("overwrite").partitionBy("part_id").parquet(
+            staging.write.mode("overwrite").partitionBy("part_id").parquet(
                 staging_path
             )
             _plog("staging write (tf agg + explode)", tw)
-            fm = fill_ob.get
-            # epoch-witness tier 2: n_docs matched pre-launch, but the
-            # redone stage A's token mass must too (sum(tf) over postings
-            # == sum(dl) over docs exactly; max_dl == max_tf_sum). A
-            # mismatch proves the resume input differs from what the
-            # surviving DONE parts were encoded under: mint a fresh
-            # epoch and rewrite the just-written corpus row (the docs
-            # thread captured the reused epoch), so the stored
-            # block_max_score bounds stay provably invalid.
-            if reuse_epoch is not None and prev_corpus is not None:
-                new_avgdl = (
-                    float(fm["tok_sum"]) / float(n_docs)
-                    if fm["tok_sum"]
-                    else None
-                )
-                old_avgdl = prev_corpus.get("avgdl")
-                if (
-                    (old_avgdl is None) != (new_avgdl is None)
-                    or (
-                        new_avgdl is not None
-                        and float(old_avgdl) != new_avgdl
-                    )
-                    or float(prev_corpus.get("max_tf_sum") or 0.0)
-                    != float(fm["max_dl"] or 0.0)
-                ):
-                    stats_epoch = int(time.time() * 1e6)
-                    f_docs.result()  # corpus row written with stale epoch
-                    row = schemas.read_row(corpus_path)
-                    row["stats_epoch"] = stats_epoch
-                    local_frame(
-                        spark,
-                        [tuple(map(row.get, schemas.CORPUS_STATS.names))],
-                        schemas.CORPUS_STATS,
-                    ).write.mode("overwrite").parquet(corpus_path)
-            f_stats = ex.submit(_write_stats)
-        except BaseException:
-            # a failed staging/docs job must not leak the pinned cache or
-            # the in-flight executor
-            ex.shutdown(wait=True)
-            cached.unpersist()
-            raise
-
-        def _finalize_stage_a() -> None:
-            # stage rows are the stage-A commit markers: written only after
-            # EVERY stage-A artifact (docs, corpus, stats, staging) is
-            # durable (staging landed on the main thread before stage C).
-            # Part rows may land earlier — safe, because doc_ids
-            # are deterministic: a resume that redoes stage A regenerates
-            # identical ids, so already-DONE parts stay valid.
-            try:
-                f_stats.result()
-                f_docs.result()
-            finally:
-                ex.shutdown(wait=True)
-            _write_manifest_row(out_dir, "stage_docs", done_row(
+            docs_write.result()
+            tw = time.time()
+            # fresh build: ids are dense 0..n_docs-1 and nothing is
+            # deleted, so the id space IS the doc count
+            _write_stats_new(
+                out_dir, schemas.read_table(spark, staging_path,
+                                            schemas.STAGING),
+                schemas.read_table(spark, docs_path,
+                                   schemas.DOCUMENTS).select("dl"),
+                n_docs, index_version, n_buckets, int(t0 * 1e6),
+            )
+            _swap_stats(out_dir)
+            _plog("stats write", tw)
+            stage = done_row(
                 -1, t0, index_version=index_version,
                 # new documents must tokenize exactly like the postings
                 # they join against — incremental_update refuses an
@@ -1097,164 +984,56 @@ def build_index(
                 salt_budget=salt_budget,
                 n_docs=n_docs,
                 part_size=part_size,
-            ))
-            _write_manifest_row(out_dir, "stage_stats", done_row(
-                -1, t0, index_version=index_version,
-                n_terms=int(stats_ob.get["n_terms"] or 0),
-            ))
-
-        # encode-side scalars from the staging Observation — bit-identical
-        # to the corpus_stats the docs write persists: sum(tf) over posting
-        # rows equals sum(dl) over documents exactly (integer-valued double
-        # sums are exact below 2^53), and zero-dl docs (absent from
-        # staging) cannot carry the max. Block-skip correctness
-        # (score <= block_max_score) relies on this identity.
-        fresh = {
-            "cached": cached,
-            "stats_future": f_stats,
-            "finalize": _finalize_stage_a,
-            "stats_epoch": stats_epoch,
-            "pool": ex,
-            "avgdl": (
-                float(fm["tok_sum"]) / float(n_docs)
-                if fm["tok_sum"]
-                else 1.0
-            ),
-            "max_tf_sum": float(fm["max_dl"] or 0.0),
-        }
+            )
+            _write_manifest_row(out_dir, "stage_docs", stage)
+        except BaseException as exc:
+            # a failure waits for the in-flight documents write; an
+            # interrupt (Ctrl-C) does not block on it
+            pool.shutdown(wait=isinstance(exc, Exception))
+            raise
+        finally:
+            pool.shutdown(wait=False)
+            cached.unpersist()
     else:
-        fresh = None
-        n_docs = int(manifest["stage_docs"]["n_docs"])
-        part_size = int(manifest["stage_docs"]["part_size"])
-
-    # Resume fallback (stage_docs DONE, stats missing — a crash between
-    # _finalize_stage_a's two row writes): recompute the stats from the
-    # durable staging/documents tables through the one stats writer
-    if fresh is None and manifest.get("stage_stats", {}).get("status") != "DONE":
-        from .incremental import _recompute_stats  # imports this module
-
-        t0 = time.time()
-        # the recompute is deterministic over the durable tables, so the
-        # rewritten stats stay on the surviving parts' epoch (a fresh
-        # epoch would silently disable stored-block-max pruning on a
-        # fully consistent index)
-        _recompute_stats(
-            spark, out_dir, index_version, n_buckets,
-            stats_epoch=_manifest_part_epoch(manifest) or int(t0 * 1e6),
-        )
-        _write_manifest_row(out_dir, "stage_stats", done_row(
-            -1, t0, index_version=index_version,
-            n_terms=schemas.read_table(
-                spark, stats_path, schemas.TERM_STATS
-            ).count(),
-        ))
-        manifest = _read_manifest(out_dir)
-
-    if fresh is not None:
-        avgdl = fresh["avgdl"]
-        max_tf_sum = fresh["max_tf_sum"]
-        stats_epoch = fresh["stats_epoch"]
-    else:
-        corpus_row = schemas.read_row(corpus_path)
-        avgdl = float(corpus_row["avgdl"]) if corpus_row["avgdl"] else 1.0
-        max_tf_sum = float(corpus_row["max_tf_sum"] or 0.0)
-        _ep = corpus_row.get("stats_epoch")
-        stats_epoch = int(_ep) if _ep is not None else None
+        stage = manifest["stage_docs"]
 
     # ---------------- Stage C: per-part posting encode ---------------------
-    # Fresh and resume take the SAME path: each part reads its
-    # partition-pruned slice of the staging parquet and broadcast-joins the
-    # term dictionary. The stats job runs concurrently with the staging
-    # write's tail; wait for its parquet before resolving the read below.
-    def _stage_a_cleanup(block: bool = True) -> None:
-        # join the overlapped stats/docs writes, shut the pool down, and
-        # release the pinned corpus cache — MUST run on every exit path
-        # once `fresh` exists, or a failure pins the cache for the session.
-        # On KeyboardInterrupt/SystemExit (block=False) skip the blocking
-        # finalize — re-waiting minutes on in-flight futures defeats the
-        # interrupt; stage rows stay uncommitted and resume redoes stage A.
-        if fresh is None:
-            return
-        if not block:
-            fresh["pool"].shutdown(wait=False)
-            fresh["cached"].unpersist()
-            return
-        try:
-            fresh["finalize"]()
-        finally:
-            fresh["cached"].unpersist()
+    # Fresh and resume take the SAME path: every scalar comes from the
+    # committed stage A (the writer's corpus row, the stage_docs row), and
+    # each part reads its partition-pruned slice of the staging parquet
+    # and broadcast-joins the term dictionary.
+    n_docs, part_size = int(stage["n_docs"]), int(stage["part_size"])
+    corpus = schemas.read_row(corpus_path)
+    avgdl = float(corpus["avgdl"]) if corpus["avgdl"] else 1.0
+    stats_epoch = corpus.get("stats_epoch")
+    term_stats = schemas.read_table(spark, stats_path, schemas.TERM_STATS)
+    # a corpus whose every document analyzed to zero terms writes no
+    # staging part files — the declared-schema read sees no rows and the
+    # parts encode empty. A MISSING staging dir on a resume (lost/partial
+    # copy) still raises PATH_NOT_FOUND here: it must never commit every
+    # part DONE with zero postings over a populated documents table.
+    staging_df = schemas.read_table(
+        spark, staging_path, schemas.staging_schema(store_positions)
+    )
+    actual_parts = math.ceil(n_docs / part_size) if n_docs else 0
+    todo = [
+        p for p in range(actual_parts)
+        if manifest.get(f"part_{p:05d}", {}).get("status") != "DONE"
+    ]
+    hash_ids = check_hash_ids(term_stats) if todo else True
 
-    # ONE guard covers everything from the stats join through the part
-    # loop: any statement added inside it stays covered (the previous
-    # three separate guards left gaps to grow between them)
-    try:
-        if fresh is not None:
-            fresh["stats_future"].result()
-        term_stats = schemas.read_table(spark, stats_path, schemas.TERM_STATS)
-        # a corpus whose every document analyzed to zero terms writes no
-        # staging part files — the declared-schema read sees no rows and
-        # the parts encode empty. A MISSING staging dir on a resume
-        # (lost/partial copy) still raises PATH_NOT_FOUND here: it must
-        # never commit every part DONE with zero postings over a
-        # populated documents table.
-        staging_df = schemas.read_table(
-            spark, staging_path, schemas.staging_schema(store_positions)
+    def _build_part(p: int) -> None:
+        tpart = time.time()
+        row = write_part(
+            spark, staging_df.filter(F.col("part_id") == p), term_stats,
+            p, p * part_size, part_size, f"{postings_path}/part_id={p}",
+            n_docs=n_docs, avgdl=avgdl, stats_epoch=stats_epoch,
+            hash_ids=hash_ids, layout=layout,
         )
-        actual_parts = math.ceil(n_docs / part_size) if n_docs else 0
-        todo = [
-            p for p in range(actual_parts)
-            if manifest.get(f"part_{p:05d}", {}).get("status") != "DONE"
-        ]
-        skipped = actual_parts - len(todo)
+        _plog(f"part {p} encode+write", tpart)
+        _write_manifest_row(out_dir, f"part_{p:05d}", row)
 
-        hash_ids = check_hash_ids(term_stats) if todo else True
-
-        def _build_part(p: int) -> None:
-            tpart = time.time()
-            row = write_part(
-                spark, staging_df.filter(F.col("part_id") == p), term_stats,
-                p, p * part_size, part_size, f"{postings_path}/part_id={p}",
-                n_docs=n_docs, avgdl=avgdl, stats_epoch=stats_epoch,
-                hash_ids=hash_ids, layout=layout,
-            )
-            _plog(f"part {p} encode+write", tpart)
-            _write_manifest_row(out_dir, f"part_{p:05d}", row)
-
-        if fail_after_parts is not None:
-            # deterministic sequential order for the kill-simulation hook
-            for i, p in enumerate(todo):
-                if i >= fail_after_parts:
-                    raise RuntimeError(f"simulated kill before part {p}")
-                _build_part(p)
-            built = min(len(todo), fail_after_parts)
-        else:
-            run_parts(_build_part, todo, part_concurrency)
-            built = len(todo)
-    except BaseException as exc:
-        # clean up then propagate the ORIGINAL failure: _stage_a_cleanup's
-        # finalize joins the overlapped stage-A writes and can itself
-        # raise, which would displace the part-build exception into
-        # __context__ and report the cleanup error instead — so cleanup
-        # errors here are logged and suppressed. Skip the blocking
-        # finalize waits only for non-Exception interrupts (Ctrl-C must
-        # not re-block).
-        try:
-            _stage_a_cleanup(block=isinstance(exc, Exception))
-        except Exception as cleanup_exc:  # noqa: BLE001
-            import warnings
-
-            warnings.warn(
-                "stage-A cleanup failed while handling "
-                f"{type(exc).__name__}: {cleanup_exc!r} (original build "
-                "failure propagates)",
-                stacklevel=2,
-            )
-        raise
-    else:
-        # join the overlapped staging write + commit stage rows (stage A
-        # commits independently of stage C outcomes — a part failure
-        # above still commits stage A via the except path)
-        _stage_a_cleanup()
+    run_parts(_build_part, todo, part_concurrency)
 
     manifest = _read_manifest(out_dir)
     # every part committed: publish the build as a snapshot (idempotent —
@@ -1264,21 +1043,20 @@ def build_index(
     commit_snapshot(
         spark, out_dir, "build", stats_epoch=stats_epoch, n_docs=n_docs
     )
-    total_blocks = sum(
-        int(r.get("blocks", 0)) for n, r in manifest.items() if n.startswith("part_")
-    )
-    n_terms = int(
-        manifest.get("stage_stats", {}).get("n_terms")
-        or schemas.read_table(spark, stats_path, schemas.TERM_STATS).count()
-    )
     return IndexBuildResult(
         out_dir=out_dir,
         n_docs=n_docs,
         avgdl=avgdl,
-        max_tf_sum=max_tf_sum,
-        n_terms=n_terms,
-        postings_blocks=total_blocks,
-        parts_built=built,
-        parts_skipped=skipped,
+        max_tf_sum=float(corpus["max_tf_sum"] or 0.0),
+        # a footer-only row count: no Spark job
+        n_terms=schemas.arrow_dataset(
+            stats_path, schemas.TERM_STATS, ("term",)
+        ).count_rows(),
+        postings_blocks=sum(
+            int(r.get("blocks", 0))
+            for n, r in manifest.items() if n.startswith("part_")
+        ),
+        parts_built=len(todo),
+        parts_skipped=actual_parts - len(todo),
         index_version=index_version,
     )

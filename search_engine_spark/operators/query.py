@@ -376,7 +376,7 @@ class SearchEngine:
             # (an empty live set matches nothing)
             live = [int(p) for p in self.snapshot["part_ids"]]
             blocks = blocks.filter(
-                F.col("part_id").isin(live) if live else F.lit(False)
+                _sql_in("part_id", live) if live else F.lit(False)
             )
         return blocks
 

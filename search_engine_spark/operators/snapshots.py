@@ -57,9 +57,9 @@ from pyspark.sql import SparkSession
 
 from .. import schemas
 from ..errors import QueryArgumentError
+from .index_build import STATS_TABLES
 
 SNAP_DIR = "_snapshots"
-_STATS_TABLES = ("term_stats", "corpus_stats")
 _HWM_FILE = "_id_high_water.json"
 
 
@@ -207,7 +207,7 @@ def _retain_stats_copy(spark_unused, out_dir: str, stats_epoch: int) -> None:
     tmp = dest.with_name(dest.name + ".tmp")
     shutil.rmtree(tmp, ignore_errors=True)
     tmp.mkdir(parents=True)
-    for table in _STATS_TABLES:
+    for table in STATS_TABLES:
         src = Path(out_dir) / table
         if src.exists():
             shutil.copytree(src, tmp / table)

@@ -40,9 +40,9 @@ from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from .. import schemas
+from .query import _sql_in
 
 SUGGEST_DIR = "_suggest_deletes"
 DEFAULT_MAX_EDIT = 2
@@ -123,7 +123,7 @@ def build_suggest_index(
                 yield pd.DataFrame({"dkey": keys, "term": ts})
 
     out = f"{index_dir}/{SUGGEST_DIR}"
-    rows = terms.mapInPandas(gen, "dkey string, term string")
+    rows = terms.mapInPandas(gen, schemas.SUGGEST_DELETES)
     (
         rows.repartitionByRange(n_parts, "dkey")
         .sortWithinPartitions("dkey")
@@ -146,13 +146,16 @@ def suggest_candidates(
     max_edit: int,
 ):
     """Distinct dictionary terms sharing a delete key with ``word`` —
-    the SymSpell candidate superset. The dkey IN filter is pushed into
-    the range-partitioned, dkey-sorted parquet (file + row-group
-    pruning)."""
+    the SymSpell candidate superset. The table is read with its
+    declared schema (no schema-inference job), and the dkey IN filter,
+    parsed from one SQL string, is pushed into the range-partitioned,
+    dkey-sorted parquet (file + row-group pruning)."""
     keys = sorted(delete_variants(word, max_edit))
     return (
-        spark.read.parquet(f"{index_dir}/{SUGGEST_DIR}")
-        .filter(F.col("dkey").isin(keys))
+        schemas.read_table(
+            spark, f"{index_dir}/{SUGGEST_DIR}", schemas.SUGGEST_DELETES
+        )
+        .filter(_sql_in("dkey", keys))
         .select("term")
         .distinct()
     )

@@ -193,6 +193,15 @@ BUILD_MANIFEST = T.StructType(
     ]
 )
 
+# _suggest_deletes/ — the symmetric-delete suggestion index: one (delete
+# key, dictionary term) row per delete variant (operators/suggest_index.py)
+SUGGEST_DELETES = T.StructType(
+    [
+        T.StructField("dkey", T.StringType(), False),
+        T.StructField("term", T.StringType(), False),
+    ]
+)
+
 # search results projection (reference dto/statistics/Data.java:8-21)
 SEARCH_RESULT = T.StructType(
     [

@@ -47,6 +47,19 @@ def resolve_master(
     return master, shuffle_partitions
 
 
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for a driver JVM this process launches:
+    ``SPARK_DRIVER_MEM`` when set, else 16g or half the host's physical
+    RAM (``phys_bytes``, read with os.sysconf when None), whichever is
+    less. Local mode runs every executor in the driver JVM, and a heap
+    allowed past what the host has gets the JVM OOM-killed."""
+    if "SPARK_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_DRIVER_MEM"]
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 10, phys_bytes >> 21)}m"
+
+
 def get_spark(
     app_name: str = "search_engine_spark",
     master: str | None = None,
@@ -101,7 +114,7 @@ def get_spark(
         # executors in the driver JVM, so driver opts govern the whole box;
         # on a cluster, mirror this in spark.executor.extraJavaOptions.
         builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g")
+            "spark.driver.memory", driver_memory()
         ).config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_GRAFT_JAVA_OPTS", "-XX:+UseParallelGC"),

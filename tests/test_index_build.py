@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from search_engine_spark.functions.codec import decode_postings, varbyte_decode
 from search_engine_spark.operators.index_build import build_index, manifest_df
@@ -89,14 +90,36 @@ def test_manifest_lineage(built_index, spark):
     assert parts["terms_merged"].min() > 0
 
 
-def test_kill_and_resume_identical(spark, transcripts_df, oracle_idx, tmp_path):
+def _fail_write_part(monkeypatch, out_dir: str, on_call: int) -> list[bool]:
+    """Make index_build.write_part raise on its ``on_call``-th call (the
+    parts before it are written). Returns, per call, whether stage A of
+    ``out_dir`` had committed (stage_docs DONE) when it was called."""
+    from search_engine_spark.operators import index_build as IB
+
+    real, seen = IB.write_part, []
+
+    def flaky(*args, **kw):
+        seen.append(IB._read_manifest(out_dir).get("stage_docs", {})
+                    .get("status") == "DONE")
+        if len(seen) == on_call:
+            raise RuntimeError(f"simulated kill before part {args[3]}")
+        return real(*args, **kw)
+
+    monkeypatch.setattr(IB, "write_part", flaky)
+    return seen
+
+
+def test_kill_and_resume_identical(spark, transcripts_df, oracle_idx, tmp_path,
+                                   monkeypatch):
     out = str(tmp_path / "idx_resume")
     # simulate a job killed after 1 of 3 parts
+    _fail_write_part(monkeypatch, out, on_call=2)
     with pytest.raises(RuntimeError, match="simulated kill"):
         build_index(
             spark, transcripts_df, out, n_parts=3, resume=False,
-            fail_after_parts=1,
+            part_concurrency=1,
         )
+    monkeypatch.undo()
     # resume: must skip the finished part and complete the rest
     res = build_index(spark, transcripts_df, out, n_parts=3, resume=True)
     assert res.parts_skipped == 1
@@ -241,11 +264,8 @@ def test_blank_predicate_cross_engine_parity(spark):
 
 
 # ---------------------------------------------------------------------------
-# Resume epoch witness (ADVICE r3): a resume that redoes stage A may reuse
-# surviving DONE parts' stats_epoch ONLY if the redone stats are provably
-# the ones those parts were encoded under — otherwise stale stored
-# block_max_score bounds would re-validate and _single_term_topk could
-# silently drop true top-k hits.
+# Stage A commits (stage_docs DONE) before any part is encoded; a resume
+# over an uncommitted stage A starts over.
 def _mk_sdf(spark, pdf):
     from search_engine_spark import schemas
 
@@ -254,96 +274,79 @@ def _mk_sdf(spark, pdf):
     return spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
 
 
-def _simulate_hard_kill_before_stage_commit(idx: str) -> None:
-    # parts land before the stage-A commit markers (index_build stage-C
-    # design); a kill -9 between them leaves DONE parts + no stage rows
+def _rows(path: str) -> list:
+    """Every row of a parquet table, sorted (file order is the writer's)."""
+    import pyarrow.dataset as ds
+
+    t = ds.dataset(path, format="parquet", partitioning="hive").to_table()
+    cols = sorted(t.column_names)
+    return sorted(zip(*(t.column(c).to_pylist() for c in cols)), key=repr)
+
+
+def test_stage_a_commits_before_the_first_part(spark, transcripts_df,
+                                               oracle_idx, tmp_path,
+                                               monkeypatch):
+    """write_part raising on its first call leaves a committed stage A
+    (stage_docs DONE when it was called, both stats tables written) and
+    no part row; the resume builds every part, equal to the oracle."""
     from pathlib import Path
 
-    for stage in ("stage_docs", "stage_stats"):
-        p = Path(idx) / "_manifest" / f"{stage}.json"
-        assert p.exists()
-        p.unlink()
+    from search_engine_spark.operators.index_build import _read_manifest
+    from search_engine_spark.operators.query import SearchEngine
+
+    out = str(tmp_path / "idx_stage_a")
+    seen = _fail_write_part(monkeypatch, out, on_call=1)
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        build_index(spark, transcripts_df, out, n_parts=3, resume=False,
+                    part_concurrency=1)
+    monkeypatch.undo()
+    assert seen == [True]
+    manifest = _read_manifest(out)
+    assert manifest["stage_docs"]["status"] == "DONE"
+    assert not [n for n in manifest if n.startswith("part_")]
+    for table in ("term_stats", "corpus_stats"):
+        assert list(Path(out, table).glob("*.parquet")), table
+    res = build_index(spark, transcripts_df, out, n_parts=3, resume=True)
+    assert (res.parts_built, res.parts_skipped) == (3, 0)
+    assert res.n_terms == len(oracle_idx.postings)
+    got = _decoded_postings(spark, out)
+    assert got == {t: sorted(pl) for t, pl in oracle_idx.postings.items()}
+    assert SearchEngine(spark, out)._stored_blockmax_valid() is True
 
 
-def test_resume_epoch_reused_on_identical_input(spark, tmp_path):
+def test_resume_without_stage_commit_rebuilds_every_part(spark, tmp_path):
+    """A manifest with DONE part rows and no stage_docs row (a build
+    killed before its stage-A commit) is not resumed from: the build
+    starts over. Resumed with one text edited at the same n_docs, every
+    part is rebuilt and the index equals a fresh build of the new input,
+    stored block maxima included."""
+    from pathlib import Path
+
     from search_engine_spark.operators.query import SearchEngine
     from search_engine_spark.synth import make_transcripts
 
-    idx = str(tmp_path / "idx_witness_same")
     pdf = make_transcripts(n_conversations=20, seed=31)
+    idx = str(tmp_path / "idx_legacy")
     build_index(spark, _mk_sdf(spark, pdf), idx, n_parts=2, resume=False)
-    _simulate_hard_kill_before_stage_commit(idx)
-    res = build_index(spark, _mk_sdf(spark, pdf), idx, n_parts=2, resume=True)
-    assert res.parts_skipped == 2  # identical input: DONE parts survive
-    # witness passes -> epoch reused -> stored bounds stay provably valid
-    assert SearchEngine(spark, idx)._stored_blockmax_valid() is True
-
-
-def test_resume_epoch_minted_fresh_on_different_n_docs(spark, tmp_path):
-    from search_engine_spark.operators.query import SearchEngine
-    from search_engine_spark.synth import make_transcripts
-
-    idx = str(tmp_path / "idx_witness_ndocs")
-    pdf = make_transcripts(n_conversations=20, seed=31)
-    build_index(spark, _mk_sdf(spark, pdf), idx, n_parts=2, resume=False)
-    _simulate_hard_kill_before_stage_commit(idx)
-    # tier-1 witness: different row count -> fresh epoch
-    pdf2 = make_transcripts(n_conversations=22, seed=31)
-    build_index(spark, _mk_sdf(spark, pdf2), idx, n_parts=2, resume=True)
-    assert SearchEngine(spark, idx)._stored_blockmax_valid() is False
-
-
-def test_resume_epoch_minted_fresh_on_changed_text(spark, tmp_path):
-    from search_engine_spark.operators.query import SearchEngine
-    from search_engine_spark.synth import make_transcripts
-
-    idx = str(tmp_path / "idx_witness_text")
-    pdf = make_transcripts(n_conversations=20, seed=31)
-    build_index(spark, _mk_sdf(spark, pdf), idx, n_parts=2, resume=False)
-    _simulate_hard_kill_before_stage_commit(idx)
-    # tier-2 witness: SAME n_docs, different token mass (one doc edited)
+    (Path(idx) / "_manifest" / "stage_docs.json").unlink()
     pdf2 = pdf.copy()
     pdf2.loc[pdf2.index[0], "text"] = (
         str(pdf2.loc[pdf2.index[0], "text"]) + " sparkle" * 8
     )
-    build_index(spark, _mk_sdf(spark, pdf2), idx, n_parts=2, resume=True)
+    res = build_index(spark, _mk_sdf(spark, pdf2), idx, n_parts=2,
+                      resume=True)
+    assert (res.parts_built, res.parts_skipped) == (2, 0)
+    fresh = str(tmp_path / "idx_fresh")
+    build_index(spark, _mk_sdf(spark, pdf2), fresh, n_parts=2, resume=False)
+    for table in ("postings", "term_stats"):
+        assert _rows(f"{idx}/{table}") == _rows(f"{fresh}/{table}"), table
     eng = SearchEngine(spark, idx)
-    assert eng._stored_blockmax_valid() is False
-    # and the corpus row itself carries the freshly-minted epoch
-    row = spark.read.parquet(f"{idx}/corpus_stats").collect()[0].asDict()
-    from search_engine_spark.operators.index_build import _read_manifest
-
-    part_epochs = {
-        r["stats_epoch"]
-        for n, r in _read_manifest(idx).items()
-        if n.startswith("part_") and r.get("stats_epoch") is not None
-    }
-    assert int(row["stats_epoch"]) not in part_epochs or len(part_epochs) > 1
-
-
-def test_resume_rewrites_lost_stage_stats(spark, tmp_path):
-    """A crash between _finalize_stage_a's two row writes leaves
-    stage_docs DONE and no stage_stats row: the resume rewrites the stats
-    through the one stats writer, equal to the lost commit's and on the
-    surviving parts' epoch (stored block maxima stay valid)."""
-    from pathlib import Path
-
-    import pyarrow.parquet as pq
-
-    from search_engine_spark.operators.query import SearchEngine
-    from search_engine_spark.synth import make_transcripts
-
-    idx = str(tmp_path / "idx_lost_stats")
-    sdf = _mk_sdf(spark, make_transcripts(n_conversations=20, seed=31))
-    build_index(spark, sdf, idx, n_parts=2, resume=False)
-
-    def stats():
-        return [sorted(pq.read_table(f"{idx}/{t}").to_pylist(), key=str)
-                for t in ("term_stats", "corpus_stats")]
-
-    before = stats()
-    (Path(idx) / "_manifest" / "stage_stats.json").unlink()
-    res = build_index(spark, sdf, idx, n_parts=2, resume=True)
-    assert (res.parts_built, res.parts_skipped) == (0, 2)
-    assert stats() == before
-    assert SearchEngine(spark, idx)._stored_blockmax_valid() is True
+    assert eng._stored_blockmax_valid() is True
+    for term in ["sparkle"] + [
+        r["term"] for r in eng.term_stats.orderBy(F.desc("df"), "term")
+        .limit(4).collect()
+    ]:
+        fast = eng.search_ids(term, k=10, plan="blockmax").toPandas()
+        classic = eng.search_ids(term, k=10, plan="classic").toPandas()
+        assert fast["doc_id"].tolist() == classic["doc_id"].tolist(), term
+        assert fast["score"].tolist() == classic["score"].tolist(), term

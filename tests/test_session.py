@@ -17,7 +17,7 @@ import zipfile
 import zipimport
 
 import search_engine_spark  # installs the zip re-scan shim
-from search_engine_spark.session import resolve_master
+from search_engine_spark.session import driver_memory, resolve_master
 
 
 def test_plain_python_defaults_to_local_n():
@@ -52,6 +52,23 @@ def test_explicit_shuffle_partitions_pass_through():
     m, sp = resolve_master("local[4]", under_submit=False, cpus=32,
                            shuffle_partitions=7)
     assert sp == 7
+
+
+def test_driver_memory_is_half_the_host_up_to_16g(monkeypatch):
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    gib = 1 << 30
+    assert driver_memory(15 * gib) == "7680m"
+    assert driver_memory(32 * gib) == "16384m"
+    assert driver_memory(256 * gib) == "16384m"
+    # the host's own RAM when none is given
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert driver_memory() == driver_memory(phys)
+
+
+def test_driver_memory_env_wins(monkeypatch):
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "2g")
+    assert driver_memory(256 << 30) == "2g"
+    assert driver_memory(1 << 30) == "2g"
 
 
 def _write_module_zip(path, value):

@@ -114,3 +114,35 @@ def test_call_site_pattern():
     assert _call_sites("def prepare_salted(\n", "prepare_salted") == 0
     assert _call_sites("x = F.posexplode('t')", "posexplode") == 1
     assert _call_sites("_encode_salted(x)", "encode_salted") == 0
+
+
+SCHEMALESS_READ = re.compile(r"\bread\.parquet\(")
+COL_ISIN = re.compile(r"\bF\.col\([^()]*\)\.isin\(")
+
+
+def test_reads_are_declared_and_in_lists_are_one_expression():
+    """Under operators/ and in api.py every table is read with its
+    declared schema (schemas.read_table: a schema-less read.parquet runs
+    a schema-inference job) and every IN list is parsed from one SQL
+    string (query._sql_in: Column.isin makes one Py4J round trip per
+    literal). pyarrow's field.isin is not a Spark Column and stays."""
+    files = sorted((PKG / "operators").rglob("*.py")) + [PKG / "api.py"]
+    hits = [
+        f"{f.relative_to(PKG.parent)}:{s[:m.start()].count(chr(10)) + 1}"
+        for f in files
+        for s in [f.read_text()]
+        for pat in (SCHEMALESS_READ, COL_ISIN)
+        for m in pat.finditer(s)
+    ]
+    assert not hits, f"schema-less read or Column.isin: {hits}"
+
+
+def test_read_and_isin_patterns():
+    for src in ('spark.read.parquet(f"{d}/x")',
+                'F.col("dkey").isin(keys)',
+                'F.col("part_id").isin(live)'):
+        assert SCHEMALESS_READ.search(src) or COL_ISIN.search(src), src
+    for src in ("spark.read.schema(s).parquet(*paths)",
+                "field.isin(values)", "np.isin(ids, deleted)",
+                "df.write.parquet(p)"):
+        assert not (SCHEMALESS_READ.search(src) or COL_ISIN.search(src)), src
